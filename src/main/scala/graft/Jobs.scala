@@ -50,8 +50,8 @@ object Jobs {
       val t0 = System.nanoTime()
       val ok = try { fn(spark, sfDir).count(); true }
         catch { case _: Throwable => false }
-      Thread.sleep(120) // let the async listener bus drain (census tool)
       val ms = (System.nanoTime() - t0) / 1e6
+      Thread.sleep(120) // let the async listener bus drain (census tool)
       spark.catalog.clearCache()
       (name, if (ok) jobs else -1, stages, tasks, ms)
     }

@@ -9,7 +9,10 @@ package graft
   * leave the tail of every small stage idle; submitting the arms from a
   * bounded pool lets the next arm's tasks back-fill executors freed by
   * the current arm's stragglers. FIFO scheduling (the default) gives
-  * exactly the back-fill behaviour wanted.
+  * exactly the back-fill behaviour wanted. Besides the cards, the
+  * warehouse build (`graft.domain.Pipeline.run`) runs its shared dims,
+  * then its gold sinks — each write with its validation re-read — as
+  * arms, one per sink.
   *
   * Correctness contract: `f` must be deterministic and the items
   * independent (no item reads another's output). Results return in

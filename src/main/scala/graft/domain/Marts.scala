@@ -92,8 +92,14 @@ object Marts {
   }
 
   /** W2: gapped RANK leaderboard (phase2_transformation_pipeline.py:462). */
-  def bankRanking(enriched: DataFrame): DataFrame = {
-    val perf = bankPerformance(enriched)
+  def bankRanking(enriched: DataFrame): DataFrame =
+    rankPerformance(bankPerformance(enriched))
+
+  /** W2 over an already-built [[bankPerformance]] frame, so a caller that
+    * materializes the per-bank aggregate ranks it without rebuilding it. */
+  def rankPerformance(perf: DataFrame): DataFrame = {
+    // Unpartitioned RANK is bounded: the window input is the per-BANK
+    // aggregate — one row per bank (~10 at any corpus size), not reviews.
     val w = Window.orderBy(col("avg_rating").desc, col("avg_sentiment").desc)
     perf.withColumn("bank_rank", rank().over(w))
       .withColumn("performance_tier",

@@ -44,6 +44,14 @@ class MartsSpec extends SparkSpec {
     assert(ranked("Bank Gamma") === 1)
   }
 
+  test("rankPerformance over a materialized bankPerformance equals bankRanking") {
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val perf = Marts.bankPerformance(silver).localCheckpoint()
+    val direct = rows(Marts.bankRanking(silver))
+    assert(direct.nonEmpty)
+    assert(rows(Marts.rankPerformance(perf)) === direct)
+  }
+
   test("quarterlyTrend: lag null on first quarter per bank") {
     val trend = Marts.quarterlyTrend(silver)
     val firsts = trend.filter(col("prev_q_avg_rating").isNull).count()

@@ -6,9 +6,23 @@ import java.nio.file.Files
 
 class PipelineSpec extends SparkSpec {
 
-  test("run: bronze parquet → gold star schema + marts with validation counts") {
+  private val goldTables = Seq("dim_bank", "dim_branch", "dim_sentiment", "dim_date",
+    "fact_reviews", "mart_bank_performance", "mart_bank_ranking", "mart_geographic")
+
+  /** A fresh directory holding the fixture bronze. */
+  private def bronzeBase(): String = {
     val base = Files.createTempDirectory("graft_pipe").toString
     Fixtures.reviews(spark).write.mode("overwrite").parquet(s"$base/bronze")
+    base
+  }
+
+  /** A gold table's rows as a sorted multiset, without the load timestamp. */
+  private def goldRows(gold: String, table: String): Seq[String] =
+    spark.read.parquet(s"$gold/$table").drop("loaded_at")
+      .collect().map(_.toString).sorted.toSeq
+
+  test("run: bronze parquet → gold star schema + marts with validation counts") {
+    val base = bronzeBase()
     val r = Pipeline.run(spark, s"$base/bronze", s"$base/gold")
     assert(r.bronzeCount === 10)
     assert(r.stagedCount === 7) // dup dropped, empty/too-short filtered
@@ -30,13 +44,52 @@ class PipelineSpec extends SparkSpec {
     assert(geo.columns.toSet ===
       Set("city", "total_reviews", "avg_rating", "avg_sentiment"))
     assert(geo.agg(sum("total_reviews")).head().getLong(0) === r.factCount)
-    // S11: the run-stats JSON sink reproduces the validation counts
-    val stats = spark.read.json(s"$base/gold/run_stats").head()
-    assert(stats.getAs[Long]("bronzeCount") === r.bronzeCount)
-    assert(stats.getAs[Long]("stagedCount") === r.stagedCount)
-    assert(stats.getAs[Long]("factCount") === r.factCount)
-    // idempotent rebuild (SaveMode.Overwrite ≡ DROP CASCADE + CTAS)
+    // S11: the run-stats JSON sink is the returned Result
+    val stats = spark.read.json(s"$base/gold/run_stats").collect()
+    assert(stats.length === 1)
+    val st = stats.head
+    assert(Pipeline.Result(st.getAs[Long]("bronzeCount"), st.getAs[Long]("stagedCount"),
+      st.getAs[Long]("factCount"), st.getAs[Long]("bankCount"),
+      st.getAs[Long]("branchCount")) === r)
+    // idempotent rebuild (SaveMode.Overwrite ≡ DROP CASCADE + CTAS): the
+    // same Result and the same rows in every gold table
+    val first = goldTables.map(t => t -> goldRows(s"$base/gold", t))
     val r2 = Pipeline.run(spark, s"$base/bronze", s"$base/gold")
-    assert(r2 === r.copy())
+    assert(r2 === r)
+    first.foreach { case (t, rows) =>
+      assert(rows.nonEmpty, t)
+      assert(goldRows(s"$base/gold", t) === rows, t)
+    }
+  }
+
+  test("run: every fact key resolves in the gold dims with the matching name") {
+    val base = bronzeBase()
+    Pipeline.run(spark, s"$base/bronze", s"$base/gold")
+    val fact = spark.read.parquet(s"$base/gold/fact_reviews")
+    val bank = spark.read.parquet(s"$base/gold/dim_bank")
+      .select(col("bank_key"), col("bank_name").as("dim_bank_name"))
+    val branch = spark.read.parquet(s"$base/gold/dim_branch")
+      .select(col("branch_key"), col("branch_id").as("dim_branch_id"))
+    val rows = fact.join(bank, Seq("bank_key"), "left")
+      .join(branch, Seq("branch_key"), "left")
+      .select("review_id", "bank_name", "dim_bank_name", "place_id", "dim_branch_id")
+      .collect()
+    assert(rows.length === 7)
+    rows.foreach { r =>
+      assert(r.getAs[String]("dim_bank_name") === r.getAs[String]("bank_name"), r)
+      assert(r.getAs[String]("dim_branch_id") === r.getAs[String]("place_id"), r)
+    }
+  }
+
+  test("run: a failed build releases the persisted silver") {
+    val base = bronzeBase()
+    // Gold under a regular file: silver is built, then every write fails.
+    val blocker = new java.io.File(s"$base/blocker")
+    assert(blocker.createNewFile())
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache() // other suites share this session
+    intercept[Exception](Pipeline.run(spark, s"$base/bronze", s"$base/blocker/gold"))
+    assert(cacheManager.isEmpty)
   }
 }
