@@ -1,33 +1,129 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.GraftListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 
-/** Driver benchmark: one JSON line of per-query wall seconds at
-  * SPARK_GRAFT_SF_DIR. A warmup pass at sf0.001 first loads classes and
-  * compiles codegen so the timed pass measures steady-state execution, not
-  * JVM startup; queries run in sorted order for run-to-run comparability. */
+/** The timing main: per-query wall seconds at SPARK_GRAFT_SF_DIR, three
+  * runs each with the median reported, plus a job census.
+  *
+  *   SPARK_GRAFT_SF_DIR=... tools/run.sh graft.Bench [nameSubstring...]
+  *
+  * With no arguments it times the whole battery. Arguments narrow the
+  * warm-up and the timed loop to the queries whose name contains one of
+  * them; calibration always times its fixed sentinels, so `noise_factor`
+  * means the same on a subset run. A warm-up pass at sf0.001 first loads
+  * classes and compiles codegen so the timed pass measures steady-state
+  * execution, not JVM startup; queries run in sorted order for run-to-run
+  * comparability.
+  *
+  * Output: one JSON summary line as the last line of stdout,
+  * BENCH_LINE.json (per-query medians, short keys) and BENCH_SELF.json
+  * (full names, full precision, calibration, and the `census` of each
+  * query's third run: jobs, stages and tasks, plus totals). */
 object Bench {
+  type Query = (SparkSession, String) => DataFrame
+
+  /** Counted at job start: `stages` sums each job's stageInfos (skipped
+    * stages included), `tasks` the numTasks of those stages. */
+  final case class Census(jobs: Int, stages: Int, tasks: Int)
+
+  /** `seconds`: the median over the successful runs of each query that had
+    * one, in run order. `failed`: every query with a failed run. `census`:
+    * each query whose third run succeeded. */
+  final case class Measured(
+      seconds: Seq[(String, Double)], failed: Seq[String],
+      census: Seq[(String, Census)]) {
+    def total: Double = seconds.map(_._2).sum
+  }
+
+  private final class Counter extends SparkListener {
+    @volatile private var jobs, stages, tasks = 0
+    override def onJobStart(j: SparkListenerJobStart): Unit = {
+      jobs += 1; stages += j.stageInfos.size
+      tasks += j.stageInfos.map(_.numTasks).sum
+    }
+    def reset(): Unit = { jobs = 0; stages = 0; tasks = 0 }
+    def read: Census = Census(jobs, stages, tasks)
+  }
+
+  /** The queries whose name contains one of `filters` (all of them when
+    * `filters` is empty), sorted by name. */
+  def pick(queries: Map[String, Query], filters: Seq[String]): Seq[(String, Query)] =
+    queries.toSeq.sortBy(_._1)
+      .filter { case (n, _) => filters.isEmpty || filters.exists(n.contains) }
+
+  /** Untimed pass over `dir` that loads classes and compiles codegen.
+    * It runs CONCURRENTLY: nothing it produces is reported, and its work is
+    * independent tiny-corpus queries dominated by sequential job latency,
+    * so overlapping them halves the prelude without touching the timed
+    * methodology (strictly sequential, in [[measure]]). Cross-query index
+    * builds are safe to race: every shared builder sits behind a
+    * SessionCache whose builds are per-key serialized. Failures are
+    * swallowed per arm; [[measure]] reports them. */
+  def warmUp(spark: SparkSession, picked: Seq[(String, Query)], dir: String): Unit =
+    Par.map(picked, parallelism = 4) { case (_, fn) =>
+      try fn(spark, dir).count() catch { case _: Throwable => () }
+      spark.catalog.clearCache()
+    }
+
+  /** Three timed runs per query, MEDIAN reported: single runs swing
+    * ±20-30% from GC/scheduler noise, and the median tracks the value a
+    * user sees where a min tracks the lucky tail. A run that throws is
+    * left out of the median, so a broken query can never under-read; the
+    * query is listed in `failed`, and one with no successful run is left
+    * out of `seconds` (and so of the total). Correctness is gated
+    * separately (Verify + the DuckDB oracles).
+    *
+    * The census counts the third run only: by then runs 1-2 have built the
+    * session caches and indexes, so it sees the steady-state job count.
+    * The listener bus is drained just before and just after that run,
+    * outside its timed interval. Queries run one at a time, so jobs issued
+    * from a query's `Par.map` arms count under that query. */
+  def measure(spark: SparkSession, picked: Seq[(String, Query)], sfDir: String): Measured = {
+    val sc = spark.sparkContext
+    val counter = new Counter
+    sc.addSparkListener(counter)
+    try {
+      val failed = Seq.newBuilder[String]
+      val census = Seq.newBuilder[(String, Census)]
+      val seconds = picked.flatMap { case (name, fn) =>
+        val runs = (1 to 3).flatMap { run =>
+          if (run == 3) { GraftListenerBus.drain(sc); counter.reset() }
+          val t0 = System.nanoTime()
+          val ok =
+            try { fn(spark, sfDir).count(); true }
+            catch { case e: Throwable =>
+              System.err.println(s"[bench] $name run $run failed: $e"); false }
+          val t = (System.nanoTime() - t0) / 1e9
+          if (run == 3 && ok) { GraftListenerBus.drain(sc); census += name -> counter.read }
+          spark.catalog.clearCache()
+          if (ok) Some(t) else None
+        }.sorted
+        // Untimed GC between queries: localCheckpoint RDDs and broadcasts
+        // are reclaimed by the ContextCleaner only after their referents
+        // are GC'd; on a large heap collections are rare, so without this
+        // nudge blocks accumulate across queries and squeeze execution
+        // memory for the late ones (BENCH_r03 showed 2-10x tail-query
+        // inflation).
+        System.gc()
+        if (runs.size < 3) failed += name
+        val m = runs.size / 2
+        if (runs.isEmpty) None
+        else Some(name -> (if (runs.size % 2 == 1) runs(m) else (runs(m - 1) + runs(m)) / 2))
+      }
+      Measured(seconds, failed.result(), census.result())
+    } finally sc.removeSparkListener(counter)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val sorted = SparkEntry.queries.toSeq.sortBy(_._1)
+    val spark = Sessions.start()
+    val picked = pick(SparkEntry.queries, args.toSeq)
     val warmDir = "/root/testdata/sf0.001"
-    // Warmup runs CONCURRENTLY (round 20, guide §2.6): the pass exists
-    // only to load classes and compile codegen before the timed pass,
-    // its work is 264 independent tiny-corpus queries dominated by
-    // sequential job latency, and nothing it produces is reported — so
-    // overlapping them halves the untimed prelude without touching the
-    // timed methodology (which remains strictly sequential below).
-    // Cross-query index builds are safe to race: every shared builder
-    // sits behind a SessionCache whose builds are per-key serialized.
-    // Failures stay swallowed per arm exactly as before.
     if (new java.io.File(warmDir).isDirectory && warmDir != sfDir)
-      Par.map(sorted, parallelism = 4) { case (_, fn) =>
-        try fn(spark, warmDir).count() catch { case _: Throwable => () }
-        spark.catalog.clearCache()
-      }
+      warmUp(spark, picked, warmDir)
     // Noise calibration (round-10 verdict ask): rounds 7-9 each burned a
     // session separating host drift from code changes by hand. Before the
     // timed pass, measure (a) a pure-compute probe with no I/O and no
@@ -60,7 +156,8 @@ object Bench {
       val cpu = timeMin(calibSamples)(
         spark.range(400000000L)
           .select(fsum(xxhash64(col("id")).cast("double"))).collect())
-      val sq = sorted.filter(q => sentinels.contains(q._1.takeWhile(_ != '_')))
+      val sq = pick(SparkEntry.queries, Nil)
+        .filter(q => sentinels.contains(q._1.takeWhile(_ != '_')))
         .map { case (name, fn) =>
           val t = timeMin(calibSamples) {
             fn(spark, sfDir).count(); spark.catalog.clearCache() }
@@ -83,50 +180,20 @@ object Bench {
     }
     val calibOk = calibSpread <= 1.5
     System.gc()
-    // Three timed runs per query, MEDIAN reported (round 16, the r15
-    // verdict's methodology ask): single runs at local[32] swing
-    // ±20-30% from GC/scheduler noise and the round-15 notes showed the
-    // 2-run min under-reading that envelope — the min tracks the lucky
-    // tail while the median tracks the value a user actually sees, and
-    // three samples make the median robust to one outlier in either
-    // direction. Declared in the JSON as runs=3/agg=median; cross-round
-    // readers must not compare a median-of-3 total against the r15-era
-    // min-of-2 totals without noting the aggregation change.
-    // A throwing query must never silently fold a near-zero time into
-    // the total (round-16 verdict note on Bench.scala:62): failures are
-    // counted per query and surfaced as failed_queries in every
-    // artifact. Correctness is gated separately (Verify + the DuckDB
-    // oracles); this counter is what keeps a broken build from
-    // UNDER-reading in the bench.
-    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
-    val results = sorted.map { case (name, fn) =>
-      val dt = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() }
-        catch { case _: Throwable => failed += name; -1L }
-        val t = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        t
-      }.sorted.apply(1)
-      // Untimed GC between queries: localCheckpoint RDDs and broadcasts are
-      // reclaimed by the ContextCleaner only after their referents are
-      // GC'd; on a 24g heap collections are rare, so without this nudge
-      // blocks accumulate across 66 queries and squeeze execution memory
-      // for the late ones (BENCH_r03 showed 2-10x tail-query inflation).
-      System.gc()
-      name -> dt
-    }
+    val m = measure(spark, picked, sfDir)
+    val results = m.seconds
     def fmt(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
+    val total = m.total
     // The caller parses the last stdout line as JSON from a bounded tail
     // capture (observed: ~2000 chars). At 209 queries even the short-key
     // qNN map is ~3.4 KB and overflowed it (BENCH_r11 parsed:null), so
     // stdout now carries ONLY the summary — total, calibration, count —
     // and points at BENCH_LINE.json, which keeps the full per-query map
     // (short keys, 0.1 ms precision); BENCH_SELF.json keeps full names,
-    // full precision, and the calibration block. Both files are committed
-    // per round, so the record survives any capture truncation.
+    // full precision, the calibration block and the census. Both files
+    // are committed per round, so the record survives any capture
+    // truncation.
     val shortKeys = results.map(_._1.takeWhile(_ != '_'))
     require(shortKeys.distinct.size == shortKeys.size,
       "duplicate short bench keys (qNN prefixes must stay unique): " +
@@ -137,28 +204,34 @@ object Bench {
     val calibJson = calib.toSeq.sortBy(_._1)
       .map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
     val stdoutLine =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":3,"agg":"median","noise_factor":${fmt(noiseFactor)},"calib_spread":${fmt(calibSpread)},"calib_ok":$calibOk,"failed_queries":${failed.size},"n_queries":${results.size},"sf":"$sfDir","queries_file":"BENCH_LINE.json"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":3,"agg":"median","noise_factor":${fmt(noiseFactor)},"calib_spread":${fmt(calibSpread)},"calib_ok":$calibOk,"failed_queries":${m.failed.size},"n_queries":${results.size},"sf":"$sfDir","queries_file":"BENCH_LINE.json"}"""
     require(stdoutLine.length <= 1900,
       s"stdout bench line must stay under the driver's tail capture (${stdoutLine.length} chars)")
     val line =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":3,"agg":"median","noise_factor":${fmt(noiseFactor)},"calib_spread":${fmt(calibSpread)},"calib_ok":$calibOk,"failed_queries":${failed.size},"queries":$qsShort,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":3,"agg":"median","noise_factor":${fmt(noiseFactor)},"calib_spread":${fmt(calibSpread)},"calib_ok":$calibOk,"failed_queries":${m.failed.size},"queries":$qsShort,"sf":"$sfDir"}"""
     val qsFull = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val failedJson = failed.toSeq.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val failedJson = m.failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    def censusJson(c: Census): String =
+      s"""{"jobs":${c.jobs},"stages":${c.stages},"tasks":${c.tasks}}"""
+    val censusTotal = Census(m.census.map(_._2.jobs).sum,
+      m.census.map(_._2.stages).sum, m.census.map(_._2.tasks).sum)
+    val censusAll = s"""{"total":${censusJson(censusTotal)},"queries":""" +
+      m.census.map { case (k, c) => "\"" + k + "\":" + censusJson(c) }
+        .mkString("{", ",", "}}")
     val lineFull =
-      s"""{"metric":"total","value":$total,"unit":"sec","runs":3,"agg":"median","noise_factor":$noiseFactor,"calib_spread":$calibSpread,"calib_ok":$calibOk,"failed_queries":$failedJson,"calib":$calibJson,"queries":$qsFull,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","runs":3,"agg":"median","noise_factor":$noiseFactor,"calib_spread":$calibSpread,"calib_ok":$calibOk,"failed_queries":$failedJson,"calib":$calibJson,"queries":$qsFull,"census":$censusAll,"sf":"$sfDir"}"""
     // Two artifacts (BENCH_r10 parsed:null — log noise overflowed the
     // driver's bounded tail capture of stdout): the exact driver line
     // goes to BENCH_LINE.json so the artifact survives any capture
-    // truncation, and BENCH_SELF.json keeps the full-name full-precision
-    // record with the calibration block.
-    try {
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("BENCH_LINE.json"), line + "\n")
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("BENCH_SELF.json"), lineFull + "\n")
-      (): Unit
-    } catch { case _: Throwable => () }
+    // truncation, and BENCH_SELF.json keeps the full record. A file that
+    // cannot be written is reported on stderr; the stdout line still
+    // comes last.
+    def write(file: String, text: String): Unit =
+      try java.nio.file.Files.writeString(java.nio.file.Paths.get(file), text + "\n")
+      catch { case NonFatal(e) => System.err.println(s"[bench] could not write $file: $e") }
+    write("BENCH_LINE.json", line)
+    write("BENCH_SELF.json", lineFull)
     // stop() BEFORE the println: Spark's stop/shutdown chatter must not
     // land between the JSON line and EOF, or a last-line parse reads a
     // log line instead (root logger is at WARN, but the order makes the

@@ -6,11 +6,8 @@ package graft
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val filters = args.drop(1)
-    val spark = Sessions.builder("local[4]", 4).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => filters.isEmpty || filters.exists(n.contains) }
+    val spark = Sessions.start("ERROR")
+    Bench.pick(SparkEntry.queries, args.drop(1).toSeq)
       .foreach { case (name, fn) =>
         println(s"\n========== $name ==========")
         try fn(spark, sfDir).explain("formatted")

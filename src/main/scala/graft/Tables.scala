@@ -19,10 +19,10 @@ object Tables {
   /** Resolved-relation cache (round 20, guide §6 file-listing/metadata
     * discipline): every `spark.read.parquet` call pays driver-side file
     * listing plus parquet footer schema inference — measured 65–80 ms
-    * per table on the bench box (graft.Prof), re-paid by every query
-    * construction and every bench sample (264 queries × 3 timed runs ×
-    * 1–4 tables each). The cached value is the resolved LAZY plan over
-    * an immutable input dir — the SessionCache contract: testdata dirs
+    * per table on the bench box, timing bare `spark.read.parquet` calls,
+    * re-paid by every query construction and every bench sample (264
+    * queries × 3 timed runs × 1–4 tables each). The cached value is the
+    * resolved LAZY plan over an immutable input dir — the SessionCache contract: testdata dirs
     * never change under a running session (scratch/index dirs, which DO
     * get rewritten, never go through Tables). Metadata caching, not
     * result caching: every action still scans the parquet files, and
@@ -58,12 +58,21 @@ object Sessions {
       // pass generates far more than 100 distinct sources, so every
       // bench run recompiled every query's classes from scratch —
       // measured same-context on a 69-query tail subset: 21.67 s at the
-      // 100-entry default vs 20.17 s at 4096 (TimeQ, 3-run medians).
+      // 100-entry default vs 20.17 s at 4096 (3-run medians).
       // 4096 entries holds the whole battery (bounded: entries are
       // weak-ref'd per classloader and a few KB–tens of KB of bytecode
       // each). Scale-neutral: compilation cost is driver-side and
       // data-independent — the same win applies on a cluster; the conf
       // is a cache SIZE, not a parallelism constant.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("GRAFT_CODEGEN_CACHE_ENTRIES", "4096"))
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
+
+  /** The session every main runs on: `local[n]` with n shuffle partitions,
+    * n from SPARK_GRAFT_CPUS or else the host's core count. */
+  def start(logLevel: String = "WARN"): SparkSession = {
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+    val spark = builder(s"local[$cpus]", cpus).getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
 }

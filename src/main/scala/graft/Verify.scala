@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,9 +8,7 @@ object Verify {
     // Optional third arg: only dump queries whose name contains it
     // (fast single-query iteration with tools/check.py's same filter).
     val nameFilter = args.lift(2).getOrElse("")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Sessions.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(_._1.contains(nameFilter)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

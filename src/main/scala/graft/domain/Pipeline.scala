@@ -23,16 +23,6 @@ object Pipeline {
   def enrichOnly(bronze: DataFrame): DataFrame =
     Nlp.enrich(Clean.stage(bronze))
 
-  /** Build everything in memory (tests / small scale). */
-  def build(spark: SparkSession, bronze: DataFrame, parityMode: Boolean = true)
-      : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val silver = enrichOnly(bronze)
-    val bank = Star.dimBank(silver, parityMode)
-    val branch = Star.dimBranch(silver, bank, parityMode)
-    val fact = Star.factReviews(silver, bank, branch, parityMode)
-    (silver, bank, branch, fact, Star.dimDate(spark))
-  }
-
   /** Full run with gold-layer persistence + validation counts, built as a
     * dependency DAG in three phases, so each shared input is computed once
     * and no independent job waits behind another:
@@ -58,19 +48,18 @@ object Pipeline {
     * The fact ≤ staged check and the run-stats JSON follow only once every
     * arm has succeeded. At scale: fact partitioned by review_year (partition
     * pruning for the time-sliced marts); dims are single small files. */
-  def run(spark: SparkSession, bronzeDir: String, goldDir: String,
-      parityMode: Boolean = false): Result = {
+  def run(spark: SparkSession, bronzeDir: String, goldDir: String): Result = {
     val bronze = spark.read.schema(Schemas.review).parquet(bronzeDir)
     val silver = enrichOnly(bronze).persist()
     val r = try {
       val stagedCount = silver.count()
       val Seq(Seq(bank, branch), Seq(perf)) = Par.map(Seq[() => Seq[DataFrame]](
         () => {
-          val bank = Star.dimBank(silver, parityMode).localCheckpoint()
-          Seq(bank, Star.dimBranch(silver, bank, parityMode).localCheckpoint())
+          val bank = Star.dimBank(silver, parityMode = false).localCheckpoint()
+          Seq(bank, Star.dimBranch(silver, bank, parityMode = false).localCheckpoint())
         },
         () => Seq(Marts.bankPerformance(silver).localCheckpoint())))(_())
-      val fact = Star.factReviews(silver, bank, branch, parityMode)
+      val fact = Star.factReviews(silver, bank, branch, parityMode = false)
 
       def save(df: DataFrame, name: String): Unit =
         df.write.mode(SaveMode.Overwrite).parquet(s"$goldDir/$name")

@@ -11,8 +11,7 @@ import org.apache.spark.sql.SaveMode
 object WarehouseDemo {
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse("/tmp/graft_wh")
-    val spark = Sessions.builder("local[4]", 4).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.start()
     import spark.implicits._
 
     // Synthetic bronze: a few banks/branches with lexicon-bearing French text.
