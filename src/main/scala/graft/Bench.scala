@@ -13,7 +13,9 @@ import scala.util.control.NonFatal
   * With no arguments it times the whole battery. Arguments narrow the
   * warm-up and the timed loop to the queries whose name contains one of
   * them; calibration always times its fixed sentinels, so `noise_factor`
-  * means the same on a subset run. A warm-up pass at sf0.001 first loads
+  * means the same on a subset run. The sentinels' reference times are
+  * pinned at sf0.1; at any other scale `noise_factor` is the cpu probe's
+  * alone and `calib_spread`/`calib_ok` are null (see [[calibrate]]). A warm-up pass at sf0.001 first loads
   * classes and compiles codegen so the timed pass measures steady-state
   * execution, not JVM startup; queries run in sorted order for run-to-run
   * comparability.
@@ -46,6 +48,35 @@ object Bench {
     }
     def reset(): Unit = { jobs = 0; stages = 0; tasks = 0 }
     def read: Census = Census(jobs, stages, tasks)
+  }
+
+  /** Calibration reference times: seconds on the round-10 box (idle), min
+    * of 3. The sentinel queries' times are pinned at [[calibScale]]; the
+    * cpu probe reads no data, so its time holds at any scale. */
+  val calibRef: Map[String, Double] =
+    Map("cpu" -> 0.134, "q10" -> 0.129, "q11" -> 0.123, "q15" -> 0.061)
+  private val calibScale = "sf0.1"
+
+  /** `spread` (max/min probe ratio) and `ok` (spread ≤ 1.5) are None when
+    * only the cpu probe is compared. */
+  final case class Calibration(noiseFactor: Double, spread: Option[Double], ok: Option[Boolean])
+
+  /** noise_factor is the median ratio of the measured probe times `calib`
+    * to [[calibRef]]. The sentinels are compared only when `sfDir` is the
+    * [[calibScale]] dir their references were pinned at; elsewhere the
+    * factor is the cpu probe's ratio alone, and spread and ok are None. */
+  def calibrate(calib: Map[String, Double], sfDir: String): Calibration = {
+    val atRefScale =
+      Option(java.nio.file.Paths.get(sfDir).getFileName).exists(_.toString == calibScale)
+    val ratios = calib.collect {
+      case (k, v) if calibRef.contains(k) && (atRefScale || k == "cpu") => v / calibRef(k)
+    }.toSeq.sorted
+    val noiseFactor = if (ratios.isEmpty) 1.0 else ratios(ratios.size / 2)
+    if (!atRefScale) Calibration(noiseFactor, None, None)
+    else {
+      val spread = if (ratios.isEmpty) 1.0 else ratios.last / ratios.head
+      Calibration(noiseFactor, Some(spread), Some(spread <= 1.5))
+    }
   }
 
   /** The queries whose name contains one of `filters` (all of them when
@@ -138,8 +169,6 @@ object Bench {
       (1 to n).map { _ =>
         val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
       }.min
-    val calibRef = Map( // seconds, round-10 box (idle), sf0.1, min of 3
-      "cpu" -> 0.134, "q10" -> 0.129, "q11" -> 0.123, "q15" -> 0.061)
     val sentinels = Seq("q10", "q11", "q15")
     // Five samples per probe (round 19, the r18 verdict's item 4: the
     // committed driver artifact read calib_spread 1.5015 because ONE
@@ -170,20 +199,16 @@ object Bench {
     // applied to a ±20% signal). calib_spread = max/min probe ratio;
     // calib_ok flags an envelope a reader can trust (spread ≤ 1.5).
     // Cross-round normalization should be distrusted when calib_ok is
-    // false — the probes themselves disagreed about the machine.
-    val (noiseFactor, calibSpread) = {
-      val ratios = calib.collect {
-        case (k, v) if calibRef.contains(k) => v / calibRef(k)
-      }.toSeq.sorted
-      if (ratios.isEmpty) (1.0, 1.0)
-      else (ratios(ratios.size / 2), ratios.last / ratios.head)
-    }
-    val calibOk = calibSpread <= 1.5
+    // false — the probes themselves disagreed about the machine — and is
+    // cpu-only (calib_spread and calib_ok null) away from sf0.1.
+    def fmt(v: Double): String =
+      String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
+    val c = calibrate(calib, sfDir)
+    val calibSpread = c.spread.fold("null")(fmt)
+    val calibOk = c.ok.fold("null")(_.toString)
     System.gc()
     val m = measure(spark, picked, sfDir)
     val results = m.seconds
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
     val total = m.total
     // The caller parses the last stdout line as JSON from a bounded tail
     // capture (observed: ~2000 chars). At 209 queries even the short-key
@@ -204,11 +229,11 @@ object Bench {
     val calibJson = calib.toSeq.sortBy(_._1)
       .map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
     val stdoutLine =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":3,"agg":"median","noise_factor":${fmt(noiseFactor)},"calib_spread":${fmt(calibSpread)},"calib_ok":$calibOk,"failed_queries":${m.failed.size},"n_queries":${results.size},"sf":"$sfDir","queries_file":"BENCH_LINE.json"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":3,"agg":"median","noise_factor":${fmt(c.noiseFactor)},"calib_spread":$calibSpread,"calib_ok":$calibOk,"failed_queries":${m.failed.size},"n_queries":${results.size},"sf":"$sfDir","queries_file":"BENCH_LINE.json"}"""
     require(stdoutLine.length <= 1900,
       s"stdout bench line must stay under the driver's tail capture (${stdoutLine.length} chars)")
     val line =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":3,"agg":"median","noise_factor":${fmt(noiseFactor)},"calib_spread":${fmt(calibSpread)},"calib_ok":$calibOk,"failed_queries":${m.failed.size},"queries":$qsShort,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":3,"agg":"median","noise_factor":${fmt(c.noiseFactor)},"calib_spread":$calibSpread,"calib_ok":$calibOk,"failed_queries":${m.failed.size},"queries":$qsShort,"sf":"$sfDir"}"""
     val qsFull = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val failedJson = m.failed.map("\"" + _ + "\"").mkString("[", ",", "]")
@@ -220,7 +245,7 @@ object Bench {
       m.census.map { case (k, c) => "\"" + k + "\":" + censusJson(c) }
         .mkString("{", ",", "}}")
     val lineFull =
-      s"""{"metric":"total","value":$total,"unit":"sec","runs":3,"agg":"median","noise_factor":$noiseFactor,"calib_spread":$calibSpread,"calib_ok":$calibOk,"failed_queries":$failedJson,"calib":$calibJson,"queries":$qsFull,"census":$censusAll,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","runs":3,"agg":"median","noise_factor":${c.noiseFactor},"calib_spread":${c.spread.fold("null")(_.toString)},"calib_ok":$calibOk,"failed_queries":$failedJson,"calib":$calibJson,"queries":$qsFull,"census":$censusAll,"sf":"$sfDir"}"""
     // Two artifacts (BENCH_r10 parsed:null — log noise overflowed the
     // driver's bounded tail capture of stdout): the exact driver line
     // goes to BENCH_LINE.json so the artifact survives any capture

@@ -19,7 +19,7 @@ package graft
   * INPUT order — `Par.map(xs)(f)` is observationally `xs.map(f)` — so
   * a card's row order, and therefore its oracle hash, cannot change.
   * Failure semantics (round 20, the r19 ADVICE note): on the first
-  * failed item IN INPUT ORDER the remaining futures are cancelled
+  * failed item IN INPUT ORDER the pool is stopped with `shutdownNow`
   * (unstarted arms never run; running arms get an interrupt) and that
   * item's cause is rethrown — so side-effectful later arms (index
   * builds, parquet writes) are not quietly run to completion behind a
@@ -44,7 +44,10 @@ object Par {
         try fu.get()
         catch {
           case e: java.util.concurrent.ExecutionException =>
-            futs.foreach(_.cancel(true))
+            // Not a cancel per future: a worker freed by one cancel's
+            // interrupt could dequeue and start an arm not yet cancelled.
+            // A stopped pool hands its workers no further task.
+            pool.shutdownNow()
             throw Option(e.getCause).getOrElse(e)
         }
       }

@@ -35,15 +35,15 @@ object Pipeline {
     *     dim_branch (branch needs bank_key), and the per-bank performance
     *     aggregate. Each is materialized once with `localCheckpoint` (≤ a few
     *     thousand rows) and every consumer — the dim writes, fact_reviews,
-    *     mart_geographic, mart_bank_ranking — reads that frame. A fact row's
-    *     bank_key/branch_key is therefore the key written to the dim by
-    *     construction; re-deriving `monotonically_increasing_id` keys per
-    *     consumer only agrees while shuffle read order is deterministic.
+    *     mart_geographic, mart_bank_ranking — reads that frame.
     *  3. Sinks. Every gold write, the dim/fact validation re-reads (the
     *     reference's per-table COUNT(*), complete_data_pipeline_fixed.py:
     *     305-327) and the bronze count are concurrent [[graft.Par]] arms,
     *     one per sink. The fact write is listed first, so the FIFO scheduler
-    *     gives it cores first and the one-task sinks back-fill.
+    *     gives it cores first and the one-task sinks back-fill. The fact's
+    *     re-read also counts its distinct review_keys in the same aggregate
+    *     and fails the build on a duplicate: the one key whose hash
+    *     collision odds grow with the data (see [[Star]]).
     *
     * The fact ≤ staged check and the run-stats JSON follow only once every
     * arm has succeeded. At scale: fact partitioned by review_year (partition
@@ -55,11 +55,11 @@ object Pipeline {
       val stagedCount = silver.count()
       val Seq(Seq(bank, branch), Seq(perf)) = Par.map(Seq[() => Seq[DataFrame]](
         () => {
-          val bank = Star.dimBank(silver, parityMode = false).localCheckpoint()
-          Seq(bank, Star.dimBranch(silver, bank, parityMode = false).localCheckpoint())
+          val bank = Star.dimBank(silver).localCheckpoint()
+          Seq(bank, Star.dimBranch(silver, bank).localCheckpoint())
         },
         () => Seq(Marts.bankPerformance(silver).localCheckpoint())))(_())
-      val fact = Star.factReviews(silver, bank, branch, parityMode = false)
+      val fact = Star.factReviews(silver, bank, branch)
 
       def save(df: DataFrame, name: String): Unit =
         df.write.mode(SaveMode.Overwrite).parquet(s"$goldDir/$name")
@@ -76,7 +76,11 @@ object Pipeline {
             .write.mode(SaveMode.Overwrite)
             .partitionBy("review_year")
             .parquet(s"$goldDir/fact_reviews")
-          Some(reread("fact_reviews"))
+          val r = spark.read.parquet(s"$goldDir/fact_reviews")
+            .agg(count(lit(1)), countDistinct(col("review_key"))).head()
+          val (rows, keys) = (r.getLong(0), r.getLong(1))
+          require(keys == rows, s"fact_reviews has $rows rows but $keys distinct review_keys")
+          Some(rows)
         },
         () => { save(bank, "dim_bank"); Some(reread("dim_bank")) },
         () => { save(branch, "dim_branch"); Some(reread("dim_branch")) },

@@ -1,7 +1,6 @@
 package graft.domain
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Star-schema build (SURVEY §2.4-2.6, §3.1): dim_sentiment, dim_date,
@@ -9,10 +8,20 @@ import org.apache.spark.sql.functions._
   * candidates (≤ thousands of rows); the fact build is one lineage with
   * two broadcast left-joins + the ordered sentiment-range CASE.
   *
-  * Surrogate keys: `parityMode=true` reproduces the reference's global
-  * `ROW_NUMBER() OVER (ORDER BY …)` keys (complete_data_pipeline_fixed.py:
-  * 150,186,200,226) — exact but single-partition; `parityMode=false` uses
-  * `monotonically_increasing_id` — the 100 TB-safe mode (SURVEY §7.4.1).
+  * Surrogate keys follow one rule: a key is the BIGINT `xxhash64` of its
+  * natural key — bank_key of bank_name, branch_key of branch_id,
+  * review_key of review_id. The reference numbers rows with a global
+  * `ROW_NUMBER() OVER (ORDER BY …)` (complete_data_pipeline_fixed.py:
+  * 150,186,200,226), a single-partition sort whose keys also shift when a
+  * row is added. A hash is computed on each row: it adds no stage, and a
+  * natural key gets the same surrogate key in every session, refresh and
+  * partition layout.
+  *
+  * Collision bound: n distinct values collide with probability ≈ n²/2⁶⁵,
+  * about 7·10⁻¹¹ at 50k reviews and 3·10⁻⁴ at 10⁸. The dims are bounded
+  * (~10 banks, a few thousand branches), so their odds do not grow with
+  * the data; the fact's keys are checked for duplicates by
+  * [[Pipeline.run]]'s validation read.
   */
 object Star {
 
@@ -47,24 +56,13 @@ object Star {
 
   /** dim_date: 2020-01-01..2030-12-31 spine (4018 rows, dim_date.sql:17-23)
     * with date_key = YYYYMMDD int, PG-semantics DOW, season + weekend flags.
-    *
-    * `holidayFromDim = false` (parity mode) computes is_holiday with the
-    * reference's CASE expression; `true` derives it by broadcast-joining
-    * the [[dimHoliday]] DATA table instead — the production shape, where
-    * the holiday calendar is reference data you append to (lunar/religious
-    * holidays, new years) rather than logic you redeploy. StarSpec asserts
-    * the two modes agree on every day of the spine. */
-  def dimDate(spark: SparkSession, holidayFromDim: Boolean = false): DataFrame = {
+    * is_holiday is the row-local [[isMoroccanHoliday]] test over the same
+    * fixed-date list that [[dimHoliday]] tabulates. */
+  def dimDate(spark: SparkSession): DataFrame = {
     val spine = spark.sql(
       "SELECT explode(sequence(to_date('2020-01-01'), to_date('2030-12-31'), interval 1 day)) AS full_date")
     val fd = col("full_date")
-    val isHoliday =
-      if (!holidayFromDim) isMoroccanHoliday(fd)
-      else col("holiday_name").isNotNull
-    val joined =
-      if (!holidayFromDim) spine
-      else spine.join(broadcast(dimHoliday(spark)), Seq("full_date"), "left")
-    joined.select(
+    spine.select(
       (year(fd) * 10000 + month(fd) * 100 + dayofmonth(fd)).as("date_key"),
       fd,
       year(fd).as("year"), quarter(fd).as("quarter"), month(fd).as("month"),
@@ -80,14 +78,13 @@ object Star {
         .otherwise("Autumn").as("season"),
       year(fd).as("fiscal_year"), // Jan-Dec fiscal calendar (dim_date.sql:65-67)
       quarter(fd).as("fiscal_quarter"),
-      isHoliday.as("is_holiday"))
+      isMoroccanHoliday(fd).as("is_holiday"))
   }
 
-  /** dim_holiday: the nine fixed-date Moroccan public holidays
-    * (dim_date.sql:68-81) as a DATA table — one row per occurrence over
-    * the dim_date spine years (9 × 11 = 99 rows). Religious (lunar)
-    * holidays shift yearly and are out of the reference's scope (and the
-    * parity CASE ladder's); `includeReligious = true` appends their
+  /** dim_holiday: the nine [[fixedHolidays]] as a DATA table — one row
+    * per occurrence over the dim_date spine years (9 × 11 = 99 rows). Religious (lunar)
+    * holidays shift yearly and are out of the reference's scope (and
+    * dim_date's is_holiday); `includeReligious = true` appends their
     * observed/projected Gregorian dates — the extension the reference
     * could never express in a CASE over (month, day), and the reason this
     * is a table. Lunar dates beyond the mid-2020s are astronomical
@@ -103,15 +100,9 @@ object Star {
   def dimHoliday(spark: SparkSession,
       includeReligious: Boolean = false): DataFrame = {
     import spark.implicits._
-    val fixed = Seq(
-      (1, 1, "New Year"), (1, 11, "Independence Manifesto Day"),
-      (5, 1, "Labour Day"), (7, 30, "Throne Day"),
-      (8, 14, "Oued Ed-Dahab Day"), (8, 20, "Revolution Day"),
-      (8, 21, "Youth Day"), (11, 6, "Green March Day"),
-      (11, 18, "Independence Day"))
     val rows = for {
       y <- 2020 to 2030
-      (m, dd, name) <- fixed
+      (m, dd, name) <- fixedHolidays
     } yield (java.sql.Date.valueOf(f"$y-$m%02d-$dd%02d"), name)
     val base = rows.toDF("full_date", "holiday_name")
     if (!includeReligious) base
@@ -152,23 +143,20 @@ object Star {
       mawlid.flatMap(d => Seq(d -> "Aid al-Mawlid", plusOne(d) -> "Aid al-Mawlid (day 2)"))
   }
 
-  /** Fixed-date Moroccan public holidays (dim_date.sql:68-81): New Year,
-    * Independence Manifesto, Labour Day, Throne Day, Oued Ed-Dahab,
-    * Revolution Day, Youth Day, Green March, Independence Day. The
-    * reference models only the fixed Gregorian dates (religious holidays
-    * shift yearly and are out of its scope — kept identical here). */
-  def isMoroccanHoliday(fd: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val holidays = Seq((1, 1), (1, 11), (5, 1), (7, 30), (8, 14), (8, 20), (8, 21), (11, 6), (11, 18))
-    (month(fd) * 100 + dayofmonth(fd)).isin(holidays.map { case (m, dd) => m * 100 + dd }: _*)
-  }
+  /** The fixed-date Moroccan public holidays as (month, day, name)
+    * (dim_date.sql:68-81). The reference models only the fixed Gregorian
+    * dates (religious holidays shift yearly and are out of its scope — kept
+    * identical here). */
+  private val fixedHolidays = Seq(
+    (1, 1, "New Year"), (1, 11, "Independence Manifesto Day"),
+    (5, 1, "Labour Day"), (7, 30, "Throne Day"),
+    (8, 14, "Oued Ed-Dahab Day"), (8, 20, "Revolution Day"),
+    (8, 21, "Youth Day"), (11, 6, "Green March Day"),
+    (11, 18, "Independence Day"))
 
-  private def surrogate(df: DataFrame, keyName: String, orderCols: Seq[String],
-      parityMode: Boolean): DataFrame =
-    if (parityMode)
-      df.withColumn(keyName,
-        row_number().over(Window.orderBy(orderCols.map(col): _*)))
-    else
-      df.withColumn(keyName, monotonically_increasing_id())
+  /** True on the [[fixedHolidays]]: a row-local test of (month, day). */
+  def isMoroccanHoliday(fd: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    (month(fd) * 100 + dayofmonth(fd)).isin(fixedHolidays.map { case (m, dd, _) => m * 100 + dd }: _*)
 
   /** Descriptive bank attributes — the dbt dim's CASE lookup ladders
     * (dim_bank.sql:21-73): category and type from name patterns,
@@ -220,17 +208,17 @@ object Star {
   /** dim_bank: distinct banks + branch-count metric join + descriptive
     * attribute ladders
     * (complete_data_pipeline_fixed.py:182-196; dim_bank.sql:16-101). */
-  def dimBank(staged: DataFrame, parityMode: Boolean = true): DataFrame = {
+  def dimBank(staged: DataFrame): DataFrame = {
     val banks = staged.select(col("bank_name")).distinct()
     val metrics = staged.groupBy(col("bank_name"))
       .agg(countDistinct(col("place_id")).as("total_branches"))
     val joined = bankAttributes(banks.join(broadcast(metrics), Seq("bank_name"), "left"))
       .withColumn("bank_id", regexp_replace(col("bank_name"), " ", "_"))
       .withColumn("total_branches", coalesce(col("total_branches"), lit(0L)))
-    surrogate(joined, "bank_key", Seq("bank_name"), parityMode)
-      .select(col("bank_key"), col("bank_id"), col("bank_name"),
-        col("bank_category"), col("bank_type"), col("established_year"),
-        col("headquarters_city"), col("website_url"), col("total_branches"))
+    joined.select(xxhash64(col("bank_name")).as("bank_key"), col("bank_id"),
+      col("bank_name"), col("bank_category"), col("bank_type"),
+      col("established_year"), col("headquarters_city"), col("website_url"),
+      col("total_branches"))
   }
 
   /** City/region extraction from branch names — the dim_branch CASE ladder
@@ -263,16 +251,15 @@ object Star {
 
   /** dim_branch: distinct (place_id, branch, bank) + bank_key lookup
     * (complete_data_pipeline_fixed.py:198-221; dim_branch.sql:17-106). */
-  def dimBranch(staged: DataFrame, dimBank: DataFrame, parityMode: Boolean = true): DataFrame = {
+  def dimBranch(staged: DataFrame, dimBank: DataFrame): DataFrame = {
     val branches = staged
       .select(col("place_id").as("branch_id"), col("branch_name"), col("bank_name"))
       .distinct()
     val joined = branchGeo(branches.join(
       broadcast(dimBank.select("bank_key", "bank_name")), Seq("bank_name"), "left"))
-    surrogate(joined, "branch_key", Seq("branch_id"), parityMode)
-      .select(col("branch_key"), col("branch_id"), col("branch_name"),
-        col("bank_name"), col("bank_key"), col("city"), col("region"),
-        col("branch_type"), col("services"), col("opening_hours"))
+    joined.select(xxhash64(col("branch_id")).as("branch_key"), col("branch_id"),
+      col("branch_name"), col("bank_name"), col("bank_key"), col("city"),
+      col("region"), col("branch_type"), col("services"), col("opening_hours"))
   }
 
   /** fact_reviews: staged silver ⋈ broadcast dims (J1 left + null-filter,
@@ -282,9 +269,8 @@ object Star {
     * reviewer_key uses Spark's Murmur3 `hash` — deliberately NOT PG
     * hashtext (non-portable, SURVEY §7.4.3); stability within this engine
     * is what matters. */
-  def factReviews(enriched: DataFrame, dimBank: DataFrame, dimBranch: DataFrame,
-      parityMode: Boolean = true): DataFrame = {
-    val withKeys = enriched
+  def factReviews(enriched: DataFrame, dimBank: DataFrame, dimBranch: DataFrame): DataFrame =
+    enriched
       .join(broadcast(dimBank.select("bank_key", "bank_name")), Seq("bank_name"), "left")
       .filter(col("bank_key").isNotNull) // J1: left + null-filter, not inner (parity)
       .join(broadcast(dimBranch.select(col("branch_key"), col("branch_id"))),
@@ -297,6 +283,5 @@ object Star {
         abs(hash(concat(coalesce(col("author_name"), lit("")),
           coalesce(col("author_url"), lit(""))))))
       .withColumn("loaded_at", current_timestamp())
-    surrogate(withKeys, "review_key", Seq("review_time", "review_id"), parityMode)
-  }
+      .withColumn("review_key", xxhash64(col("review_id")))
 }

@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DateType, DayTimeIntervalType, LongType, NumericType,
+  StructField, StructType, TimestampNTZType, TimestampType, YearMonthIntervalType}
 import scala.jdk.CollectionConverters._
 
 /** Exact global row numbers / running sums WITHOUT a single-partition
@@ -96,6 +97,15 @@ object GlobalRank {
       s"GlobalRank needs at least 2 buckets (got $buckets) — with 1 the " +
         "construction degenerates to the single-partition window it replaces")
     val keyed = df.withColumn("__grk", key)
+    // approx_percentile takes only these key types; it would implicitly
+    // cast any other (a string to DOUBLE), which under ANSI throws inside
+    // the first task. Refuse it here, on the driver, before any job runs.
+    keyed.schema("__grk").dataType match {
+      case _: NumericType | DateType | TimestampType | TimestampNTZType |
+          _: YearMonthIntervalType | _: DayTimeIntervalType =>
+      case t => throw new IllegalArgumentException(
+        s"GlobalRank ranks numeric, date, timestamp and interval keys, not ${t.sql}")
+    }
     // Pass 1 (ONE job): boundary values + total count. approx_percentile
     // never invents values, so boundaries are real key values; duplicates
     // just leave buckets empty.

@@ -101,4 +101,18 @@ class BenchSpec extends SparkSpec {
     val m = Bench.measure(spark, qs, sfDir)
     assert(m.census === qs.map(_._1 -> countOnly))
   }
+
+  test("calibration compares the sentinels only at the scale their references are pinned at") {
+    // Every probe at twice its reference time, q11 at three times.
+    val calib = Bench.calibRef.map { case (k, v) => k -> v * (if (k == "q11") 3 else 2) }
+    val atRef = Bench.calibrate(calib, "/data/sf0.1/")
+    assert(math.abs(atRef.noiseFactor - 2.0) < 1e-9, atRef)
+    assert(math.abs(atRef.spread.get - 1.5) < 1e-9, atRef)
+    assert(atRef.ok === Some(true))
+    // Sentinels 12x slower, as at a larger scale: away from sf0.1 only the
+    // cpu probe counts; at sf0.1 the probes disagree about the machine.
+    val slowSentinels = calib.map { case (k, v) => k -> (if (k == "cpu") v else v * 12) }
+    assert(Bench.calibrate(slowSentinels, "/data/sf0.01") === Bench.Calibration(2.0, None, None))
+    assert(Bench.calibrate(slowSentinels, "/data/sf0.1").ok === Some(false))
+  }
 }

@@ -81,6 +81,30 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  test("run: the same bronze builds the same gold, keys included, under any partitioning") {
+    val conf = spark.conf
+    val pinned = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.coalescePartitions.enabled")
+    val saved = pinned.map(k => k -> conf.getOption(k))
+    // Builds the fixture bronze, written as `files` parquet files, with
+    // `partitions` shuffle partitions; returns every gold table's rows.
+    def build(partitions: Int, files: Int): Map[String, Seq[String]] = {
+      conf.set("spark.sql.shuffle.partitions", partitions.toLong)
+      val base = Files.createTempDirectory("graft_pipe").toString
+      Fixtures.reviews(spark).repartition(files).write.parquet(s"$base/bronze")
+      assert(new java.io.File(s"$base/bronze").list().count(_.endsWith(".parquet")) === files)
+      Pipeline.run(spark, s"$base/bronze", s"$base/gold")
+      goldTables.map(t => t -> goldRows(s"$base/gold", t)).toMap
+    }
+    try {
+      // AQE would coalesce the fixture's shuffles to one partition either
+      // way; keep the partition counts as set.
+      conf.set("spark.sql.adaptive.coalescePartitions.enabled", false)
+      val one = build(partitions = 1, files = 1)
+      val many = build(partitions = 7, files = 4)
+      goldTables.foreach(t => assert(many(t) === one(t), t))
+    } finally saved.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
+  }
+
   test("run: a failed build releases the persisted silver") {
     val base = bronzeBase()
     // Gold under a regular file: silver is built, then every write fails.

@@ -86,6 +86,19 @@ class GlobalRankSpec extends SparkSpec {
     }
   }
 
+  test("a string key is refused on the driver, before any job runs") {
+    val df = Seq((1L, "BMCI"), (2L, "CIH Bank")).toDF("id", "bank_name")
+    val group = "global-rank-string-key"
+    spark.sparkContext.setJobGroup(group, "string key")
+    val e = try intercept[IllegalArgumentException] {
+        GlobalRank.withRank(df, col("bank_name"), descending = false,
+          tieBreakers = Seq(col("id")), rnName = "rn")
+      }
+      finally spark.sparkContext.clearJobGroup()
+    assert(e.getMessage.contains("STRING"), e.getMessage)
+    assert(spark.sparkContext.statusTracker.getJobIdsForGroup(group).isEmpty)
+  }
+
   test("ntileFromRank equals Spark's ntile window function across sizes and buckets") {
     for (n <- Seq(1, 2, 3, 4, 5, 7, 16, 97); b <- Seq(2, 4, 16)) {
       val df = (1 to n).map(i => (i.toLong, i * 3 % 17)).toDF("id", "v")

@@ -122,8 +122,9 @@ class PlanHygieneSpec extends SparkSpec {
   /** Unpartitioned windows over bounded inputs, each justified:
     *  - q08: LAG over the per-MONTH aggregate (rows = months in the data's
     *    calendar span);
-    *  - q09: surrogate keys for a 5-row distinct dim (reference parity —
-    *    the scale mode is Star.surrogate(parityMode = false)). */
+    *  - q09: surrogate keys for a 5-row distinct dim (the reference's
+    *    ROW_NUMBER; the warehouse's keys are Star's row-local xxhash64 of
+    *    the natural key, which needs no window). */
   private val boundedAllowlist = Set("q08_window_lag_trend", "q09_surrogate_keys")
 
   test("no query plan has an unpartitioned window outside the bounded allowlist") {
