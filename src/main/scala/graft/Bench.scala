@@ -245,7 +245,7 @@ object Bench {
       m.census.map { case (k, c) => "\"" + k + "\":" + censusJson(c) }
         .mkString("{", ",", "}}")
     val lineFull =
-      s"""{"metric":"total","value":$total,"unit":"sec","runs":3,"agg":"median","noise_factor":${c.noiseFactor},"calib_spread":${c.spread.fold("null")(_.toString)},"calib_ok":$calibOk,"failed_queries":$failedJson,"calib":$calibJson,"queries":$qsFull,"census":$censusAll,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","runs":3,"agg":"median","noise_factor":${c.noiseFactor},"calib_spread":${c.spread.fold("null")(_.toString)},"calib_ok":$calibOk,"failed_queries":$failedJson,"calib":$calibJson,"queries":$qsFull,"census":$censusAll,"sf":"$sfDir","master":"${spark.sparkContext.master}"}"""
     // Two artifacts (BENCH_r10 parsed:null — log noise overflowed the
     // driver's bounded tail capture of stdout): the exact driver line
     // goes to BENCH_LINE.json so the artifact survives any capture

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.operators.IndexStore
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -580,40 +581,34 @@ object DedupOps extends QueryModule {
   /** One-time corpus pass: persist the three probe tables — exact-hash
     * (norm_key → min doc_id), MinHash bands, and the per-doc shingle
     * doc-store used for candidate verification (the storage the index
-    * pays so that probes are corpus-independent) — plus the banding
-    * scheme as index metadata, so every later probe/append bands the way
-    * the index was built regardless of the probing session's conf. */
+    * pays so that probes are corpus-independent) — and commit them as
+    * the `dedup` kind with the banding scheme as its parameters, so
+    * every later probe/append bands the way the index was built
+    * regardless of the probing session's conf. */
   private[graft] def buildDedupIndex(base: DataFrame, dir: String): Unit = {
     val s = base.sparkSession
     val scheme = LshConfig.fromConf(s)
     val nb = normDocs(base)
     // Each table persists BUCKETED on its own probe-join key (external
-    // bucketed tables, spec persisted beside the data — see IndexStore):
-    // the probe's index-side scans arrive pre-partitioned, so only the
-    // batch side ever shuffles. This is the layout the DedupStream
-    // scaladoc promises; IndexColocationSpec pins the plan shape.
-    graft.operators.IndexStore.create(
-      nb.groupBy(col("norm_key")).agg(min(col("doc_id")).as("exact_doc")),
-      dir, "exact", Seq("norm_key"))
-    graft.operators.IndexStore.create(
-      mhBandsOf(nb, scheme), dir, "bands", Seq("band", "sig"))
-    graft.operators.IndexStore.create(
-      shingleSetOf(nb), dir, "shingles", Seq("doc_id"))
-    import s.implicits._
-    Seq((scheme.bands, scheme.rows)).toDF("bands", "rows")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/scheme")
+    // bucketed tables — see IndexStore): the probe's index-side scans
+    // arrive pre-partitioned, so only the batch side ever shuffles. This
+    // is the layout the DedupStream scaladoc promises;
+    // IndexColocationSpec pins the plan shape.
+    IndexStore.build(s, dir, "dedup") {
+      IndexStore.Kind(Map(
+        IndexStore.write(
+          nb.groupBy(col("norm_key")).agg(min(col("doc_id")).as("exact_doc")),
+          dir, "exact", Seq("norm_key")),
+        IndexStore.write(mhBandsOf(nb, scheme), dir, "bands", Seq("band", "sig")),
+        IndexStore.write(shingleSetOf(nb), dir, "shingles", Seq("doc_id"))),
+        Map("bands" -> scheme.bands.toString, "rows" -> scheme.rows.toString))
+    }
   }
 
-  /** The banding scheme a persisted index was built with (1-row metadata
-    * table; pre-knob indexes without one are [[LshConfig.Default]]). */
+  /** The banding scheme a persisted index was built with. */
   private[graft] def indexScheme(s: SparkSession, dir: String): LshConfig.Scheme = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/scheme")
-    if (!p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p))
-      LshConfig.Default
-    else {
-      val r = s.read.parquet(p.toString).head()
-      LshConfig.Scheme(r.getInt(0), r.getInt(1))
-    }
+    val p = IndexStore.kind(s, dir, "dedup").params
+    LshConfig.Scheme(p("bands").toInt, p("rows").toInt)
   }
 
   /** Fold a batch's NOVEL docs into the persisted index — the refresh arm
@@ -629,12 +624,12 @@ object DedupOps extends QueryModule {
     * min. */
   private[graft] def appendToDedupIndex(novel: DataFrame, dir: String): Unit = {
     val nb = normDocs(novel)
-    graft.operators.IndexStore.append(
+    IndexStore.append(
       nb.groupBy(col("norm_key")).agg(min(col("doc_id")).as("exact_doc")),
       dir, "exact")
-    graft.operators.IndexStore.append(
+    IndexStore.append(
       mhBandsOf(nb, indexScheme(novel.sparkSession, dir)), dir, "bands")
-    graft.operators.IndexStore.append(shingleSetOf(nb), dir, "shingles")
+    IndexStore.append(shingleSetOf(nb), dir, "shingles")
   }
 
   private[graft] val IndexTables = Seq("exact", "bands", "shingles")
@@ -645,16 +640,9 @@ object DedupOps extends QueryModule {
     * cost grows with file count (open/footer overhead per file — the
     * classic streaming small-files problem), so this number is what a
     * deployment alarms on. */
-  private[graft] def indexFileCount(s: SparkSession, dir: String): Long = {
-    val conf = s.sparkContext.hadoopConfiguration
-    IndexTables.map { t =>
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$t")
-      val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) 0L
-      else fs.listStatus(p).count(f =>
-        f.isFile && f.getPath.getName.endsWith(".parquet")).toLong
-    }.sum
-  }
+  private[graft] def indexFileCount(s: SparkSession, dir: String): Long =
+    IndexTables.map(t =>
+      graft.Fs.list(s"$dir/$t").count(_.endsWith(".parquet")).toLong).sum
 
   /** Retire docs from the index: append their ids to the tombstone
     * table (one column, `doc_id`). Tombstones take effect at the NEXT
@@ -680,7 +668,7 @@ object DedupOps extends QueryModule {
     * overwrite (and survives trivially). IndexRaceSpec's dedup arm
     * hammers the interleaving. */
   private[graft] def tombstoneDocs(docs: DataFrame, dir: String): Unit =
-    graft.operators.IndexStore.withLock(docs.sparkSession, dir) {
+    IndexStore.withLock(docs.sparkSession, dir) {
       docs.select(col("doc_id")).write.mode("append")
         .parquet(s"$dir/tombstones")
     }
@@ -690,9 +678,9 @@ object DedupOps extends QueryModule {
     * (zero overhead for the common case). */
   private[graft] def loadTombstones(s: SparkSession,
       dir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    if (!p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)) None
-    else Some(s.read.parquet(p.toString).select(col("doc_id")).distinct())
+    val p = s"$dir/tombstones"
+    if (!graft.Fs.exists(p)) None
+    else Some(s.read.parquet(p).select(col("doc_id")).distinct())
   }
 
   /** Anti-join `df` against the tombstone set on `key` (no-op without
@@ -751,19 +739,19 @@ object DedupOps extends QueryModule {
     // that by running both from one foreachBatch thread.)
     val applied = tombs.map { tb =>
       val present = Seq(
-        graft.operators.IndexStore.read(s, dir, "exact")
+        IndexStore.read(s, dir, "exact")
           .select(col("exact_doc").as("doc_id")),
-        graft.operators.IndexStore.read(s, dir, "bands").select(col("doc_id")),
-        graft.operators.IndexStore.read(s, dir, "shingles")
+        IndexStore.read(s, dir, "bands").select(col("doc_id")),
+        IndexStore.read(s, dir, "shingles")
           .select(col("doc_id")))
         .reduce(_.union(_)).distinct()
       tb.join(present, Seq("doc_id"), "left_semi")
         .localCheckpoint(true) // detach from the files the swaps rewrite
     }
-    // Swap preserves the build-time bucketing (IndexStore.compactSwap
-    // re-registers from the persisted spec after the rename).
+    // Swap preserves the committed bucketing (IndexStore.compactSwap
+    // re-registers from the manifest after the rename).
     def swap(table: String)(compact: DataFrame => DataFrame): Unit =
-      graft.operators.IndexStore.compactSwap(s, dir, table)(compact)
+      IndexStore.compactSwap(s, dir, table)(compact)
     swap("exact")(df => dropTombstoned(df, "exact_doc", tombs)
       .groupBy(col("norm_key")).agg(min(col("exact_doc")).as("exact_doc")))
     swap("bands")(df => dropTombstoned(df, "doc_id", tombs).distinct())
@@ -777,7 +765,7 @@ object DedupOps extends QueryModule {
     // [[tombstoneDocs]] cannot land between them (the round-14 residual
     // race, now closed rather than documented).
     applied.foreach { ap =>
-      graft.operators.IndexStore.withLock(s, dir) {
+      IndexStore.withLock(s, dir) {
         loadTombstones(s, dir).foreach { cur =>
           cur.join(ap, Seq("doc_id"), "left_anti")
             .localCheckpoint(true) // detach from the files being overwritten
@@ -816,7 +804,7 @@ object DedupOps extends QueryModule {
     // Candidates: batch bands × persisted band index — the only
     // index-sized join, keyed on (band, sig).
     val bandIdx = dropTombstoned(
-      graft.operators.IndexStore.read(s, dir, "bands")
+      IndexStore.read(s, dir, "bands")
         .select(col("doc_id").as("base_doc"), col("band"), col("sig")),
       "base_doc", tombs)
     val cand = mhBandsOf(nb, indexScheme(s, dir))
@@ -832,7 +820,7 @@ object DedupOps extends QueryModule {
         nb.join(broadcast(cand.select(col("batch_doc").as("doc_id")).distinct()),
           "doc_id"))
       .localCheckpoint(true)
-    val baseSets = graft.operators.IndexStore.read(s, dir, "shingles")
+    val baseSets = IndexStore.read(s, dir, "shingles")
       .join(broadcast(cand.select(col("base_doc").as("doc_id")).distinct()),
         "doc_id")
     val best = cand
@@ -854,7 +842,7 @@ object DedupOps extends QueryModule {
     // probing its own partial append) are nulled before the min, which
     // ignores them.
     nb.select(col("doc_id"), col("norm_key"))
-      .join(dropTombstoned(graft.operators.IndexStore.read(s, dir, "exact"),
+      .join(dropTombstoned(IndexStore.read(s, dir, "exact"),
           "exact_doc", tombs),
         Seq("norm_key"), "left")
       .groupBy(col("doc_id"))
@@ -903,15 +891,15 @@ object DedupOps extends QueryModule {
     * exact integers plus one final division. */
   private def q208(s: SparkSession, d: String): DataFrame = {
     val dir = builtBaseIndex(s, d) // shared with q112 — one build per corpus
-    val bstats = graft.operators.IndexStore.read(s, dir, "bands")
+    val bstats = IndexStore.read(s, dir, "bands")
       .groupBy(col("band"), col("sig")).agg(count(lit(1)).as("n"))
       .agg(sum(col("n")).as("band_rows"),
         count(lit(1)).as("band_buckets"),
         max(col("n")).as("max_bucket_docs"),
         expr("sum(n * (n - 1)) div 2").as("cand_pairs_budget"))
-    val estats = graft.operators.IndexStore.read(s, dir, "exact")
+    val estats = IndexStore.read(s, dir, "exact")
       .agg(count(lit(1)).as("exact_keys"))
-    val sstats = graft.operators.IndexStore.read(s, dir, "shingles")
+    val sstats = IndexStore.read(s, dir, "shingles")
       .agg(count(lit(1)).as("shingle_docs"), sum(size(col("shs"))).as("shingle_mass"))
     graft.Scalars.withScalar(graft.Scalars.withScalar(bstats, estats), sstats)
       .select(col("exact_keys"), col("band_rows"), col("band_buckets"),

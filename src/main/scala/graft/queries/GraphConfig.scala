@@ -57,12 +57,11 @@ object GraphConfig {
     * Sample-size caveat (round-17, the ADVICE note): 8 held-out queries
     * quantize recall to EIGHTHS, so arm ordering near the 0.5 target can
     * flip on a single query, and the constants are corpus-specific. This
-    * curve is therefore only the FALLBACK for indexes persisted without
-    * their own scheme metadata and for ad-hoc (index-less) searches — a
-    * built graph index derives and PERSISTS its own scheme from a sweep
-    * on its own corpus at build time ([[graft.queries.VectorOps]]'s
+    * curve is therefore only for ad-hoc (index-less) searches — a built
+    * graph index derives and COMMITS its own scheme from a sweep on its
+    * own corpus at build time ([[graft.queries.VectorOps]]'s
     * `addGraphToSemIndex`), and probes read that back, the same way the
-    * LSH index persists its (bands, rows). */
+    * LSH index commits its (bands, rows). */
   val MeasuredCurve: Seq[(Scheme, Double)] = Seq(
     Scheme(1, 1, 3) -> 0.25,
     Scheme(1, 3, 3) -> 0.375,

@@ -15,8 +15,8 @@ import org.apache.spark.sql.SparkSession
   * banding.
   *
   * The BUILT INDEX carries its scheme as metadata
-  * (`DedupOps.buildDedupIndex` persists it next to the three tables;
-  * probe/append read it back), so a probe always bands exactly the way
+  * (`DedupOps.buildDedupIndex` commits it in the index manifest with the
+  * three tables; probe/append read it back), so a probe always bands exactly the way
   * the index was built even across sessions with different conf — the
   * same discipline as the semantic index persisting its calibrated τ.
   * Session conf is consulted only where no index exists yet (q28's

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.operators.IndexStore
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -22,8 +23,6 @@ import org.apache.spark.sql.functions._
   * all-pairs blowup.
   */
 object VectorOps extends QueryModule {
-
-  private val log = org.slf4j.LoggerFactory.getLogger("graft.VectorOps")
 
   private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
 
@@ -1010,40 +1009,44 @@ object VectorOps extends QueryModule {
     }
 
   private[graft] def buildSemIndex(s: SparkSession, base: DataFrame,
-      dir: String, lloydIters: Int = 0): Unit = {
-    val u = unitize(base).localCheckpoint(true)
-    val k = ivfKFor(u.count())
-    // collect-bound: orderBy(vec_id).limit(k) — ≤ k rows, k ∝ √n via ivfKFor
-    val seed: Seq[Seq[Double]] = u.select(col("vec_id"), col("ue"))
-      .orderBy(col("vec_id")).limit(k)
-      .collect().map(_.getSeq[Double](1)).toSeq
-    val rows = lloydRefine(u, seed, lloydIters)
-    import s.implicits._
-    rows.zipWithIndex.map { case (v, i) => (i, v) }.toDF("cid", "cu")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
-    // Publish what was just written (producer-refresh): readers get the
-    // in-memory rows without a parquet re-read, and a rebuilt dir
-    // replaces any prior entry.
-    centroidCache.put(s, dir, rows.map(_.toSeq))
-    val sc = sortedCells(typedlit(rows), rows.size)
-    val asg = u.select(col("vec_id"), col("ue"),
-        element_at(sc, 1)("cid").cast("bigint").as("cell"))
-      .localCheckpoint(true) // consumers: vector store sink + τ pairs
-    // Vector store persists BUCKETED on the cell id (external bucketed
-    // table, spec beside the data — IndexStore): the probe's candidate
-    // join arrives at a pre-partitioned index side, so only the batch's
-    // exploded probe-cells shuffle. IndexColocationSpec pins the plan.
-    graft.operators.IndexStore.create(asg, dir, "vectors", Seq("cell"))
-    val a = asg.select(col("cell"), col("vec_id").as("va"), col("ue").as("ua"))
-    val b = asg.select(col("cell").as("cell_b"), col("vec_id").as("vb"),
-      col("ue").as("ub"))
-    val pairs = a.join(b, col("cell") === col("cell_b") && col("va") < col("vb"))
-      .select(col("va"), col("vb"), expr("graft_dot(ua, ub)").as("cos"))
-      .localCheckpoint(true) // consumers: count + threshold
-    PctGate.thresholdDfLazy(pairs, "cos", "0.999", "q211tau",
-        "tau", keyExpr = "((va * 4194304) + vb)")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/tau")
-  }
+      dir: String, lloydIters: Int = 0): Unit =
+    // The pq and graph kinds were built from the old vectors: a rebuild
+    // uncommits them with `sem`, so they read as absent until re-added.
+    IndexStore.build(s, dir, "sem", drops = Seq("pq", "graph")) {
+      val u = unitize(base).localCheckpoint(true)
+      val k = ivfKFor(u.count())
+      // collect-bound: orderBy(vec_id).limit(k) — ≤ k rows, k ∝ √n via ivfKFor
+      val seed: Seq[Seq[Double]] = u.select(col("vec_id"), col("ue"))
+        .orderBy(col("vec_id")).limit(k)
+        .collect().map(_.getSeq[Double](1)).toSeq
+      val rows = lloydRefine(u, seed, lloydIters)
+      import s.implicits._
+      rows.zipWithIndex.map { case (v, i) => (i, v) }.toDF("cid", "cu")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
+      // Publish what was just written (producer-refresh): readers get the
+      // in-memory rows without a parquet re-read, and a rebuilt dir
+      // replaces any prior entry.
+      centroidCache.put(s, dir, rows.map(_.toSeq))
+      val sc = sortedCells(typedlit(rows), rows.size)
+      val asg = u.select(col("vec_id"), col("ue"),
+          element_at(sc, 1)("cid").cast("bigint").as("cell"))
+        .localCheckpoint(true) // consumers: vector store sink + τ pairs
+      // Vector store persists BUCKETED on the cell id (external bucketed
+      // table — IndexStore): the probe's candidate join arrives at a
+      // pre-partitioned index side, so only the batch's exploded
+      // probe-cells shuffle. IndexColocationSpec pins the plan.
+      val vectors = IndexStore.write(asg, dir, "vectors", Seq("cell"))
+      val a = asg.select(col("cell"), col("vec_id").as("va"), col("ue").as("ua"))
+      val b = asg.select(col("cell").as("cell_b"), col("vec_id").as("vb"),
+        col("ue").as("ub"))
+      val pairs = a.join(b, col("cell") === col("cell_b") && col("va") < col("vb"))
+        .select(col("va"), col("vb"), expr("graft_dot(ua, ub)").as("cos"))
+        .localCheckpoint(true) // consumers: count + threshold
+      PctGate.thresholdDfLazy(pairs, "cos", "0.999", "q211tau",
+          "tau", keyExpr = "((va * 4194304) + vb)")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/tau")
+      IndexStore.Kind(Map(vectors))
+    }
 
   /** Probe a batch of (vec_id, embedding) against a persisted semantic
     * index: (vec_id, cell, verdict, match_vec, best_cos, tau) per batch
@@ -1072,7 +1075,7 @@ object VectorOps extends QueryModule {
     // against taken-down content must not fire); None when the index
     // has no tombstones — the common case pays nothing.
     val idx = dropSemTombstoned(
-      graft.operators.IndexStore.read(s, dir, "vectors")
+      IndexStore.read(s, dir, "vectors")
         .select(col("cell"), col("vec_id").as("base_vec"), col("ue").as("bu")),
       "base_vec", loadSemTombstones(s, dir))
     val best = assigned
@@ -1110,7 +1113,7 @@ object VectorOps extends QueryModule {
     val assigned = unitize(novel)
       .select(col("vec_id"), col("ue"),
         element_at(sc, 1)("cid").cast("bigint").as("cell"))
-    graft.operators.IndexStore.append(assigned, dir, "vectors")
+    IndexStore.append(assigned, dir, "vectors")
     // IVFADC parity: an index carrying PQ artifacts encodes the novel
     // vectors' residuals with the FROZEN permutation + codebooks (and
     // FROZEN learned rotation, when the build chose one — index metadata
@@ -1131,14 +1134,14 @@ object VectorOps extends QueryModule {
       // ingest carries one, NULL otherwise (NULL never matches a filter
       // predicate, so an unlabeled append is conservatively invisible to
       // filtered probes rather than silently mislabeled).
-      val enc = if (graft.operators.IndexStore.read(s, dir, "codes")
+      val enc = if (IndexStore.read(s, dir, "codes")
           .columns.contains("label")) {
         if (novel.columns.contains("label"))
           enc0.join(novel.select(col("vec_id"),
             col("label").cast("int").as("label")), Seq("vec_id"), "left")
         else enc0.withColumn("label", lit(null).cast("int"))
       } else enc0
-      graft.operators.IndexStore.append(enc, dir, "codes")
+      IndexStore.append(enc, dir, "codes")
     }
     // Navigable-graph parity: wire novel nodes in cell-locally — out-edges
     // to each node's top-degree cell neighbors plus the REVERSE edges that
@@ -1162,7 +1165,7 @@ object VectorOps extends QueryModule {
       // neighbors' degree slots until then.
       val tombs = loadSemTombstones(s, dir)
       val all = dropSemTombstoned(
-          graft.operators.IndexStore.read(s, dir, "vectors"),
+          IndexStore.read(s, dir, "vectors"),
           "vec_id", tombs)
         .dropDuplicates("vec_id")
         .select(col("vec_id"), col("ue"), col("cell"))
@@ -1176,20 +1179,7 @@ object VectorOps extends QueryModule {
       // the reverse rows against the right bound.
       val back = out.select(col("dst").as("src"), col("src").as("dst"),
         col("ecos"), col("kind"))
-      // Legacy-schema guard (the codes/`label` discipline applied to
-      // gedges): a graph index persisted before the cross-cell-edge round
-      // has no `kind` column, and a bucketed append with an extra column
-      // fails on schema mismatch. Appends project down to the TABLE's
-      // columns — legacy rows stay legacy (compaction's single-bound trim
-      // below handles them) instead of failing the refresh loop.
-      val tableCols = graft.operators.IndexStore.read(s, dir, "gedges")
-        .columns.toSet
-      val rows = out.unionByName(back)
-      val appended =
-        if (tableCols.contains("kind")) rows
-        else rows.select(rows.columns.filter(tableCols.contains)
-          .map(col).toSeq: _*)
-      graft.operators.IndexStore.append(appended, dir, "gedges")
+      IndexStore.append(out.unionByName(back), dir, "gedges")
     }
   }
 
@@ -1197,13 +1187,8 @@ object VectorOps extends QueryModule {
     * signal the compaction threshold reads. Centroids and τ are 1-file
     * metadata written once; only `vectors` accretes a file-set per
     * micro-batch under the streaming refresh. */
-  private[graft] def semIndexFileCount(s: SparkSession, dir: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/vectors")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) 0L
-    else fs.listStatus(p).count(f =>
-      f.isFile && f.getPath.getName.endsWith(".parquet")).toLong
-  }
+  private[graft] def semIndexFileCount(s: SparkSession, dir: String): Long =
+    graft.Fs.list(s"$dir/vectors").count(_.endsWith(".parquet")).toLong
 
   /** Retire vectors from the semantic index — [[DedupOps.tombstoneDocs]]
     * one modality over, closing the round-13 gap where a GDPR takedown
@@ -1219,7 +1204,7 @@ object VectorOps extends QueryModule {
     * takedown can no longer be clobbered by a concurrent compaction's
     * re-read→overwrite window; IndexRaceSpec hammers the interleaving. */
   private[graft] def tombstoneVecs(vecs: DataFrame, dir: String): Unit =
-    graft.operators.IndexStore.withLock(vecs.sparkSession, dir) {
+    IndexStore.withLock(vecs.sparkSession, dir) {
       vecs.select(col("vec_id")).write.mode("append")
         .parquet(s"$dir/tombstones")
     }
@@ -1228,9 +1213,9 @@ object VectorOps extends QueryModule {
     * the anti-join entirely (zero overhead for the common case). */
   private[graft] def loadSemTombstones(s: SparkSession,
       dir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    if (!p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)) None
-    else Some(s.read.parquet(p.toString).select(col("vec_id")).distinct())
+    val p = s"$dir/tombstones"
+    if (!graft.Fs.exists(p)) None
+    else Some(s.read.parquet(p).select(col("vec_id")).distinct())
   }
 
   /** Anti-join against the takedown-sized tombstone set (AQE broadcasts
@@ -1264,18 +1249,18 @@ object VectorOps extends QueryModule {
   private[graft] def compactSemIndex(s: SparkSession, dir: String): Unit = {
     val tombs = loadSemTombstones(s, dir).map(_.localCheckpoint(true))
     val applied = tombs.map { tb =>
-      val present = graft.operators.IndexStore.read(s, dir, "vectors")
+      val present = IndexStore.read(s, dir, "vectors")
         .select(col("vec_id")).distinct()
       tb.join(present, Seq("vec_id"), "left_semi")
         .localCheckpoint(true) // detach from the files the swap rewrites
     }
-    graft.operators.IndexStore.compactSwap(s, dir, "vectors")(df =>
+    IndexStore.compactSwap(s, dir, "vectors")(df =>
       dropSemTombstoned(df, "vec_id", tombs).dropDuplicates("vec_id"))
     // IVFADC parity: the codes table compacts in the same pass with the
     // same tombstone snapshot — a taken-down vector leaves both the
     // float store and the code store together (IvfAdcSpec pins it).
     if (hasPq(s, dir))
-      graft.operators.IndexStore.compactSwap(s, dir, "codes")(df =>
+      IndexStore.compactSwap(s, dir, "codes")(df =>
         dropSemTombstoned(df, "vec_id", tombs).dropDuplicates("vec_id"))
     // Graph parity: drop edges with a tombstoned endpoint (either
     // direction), dedup re-appended pairs, and re-trim per (src, kind) to
@@ -1285,33 +1270,20 @@ object VectorOps extends QueryModule {
     // never crowd out its cross-cell escape edge (which is almost always
     // the lowest-cosine row and would lose a single-bound trim).
     if (hasGraph(s, dir))
-      graft.operators.IndexStore.compactSwap(s, dir, "gedges") { df =>
-        val alive = dropSemTombstoned(
-          dropSemTombstoned(df, "src", tombs), "dst", tombs)
+      IndexStore.compactSwap(s, dir, "gedges") { df =>
+        val w = Window.partitionBy(col("src"), col("kind"))
+          .orderBy(col("ecos").desc, col("dst"))
+        dropSemTombstoned(dropSemTombstoned(df, "src", tombs), "dst", tombs)
           .dropDuplicates("src", "dst")
-        // Legacy-schema guard (mirrors the append arm): a pre-cross-edge
-        // gedges table has no `kind` column — re-trim those to the single
-        // [[GraphDegree]] bound they were built with instead of failing on
-        // the missing column.
-        if (alive.columns.contains("kind")) {
-          val w = Window.partitionBy(col("src"), col("kind"))
-            .orderBy(col("ecos").desc, col("dst"))
-          alive.withColumn("rn", row_number().over(w))
-            .filter(col("rn") <= when(col("kind") === 0, lit(WithinDegree))
-              .otherwise(lit(CrossDegree)))
-            .drop("rn")
-        } else {
-          val w = Window.partitionBy(col("src"))
-            .orderBy(col("ecos").desc, col("dst"))
-          alive.withColumn("rn", row_number().over(w))
-            .filter(col("rn") <= GraphDegree)
-            .drop("rn")
-        }
+          .withColumn("rn", row_number().over(w))
+          .filter(col("rn") <= when(col("kind") === 0, lit(WithinDegree))
+            .otherwise(lit(CrossDegree)))
+          .drop("rn")
       }
     // Re-read + overwrite under the writer lock: a concurrent
     // tombstoneVecs serializes against this window instead of racing it.
     applied.foreach { ap =>
-      graft.operators.IndexStore.withLock(s, dir) {
+      IndexStore.withLock(s, dir) {
         loadSemTombstones(s, dir).foreach { cur =>
           cur.join(ap, Seq("vec_id"), "left_anti")
             .localCheckpoint(true) // detach from the files being overwritten
@@ -1426,7 +1398,7 @@ object VectorOps extends QueryModule {
   private def q212(s: SparkSession, d: String): DataFrame = {
     val dir = builtSemIndex(s, d) // shared with q211 — one build per corpus
     // bucketed-by-cell store: this groupBy runs exchange-free
-    val occ = graft.operators.IndexStore.read(s, dir, "vectors")
+    val occ = IndexStore.read(s, dir, "vectors")
       .groupBy(col("cell")).agg(count(lit(1)).as("n"))
     val card = occ.agg(
       sum(col("n")).as("n_vectors"),
@@ -1490,7 +1462,7 @@ object VectorOps extends QueryModule {
       .select(col("vec_id"),
         posexplode(transform(slice(sc, 1, 2), c => c("cid").cast("bigint"))))
       .select(col("vec_id"), col("pos").as("rank"), col("col").as("cell"))
-    val occ = graft.operators.IndexStore.read(s, dir, "vectors")
+    val occ = IndexStore.read(s, dir, "vectors")
       .groupBy(col("cell")).agg(count(lit(1)).as("occ_n"))
     val work = probed.join(occ, Seq("cell"), "left")
       .agg(sum(when(col("rank") === 0, coalesce(col("occ_n"), lit(0L))))
@@ -2528,7 +2500,7 @@ object VectorOps extends QueryModule {
   private[queries] def semResiduals(s: SparkSession, dir: String): DataFrame = {
     val cent = s.read.parquet(s"$dir/centroids")
       .select(col("cid").cast("bigint").as("cid"), col("cu"))
-    graft.operators.IndexStore.read(s, dir, "vectors")
+    IndexStore.read(s, dir, "vectors")
       .join(broadcast(cent), col("cell") === col("cid"))
       .select(col("vec_id"), col("cell"),
         zip_with(col("ue"), col("cu"), (a, b) => a - b).as("ue"))
@@ -2563,72 +2535,76 @@ object VectorOps extends QueryModule {
     * verdict). */
   private[graft] def addPqToSemIndex(s: SparkSession, dir: String,
       lloydIters: Int = 0, learnedRotation: Boolean = false,
-      attrs: Option[DataFrame] = None, rotIters: Int = 4): Unit = {
-    val resid0 = semResiduals(s, dir)
-      .localCheckpoint(true) // consumers: rotation/moments + seeds + codes
-    val rotOpt: Option[(Seq[Seq[Double]], Seq[Double])] =
-      if (learnedRotation) Some(trainRotation(resid0, iters = rotIters))
-      else None
-    val resid = rotOpt.fold(resid0) { case (r, _) =>
-      opqRotate(resid0, r).localCheckpoint(true) // same consumers, rotated
+      attrs: Option[DataFrame] = None, rotIters: Int = 4): Unit =
+    IndexStore.build(s, dir, "pq") {
+      val resid0 = semResiduals(s, dir)
+        .localCheckpoint(true) // consumers: rotation/moments + seeds + codes
+      val rotOpt: Option[(Seq[Seq[Double]], Seq[Double])] =
+        if (learnedRotation) Some(trainRotation(resid0, iters = rotIters))
+        else None
+      val resid = rotOpt.fold(resid0) { case (r, _) =>
+        opqRotate(resid0, r).localCheckpoint(true) // same consumers, rotated
+      }
+      val dims: Seq[Seq[Int]] = rotOpt match {
+        case Some((_, lams)) => opqAllocate(lams)
+        case None =>
+          // collect-bound: one row per embedding dimension — ≤ dim rows
+          val ranked = resid.select(posexplode(col("ue")).as(Seq("pos", "v")))
+            .groupBy(col("pos"))
+            .agg(sum(floor(col("v") * col("v") * lit(MeanScale)).cast("long"))
+              .as("s2"))
+            .collect().map(r => (r.getInt(0), r.getLong(1)))
+            .sortBy { case (p, s2) => (-s2, p) }
+          (0 until PqM).map(j =>
+            ranked.indices.collect { case r if r % PqM == j => ranked(r)._1 }.toSeq)
+      }
+      // Seed books: the ZERO codeword + the first ksub−1 NON-CENTROID
+      // residuals by vec_id. The k smallest base vec_ids ARE the seed
+      // centroids (buildSemIndex), so their residuals are exactly zero —
+      // naively seeding from the first ksub rows would make every codeword
+      // the zero vector and collapse ADC to coarse-only scoring (the
+      // degeneracy IvfAdcSpec's codes_used pin now guards). Codeword 0
+      // stays the zero vector on purpose: centroid-exact vectors encode to
+      // it with zero error, preserving the ADC identity tests.
+      val k = centroidRows(s, dir).size
+      // collect-bound: k + ksub − 1 rows — k ∝ √n, the centroid-collect bound
+      val seedRows: Seq[Seq[Double]] = resid.select(col("vec_id"), col("ue"))
+        .orderBy(col("vec_id")).limit(k + PqKsub - 1)
+        .collect().drop(k).map(_.getSeq[Double](1).toSeq).toSeq
+      val seedCb: Seq[Seq[Seq[Double]]] =
+        dims.map(dj => Seq.fill(dj.size)(0.0) +: seedRows.map(re => dj.map(re(_)).toSeq))
+      val cb = refinePqBooks(resid.select(col("vec_id"), col("ue")), dims,
+        seedCb, lloydIters)
+      import s.implicits._
+      dims.zipWithIndex.map { case (dj, j) => (j, dj) }.toDF("sub", "dims")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/pq_dims")
+      cb.zipWithIndex.flatMap { case (cj, j) =>
+          cj.zipWithIndex.map { case (cv, c) => (j, c, cv) } }
+        .toDF("sub", "cid", "cv")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/pq_cb")
+      rotOpt.foreach { case (r, _) =>
+        r.zipWithIndex.map { case (rv, k) => (k, rv) }.toDF("k", "rv")
+          .coalesce(1).write.mode("overwrite").parquet(s"$dir/pq_rot")
+      }
+      val codes0 = withPqCodes(resid, dims, cb)
+        .select(col("vec_id") +: col("cell") +:
+          dims.indices.map(j => col(s"code$j")): _*)
+      val codes = attrs.fold(codes0)(a => codes0.join(
+        a.select(col("vec_id"), col("label").cast("int").as("label")),
+        Seq("vec_id"), "left"))
+      val codesT = IndexStore.write(codes, dir, "codes", Seq("cell"))
+      // Publish the just-persisted PQ metadata (producer-refresh): the
+      // values handed to the cache are exactly the ones written above
+      // (doubles round-trip parquet bit-exactly; cb/rot read back in the
+      // same cid/k order they were written in), so readers skip the three
+      // metadata collects without any value drift, and a re-encoded dir
+      // replaces any prior entry.
+      pqMetaCache.put(s, dir,
+        (dims.map(_.toSeq), cb.map(_.map(_.toSeq)), rotOpt.map(_._1.map(_.toSeq))))
+      // `rotated` is what tells a reader whether `pq_rot` belongs to this
+      // build: a rotation-free re-encode leaves an older pq_rot on disk.
+      IndexStore.Kind(Map(codesT), Map("rotated" -> rotOpt.isDefined.toString))
     }
-    val dims: Seq[Seq[Int]] = rotOpt match {
-      case Some((_, lams)) => opqAllocate(lams)
-      case None =>
-        // collect-bound: one row per embedding dimension — ≤ dim rows
-        val ranked = resid.select(posexplode(col("ue")).as(Seq("pos", "v")))
-          .groupBy(col("pos"))
-          .agg(sum(floor(col("v") * col("v") * lit(MeanScale)).cast("long"))
-            .as("s2"))
-          .collect().map(r => (r.getInt(0), r.getLong(1)))
-          .sortBy { case (p, s2) => (-s2, p) }
-        (0 until PqM).map(j =>
-          ranked.indices.collect { case r if r % PqM == j => ranked(r)._1 }.toSeq)
-    }
-    // Seed books: the ZERO codeword + the first ksub−1 NON-CENTROID
-    // residuals by vec_id. The k smallest base vec_ids ARE the seed
-    // centroids (buildSemIndex), so their residuals are exactly zero —
-    // naively seeding from the first ksub rows would make every codeword
-    // the zero vector and collapse ADC to coarse-only scoring (the
-    // degeneracy IvfAdcSpec's codes_used pin now guards). Codeword 0
-    // stays the zero vector on purpose: centroid-exact vectors encode to
-    // it with zero error, preserving the ADC identity tests.
-    val k = centroidRows(s, dir).size
-    // collect-bound: k + ksub − 1 rows — k ∝ √n, the centroid-collect bound
-    val seedRows: Seq[Seq[Double]] = resid.select(col("vec_id"), col("ue"))
-      .orderBy(col("vec_id")).limit(k + PqKsub - 1)
-      .collect().drop(k).map(_.getSeq[Double](1).toSeq).toSeq
-    val seedCb: Seq[Seq[Seq[Double]]] =
-      dims.map(dj => Seq.fill(dj.size)(0.0) +: seedRows.map(re => dj.map(re(_)).toSeq))
-    val cb = refinePqBooks(resid.select(col("vec_id"), col("ue")), dims,
-      seedCb, lloydIters)
-    import s.implicits._
-    dims.zipWithIndex.map { case (dj, j) => (j, dj) }.toDF("sub", "dims")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/pq_dims")
-    cb.zipWithIndex.flatMap { case (cj, j) =>
-        cj.zipWithIndex.map { case (cv, c) => (j, c, cv) } }
-      .toDF("sub", "cid", "cv")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/pq_cb")
-    rotOpt.foreach { case (r, _) =>
-      r.zipWithIndex.map { case (rv, k) => (k, rv) }.toDF("k", "rv")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/pq_rot")
-    }
-    val codes0 = withPqCodes(resid, dims, cb)
-      .select(col("vec_id") +: col("cell") +:
-        dims.indices.map(j => col(s"code$j")): _*)
-    val codes = attrs.fold(codes0)(a => codes0.join(
-      a.select(col("vec_id"), col("label").cast("int").as("label")),
-      Seq("vec_id"), "left"))
-    graft.operators.IndexStore.create(codes, dir, "codes", Seq("cell"))
-    // Publish the just-persisted PQ metadata (producer-refresh): the
-    // values handed to the cache are exactly the ones written above
-    // (doubles round-trip parquet bit-exactly; cb/rot read back in the
-    // same cid/k order they were written in), so readers skip the three
-    // metadata collects without any value drift, and a re-encoded dir
-    // replaces any prior entry.
-    pqMetaCache.put(s, dir,
-      (dims.map(_.toSeq), cb.map(_.map(_.toSeq)), rotOpt.map(_._1.map(_.toSeq))))
-  }
 
   /** (permutation/allocation, sub-codebooks, optional learned rotation)
     * reloaded from a persisted IVFADC index — ≤ m + m·ksub + d collected
@@ -2640,10 +2616,15 @@ object VectorOps extends QueryModule {
   private val pqMetaCache = new graft.SessionCache[
     (Seq[Seq[Int]], Seq[Seq[Seq[Double]]], Option[Seq[Seq[Double]]])]
   private def loadPqMeta(s: SparkSession, dir: String):
-      (Seq[Seq[Int]], Seq[Seq[Seq[Double]]], Option[Seq[Seq[Double]]]) =
-    pqMetaCache.getOrBuild(s, dir)(loadPqMetaUncached(s, dir))
+      (Seq[Seq[Int]], Seq[Seq[Seq[Double]]], Option[Seq[Seq[Double]]]) = {
+    // The manifest first, every call: a rebuilt index without the pq
+    // kind must refuse, not serve this session's cached books.
+    val rotated = IndexStore.kind(s, dir, "pq").params("rotated").toBoolean
+    pqMetaCache.getOrBuild(s, dir)(loadPqMetaUncached(s, dir, rotated))
+  }
 
-  private def loadPqMetaUncached(s: SparkSession, dir: String):
+  private def loadPqMetaUncached(s: SparkSession, dir: String,
+      rotated: Boolean):
       (Seq[Seq[Int]], Seq[Seq[Seq[Double]]], Option[Seq[Seq[Double]]]) = {
     // collect-bound: pq_dims has one row per subspace — ≤ m rows
     val dims: Seq[Seq[Int]] = s.read.parquet(s"$dir/pq_dims")
@@ -2657,13 +2638,11 @@ object VectorOps extends QueryModule {
     val cb = dims.indices.map(j =>
       cbm.keysIterator.filter(_._1 == j).map(_._2).toSeq.sorted
         .map(c => cbm((j, c)).toSeq)).toSeq
-    val rotPath = new org.apache.hadoop.fs.Path(s"$dir/pq_rot")
     val rot =
-      if (!rotPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .exists(rotPath)) None
       // collect-bound: pq_rot has one row per dimension — ≤ d rows
-      else Some(s.read.parquet(s"$dir/pq_rot")
+      if (rotated) Some(s.read.parquet(s"$dir/pq_rot")
         .collect().sortBy(_.getInt(0)).map(_.getSeq[Double](1).toSeq).toSeq)
+      else None
     (dims, cb, rot)
   }
 
@@ -2688,10 +2667,8 @@ object VectorOps extends QueryModule {
     r.getLong(0).toDouble / MeanScale / r.getLong(1).toDouble
   }
 
-  private[graft] def hasPq(s: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/pq_dims")
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
-  }
+  private[graft] def hasPq(s: SparkSession, dir: String): Boolean =
+    IndexStore.has(s, dir, "pq")
 
   /** The full ADC-scored candidate frame (query_id, neighbor_id,
     * adc_cos) of a batch against a persisted IVFADC index — every
@@ -2734,7 +2711,7 @@ object VectorOps extends QueryModule {
         col("pc")("cid").cast("bigint").as("cell"),
         col("pc")("cc").as("coarse"), col("lut"))
     val codesDf = dropSemTombstoned(
-      graft.operators.IndexStore.read(s, dir, "codes"),
+      IndexStore.read(s, dir, "codes"),
       "vec_id", loadSemTombstones(s, dir))
     // A baked filter attribute (see addPqToSemIndex) rides the codes
     // scan into the candidate frame — downstream filtered probes read
@@ -3565,10 +3542,8 @@ object VectorOps extends QueryModule {
 
   // ------------------------------------------- persisted graph index + q250
 
-  private[graft] def hasGraph(s: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/gedges")
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
-  }
+  private[graft] def hasGraph(s: SparkSession, dir: String): Boolean =
+    IndexStore.has(s, dir, "graph")
 
   /** Extend a built semantic index with the navigable-graph artifact —
     * the persistence/lifecycle story the graph member of the
@@ -3597,22 +3572,26 @@ object VectorOps extends QueryModule {
     *    dst) — one bucketed rewrite in the same locked pass as
     *    `vectors`. */
   private[graft] def addGraphToSemIndex(s: SparkSession, dir: String,
-      deriveScheme: Boolean = true,
-      target: Double = GraphConfig.DefaultTarget): Unit = {
-    // The vector store persists only the rank-1 cell; the cross arm needs
-    // each node's SECOND-ranked centroid cell, recomputed row-locally
-    // against the frozen centroid table (same expression as the build, so
-    // rank 1 reproduces the stored cell bit-identically).
-    val rows: Seq[Seq[Double]] = centroidRows(s, dir)
-    val sc = sortedCells(typedlit(rows), rows.size)
-    val asg = graft.operators.IndexStore.read(s, dir, "vectors")
-      .select(col("vec_id"), col("ue"), col("cell"),
-        element_at(sc, 2)("cid").cast("bigint").as("cell2"))
-      .localCheckpoint(true) // consumers: both pair sides
-    graft.operators.IndexStore.create(graphEdges(asg, asg), dir, "gedges",
-      Seq("src"))
-    if (deriveScheme) deriveGraphScheme(s, dir, target)
-  }
+      target: Double = GraphConfig.DefaultTarget): Unit =
+    IndexStore.build(s, dir, "graph") {
+      // The vector store persists only the rank-1 cell; the cross arm
+      // needs each node's SECOND-ranked centroid cell, recomputed
+      // row-locally against the frozen centroid table (same expression as
+      // the build, so rank 1 reproduces the stored cell bit-identically).
+      val rows: Seq[Seq[Double]] = centroidRows(s, dir)
+      val sc = sortedCells(typedlit(rows), rows.size)
+      val asg = IndexStore.read(s, dir, "vectors")
+        .select(col("vec_id"), col("ue"), col("cell"),
+          element_at(sc, 2)("cid").cast("bigint").as("cell2"))
+        .localCheckpoint(true) // consumers: both pair sides
+      val (name, edges) =
+        IndexStore.write(graphEdges(asg, asg), dir, "gedges", Seq("src"))
+      val chosen = deriveGraphScheme(s, dir,
+        IndexStore.read(s, dir, name, edges), target)
+      IndexStore.Kind(Map(name -> edges), Map(
+        "entries" -> chosen.entries.toString,
+        "width" -> chosen.width.toString, "hops" -> chosen.hops.toString))
+    }
 
   /** Number of in-index calibration queries the build-time scheme sweep
     * holds out — the same 8-query granularity as the q252 card (recall
@@ -3659,13 +3638,14 @@ object VectorOps extends QueryModule {
     * else's). Protocol: [[graphCalibBatch]] leave-one-out queries, one
     * [[probeGraphPrepared]] per arm over ONE shared prep, recall@1 vs
     * [[calibExactTop1]], scheme = [[GraphConfig.schemeFor]] over exactly
-    * those rows. Probes read the persisted scheme back
-    * ([[indexScheme]]); [[GraphConfig.Default]] remains only the
-    * fallback for legacy dirs without the artifact. The scheme is index
-    * METADATA: appends/takedowns do not re-derive it (aged like the
-    * centroids and τ, recalibrated offline by re-running this). */
-  private[graft] def deriveGraphScheme(s: SparkSession, dir: String,
-      target: Double = GraphConfig.DefaultTarget): Unit = {
+    * those rows, probing `edges` — the build's own, not yet committed.
+    * Returns the chosen scheme, which the build commits as the graph
+    * kind's parameters; probes read it back ([[indexScheme]]). The
+    * scheme is index METADATA: appends/takedowns do not re-derive it
+    * (aged like the centroids and τ, recalibrated offline by rebuilding
+    * the graph kind). */
+  private def deriveGraphScheme(s: SparkSession, dir: String,
+      edges: DataFrame, target: Double): GraphConfig.Scheme = {
     import s.implicits._
     // Tombstones dropped BEFORE the calibration split and ground truth:
     // this is also the offline recalibration path (run after takedowns,
@@ -3674,7 +3654,7 @@ object VectorOps extends QueryModule {
     // against neighbors the probe (which does drop tombstones) can never
     // return — mis-choosing the persisted scheme.
     val nodes = dropSemTombstoned(
-      graft.operators.IndexStore.read(s, dir, "vectors")
+      IndexStore.read(s, dir, "vectors")
         .select(col("vec_id"), col("ue"), col("cell")),
       "vec_id", loadSemTombstones(s, dir))
     val calib = graphCalibBatch(nodes).localCheckpoint(true)
@@ -3685,7 +3665,8 @@ object VectorOps extends QueryModule {
         val exact = calibExactTop1(calib, nodes)
           .localCheckpoint(true) // consumers: one hit-join per arm
         val prep = graphProbePrepUnit(s,
-          calib.select(col("query_id").as("vec_id"), col("qu").as("ue")), dir)
+          calib.select(col("query_id").as("vec_id"), col("qu").as("ue")), dir,
+          edges)
         // Arms are independent probes over ONE shared prep — run them
         // concurrently (guide §2.6) so the per-hop job latencies of the
         // five sweeps overlap instead of serializing; results return in
@@ -3701,8 +3682,7 @@ object VectorOps extends QueryModule {
           arm -> hits.toDouble / nCal
         }
       }
-    // An EMPTY index measures nothing: persist the library default so the
-    // probe behaves exactly like the no-metadata fallback path.
+    // An EMPTY index measures nothing: it takes the library default.
     val chosen =
       if (nCal == 0) GraphConfig.Default
       else GraphConfig.schemeFor(target, curve)
@@ -3710,47 +3690,24 @@ object VectorOps extends QueryModule {
         (a.entries, a.width, a.hops, r, nCal, a == chosen) }
       .toDF("entries", "width", "hops", "recall_at1", "n_calib", "chosen")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/gscheme")
+    chosen
   }
 
-  /** The persisted search scheme of a graph index, or None for a legacy
-    * dir built before scheme derivation. The read is failure-isolating:
-    * the gscheme overwrite in [[deriveGraphScheme]] is not atomic, so a
-    * crash mid-write (or a reader racing a recalibration overwrite) can
-    * leave an existing-but-empty/partial dir — an unreadable or
-    * chosen-less artifact degrades to the legacy fallback instead of
-    * throwing into every default-knob probe. The degradation is no
-    * longer SILENT (round 20, the carried r18/r19 ADVICE item): an
-    * existing-but-unreadable artifact logs one WARN naming the dir and
-    * the cause, so a probe quietly running legacy knobs against a
-    * derived-scheme index is visible in the log instead of only in the
-    * recall numbers. A missing dir (the legitimate legacy case) stays
-    * silent. */
+  private def graphScheme(k: IndexStore.Kind): GraphConfig.Scheme =
+    GraphConfig.Scheme(k.params("entries").toInt, k.params("width").toInt,
+      k.params("hops").toInt)
+
+  /** The committed search scheme of a graph index; None when the index
+    * has no graph kind. */
   private[graft] def loadGraphScheme(s: SparkSession,
-      dir: String): Option[GraphConfig.Scheme] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/gscheme")
-    if (!p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)) None
-    else scala.util.Try {
-      // collect-bound: chosen filter is ≤1 row by construction
-      val rows = s.read.parquet(p.toString).filter(col("chosen")).head(1)
-      rows.headOption.map(r => GraphConfig.Scheme(r.getAs[Int]("entries"),
-        r.getAs[Int]("width"), r.getAs[Int]("hops")))
-    }.fold(e => {
-      log.warn(s"gscheme exists but is unreadable at $dir — " +
-        s"degrading to the legacy default scheme: $e")
-      None
-    }, chosen => {
-      if (chosen.isEmpty)
-        log.warn(s"gscheme at $dir holds no chosen row — " +
-          "degrading to the legacy default scheme")
-      chosen
-    })
-  }
+      dir: String): Option[GraphConfig.Scheme] =
+    IndexStore.manifest(s, dir).kinds.get("graph").map(graphScheme)
 
-  /** The scheme a probe of `dir` runs at: the index's own persisted
-    * derivation when present, [[GraphConfig.Default]] otherwise. */
+  /** The scheme a probe of `dir` runs at; throws naming the dir when it
+    * has no graph kind. */
   private[graft] def indexScheme(s: SparkSession,
       dir: String): GraphConfig.Scheme =
-    loadGraphScheme(s, dir).getOrElse(GraphConfig.Default)
+    graphScheme(IndexStore.kind(s, dir, "graph"))
 
   /** Greedy (or width-`width` beam) search of a query batch through a
     * PERSISTED graph index: queries rank the frozen centroids to pick
@@ -3777,10 +3734,9 @@ object VectorOps extends QueryModule {
   /** The probe plus its executed cost frame — (top-1 per query, 1-row
     * Σ candidate-scorings) — q252's measured axis; [[probeGraphIndex]]
     * is this with the cost discarded. Non-positive knobs (the default)
-    * resolve PER KNOB to the INDEX's persisted scheme — the build-time
-    * sweep on the index's own corpus ([[deriveGraphScheme]]), falling
-    * back to [[GraphConfig.Default]] for legacy dirs without the
-    * artifact — so a probe always searches the way the index it reads
+    * resolve PER KNOB to the INDEX's committed scheme — the build-time
+    * sweep on the index's own corpus ([[deriveGraphScheme]]) — so a
+    * probe always searches the way the index it reads
     * was measured, across sessions and regardless of session conf (the
     * LshConfig persisted-scheme discipline applied to the graph index).
     * Explicit positive knobs override individually (the sweep/spec
@@ -3816,7 +3772,8 @@ object VectorOps extends QueryModule {
 
   private def graphProbePrep(s: SparkSession, batch: DataFrame,
       dir: String): GraphProbePrep =
-    graphProbePrepUnit(s, unitize(batch), dir)
+    graphProbePrepUnit(s, unitize(batch), dir,
+      IndexStore.read(s, dir, "gedges"))
 
   /** [[graphProbePrep]] over an ALREADY-UNIT (vec_id, ue) frame — the
     * build-time scheme sweep probes the index with ITS OWN stored unit
@@ -3825,13 +3782,12 @@ object VectorOps extends QueryModule {
     * bit-different coordinates than the oracle's restatement reads from
     * the same store. */
   private def graphProbePrepUnit(s: SparkSession, unit: DataFrame,
-      dir: String): GraphProbePrep = {
+      dir: String, gedges: DataFrame): GraphProbePrep = {
     val tombs = loadSemTombstones(s, dir)
     val nodes = dropSemTombstoned(
-        graft.operators.IndexStore.read(s, dir, "vectors"), "vec_id", tombs)
+        IndexStore.read(s, dir, "vectors"), "vec_id", tombs)
       .select(col("vec_id"), col("ue"), col("cell"))
-    val edges = graft.operators.IndexStore.read(s, dir, "gedges")
-      .select(col("src"), col("dst"))
+    val edges = gedges.select(col("src"), col("dst"))
     val rows: Seq[Seq[Double]] = centroidRows(s, dir)
     val sc = sortedCells(typedlit(rows), rows.size)
     val qv = unit.select(col("vec_id").as("query_id"),
@@ -3969,9 +3925,9 @@ object VectorOps extends QueryModule {
       .localCheckpoint(true) // consumers: entry join + fallback spine
     val tombs = loadSemTombstones(s, dir)
     val nodes = dropSemTombstoned(
-        graft.operators.IndexStore.read(s, dir, "vectors"), "vec_id", tombs)
+        IndexStore.read(s, dir, "vectors"), "vec_id", tombs)
       .select(col("vec_id"), col("ue"), col("cell"))
-    val edges = graft.operators.IndexStore.read(s, dir, "gedges")
+    val edges = IndexStore.read(s, dir, "gedges")
       .select(col("src"), col("dst"))
     // collect-bound: two smallest live ids — 2 rows (entry fallback)
     val low2 = nodes.select(col("vec_id")).orderBy(col("vec_id")).limit(2)
@@ -5455,8 +5411,8 @@ object VectorOps extends QueryModule {
     * tables the probe reads. */
   private def q251(s: SparkSession, d: String): DataFrame = {
     val dir = builtGraphIndex(s, d)
-    val nodes = graft.operators.IndexStore.read(s, dir, "vectors")
-    val edges = graft.operators.IndexStore.read(s, dir, "gedges")
+    val nodes = IndexStore.read(s, dir, "vectors")
+    val edges = IndexStore.read(s, dir, "gedges")
     val degs = edges.groupBy(col("src")).agg(count(lit(1)).as("dg"))
       .localCheckpoint(true) // consumers: src count + max degree
     val nn = nodes.agg(count(lit(1)).as("n_nodes"))
@@ -5599,7 +5555,7 @@ object VectorOps extends QueryModule {
   private def graphBuildScorings(s: SparkSession, dir: String): DataFrame = {
     val rows: Seq[Seq[Double]] = centroidRows(s, dir)
     val sc = sortedCells(typedlit(rows), rows.size)
-    val asg = graft.operators.IndexStore.read(s, dir, "vectors")
+    val asg = IndexStore.read(s, dir, "vectors")
       .select(col("cell"),
         element_at(sc, 2)("cid").cast("bigint").as("cell2"))
     val occ1 = asg.groupBy(col("cell")).agg(count(lit(1)).as("n1"))
@@ -5716,10 +5672,10 @@ object VectorOps extends QueryModule {
         case _ =>
           val tombs = loadSemTombstones(s, dir)
           val nodes = dropSemTombstoned(
-              graft.operators.IndexStore.read(s, dir, "vectors"), "vec_id",
+              IndexStore.read(s, dir, "vectors"), "vec_id",
               tombs)
             .select(col("vec_id"), col("ue"), col("cell"))
-          val edges = graft.operators.IndexStore.read(s, dir, "gedges")
+          val edges = IndexStore.read(s, dir, "gedges")
             .select(col("src"), col("dst"))
           val seeds = adcScored.withColumn("rn", row_number().over(wAdc))
             .filter(col("rn") <= HybridSeeds)

@@ -38,7 +38,7 @@ import org.apache.spark.sql.types._
   * docs only and reads base shingles from the doc-store; nothing
   * corpus-proportional lives in executor state. The index tables ARE
   * bucketed by their join keys (graft.operators.IndexStore — external
-  * bucketed tables, spec persisted beside the data) so each probe is
+  * bucketed tables, spec committed in the index manifest) so each probe is
   * co-located: the index side of every probe join scans pre-partitioned
   * with zero index-side shuffles, batch-side data alone moves
   * (IndexColocationSpec pins the executed plans).

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Fs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -225,7 +226,7 @@ object EventStream {
     * stale markers and silently skip new data.
     *
     * All marker/epoch/version I/O goes through the Hadoop FileSystem
-    * resolved from each path (see [[Fs]]): goldDir and checkpointDir may
+    * resolved from each path (see [[graft.Fs]]): goldDir and checkpointDir may
     * be file://, hdfs://, or object-store URIs — the epoch always lives
     * next to the real checkpoint, never on driver-local disk. */
   def goldIncrementalMerge(spark: SparkSession, bronzeDir: String,
@@ -351,69 +352,6 @@ object EventStream {
   private def latestCommittedBatch(goldDir: String): Option[Long] =
     committedBatches(goldDir).maxOption
 
-  /** Marker/epoch/version-dir I/O through the Hadoop FileSystem resolved
-    * from each path (file://, hdfs://, s3a://, ... — whatever serves the
-    * checkpoint serves the protocol), not java.io.File: a driver-local
-    * epoch file against an HDFS/S3 checkpoint would silently decouple the
-    * epoch from the real checkpoint lineage. All calls are driver-side.
-    *
-    * Object-store note: the protocol's correctness comes from the single
-    * commit point (the marker) under a SINGLE WRITER — which Structured
-    * Streaming's one-active-query-per-checkpoint model provides — not
-    * from createNewFile atomicity, so eventual-consistency-era S3
-    * create-if-absent races are out of scope by construction. */
-  private object Fs {
-    import org.apache.hadoop.fs.{FileSystem, Path}
-    private def conf =
-      org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration
-    private def on[A](p: String)(f: (FileSystem, Path) => A): A = {
-      val path = new Path(p)
-      f(path.getFileSystem(conf), path)
-    }
-    def exists(p: String): Boolean = on(p)(_.exists(_))
-    def read(p: String): String = on(p) { (fs, path) =>
-      val in = fs.open(path)
-      try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-      finally in.close()
-    }
-    /** Atomic publish: write a dot-temp in the same directory, then
-      * rename. A crash mid-write leaves only the invisible temp (dot
-      * prefix — listCommitted's batch_ filter never sees it), NEVER a
-      * torn target: before this, a crash during the _epoch write could
-      * leave a truncated UUID, which reads as an epoch mismatch on
-      * restart and purges committed versions under a LIVE checkpoint
-      * that will not replay them. rename is atomic on HDFS and posix
-      * filesystems; on object stores where rename is copy+delete the
-      * copy is a single full-object PUT, so a torn target is still
-      * impossible — the caveat is only that temp+target may briefly
-      * coexist. If the destination already exists it is deleted first
-      * (FileSystem.rename has no overwrite): a crash in that sliver
-      * leaves NO file, which alignEpoch self-heals as the
-      * missing-epoch/unbound-markers case — current call sites never
-      * hit it (every write follows a purge or an existence check). */
-    def write(p: String, s: String): Unit = on(p) { (fs, path) =>
-      val tmp = new Path(path.getParent, s".${path.getName}.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(s.getBytes("UTF-8")) finally out.close()
-      if (fs.exists(path)) fs.delete(path, false)
-      if (!fs.rename(tmp, path))
-        throw new java.io.IOException(s"atomic publish failed: $tmp -> $p")
-      (): Unit
-    }
-    /** create-if-absent; true when this call (or a prior one) left the
-      * marker in place. */
-    def touch(p: String): Boolean = on(p) { (fs, path) =>
-      fs.createNewFile(path) || fs.exists(path)
-    }
-    def delete(p: String): Unit = on(p) { (fs, path) =>
-      fs.delete(path, true); (): Unit
-    }
-    def list(p: String): Seq[String] = on(p) { (fs, path) =>
-      if (!fs.exists(path)) Seq.empty
-      else fs.listStatus(path).toSeq.map(_.getPath.getName)
-    }
-  }
-
   /** Streaming Count-Min token frequency: each micro-batch computes its
     * partial sketch (one pass, zero token-keyed shuffle — see
     * graft.operators.CmsAgg) and element-wise ADDS it into the running
@@ -423,7 +361,7 @@ object EventStream {
     * statistics current while documents arrive, without ever re-reading
     * history. Commit protocol is the same versioned-dir + marker single
     * commit point as goldIncrementalMerge (exactly-once under replay),
-    * with the same Hadoop-FileSystem path resolution (see [[Fs]]) — any
+    * with the same Hadoop-FileSystem path resolution (see [[graft.Fs]]) — any
     * filesystem that serves the checkpoint serves the protocol. */
   def cmsTokenStream(spark: SparkSession, docsDir: String, sketchDir: String,
       checkpointDir: String, textSchema: org.apache.spark.sql.types.StructType,

@@ -108,14 +108,14 @@ object SemStream {
             VectorOps.compactSemIndex(spark, indexDir)
         }
         // Auto-rebucket arm (round 16, the DedupStream discipline): the
-        // semantic index's bucketed tables — `vectors` always, `codes`
-        // and `gedges` when the dir carries the PQ/graph artifacts —
+        // semantic index's committed tables — `vectors` always, `codes`
+        // and `gedges` when the manifest lists the pq/graph kinds —
         // grow past their frozen build-time counts under a long-lived
-        // refresh; rebucketIfGrown is a no-op for absent tables (no
-        // bucket spec) and grow-only for present ones. Layout only:
-        // DedupRebucketSpec's semantic arm pins verdict invariance.
+        // refresh; rebucketIfGrown is a no-op for plain tables and
+        // grow-only for bucketed ones. Layout only: DedupRebucketSpec's
+        // semantic arm pins verdict invariance.
         rebucketAboveRowsPerBucket.foreach { target =>
-          Seq("vectors", "codes", "gedges").foreach { t =>
+          graft.operators.IndexStore.tables(spark, indexDir).foreach { t =>
             graft.operators.IndexStore.rebucketIfGrown(spark, indexDir, t,
               target)
           }
@@ -204,10 +204,11 @@ object SemStream {
     * `vectors` (results invariant, pinned by the spec's dual-run arm).
     *
     * Non-positive (entries, width, hops) — the default — resolve inside
-    * the probe to the INDEX's persisted scheme (the build-time sweep on
-    * its own corpus; `GraphConfig.Default` only for legacy dirs without
-    * the `gscheme` artifact), so a stream searches the way the index it
-    * reads was measured; explicit positive knobs override per knob. */
+    * the probe to the INDEX's committed scheme (the build-time sweep on
+    * its own corpus, recorded in the index manifest; an index without
+    * the graph kind refuses the probe), so a stream searches the way the
+    * index it reads was measured; explicit positive knobs override per
+    * knob. */
   def runGraphProbe(spark: SparkSession, streamDir: String, indexDir: String,
       outDir: String, checkpointDir: String,
       maxFilesPerTrigger: Option[Int] = None,

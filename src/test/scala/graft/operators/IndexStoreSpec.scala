@@ -5,7 +5,8 @@ import org.apache.spark.sql.types._
 
 /** Round-15 hardening of the bucketed index store: the three ADVICE
   * findings (stale spec under a bucketing-disabled rebuild, spec-write
-  * crash ordering, DDL escaping + empty-corpus registration) plus the
+  * crash ordering — now the manifest commit, see IndexManifestSpec —
+  * DDL escaping + empty-corpus registration) plus the
   * writer-lock primitive and the rebucket lifecycle op's contract
   * checks. Plan-shape coverage for rebucket lives in
   * IndexColocationSpec beside the other co-location arms.
@@ -20,16 +21,22 @@ class IndexStoreSpec extends SparkSpec {
   private def rows(n: Int) =
     (1 to n).map(i => (i.toLong, s"v$i")).toDF("k", "v")
 
+  /** A one-table index: `table` written and committed as its own kind. */
+  private def create(df: org.apache.spark.sql.DataFrame, dir: String,
+      table: String, keys: Seq[String]): Unit =
+    IndexStore.build(spark, dir, table)(
+      IndexStore.Kind(Map(IndexStore.write(df, dir, table, keys))))
+
   private def dropCatalog(dir: String, table: String): Unit =
     spark.sql(s"DROP TABLE IF EXISTS `${IndexStore.tableName(dir, table)}`")
 
   test("bucketing-disabled rebuild over a bucketed dir clears spec + catalog") {
     val dir = freshDir("dis")
-    IndexStore.create(rows(10), dir, "t", Seq("k"))
+    create(rows(10), dir, "t", Seq("k"))
     assert(IndexStore.spec(spark, dir, "t").isDefined)
     try {
       spark.conf.set(IndexStore.EnabledConf, "false")
-      IndexStore.create(rows(7), dir, "t", Seq("k"))
+      create(rows(7), dir, "t", Seq("k"))
     } finally spark.conf.unset(IndexStore.EnabledConf)
     // Stale spec/catalog from the bucketed generation must be gone —
     // a read claiming CLUSTERED BY over plain files fails at scan time.
@@ -43,7 +50,9 @@ class IndexStoreSpec extends SparkSpec {
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       StructType(Seq(StructField("k", LongType), StructField("v", StringType))))
-    IndexStore.create(empty, dir, "t", Seq("k"))
+    create(empty, dir, "t", Seq("k"))
+    assert(IndexStore.manifest(spark, dir).table("t").map(_.schema) ===
+      Some(empty.schema.toDDL))
     dropCatalog(dir, "t") // simulate a fresh session's in-memory catalog
     val back = IndexStore.read(spark, dir, "t")
     assert(back.count() === 0)
@@ -53,7 +62,7 @@ class IndexStoreSpec extends SparkSpec {
   test("index dir containing a quote survives DDL re-registration") {
     val base = freshDir("quo")
     val dir = s"$base/it's"
-    IndexStore.create(rows(5), dir, "t", Seq("k"))
+    create(rows(5), dir, "t", Seq("k"))
     dropCatalog(dir, "t")
     assert(IndexStore.read(spark, dir, "t").count() === 5)
   }
@@ -113,7 +122,7 @@ class IndexStoreSpec extends SparkSpec {
 
   test("rebucket rewrites layout only: rows, spec count, registration") {
     val dir = freshDir("reb")
-    IndexStore.create(rows(40), dir, "t", Seq("k"))
+    create(rows(40), dir, "t", Seq("k"))
     val before = IndexStore.read(spark, dir, "t")
       .collect().map(_.toSeq).toSet
     IndexStore.rebucket(spark, dir, "t", 3)
@@ -129,13 +138,13 @@ class IndexStoreSpec extends SparkSpec {
     val dir = freshDir("rbe")
     try {
       spark.conf.set(IndexStore.EnabledConf, "false")
-      IndexStore.create(rows(5), dir, "t", Seq("k"))
+      create(rows(5), dir, "t", Seq("k"))
     } finally spark.conf.unset(IndexStore.EnabledConf)
     intercept[IllegalArgumentException] {
       IndexStore.rebucket(spark, dir, "t", 4)
     }
     val dir2 = freshDir("rbz")
-    IndexStore.create(rows(5), dir2, "t", Seq("k"))
+    create(rows(5), dir2, "t", Seq("k"))
     intercept[IllegalArgumentException] {
       IndexStore.rebucket(spark, dir2, "t", 0)
     }

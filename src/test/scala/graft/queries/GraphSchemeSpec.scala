@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 /** The persisted graph search scheme (round 17, the round-16 verdict's
   * top item): a built graph index DERIVES its (entries, width, hops) by
   * running the [[GraphConfig.SweepArms]] grid on its OWN corpus at build
-  * time and persists it as `gscheme` beside the centroids and τ — the
+  * time, writes the measured curve as `gscheme` and commits the chosen
+  * scheme as the graph kind's parameters in the index manifest — the
   * LshConfig discipline (a built index carries its scheme as metadata;
   * probes read it back regardless of session conf or library default).
   * Pins:
@@ -14,11 +15,11 @@ import org.apache.spark.sql.functions._
   *     row, and the choice ≡ [[GraphConfig.schemeFor]] re-applied to the
   *     persisted curve (the metadata is self-consistent, not a copy of
   *     the library constant);
-  *  2. a NON-DEFAULT persisted scheme drives the probe: results are
+  *  2. a NON-DEFAULT committed scheme drives the probe: results are
   *     bit-equal to the explicit-knob probe at that scheme, from a fresh
-  *     session (plain-parquet metadata, no catalog state);
-  *  3. a legacy dir without the artifact falls back to
-  *     [[GraphConfig.Default]] bit-for-bit.
+  *     session;
+  *  3. an index without the graph kind refuses a graph probe — there is
+  *     no default to fall back to.
   */
 class GraphSchemeSpec extends SparkSpec {
   import spark.implicits._
@@ -43,14 +44,14 @@ class GraphSchemeSpec extends SparkSpec {
       (i.toLong, Seq(1.0 + 0.02 * i, -0.5, 0.25 * (i % 4), 0.8)))
       .toDF("vec_id", "embedding")
 
-  private def build(dir: String, derive: Boolean): Unit = {
+  private def build(dir: String): Unit = {
     VectorOps.buildSemIndex(spark, corpus, s"$dir/index")
-    VectorOps.addGraphToSemIndex(spark, s"$dir/index", deriveScheme = derive)
+    VectorOps.addGraphToSemIndex(spark, s"$dir/index")
   }
 
   test("build persists a self-consistent curve with exactly one chosen row") {
     val dir = freshDir("derive")
-    build(dir, derive = true)
+    build(dir)
     val rows = spark.read.parquet(s"$dir/index/gscheme")
       .orderBy("entries", "width", "hops").collect()
     assert(rows.length === GraphConfig.SweepArms.size,
@@ -71,17 +72,18 @@ class GraphSchemeSpec extends SparkSpec {
 
   test("a non-default persisted scheme drives probes, from a fresh session") {
     val dir = freshDir("nondefault")
-    build(dir, derive = true)
-    // Overwrite the metadata with a deliberately non-default scheme (the
-    // greedy single-entry arm — on a multi-cell corpus its entry misses
-    // are exactly what the default's extra entries recover, so the two
-    // probes genuinely diverge) through the same artifact shape the
-    // build writes.
+    build(dir)
+    // Commit a deliberately non-default scheme (the greedy single-entry
+    // arm — on a multi-cell corpus its entry misses are exactly what the
+    // default's extra entries recover, so the two probes genuinely
+    // diverge) through the same manifest entry the build commits.
     val nd = GraphConfig.Scheme(1, 1, 3)
     assert(nd !== GraphConfig.Default)
-    Seq((nd.entries, nd.width, nd.hops, 1.0, 8L, true))
-      .toDF("entries", "width", "hops", "recall_at1", "n_calib", "chosen")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/index/gscheme")
+    graft.operators.IndexStore.commit(spark, s"$dir/index") { ks =>
+      ks + ("graph" -> ks("graph").copy(params = Map(
+        "entries" -> nd.entries.toString, "width" -> nd.width.toString,
+        "hops" -> nd.hops.toString)))
+    }
     val fresh = spark.newSession()
     assert(VectorOps.loadGraphScheme(fresh, s"$dir/index") === Some(nd),
       "scheme metadata round-trips through a fresh session")
@@ -103,16 +105,21 @@ class GraphSchemeSpec extends SparkSpec {
         "on this corpus (if this fails, pick a more separating fixture)")
   }
 
-  test("a legacy dir without gscheme falls back to GraphConfig.Default") {
-    val dir = freshDir("legacy")
-    build(dir, derive = false)
+  test("an index without the graph kind refuses a graph probe") {
+    val dir = freshDir("nograph")
+    VectorOps.buildSemIndex(spark, corpus, s"$dir/index")
     assert(VectorOps.loadGraphScheme(spark, s"$dir/index").isEmpty)
-    val fallback = VectorOps.probeGraphIndex(spark, probes, s"$dir/index")
-      .collect().map(_.toSeq).toSet
-    val explicit = VectorOps.probeGraphIndex(spark, probes, s"$dir/index",
+    val viaMeta = intercept[IllegalStateException] {
+      VectorOps.probeGraphIndex(spark, probes, s"$dir/index").collect()
+    }
+    assert(viaMeta.getMessage.contains(s"$dir/index"), viaMeta.getMessage)
+    // Explicit knobs need no scheme, but there are still no edges.
+    val explicit = intercept[IllegalStateException] {
+      VectorOps.probeGraphIndex(spark, probes, s"$dir/index",
         entries = GraphConfig.Default.entries,
         width = GraphConfig.Default.width, hops = GraphConfig.Default.hops)
-      .collect().map(_.toSeq).toSet
-    assert(fallback === explicit)
+        .collect()
+    }
+    assert(explicit.getMessage.contains(s"$dir/index"), explicit.getMessage)
   }
 }

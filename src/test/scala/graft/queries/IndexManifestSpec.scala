@@ -1,0 +1,233 @@
+package graft.queries
+
+import graft.SparkSpec
+import graft.operators.IndexStore
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
+
+/** The index manifest's commit protocol (graft.operators.IndexStore):
+  *
+  *  1. STALE-READ REGRESSIONS — two reads the per-artifact side files
+  *     allowed: a rotation-free PQ re-encode over a rotated build (a
+  *     fresh session applied the leftover `pq_rot`), and a semantic
+  *     rebuild over a dir carrying PQ and graph artifacts (their probes
+  *     kept returning ids the rebuilt vector store no longer holds).
+  *  2. CRASH STATES — for each index build, the states an abort leaves (the
+  *     "uncommitted" version a rebuild writes first, tables written with
+  *     no new version, a dot-temp manifest never renamed) read as the
+  *     previous committed build whole, or throw naming the dir; never a
+  *     mix. Simulated the DedupCompactionSpec way, with no hook in main
+  *     code: the uncommitted version is committed by hand, and a
+  *     finished rebuild is rolled back by renaming its last version to
+  *     the dot-temp a crash before the rename leaves, then deleting it.
+  */
+class IndexManifestSpec extends SparkSpec {
+
+  private val dim = 4
+  private def axis(i: Int): Seq[Double] =
+    Seq.tabulate(dim)(j => if (j == i % dim) 1.0 else 0.05 * ((i / dim) + 1))
+
+  /** The IvfAdcSpec fixture: 16 spread seeds + near-copies of direction 0. */
+  private val baseRows: Seq[(Long, Seq[Double])] =
+    (0 until 16).map(i => (i.toLong, axis(i))) ++
+      (16 until 20).map(i => (i.toLong, Seq(1.0, 0.01 * (i - 15), 0.0, 0.0)))
+
+  private def vecs(rows: Seq[(Long, Seq[Double])]): DataFrame = {
+    import spark.implicits._
+    rows.toDF("vec_id", "embedding")
+  }
+  private def queries: DataFrame =
+    vecs(Seq(500L -> Seq(1.0, 0.02, 0.01, 0.0), 501L -> axis(6).map(_ * 2.0),
+      502L -> Seq(0.3, 0.3, 0.9, 0.1)))
+
+  private def docs(rows: (Long, String)*): DataFrame = {
+    import spark.implicits._
+    rows.toSeq.toDF("doc_id", "text")
+  }
+  private val novelText = (1 to 30).map(i => s"tok$i").mkString(" ")
+  private def corpusA = docs(1L -> "the quick brown fox jumps over the lazy dog",
+    2L -> novelText)
+  private def corpusB = docs(3L -> "pack my box with five dozen liquor jugs",
+    4L -> (1 to 30).map(i => s"mot$i").mkString(" "))
+  private def probeDocs = docs(500L -> novelText,
+    501L -> ((1 to 29).map(i => s"tok$i").mkString(" ") + " zzz"),
+    502L -> "pack my box with five dozen liquor jugs")
+
+  private def freshIdx(tag: String): String =
+    java.nio.file.Files.createTempDirectory(s"graft_manifest_$tag")
+      .toString + "/index"
+
+  private def rows(df: DataFrame): Set[Seq[Any]] =
+    df.collect().map(_.toSeq).toSet
+
+  /** `body` throws IllegalStateException naming `dir`. */
+  private def refuses(dir: String)(body: => Any): Unit = {
+    val e = intercept[IllegalStateException](body)
+    assert(e.getMessage.contains(dir), e.getMessage)
+    (): Unit
+  }
+
+  private def versions(dir: String): Seq[Long] =
+    Option(new java.io.File(s"$dir/_manifest").list()).toSeq.flatten
+      .collect { case n if n.matches("v\\d+") => n.drop(1).toLong }
+
+  /** Roll back the last commit into the two states a crash before it
+    * leaves — a dot-temp never renamed, then no trace — checking
+    * `readers` in each. */
+  private def rolledBack(dir: String)(readers: => Unit): Unit = {
+    val v = versions(dir).max
+    val f = new java.io.File(s"$dir/_manifest/v$v")
+    val tmp = new java.io.File(s"$dir/_manifest/.v$v.tmp")
+    assert(f.renameTo(tmp))
+    new java.io.File(s"$dir/_manifest/.v$v.crc").delete()
+    readers
+    assert(tmp.delete())
+    readers
+  }
+
+  // ------------------------------------------------------- stale reads
+
+  test("a rotation-free re-encode after a rotated build reads the same from a fresh session") {
+    val dir = freshIdx("rot")
+    VectorOps.buildSemIndex(spark, vecs(baseRows), dir)
+    VectorOps.addPqToSemIndex(spark, dir, learnedRotation = true)
+    VectorOps.addPqToSemIndex(spark, dir)
+    val fresh = spark.newSession()
+    assert(VectorOps.ivfAdcDistortion(fresh, dir) ===
+      VectorOps.ivfAdcDistortion(spark, dir))
+    assert(rows(VectorOps.probeIvfAdcTop3(fresh, queries, dir)) ===
+      rows(VectorOps.probeIvfAdcTop3(spark, queries, dir)))
+  }
+
+  test("a semantic rebuild drops the pq and graph kinds built from the old vectors") {
+    val dir = freshIdx("rebuild")
+    VectorOps.buildSemIndex(spark, vecs(baseRows), dir)
+    VectorOps.addPqToSemIndex(spark, dir)
+    VectorOps.addGraphToSemIndex(spark, dir)
+    VectorOps.buildSemIndex(spark, vecs(baseRows.take(12)), dir)
+    assert(!VectorOps.hasPq(spark, dir) && !VectorOps.hasGraph(spark, dir))
+    refuses(dir)(VectorOps.probeIvfAdcTop3(spark, queries, dir).collect())
+    refuses(dir)(VectorOps.ivfAdcDistortion(spark, dir))
+    refuses(dir)(VectorOps.probeGraphIndex(spark, queries, dir).collect())
+    refuses(dir)(VectorOps.probeGraphIndex(spark, queries, dir,
+      entries = 1, width = 1, hops = 2).collect())
+    VectorOps.addPqToSemIndex(spark, dir)
+    VectorOps.addGraphToSemIndex(spark, dir)
+    val live = (0L until 12L).toSet
+    val adc = VectorOps.probeIvfAdcTop3(spark, queries, dir).collect()
+    val graph = VectorOps.probeGraphIndex(spark, queries, dir).collect()
+    assert(adc.nonEmpty && graph.nonEmpty)
+    assert(adc.map(_.getLong(1)).forall(live), adc.toSeq)
+    assert(graph.map(_.getLong(1)).forall(live), graph.toSeq)
+  }
+
+  // ------------------------------------------------------- crash states
+
+  test("buildDedupIndex: an aborted rebuild refuses, an aborted first build has no manifest") {
+    val dir = freshIdx("dedup")
+    DedupOps.buildDedupIndex(corpusA, dir)
+    def readers(): Unit = {
+      refuses(dir)(DedupOps.probeDedupIndex(spark, probeDocs, dir).collect())
+      refuses(dir)(DedupOps.indexScheme(spark, dir))
+      DedupOps.IndexTables.foreach(t =>
+        refuses(dir)(IndexStore.read(spark, dir, t).collect()))
+    }
+    IndexStore.commit(spark, dir)(_ - "dedup") // the rebuild's first version
+    readers()
+    DedupOps.buildDedupIndex(corpusB, dir)
+    val rebuilt = rows(DedupOps.probeDedupIndex(spark, probeDocs, dir))
+    rolledBack(dir)(readers())
+
+    val first = freshIdx("dedup1")
+    DedupOps.buildDedupIndex(corpusB, first)
+    assert(rows(DedupOps.probeDedupIndex(spark, probeDocs, first)) === rebuilt)
+    rolledBack(first) {
+      refuses(first)(DedupOps.probeDedupIndex(spark, probeDocs, first).collect())
+    }
+  }
+
+  test("buildSemIndex: an aborted rebuild refuses sem, pq and graph alike") {
+    val dir = freshIdx("sem")
+    VectorOps.buildSemIndex(spark, vecs(baseRows), dir)
+    VectorOps.addPqToSemIndex(spark, dir)
+    VectorOps.addGraphToSemIndex(spark, dir)
+    def readers(): Unit = {
+      refuses(dir)(VectorOps.probeSemIndex(spark, queries, dir).collect())
+      refuses(dir)(VectorOps.probeIvfAdcTop3(spark, queries, dir).collect())
+      refuses(dir)(VectorOps.probeGraphIndex(spark, queries, dir).collect())
+      assert(!VectorOps.hasPq(spark, dir) && !VectorOps.hasGraph(spark, dir))
+    }
+    IndexStore.commit(spark, dir)(_ -- Seq("sem", "pq", "graph"))
+    readers()
+    VectorOps.buildSemIndex(spark, vecs(baseRows.take(12)), dir)
+    rolledBack(dir)(readers())
+  }
+
+  test("addPqToSemIndex: an aborted re-encode refuses ADC, the float index stays whole") {
+    val dir = freshIdx("pq")
+    VectorOps.buildSemIndex(spark, vecs(baseRows), dir)
+    VectorOps.addPqToSemIndex(spark, dir, learnedRotation = true)
+    val sem = rows(VectorOps.probeSemIndex(spark, queries, dir))
+    def readers(): Unit = {
+      refuses(dir)(VectorOps.probeIvfAdcTop3(spark, queries, dir).collect())
+      refuses(dir)(VectorOps.ivfAdcDistortion(spark.newSession(), dir))
+      assert(!VectorOps.hasPq(spark, dir))
+      assert(rows(VectorOps.probeSemIndex(spark, queries, dir)) === sem)
+    }
+    IndexStore.commit(spark, dir)(_ - "pq")
+    readers()
+    VectorOps.addPqToSemIndex(spark, dir)
+    rolledBack(dir)(readers())
+  }
+
+  test("addGraphToSemIndex: an aborted first build leaves the semantic index as committed") {
+    val dir = freshIdx("graph")
+    VectorOps.buildSemIndex(spark, vecs(baseRows), dir)
+    VectorOps.addPqToSemIndex(spark, dir)
+    val sem = rows(VectorOps.probeSemIndex(spark, queries, dir))
+    val adc = rows(VectorOps.probeIvfAdcTop3(spark, queries, dir))
+    val before = versions(dir).max
+    def readers(): Unit = {
+      assert(versions(dir).max === before)
+      refuses(dir)(VectorOps.probeGraphIndex(spark, queries, dir).collect())
+      assert(VectorOps.loadGraphScheme(spark, dir).isEmpty)
+      assert(rows(VectorOps.probeSemIndex(spark, queries, dir)) === sem)
+      assert(rows(VectorOps.probeIvfAdcTop3(spark, queries, dir)) === adc)
+    }
+    // No graph kind yet: the build's first commit changes nothing.
+    IndexStore.commit(spark, dir)(_ - "graph")
+    readers()
+    VectorOps.addGraphToSemIndex(spark, dir)
+    assert(VectorOps.loadGraphScheme(spark, dir).isDefined)
+    rolledBack(dir)(readers())
+  }
+
+  test("rebucket: every aborted step reads the same rows, never at a count the files lack") {
+    val dir = freshIdx("rebucket")
+    DedupOps.buildDedupIndex(corpusA, dir)
+    val verdicts = rows(DedupOps.probeDedupIndex(spark, probeDocs, dir))
+    val exact = rows(IndexStore.read(spark, dir, "exact"))
+    def readers(): Unit = {
+      assert(IndexStore.spec(spark, dir, "exact").isEmpty)
+      assert(rows(IndexStore.read(spark, dir, "exact")) === exact)
+      assert(rows(DedupOps.probeDedupIndex(spark, probeDocs, dir)) === verdicts)
+    }
+    // The plain commit rebucket writes before its swap, over the old
+    // files.
+    IndexStore.commit(spark, dir)(_.map { case (n, k) =>
+      n -> k.copy(tables = k.tables.map { case (t, e) =>
+        t -> (if (t == "exact") e.copy(buckets = 0) else e) })
+    })
+    readers()
+    // Back to the committed count, then a whole rebucket rolled back to
+    // its plain version over the swapped-in files.
+    IndexStore.commit(spark, dir)(_.map { case (n, k) =>
+      n -> k.copy(tables = k.tables.map { case (t, e) =>
+        t -> (if (t == "exact") e.copy(buckets = IndexStore.DefaultBuckets)
+          else e) })
+    })
+    IndexStore.rebucket(spark, dir, "exact", 4)
+    assert(IndexStore.spec(spark, dir, "exact") === Some((4, Seq("norm_key"))))
+    rolledBack(dir)(readers())
+  }
+}
