@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
 /** File I/O for the commit protocols (the streaming merge markers and
   * epochs in `graft.streaming.EventStream`, the index manifests in
@@ -72,9 +72,11 @@ object Fs {
     fs.delete(path, true); (): Unit
   }
 
-  /** Entry names directly under `p`; empty when `p` does not exist. */
-  def list(p: String): Seq[String] = on(p) { (fs, path) =>
-    if (!fs.exists(path)) Seq.empty
-    else fs.listStatus(path).toSeq.map(_.getPath.getName)
+  /** Entries directly under `p`; empty when `p` does not exist. */
+  def ls(p: String): Seq[FileStatus] = on(p) { (fs, path) =>
+    if (!fs.exists(path)) Seq.empty else fs.listStatus(path).toSeq
   }
+
+  /** Entry names directly under `p`; empty when `p` does not exist. */
+  def list(p: String): Seq[String] = ls(p).map(_.getPath.getName)
 }

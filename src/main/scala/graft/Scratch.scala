@@ -64,14 +64,27 @@ object Scratch {
     }
   }
 
-  def dir(kind: String, spark: SparkSession, sfDir: String): String = {
-    val tmp = System.getProperty("java.io.tmpdir")
+  private def tmp = System.getProperty("java.io.tmpdir")
+
+  /** Hand out `d`: sweep crashed siblings, then register `d` for deletion
+    * at this JVM's shutdown. */
+  private def track(d: String): String = {
     sweepDead(new java.io.File(tmp))
-    val d = s"$tmp/graft_rt_${kind}_" +
-      s"${md5Hex(sfDir).take(12)}_${ProcessHandle.current.pid}_" +
-      f"${System.identityHashCode(spark)}%08x"
     hook
     issued.put(d, true)
     d
   }
+
+  def dir(kind: String, spark: SparkSession, sfDir: String): String =
+    track(s"$tmp/graft_rt_${kind}_" +
+      s"${md5Hex(sfDir).take(12)}_${ProcessHandle.current.pid}_" +
+      f"${System.identityHashCode(spark)}%08x")
+
+  /** A new, empty dir no other caller shares (`graft_rt_<kind>_<pid>_<n>`)
+    * — the specs' temp dirs — under the same shutdown deletion and
+    * dead-pid sweep as [[dir]]. */
+  def fresh(kind: String): String =
+    track(java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get(tmp),
+      s"graft_rt_${kind}_${ProcessHandle.current.pid}_").toString)
 }

@@ -19,11 +19,14 @@ import org.apache.spark.sql.functions.col
   * changes the count. `spark.graft.index.bucketing=false` writes plain
   * parquet instead, the parity arm IndexColocationSpec compares against.
   *
-  * One small JSON manifest, `<dir>/_manifest/v<N>`, holds everything
-  * else a reader needs: the KINDS present (dedup; sem, pq, graph), each
-  * kind's build parameters and tables, and each table's bucket spec and
-  * schema (from which a fresh session — in-memory catalog — re-registers
-  * the table by DDL). The protocol:
+  * One JSON manifest, `<dir>/_manifest/v<N>`, holds everything else a
+  * reader needs: the KINDS present (dedup; sem, pq, graph), each kind's
+  * build parameters, build metadata ([[Kind]]: the centroids and τ,
+  * the PQ books, the graph sweep) and tables, and each table's bucket
+  * spec and schema (from which a fresh session — in-memory catalog —
+  * re-registers the table by DDL). The manifest is the only home of that
+  * metadata: no side file beside the tables, and no per-session copy
+  * that another session's commit could leave stale. The protocol:
   *  - writers write their tables first and commit LAST ([[commit]]):
   *    under [[withLock]], a dot-temp renamed to the next version — a
   *    name that does not exist yet, so nothing committed is ever removed
@@ -35,7 +38,15 @@ import org.apache.spark.sql.functions.col
   *    rewrites, so a crash mid-rebuild reads as absent, never as old
   *    metadata over new files;
   *  - the last two versions are kept, so a reader that resolved the
-  *    previous one is never yanked.
+  *    previous one is never yanked;
+  *  - a version file is created once, by [[Fs.writeNew]]'s rename onto a
+  *    fresh name, and never rewritten, so its parse is memoized JVM-wide
+  *    by (path, modification time, length) — every read still lists
+  *    `_manifest`, which is how another session's or process's commit
+  *    becomes visible, but parses only a version it has not seen (a dir
+  *    deleted and rebuilt at the same path writes its `v<N>` anew, with
+  *    another modification time). The memo is bounded at
+  *    [[ParsedVersions]] entries; an evicted one is parsed again.
   */
 object IndexStore {
 
@@ -51,9 +62,28 @@ object IndexStore {
     * and the row schema as DDL — registrable even for an EMPTY table. */
   final case class Table(buckets: Int, keys: Seq[String], schema: String)
 
-  /** One index kind: its tables and its build parameters. */
+  /** One arm of a graph index's build-time scheme sweep: its recall@1
+    * over the `nCalib` calibration queries, and whether the build chose
+    * it. */
+  final case class SweepArm(entries: Int, width: Int, hops: Int,
+      recallAt1: Double, nCalib: Long, chosen: Boolean)
+
+  /** One index kind: its tables, its build parameters, and the build
+    * metadata its probes rank against. Each kind fills only its own
+    * metadata fields; the others keep their empty defaults.
+    *  - sem: `centroids` (row i is centroid i) and `tau`, which is absent
+    *    when the index has no within-cell pair;
+    *  - pq: `pqDims` (each subspace's dimensions), `pqBooks` (one
+    *    sub-codebook per subspace) and `pqRotation`, present only for a
+    *    learned-rotation build;
+    *  - graph: `sweep`, the measured scheme curve.
+    * Doubles round-trip the JSON exactly. */
   final case class Kind(tables: Map[String, Table],
-      params: Map[String, String] = Map.empty)
+      params: Map[String, String] = Map.empty,
+      centroids: Seq[Seq[Double]] = Nil, tau: Option[Double] = None,
+      pqDims: Seq[Seq[Int]] = Nil, pqBooks: Seq[Seq[Seq[Double]]] = Nil,
+      pqRotation: Option[Seq[Seq[Double]]] = None,
+      sweep: Seq[SweepArm] = Nil)
 
   final case class Manifest(version: Long, kinds: Map[String, Kind]) {
     def table(name: String): Option[Table] =
@@ -85,10 +115,31 @@ object IndexStore {
 
   // ------------------------------------------------------------- manifest
 
+  /** Bound of the JVM-wide parsed-version memo. */
+  val ParsedVersions = 64
+
+  /** Parsed manifests by (path, modification time, length) of their
+    * version file, least recently used evicted first. */
+  private val parsed = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[(String, Long, Long), Manifest](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[(String, Long, Long), Manifest]): Boolean =
+        size > ParsedVersions
+    })
+
   private def latest(dir: String): Option[Manifest] =
-    Fs.list(manifestDir(dir)).collect { case VersionName(v) => v.toLong }
-      .maxOption.map(v => org.json4s.jackson.Serialization
-        .read[Manifest](Fs.read(s"${manifestDir(dir)}/v$v")))
+    Fs.ls(manifestDir(dir)).flatMap(f => f.getPath.getName match {
+        case VersionName(v) => Some(v.toLong -> f)
+        case _ => None
+      }).maxByOption(_._1).map { case (_, f) =>
+        val key = (f.getPath.toString, f.getModificationTime, f.getLen)
+        Option(parsed.get(key)).getOrElse {
+          val m = org.json4s.jackson.Serialization
+            .read[Manifest](Fs.read(f.getPath.toString))
+          parsed.put(key, m)
+          m
+        }
+      }
 
   /** The latest committed manifest of `dir`. */
   def manifest(s: SparkSession, dir: String): Manifest =
@@ -141,7 +192,7 @@ object IndexStore {
 
   /** (Re)build kind `name` of `dir`: commit a version without it and
     * without `drops` (kinds derived from it), run `write` — which writes
-    * the kind's tables and side files and returns its entry — then
+    * the kind's tables and returns its entry, metadata included — then
     * commit the version that lists it. Only the two commits hold the
     * writer lock, so independent kinds build concurrently. */
   private[graft] def build(s: SparkSession, dir: String, name: String,

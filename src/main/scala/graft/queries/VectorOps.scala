@@ -984,30 +984,14 @@ object VectorOps extends QueryModule {
       .select(col("vec_id"),
         expr("transform(embedding, x -> cast(x as double) / nrm)").as("ue"))
 
-  /** One-time base pass: persist centroids (first-k unit-vector seeds,
-    * optionally Lloyd-refined — production trains the coarse quantizer;
-    * `lloydIters = 0` keeps the q211-oracle seed codebook), cell
-    * assignments with unit vectors, and the calibrated within-cell
-    * cosine threshold. Probes read the PERSISTED centroid table, so a
+  /** One-time base pass: persist cell assignments with unit vectors
+    * and commit the centroids (first-k unit-vector seeds, optionally
+    * Lloyd-refined — production trains the coarse quantizer;
+    * `lloydIters = 0` keeps the q211-oracle seed codebook) and the
+    * calibrated within-cell cosine threshold τ as the sem kind's
+    * manifest metadata. Probes read the COMMITTED centroids, so a
     * refined index is probe-compatible by construction — the quantizer
     * choice is index metadata like the scheme and τ. */
-  /** Centroid rows of a persisted index, collected once per (session,
-    * dir) — the ≤ k-row metadata every probe/prep ranks against was
-    * re-read and re-collected on every call (a parquet-scan job ~13
-    * call sites × 3 bench samples × every consumer query). The table is
-    * written exactly once per dir ([[buildSemIndex]], the only writer,
-    * which also REFRESHES this cache entry — a same-dir rebuild within
-    * a session can never serve stale metadata). Guide §1.2 step 1:
-    * don't recompute what is already known. */
-  private val centroidCache = new graft.SessionCache[Seq[Seq[Double]]]
-  private[queries] def centroidRows(s: SparkSession,
-      dir: String): Seq[Seq[Double]] =
-    centroidCache.getOrBuild(s, dir) {
-      // collect-bound: centroid table — ≤ k rows, k ∝ √n via ivfKFor
-      s.read.parquet(s"$dir/centroids")
-        .collect().sortBy(_.getInt(0)).map(_.getSeq[Double](1)).toSeq
-    }
-
   private[graft] def buildSemIndex(s: SparkSession, base: DataFrame,
       dir: String, lloydIters: Int = 0): Unit =
     // The pq and graph kinds were built from the old vectors: a rebuild
@@ -1020,13 +1004,6 @@ object VectorOps extends QueryModule {
         .orderBy(col("vec_id")).limit(k)
         .collect().map(_.getSeq[Double](1)).toSeq
       val rows = lloydRefine(u, seed, lloydIters)
-      import s.implicits._
-      rows.zipWithIndex.map { case (v, i) => (i, v) }.toDF("cid", "cu")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
-      // Publish what was just written (producer-refresh): readers get the
-      // in-memory rows without a parquet re-read, and a rebuilt dir
-      // replaces any prior entry.
-      centroidCache.put(s, dir, rows.map(_.toSeq))
       val sc = sortedCells(typedlit(rows), rows.size)
       val asg = u.select(col("vec_id"), col("ue"),
           element_at(sc, 1)("cid").cast("bigint").as("cell"))
@@ -1042,11 +1019,32 @@ object VectorOps extends QueryModule {
       val pairs = a.join(b, col("cell") === col("cell_b") && col("va") < col("vb"))
         .select(col("va"), col("vb"), expr("graft_dot(ua, ub)").as("cos"))
         .localCheckpoint(true) // consumers: count + threshold
-      PctGate.thresholdDfLazy(pairs, "cos", "0.999", "q211tau",
-          "tau", keyExpr = "((va * 4194304) + vb)")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/tau")
-      IndexStore.Kind(Map(vectors))
+      // collect-bound: groupless aggregate — 1 row (NULL with no pair)
+      val tau = PctGate.thresholdDfLazy(pairs, "cos", "0.999", "q211tau",
+          "tau", keyExpr = "((va * 4194304) + vb)").head()
+      IndexStore.Kind(Map(vectors), centroids = rows,
+        tau = Option.when(!tau.isNullAt(0))(tau.getDouble(0)))
     }
+
+  /** Centroid rows of a committed semantic index (row i is centroid i) —
+    * the ≤ k-row metadata every probe/prep ranks against, from the
+    * manifest. */
+  private[queries] def centroidRows(s: SparkSession,
+      dir: String): Seq[Seq[Double]] =
+    IndexStore.kind(s, dir, "sem").centroids
+
+  /** The centroids as a ≤ k-row (cid, cu) frame, broadcast by the
+    * residual joins. */
+  private def centroidFrame(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    centroidRows(s, dir).zipWithIndex.map { case (c, i) => (i.toLong, c) }
+      .toDF("cid", "cu")
+  }
+
+  /** The committed τ of a semantic index as a DOUBLE literal — NULL when
+    * the index has no within-cell pair, so no probe clears it. */
+  private def tauLit(s: SparkSession, dir: String): Column =
+    typedlit(IndexStore.kind(s, dir, "sem").tau)
 
   /** Probe a batch of (vec_id, embedding) against a persisted semantic
     * index: (vec_id, cell, verdict, match_vec, best_cos, tau) per batch
@@ -1088,12 +1086,7 @@ object VectorOps extends QueryModule {
       .agg(min(struct((-col("cos")).as("nc"), col("base_vec").as("base_vec"))).as("w"))
       .select(col("vec_id"), col("w.base_vec").as("match_vec"),
         (-col("w.nc")).as("best_cos"))
-    // limit(1) makes the 1-row τ artifact's bound part of the PLAN
-    // (GlobalLimit-1), so withScalar admits it statically and the
-    // loop-join hygiene gate sees a provably-scalar side.
-    graft.Scalars.withScalar(
-        assigned.select(col("vec_id"), col("cell")),
-        s.read.parquet(s"$dir/tau").limit(1))
+    assigned.select(col("vec_id"), col("cell"), tauLit(s, dir).as("tau"))
       .join(best, Seq("vec_id"), "left")
       .select(col("vec_id"), col("cell"),
         when(col("best_cos") > col("tau"), lit("dup"))
@@ -1120,9 +1113,8 @@ object VectorOps extends QueryModule {
     // ages like the centroids and τ, recalibrated offline).
     if (hasPq(s, dir)) {
       val (dims, cb, rot) = loadPqMeta(s, dir)
-      val cent = s.read.parquet(s"$dir/centroids")
-        .select(col("cid").cast("bigint").as("cid"), col("cu"))
-      val resid0 = assigned.join(broadcast(cent), col("cell") === col("cid"))
+      val resid0 = assigned
+        .join(broadcast(centroidFrame(s, dir)), col("cell") === col("cid"))
         .select(col("vec_id"), col("cell"),
           zip_with(col("ue"), col("cu"), (a, b) => a - b).as("ue"))
       val resid = rot.fold(resid0)(r => opqRotate(resid0, r))
@@ -1184,9 +1176,9 @@ object VectorOps extends QueryModule {
   }
 
   /** Parquet data files backing the semantic index's vector store — the
-    * signal the compaction threshold reads. Centroids and τ are 1-file
-    * metadata written once; only `vectors` accretes a file-set per
-    * micro-batch under the streaming refresh. */
+    * signal the compaction threshold reads. Centroids and τ live in the
+    * manifest; only `vectors` accretes a file-set per micro-batch under
+    * the streaming refresh. */
   private[graft] def semIndexFileCount(s: SparkSession, dir: String): Long =
     graft.Fs.list(s"$dir/vectors").count(_.endsWith(".parquet")).toLong
 
@@ -1405,15 +1397,12 @@ object VectorOps extends QueryModule {
       count(lit(1)).as("n_cells_used"),
       max(col("n")).as("max_cell_vectors"),
       expr("sum(n * (n - 1)) div 2").as("cell_pair_budget"))
-    val kv = s.read.parquet(s"$dir/centroids")
-      .agg(count(lit(1)).as("k"))
-    val tau = s.read.parquet(s"$dir/tau").limit(1)
-    Seq(kv, tau).foldLeft(card)(graft.Scalars.withScalar)
-      .select(col("n_vectors"), col("k"), col("n_cells_used"),
+    card.select(col("n_vectors"),
+        lit(centroidRows(s, dir).size.toLong).as("k"), col("n_cells_used"),
         col("max_cell_vectors"), col("cell_pair_budget"),
         (col("max_cell_vectors").cast("double") /
           nullif(col("n_vectors"), lit(0)).cast("double")).as("max_cell_share"),
-        col("tau"))
+        tauLit(s, dir).as("tau"))
   }
   private def q212Sql: String =
     s"""WITH $semIndexCtes,
@@ -1468,14 +1457,13 @@ object VectorOps extends QueryModule {
       .agg(sum(when(col("rank") === 0, coalesce(col("occ_n"), lit(0L))))
           .as("scored_pairs_n1"),
         sum(coalesce(col("occ_n"), lit(0L))).as("scored_pairs_n2"))
-    val tau = s.read.parquet(s"$dir/tau").limit(1)
-    Seq(dups(2, "dup_n2"), work, tau).foldLeft(dups(1, "dup_n1"))(graft.Scalars.withScalar)
+    Seq(dups(2, "dup_n2"), work).foldLeft(dups(1, "dup_n1"))(graft.Scalars.withScalar)
       .select(col("dup_n1"), col("dup_n2"),
         (col("dup_n2") - col("dup_n1")).as("boundary_dups"),
         col("scored_pairs_n1"), col("scored_pairs_n2"),
         (col("scored_pairs_n2").cast("double") /
           nullif(col("scored_pairs_n1"), lit(0L)).cast("double")).as("cost_ratio"),
-        col("tau"))
+        tauLit(s, dir).as("tau"))
   }
   private def q213Sql: String =
     s"""WITH $semIndexCtes,
@@ -1705,9 +1693,7 @@ object VectorOps extends QueryModule {
       .localCheckpoint(true) // consumers: count + threshold
     val tauC = PctGate.thresholdDfLazy(pairs, "cos", "0.999",
       "q218tau", "tau_current", keyExpr = "((va * 4194304) + vb)")
-    graft.Scalars.withScalar(
-        s.read.parquet(s"$dir/tau").limit(1).select(col("tau").as("tau_indexed")),
-        tauC)
+    tauC.withColumn("tau_indexed", tauLit(s, dir))
       .select(col("tau_indexed"), col("tau_current"),
         (col("tau_current") - col("tau_indexed")).as("drift"),
         // CASE-guarded division (the q237/q238 discipline): a degenerate
@@ -2444,7 +2430,7 @@ object VectorOps extends QueryModule {
     * deployable artifact a production vector store actually ships:
     *
     *  - BUILD ([[addPqToSemIndex]]): on top of an existing semantic
-    *    index (buildSemIndex's `centroids` + cell-bucketed `vectors`),
+    *    index (buildSemIndex's centroids + cell-bucketed `vectors`),
     *    compute each indexed vector's residual r = ue − c_cell, derive
     *    the variance-balanced dimension permutation from the RESIDUAL
     *    second moments (the q240 dyadic fixed-point idiom — both engines
@@ -2455,11 +2441,11 @@ object VectorOps extends QueryModule {
     *    every codeword to zero and ADC to coarse-only scoring
     *    (SQL-restatable; Lloyd refinement via [[refinePqBooks]] is the
     *    spec-owned production rung, the q52 seed-vs-trained
-    *    discipline), and persist
-    *    `pq_dims`/`pq_cb` (driver-literal-sized metadata) plus the
-    *    `codes` table — (vec_id, cell, code0..m−1), ~m bytes of payload
-    *    per vector vs d·4 for floats — as an IndexStore EXTERNAL BUCKETED
-    *    table on `cell`, the probe-join key.
+    *    discipline), and commit the permutation and books
+    *    (driver-literal-sized metadata) in the pq kind's manifest entry
+    *    beside the `codes` table — (vec_id, cell, code0..m−1), ~m bytes
+    *    of payload per vector vs d·4 for floats — an IndexStore EXTERNAL
+    *    BUCKETED table on `cell`, the probe-join key.
     *  - PROBE ([[probeIvfAdcTop3]]): a query ranks the ≤k centroids
     *    row-locally (literal codebook, no crossJoin), keeps its top
     *    [[IvfAdcNprobe]] (cell, coarse-dot) pairs, builds its m×ksub ADC
@@ -2497,19 +2483,16 @@ object VectorOps extends QueryModule {
   /** Residual frame (vec_id, cell, ue := unit vector − own-cell
     * centroid) of a persisted semantic index — the PQ training/encoding
     * input. Centroid side is ≤ k rows, broadcast. */
-  private[queries] def semResiduals(s: SparkSession, dir: String): DataFrame = {
-    val cent = s.read.parquet(s"$dir/centroids")
-      .select(col("cid").cast("bigint").as("cid"), col("cu"))
+  private[queries] def semResiduals(s: SparkSession, dir: String): DataFrame =
     IndexStore.read(s, dir, "vectors")
-      .join(broadcast(cent), col("cell") === col("cid"))
+      .join(broadcast(centroidFrame(s, dir)), col("cell") === col("cid"))
       .select(col("vec_id"), col("cell"),
         zip_with(col("ue"), col("cu"), (a, b) => a - b).as("ue"))
-  }
 
   /** Extend a built semantic index with the IVFADC artifacts: residual
-    * permutation + sub-codebooks (`pq_dims`/`pq_cb`) and the
-    * cell-bucketed `codes` table. The oracled q243 build passes
-    * `lloydIters = 1` (one refinement round, restated in [[ivfAdcCtes]]
+    * permutation + sub-codebooks (the pq kind's `pqDims`/`pqBooks` in
+    * the manifest) and the cell-bucketed `codes` table. The oracled q243
+    * build passes `lloydIters = 1` (one refinement round, restated in [[ivfAdcCtes]]
     * as unrolled CTEs); production sizes the budget freely
     * ([[refinePqBooks]]).
     *
@@ -2518,11 +2501,11 @@ object VectorOps extends QueryModule {
     * q247 keep the permutation build): residuals are rotated into the
     * basis [[trainRotation]] learns from THEIR second moments, subspaces
     * come from [[opqAllocate]] over the residual eigenvalues, and the
-    * rotation persists as `pq_rot` beside the books — probes rotate the
-    * QUERY once per query (⟨q, r⟩ = ⟨Rq, Rr⟩, so the LUT is built from
-    * the rotated query against codewords living in the rotated space;
-    * the coarse ⟨q, c⟩ term keeps the raw query). Appends encode with
-    * the frozen rotation exactly like the frozen books.
+    * rotation is committed as `pqRotation` beside the books — probes
+    * rotate the QUERY once per query (⟨q, r⟩ = ⟨Rq, Rr⟩, so the LUT is
+    * built from the rotated query against codewords living in the
+    * rotated space; the coarse ⟨q, c⟩ term keeps the raw query). Appends
+    * encode with the frozen rotation exactly like the frozen books.
     *
     * `attrs` (vec_id → label) BAKES a filter attribute into the codes
     * rows at build time — +4 bytes beside the m code bytes per vector —
@@ -2575,17 +2558,6 @@ object VectorOps extends QueryModule {
         dims.map(dj => Seq.fill(dj.size)(0.0) +: seedRows.map(re => dj.map(re(_)).toSeq))
       val cb = refinePqBooks(resid.select(col("vec_id"), col("ue")), dims,
         seedCb, lloydIters)
-      import s.implicits._
-      dims.zipWithIndex.map { case (dj, j) => (j, dj) }.toDF("sub", "dims")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/pq_dims")
-      cb.zipWithIndex.flatMap { case (cj, j) =>
-          cj.zipWithIndex.map { case (cv, c) => (j, c, cv) } }
-        .toDF("sub", "cid", "cv")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/pq_cb")
-      rotOpt.foreach { case (r, _) =>
-        r.zipWithIndex.map { case (rv, k) => (k, rv) }.toDF("k", "rv")
-          .coalesce(1).write.mode("overwrite").parquet(s"$dir/pq_rot")
-      }
       val codes0 = withPqCodes(resid, dims, cb)
         .select(col("vec_id") +: col("cell") +:
           dims.indices.map(j => col(s"code$j")): _*)
@@ -2593,57 +2565,18 @@ object VectorOps extends QueryModule {
         a.select(col("vec_id"), col("label").cast("int").as("label")),
         Seq("vec_id"), "left"))
       val codesT = IndexStore.write(codes, dir, "codes", Seq("cell"))
-      // Publish the just-persisted PQ metadata (producer-refresh): the
-      // values handed to the cache are exactly the ones written above
-      // (doubles round-trip parquet bit-exactly; cb/rot read back in the
-      // same cid/k order they were written in), so readers skip the three
-      // metadata collects without any value drift, and a re-encoded dir
-      // replaces any prior entry.
-      pqMetaCache.put(s, dir,
-        (dims.map(_.toSeq), cb.map(_.map(_.toSeq)), rotOpt.map(_._1.map(_.toSeq))))
-      // `rotated` is what tells a reader whether `pq_rot` belongs to this
-      // build: a rotation-free re-encode leaves an older pq_rot on disk.
-      IndexStore.Kind(Map(codesT), Map("rotated" -> rotOpt.isDefined.toString))
+      IndexStore.Kind(Map(codesT), pqDims = dims, pqBooks = cb,
+        pqRotation = rotOpt.map(_._1))
     }
 
   /** (permutation/allocation, sub-codebooks, optional learned rotation)
-    * reloaded from a persisted IVFADC index — ≤ m + m·ksub + d collected
-    * rows. Collected once per (session, dir) — the three metadata
-    * collects otherwise re-run on every ADC scoring call (guide §1.2
-    * step 1). [[addPqToSemIndex]] is the only writer and REFRESHES the
-    * entry with the exact values it persisted, so a same-dir re-encode
-    * within a session can never serve stale metadata. */
-  private val pqMetaCache = new graft.SessionCache[
-    (Seq[Seq[Int]], Seq[Seq[Seq[Double]]], Option[Seq[Seq[Double]]])]
+    * of a committed IVFADC index, from the manifest. A small corpus can
+    * carry fewer than ksub codewords per sub (the zero codeword + the
+    * non-centroid seeds it had). */
   private def loadPqMeta(s: SparkSession, dir: String):
       (Seq[Seq[Int]], Seq[Seq[Seq[Double]]], Option[Seq[Seq[Double]]]) = {
-    // The manifest first, every call: a rebuilt index without the pq
-    // kind must refuse, not serve this session's cached books.
-    val rotated = IndexStore.kind(s, dir, "pq").params("rotated").toBoolean
-    pqMetaCache.getOrBuild(s, dir)(loadPqMetaUncached(s, dir, rotated))
-  }
-
-  private def loadPqMetaUncached(s: SparkSession, dir: String,
-      rotated: Boolean):
-      (Seq[Seq[Int]], Seq[Seq[Seq[Double]]], Option[Seq[Seq[Double]]]) = {
-    // collect-bound: pq_dims has one row per subspace — ≤ m rows
-    val dims: Seq[Seq[Int]] = s.read.parquet(s"$dir/pq_dims")
-      .collect().sortBy(_.getInt(0)).map(_.getSeq[Int](1).toSeq).toSeq
-    // collect-bound: pq_cb has one row per (sub, code) — ≤ m·ksub rows
-    val cbm = s.read.parquet(s"$dir/pq_cb")
-      .collect().map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2)))
-      .toMap
-    // A small corpus can persist fewer than ksub codewords per sub (zero
-    // codeword + the non-centroid seeds it had) — load what's there.
-    val cb = dims.indices.map(j =>
-      cbm.keysIterator.filter(_._1 == j).map(_._2).toSeq.sorted
-        .map(c => cbm((j, c)).toSeq)).toSeq
-    val rot =
-      // collect-bound: pq_rot has one row per dimension — ≤ d rows
-      if (rotated) Some(s.read.parquet(s"$dir/pq_rot")
-        .collect().sortBy(_.getInt(0)).map(_.getSeq[Double](1).toSeq).toSeq)
-      else None
-    (dims, cb, rot)
+    val k = IndexStore.kind(s, dir, "pq")
+    (k.pqDims, k.pqBooks, k.pqRotation)
   }
 
   /** The index's residuals in its CODING basis (rotated when built with
@@ -3586,11 +3519,12 @@ object VectorOps extends QueryModule {
         .localCheckpoint(true) // consumers: both pair sides
       val (name, edges) =
         IndexStore.write(graphEdges(asg, asg), dir, "gedges", Seq("src"))
-      val chosen = deriveGraphScheme(s, dir,
+      val (chosen, sweep) = deriveGraphScheme(s, dir,
         IndexStore.read(s, dir, name, edges), target)
       IndexStore.Kind(Map(name -> edges), Map(
         "entries" -> chosen.entries.toString,
-        "width" -> chosen.width.toString, "hops" -> chosen.hops.toString))
+        "width" -> chosen.width.toString, "hops" -> chosen.hops.toString),
+        sweep = sweep)
     }
 
   /** Number of in-index calibration queries the build-time scheme sweep
@@ -3629,8 +3563,7 @@ object VectorOps extends QueryModule {
   }
 
   /** Run the [[GraphConfig.SweepArms]] grid on the index's OWN corpus
-    * and persist the derived (entries, width, hops) — plus the full
-    * measured curve — as `gscheme`, the graph twin of the LSH index
+    * and derive its (entries, width, hops) — the graph twin of the LSH index
     * persisting its (bands, rows) and the semantic index its τ (the
     * round-16 verdict's top gap: `GraphConfig.MeasuredCurve` is a
     * compile-time constant pinned at sf0.01, so an index built on any
@@ -3640,13 +3573,13 @@ object VectorOps extends QueryModule {
     * [[calibExactTop1]], scheme = [[GraphConfig.schemeFor]] over exactly
     * those rows, probing `edges` — the build's own, not yet committed.
     * Returns the chosen scheme, which the build commits as the graph
-    * kind's parameters; probes read it back ([[indexScheme]]). The
+    * kind's parameters, and the full measured curve, which it commits as
+    * the kind's `sweep`; probes read the scheme back ([[indexScheme]]). The
     * scheme is index METADATA: appends/takedowns do not re-derive it
     * (aged like the centroids and τ, recalibrated offline by rebuilding
     * the graph kind). */
-  private def deriveGraphScheme(s: SparkSession, dir: String,
-      edges: DataFrame, target: Double): GraphConfig.Scheme = {
-    import s.implicits._
+  private def deriveGraphScheme(s: SparkSession, dir: String, edges: DataFrame,
+      target: Double): (GraphConfig.Scheme, Seq[IndexStore.SweepArm]) = {
     // Tombstones dropped BEFORE the calibration split and ground truth:
     // this is also the offline recalibration path (run after takedowns,
     // before compaction), where a tombstoned node picked as calibration
@@ -3686,11 +3619,8 @@ object VectorOps extends QueryModule {
     val chosen =
       if (nCal == 0) GraphConfig.Default
       else GraphConfig.schemeFor(target, curve)
-    curve.map { case (a, r) =>
-        (a.entries, a.width, a.hops, r, nCal, a == chosen) }
-      .toDF("entries", "width", "hops", "recall_at1", "n_calib", "chosen")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/gscheme")
-    chosen
+    chosen -> curve.map { case (a, r) =>
+      IndexStore.SweepArm(a.entries, a.width, a.hops, r, nCal, a == chosen) }
   }
 
   private def graphScheme(k: IndexStore.Kind): GraphConfig.Scheme =
@@ -4241,7 +4171,7 @@ object VectorOps extends QueryModule {
     * already pay for both artifacts. */
   private def q256(s: SparkSession, d: String): DataFrame = {
     builtIvfAdc(s, d) // ensures the PQ artifacts on the shared dir
-    val dir = builtGraphIndex(s, d) // same dir; ensures gedges + gscheme
+    val dir = builtGraphIndex(s, d) // same dir; ensures the graph kind
     probeHybridTop3(s, ivfAdcQueries(s, d), dir)
       .orderBy("query_id", "rnk", "found_id")
   }
@@ -4337,8 +4267,8 @@ object VectorOps extends QueryModule {
     * ADC bound) against the indexed base split — the recall reference
     * shared by the q251 health card and the q252 sweep. Brute-force by
     * design: it is the measurement's ground truth, |Q| broadcast. */
-  /** q260 — graph-scheme observability card: the PERSISTED `gscheme`
-    * artifact read back verbatim (one row per sweep arm, the measured
+  /** q260 — graph-scheme observability card: the graph kind's committed
+    * `sweep` read back verbatim (one row per sweep arm, the measured
     * calibration curve, exactly one chosen row). The oracle RE-RUNS the
     * build-time derivation and must agree arm-by-arm — the card is the
     * executable proof that the metadata a probe trusts equals what a
@@ -4346,9 +4276,9 @@ object VectorOps extends QueryModule {
     * for the scheme artifact itself). */
   private def q260(s: SparkSession, d: String): DataFrame = {
     val dir = builtGraphIndex(s, d)
-    s.read.parquet(s"$dir/gscheme")
-      .select(col("entries"), col("width"), col("hops"),
-        col("recall_at1"), col("n_calib"), col("chosen"))
+    import s.implicits._
+    IndexStore.kind(s, dir, "graph").sweep
+      .toDF("entries", "width", "hops", "recall_at1", "n_calib", "chosen")
       .orderBy("entries", "width", "hops")
   }
 
@@ -4393,7 +4323,7 @@ object VectorOps extends QueryModule {
     }
 
   /** q255 — ADC search through the ROTATED-build IVFADC index (the q243
-    * consumer shape over the `pq_rot` artifact: coarse ranks use the
+    * consumer shape over the committed rotation: coarse ranks use the
     * raw query, the LUT gathers from the rotated one — ⟨q,r⟩ = ⟨Rq,Rr⟩,
     * codewords live in the rotated space). */
   private def q255(s: SparkSession, d: String): DataFrame =

@@ -9,8 +9,9 @@ import org.apache.spark.sql.types._
 /** Streaming incremental SEMANTIC dedup — [[DedupStream]]'s pattern one
   * modality over, closing the q211 loop on the ingest side: as embedded
   * documents arrive, each micro-batch probes the PERSISTED IVF index
-  * (centroids + cell-assigned unit vectors + build-time-calibrated τ,
-  * written once by `VectorOps.buildSemIndex`) and emits q211's
+  * (the cell-assigned unit vectors, plus the centroids and the
+  * build-time-calibrated τ that `VectorOps.buildSemIndex` commits in the
+  * index manifest, read by every session alike) and emits q211's
   * (vec_id, cell, verdict, match_vec, best_cos, tau) verdict schema.
   * The probe is `VectorOps.probeSemIndex` — the SAME function the batch
   * query calls, so stream ≡ batch verdicts hold by construction.
@@ -31,7 +32,7 @@ import org.apache.spark.sql.types._
   *    recalibration job, not a per-batch re-train).
   *
   * Scale shape per micro-batch: cell assignment is row-local scoring
-  * against the ≤k-row centroid table (k ∝ √n); the candidate join
+  * against the ≤k committed centroids (k ∝ √n); the candidate join
   * touches only the batch's cells' occupants, keyed on the cell id the
   * index is partitioned by at scale. Nothing corpus-proportional lives
   * in executor state — the index IS the state. */

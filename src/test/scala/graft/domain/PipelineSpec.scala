@@ -2,7 +2,6 @@ package graft.domain
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 class PipelineSpec extends SparkSpec {
 
@@ -11,7 +10,7 @@ class PipelineSpec extends SparkSpec {
 
   /** A fresh directory holding the fixture bronze. */
   private def bronzeBase(): String = {
-    val base = Files.createTempDirectory("graft_pipe").toString
+    val base = graft.Scratch.fresh("pipe")
     Fixtures.reviews(spark).write.mode("overwrite").parquet(s"$base/bronze")
     base
   }
@@ -89,7 +88,7 @@ class PipelineSpec extends SparkSpec {
     // `partitions` shuffle partitions; returns every gold table's rows.
     def build(partitions: Int, files: Int): Map[String, Seq[String]] = {
       conf.set("spark.sql.shuffle.partitions", partitions.toLong)
-      val base = Files.createTempDirectory("graft_pipe").toString
+      val base = graft.Scratch.fresh("pipe")
       Fixtures.reviews(spark).repartition(files).write.parquet(s"$base/bronze")
       assert(new java.io.File(s"$base/bronze").list().count(_.endsWith(".parquet")) === files)
       Pipeline.run(spark, s"$base/bronze", s"$base/gold")

@@ -7,13 +7,13 @@ import java.nio.file.{Files, Paths}
 class MediaSpec extends SparkSpec {
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft_media")
+    val d = graft.Scratch.fresh("media")
     (0 until 5).foreach { i =>
       val bytes = Array.tabulate[Byte](100 + i * 37)(j => ((i * 31 + j * 7) % 256).toByte)
-      Files.write(Paths.get(d.toString, s"asset_$i.jpg"), bytes)
+      Files.write(Paths.get(d, s"asset_$i.jpg"), bytes)
     }
-    Files.write(Paths.get(d.toString, "ignore.txt"), Array[Byte](1, 2, 3))
-    d.toString
+    Files.write(Paths.get(d, "ignore.txt"), Array[Byte](1, 2, 3))
+    d
   }
 
   test("binaryFile ingestion: glob filter, ids, opaque content, meta struct") {
@@ -43,7 +43,7 @@ class MediaSpec extends SparkSpec {
 
   test("real image decode recovers true dimensions from PNG and JPEG bytes") {
     implicit val s = spark
-    val imgDir = Files.createTempDirectory("graft_media_png").toString
+    val imgDir = graft.Scratch.fresh("media_png")
     // Deterministic real images, written with the same JDK codec stack the
     // executors decode with.
     def writeImage(name: String, fmt: String, w: Int, h: Int): Unit = {
@@ -78,7 +78,7 @@ class MediaSpec extends SparkSpec {
 
   test("real audio decode recovers duration/rate/channels from WAV bytes") {
     implicit val s = spark
-    val audioDir = Files.createTempDirectory("graft_media_wav").toString
+    val audioDir = graft.Scratch.fresh("media_wav")
     // Deterministic real WAV written with the same JDK codec stack the
     // executors decode with: 8 kHz mono 16-bit PCM, 8000 frames = 1000 ms.
     def writeWav(name: String, rateHz: Float, channels: Int, frames: Int): Unit = {
@@ -113,7 +113,7 @@ class MediaSpec extends SparkSpec {
 
   test("video metadata decode: MP4 container headers through extractFeatures") {
     implicit val s = spark
-    val vidDir = Files.createTempDirectory("graft_media_mp4").toString
+    val vidDir = graft.Scratch.fresh("media_mp4")
     // Minimal real ISO-BMFF: ftyp + moov(mvhd ts=600 dur=3000 -> 5000 ms,
     // trak/tkhd 320x240) — same builder logic as ContainersSpec.
     def box(typ: String, payload: Array[Byte]): Array[Byte] = {

@@ -103,10 +103,8 @@ class IndexColocationSpec extends SparkSpec {
   }
 
   /** `tables` are the bucketed table dirs under the index root — the
-    * 1-row metadata artifacts beside them (tau, scheme, centroids) are
-    * deliberately out of scope: their LIMIT-1 reads go through the
-    * enforced withScalar SinglePartition idiom, which is not an
-    * index-side shuffle. */
+    * only index data a probe scans: the metadata (τ, scheme, centroids)
+    * lives in the manifest and reaches a plan as literals. */
   private def assertColocated(plans: Seq[SparkPlan], idx: String,
       tables: Seq[String]): Unit = {
     val paths = plans.flatMap(scanAncestry(_, tables.map(t => s"$idx/$t"), Nil))
@@ -133,7 +131,7 @@ class IndexColocationSpec extends SparkSpec {
   }
 
   test("dedup probe: no Exchange on the index side; verdicts == plain layout") {
-    val root = java.nio.file.Files.createTempDirectory("graft_coloc_d").toString
+    val root = graft.Scratch.fresh("coloc_d")
     val novelText = (1 to 30).map(i => s"tok$i").mkString(" ")
     val base = docsDf(
       1L -> "the quick brown fox jumps over the lazy dog",
@@ -172,7 +170,7 @@ class IndexColocationSpec extends SparkSpec {
 
   test("semantic probe: no Exchange on the index side; verdicts == plain layout") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_coloc_s").toString
+    val root = graft.Scratch.fresh("coloc_s")
     // 20 base vectors in 4 dims; probes: a near-copy of vec 0 (dup) and
     // an orthogonal-ish novel direction.
     def vec(i: Int): Seq[Double] = {
@@ -210,7 +208,7 @@ class IndexColocationSpec extends SparkSpec {
 
   test("ivfadc probe: no Exchange on the codes side; results == plain layout") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_coloc_a").toString
+    val root = graft.Scratch.fresh("coloc_a")
     def vec(i: Int): Seq[Double] = {
       val t = i.toDouble / 7.0
       Seq(math.cos(t), math.sin(t), math.cos(2 * t) / 3.0, 0.1 * (i % 3))
@@ -247,7 +245,7 @@ class IndexColocationSpec extends SparkSpec {
 
   test("graph probe: no Exchange on the gedges side; results == plain layout") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_coloc_g").toString
+    val root = graft.Scratch.fresh("coloc_g")
     def vec(i: Int): Seq[Double] = {
       val t = i.toDouble / 7.0
       Seq(math.cos(t), math.sin(t), math.cos(2 * t) / 3.0, 0.1 * (i % 3))
@@ -284,7 +282,7 @@ class IndexColocationSpec extends SparkSpec {
   }
 
   test("compaction preserves bucketing and the co-located probe plan") {
-    val root = java.nio.file.Files.createTempDirectory("graft_coloc_c").toString
+    val root = graft.Scratch.fresh("coloc_c")
     val idx = s"$root/index"
     val novelText = (1 to 30).map(i => s"mot$i").mkString(" ")
     DedupOps.buildDedupIndex(docsDf(
@@ -316,7 +314,7 @@ class IndexColocationSpec extends SparkSpec {
   }
 
   test("rebucket keeps the probe co-located at the NEW count, verdicts equal") {
-    val root = java.nio.file.Files.createTempDirectory("graft_coloc_r").toString
+    val root = graft.Scratch.fresh("coloc_r")
     val idx = s"$root/index"
     val novelText = (1 to 30).map(i => s"wrd$i").mkString(" ")
     DedupOps.buildDedupIndex(docsDf(

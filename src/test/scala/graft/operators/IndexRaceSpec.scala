@@ -20,8 +20,7 @@ class IndexRaceSpec extends SparkSpec {
   import spark.implicits._
 
   test("100 concurrent takedowns survive racing compaction passes") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_race_sem").toString
+    val dir = graft.Scratch.fresh("race_sem")
     def vec(i: Int): Seq[Double] = {
       val t = i.toDouble / 7.0
       Seq(math.cos(t), math.sin(t), math.cos(2 * t) / 3.0, 0.1 * (i % 3))
@@ -61,8 +60,7 @@ class IndexRaceSpec extends SparkSpec {
 
   test("dedup index: 100 concurrent takedowns survive racing compactions") {
     import graft.queries.DedupOps
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_race_dedup").toString
+    val dir = graft.Scratch.fresh("race_dedup")
     // Distinct multi-token texts so every doc lands in exact AND
     // bands/shingles (>= 3 tokens clears the banding filter).
     val base = (0 until 120).map(i =>

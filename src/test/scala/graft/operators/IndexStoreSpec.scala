@@ -16,7 +16,7 @@ class IndexStoreSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_ixs_$tag").toString
+    graft.Scratch.fresh(s"ixs_$tag")
 
   private def rows(n: Int) =
     (1 to n).map(i => (i.toLong, s"v$i")).toDF("k", "v")

@@ -27,7 +27,7 @@ class AssemblyOpsSpec extends SparkSpec {
       (6L, "short text number six with enough tokens here too", "en", "a"),
       (7L, "seventh document text is entirely different from all others", "en", "a"))
       .map { case (id, tx, lg, src) => (id, tx, lg, src, tx.length.toLong) }
-    val dir = java.nio.file.Files.createTempDirectory("assembly").toString
+    val dir = graft.Scratch.fresh("assembly")
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     dir
@@ -201,7 +201,7 @@ class AssemblyOpsSpec extends SparkSpec {
   }
 
   test("q128: turns render in time order with alternating roles; validity bounds") {
-    val dir = java.nio.file.Files.createTempDirectory("sft").toString
+    val dir = graft.Scratch.fresh("sft")
     val base = 1_700_000_000_000_000L // epoch micros
     val evs = Seq(
       // user 1: 3 turns, deliberately written out of time order

@@ -106,7 +106,7 @@ class BeamAnnSpec extends SparkSpec {
         20L -> x20,
         21L -> inPlane(2, 32), 22L -> inPlane(2, 31),
         23L -> inPlane(2, 18))).map { case (id, v) => (id, v, 0) }
-    val dir = java.nio.file.Files.createTempDirectory("graft_beamtrap").toString
+    val dir = graft.Scratch.fresh("beamtrap")
     rows.toDF("vec_id", "embedding", "label")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
 

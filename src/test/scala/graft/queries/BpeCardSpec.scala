@@ -12,7 +12,7 @@ class BpeCardSpec extends SparkSpec {
   import spark.implicits._
 
   private def writeDocs(rows: Seq[(Long, String, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("bpecard").toString
+    val dir = graft.Scratch.fresh("bpecard")
     rows.map { case (id, tx, src) => (id, tx, "en", src, tx.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")

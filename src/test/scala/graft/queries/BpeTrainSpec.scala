@@ -15,7 +15,7 @@ class BpeTrainSpec extends SparkSpec {
     words.toSeq.toDF("word", "freq")
 
   private def writeDocs(text: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory("bpetrain").toString
+    val dir = graft.Scratch.fresh("bpetrain")
     Seq((1L, text, "en", "s", text.length.toLong))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")

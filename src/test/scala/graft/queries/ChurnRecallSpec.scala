@@ -77,7 +77,7 @@ class ChurnRecallSpec extends SparkSpec {
   }
 
   test("churned-index recall stays within the refresh threshold of a fresh rebuild") {
-    val root = java.nio.file.Files.createTempDirectory("graft_churn").toString
+    val root = graft.Scratch.fresh("churn")
 
     // CHURNED arm: build → append → takedown → compact; centroids and the
     // derived scheme stay frozen from the initial build.
@@ -116,7 +116,7 @@ class ChurnRecallSpec extends SparkSpec {
   }
 
   test("takedown wave is invisible to the churned probe") {
-    val root = java.nio.file.Files.createTempDirectory("graft_churn2").toString
+    val root = graft.Scratch.fresh("churn2")
     val dir = s"$root/idx"
     VectorOps.buildSemIndex(spark, df(initialIds), dir)
     VectorOps.addGraphToSemIndex(spark, dir)

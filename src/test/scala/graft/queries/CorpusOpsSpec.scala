@@ -98,7 +98,7 @@ class CorpusOpsSpec extends SparkSpec {
   }
 
   test("q146 matches brute-force TF-IDF top-3 on a fixture") {
-    val dir = java.nio.file.Files.createTempDirectory("tfidf").toString
+    val dir = graft.Scratch.fresh("tfidf")
     val texts = Seq[(Long, String)](
       (1L, "apple banana apple cherry"),
       (2L, "banana cherry cherry date"),
@@ -124,7 +124,7 @@ class CorpusOpsSpec extends SparkSpec {
   }
 
   test("q147 overlap matrix matches a brute-force set intersection") {
-    val dir = java.nio.file.Files.createTempDirectory("ovl").toString
+    val dir = graft.Scratch.fresh("ovl")
     // 8-token lines; docs 1/2 share their first line, 3 is disjoint
     val l1 = "a b c d e f g h"
     val l2 = "i j k l m n o p"
@@ -186,7 +186,7 @@ class CorpusOpsSpec extends SparkSpec {
   }
 
   test("q151 PII scan finds planted entities and redacts in order") {
-    val dir = java.nio.file.Files.createTempDirectory("pii").toString
+    val dir = graft.Scratch.fresh("pii")
     writeDocs(dir, Seq(
       (1L, "contact bob@example.com or admin@test.org today"),
       (2L, "server at 192.168.1.1 and 10.0.0.255 up"),
@@ -208,7 +208,7 @@ class CorpusOpsSpec extends SparkSpec {
   }
 
   test("q152 encoding health flags planted corruption") {
-    val dir = java.nio.file.Files.createTempDirectory("enc").toString
+    val dir = graft.Scratch.fresh("enc")
     writeDocs(dir, Seq(
       (1L, "clean ascii text"),
       (2L, "bad � char � twice"),
@@ -337,7 +337,7 @@ class CorpusOpsSpec extends SparkSpec {
   }
 
   test("q158 blocklist stats match brute-force substring counting") {
-    val dir = java.nio.file.Files.createTempDirectory("bl").toString
+    val dir = graft.Scratch.fresh("bl")
     writeDocs(dir, Seq(
       (1L, "this is slow and slow and big"),
       (2L, "lorem ipsum lorem ipsum text"),

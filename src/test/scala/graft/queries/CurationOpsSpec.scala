@@ -12,7 +12,7 @@ class CurationOpsSpec extends SparkSpec {
   import spark.implicits._
 
   private def writeDocs(rows: Seq[(Long, String, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("curation").toString
+    val dir = graft.Scratch.fresh("curation")
     rows.map { case (id, tx, src) => (id, tx, "en", src, tx.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -159,7 +159,7 @@ class CurationOpsSpec extends SparkSpec {
       base(i % dim) = 1.0f + 0.01f * i
       (i.toLong, base.toSeq, i % 3)
     }
-    val dir = java.nio.file.Files.createTempDirectory("clusterq").toString
+    val dir = graft.Scratch.fresh("clusterq")
     vecs.toDF("vec_id", "embedding", "label")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val rows = CurationOps.queries("q178_cluster_quality")(spark, dir).collect()
@@ -390,7 +390,7 @@ class CurationOpsSpec extends SparkSpec {
   }
 
   test("q192: BPE merge-table agreement across language subsets") {
-    val dir = java.nio.file.Files.createTempDirectory("bpexfer").toString
+    val dir = graft.Scratch.fresh("bpexfer")
     Seq((1L, "ab ab ab", "en", "s"), (2L, "ab cd", "fr", "s"))
       .map { case (id, tx, lg, src) => (id, tx, lg, src, tx.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")

@@ -80,7 +80,7 @@ class FilteredAnnSpec extends SparkSpec {
       ((0L, e(0), 0) +: seedIds.zipWithIndex.map { case (id, i) => (id, e(i), 0) }) ++
         wrongIds.zipWithIndex.map { case (id, i) => (id, off(10.0 + 0.5 * i), 0) } ++
         matchIds.zipWithIndex.map { case (id, i) => (id, off(25.0 + i), 1) }
-    val dir = java.nio.file.Files.createTempDirectory("graft_fann").toString
+    val dir = graft.Scratch.fresh("fann")
     rows.toDF("vec_id", "embedding", "label")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
 
@@ -113,7 +113,7 @@ class FilteredAnnSpec extends SparkSpec {
         math.cos((j + 1) * t) / math.sqrt(dim.toDouble))
     }
     val rows = (0 until 40).map(i => (i.toLong, vec(i), i % 7 % 2))
-    val dir = java.nio.file.Files.createTempDirectory("graft_bake").toString
+    val dir = graft.Scratch.fresh("bake")
     rows.toDF("vec_id", "embedding", "label")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val idx = s"$dir/index"

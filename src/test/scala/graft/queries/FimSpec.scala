@@ -11,7 +11,7 @@ class FimSpec extends SparkSpec {
   import spark.implicits._
 
   private def fixture(n: Int): String = {
-    val dir = java.nio.file.Files.createTempDirectory("fim").toString
+    val dir = graft.Scratch.fresh("fim")
     (1 to n).map { i =>
       val words = (0 until (i % 9)).map(j => s"w${(i * 7 + j) % 13}")
       (i.toLong, words.mkString(" "), "en", "s", 10L)

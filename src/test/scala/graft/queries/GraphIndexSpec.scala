@@ -41,8 +41,7 @@ class GraphIndexSpec extends SparkSpec {
       (16 until 20).map(i => (i.toLong, Seq(1.0, 0.01 * (i - 15), 0.0, 0.0)))
 
   private def freshIdx(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_gidx_$tag")
-      .toString + "/index"
+    graft.Scratch.fresh(s"gidx_$tag") + "/index"
 
   private def found(idx: String, q: (Long, Seq[Double])): (Long, Double) = {
     val r = VectorOps.probeGraphIndex(spark, vecsDf(q), idx).head()

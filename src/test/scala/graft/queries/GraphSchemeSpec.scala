@@ -1,13 +1,14 @@
 package graft.queries
 
 import graft.SparkSpec
+import graft.operators.IndexStore
 import org.apache.spark.sql.functions._
 
 /** The persisted graph search scheme (round 17, the round-16 verdict's
   * top item): a built graph index DERIVES its (entries, width, hops) by
   * running the [[GraphConfig.SweepArms]] grid on its OWN corpus at build
-  * time, writes the measured curve as `gscheme` and commits the chosen
-  * scheme as the graph kind's parameters in the index manifest — the
+  * time, and commits the measured curve as the graph kind's `sweep` and
+  * the chosen scheme as its parameters in the index manifest — the
   * LshConfig discipline (a built index carries its scheme as metadata;
   * probes read it back regardless of session conf or library default).
   * Pins:
@@ -25,7 +26,7 @@ class GraphSchemeSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_gscheme_$tag").toString
+    graft.Scratch.fresh(s"gscheme_$tag")
 
   /** 24 deterministic 4-d vectors with mild cluster structure — enough
     * nodes that the sweep's 8 calibration queries and the probe batch
@@ -52,21 +53,20 @@ class GraphSchemeSpec extends SparkSpec {
   test("build persists a self-consistent curve with exactly one chosen row") {
     val dir = freshDir("derive")
     build(dir)
-    val rows = spark.read.parquet(s"$dir/index/gscheme")
-      .orderBy("entries", "width", "hops").collect()
+    val rows = IndexStore.kind(spark, s"$dir/index", "graph").sweep
+      .sortBy(r => (r.entries, r.width, r.hops))
     assert(rows.length === GraphConfig.SweepArms.size,
       "one persisted row per sweep arm")
-    val curve = rows.map(r => GraphConfig.Scheme(r.getAs[Int]("entries"),
-      r.getAs[Int]("width"), r.getAs[Int]("hops")) ->
-      r.getAs[Double]("recall_at1")).toSeq
+    val curve = rows.map(r =>
+      GraphConfig.Scheme(r.entries, r.width, r.hops) -> r.recallAt1)
     assert(curve.map(_._1).toSet === GraphConfig.SweepArms.toSet)
-    val chosen = rows.filter(_.getAs[Boolean]("chosen"))
+    val chosen = rows.filter(_.chosen)
     assert(chosen.length === 1, "exactly one chosen arm")
     val loaded = VectorOps.loadGraphScheme(spark, s"$dir/index")
     assert(loaded.isDefined)
     assert(loaded.get === GraphConfig.schemeFor(GraphConfig.DefaultTarget,
       curve), "chosen row ≡ schemeFor re-applied to the persisted curve")
-    assert(rows.forall(_.getAs[Long]("n_calib") === 8L),
+    assert(rows.forall(_.nCalib === 8L),
       "24-node corpus holds out the full 8-query calibration split")
   }
 
@@ -79,7 +79,7 @@ class GraphSchemeSpec extends SparkSpec {
     // diverge) through the same manifest entry the build commits.
     val nd = GraphConfig.Scheme(1, 1, 3)
     assert(nd !== GraphConfig.Default)
-    graft.operators.IndexStore.commit(spark, s"$dir/index") { ks =>
+    IndexStore.commit(spark, s"$dir/index") { ks =>
       ks + ("graph" -> ks("graph").copy(params = Map(
         "entries" -> nd.entries.toString, "width" -> nd.width.toString,
         "hops" -> nd.hops.toString)))

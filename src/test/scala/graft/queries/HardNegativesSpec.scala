@@ -25,7 +25,7 @@ class HardNegativesSpec extends SparkSpec {
       12L -> v(0, 0, 1, 0.3), 13L -> v(0, 0.1, 1, 0),
       14L -> v(0, 0.2, 1, 0), 15L -> v(0, 0.3, 1, 0),
       16L -> v(1, 0.01, 0, 0), 17L -> v(1, 0.011, 0, 0))
-    val dir = java.nio.file.Files.createTempDirectory("hardneg").toString
+    val dir = graft.Scratch.fresh("hardneg")
     rows.map { case (id, e) => (id, e, (id % 3).toInt) }
       .toDF("vec_id", "embedding", "label")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")

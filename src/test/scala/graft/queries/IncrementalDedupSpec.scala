@@ -27,7 +27,7 @@ class IncrementalDedupSpec extends SparkSpec {
       (15L, "entirely different words regarding catalyst planner and tungsten codegen layers"),
       (20L, "just two"))
       .map { case (id, tx) => (id, tx, "en", "a", tx.length.toLong) }
-    val dir = java.nio.file.Files.createTempDirectory("incdedup").toString
+    val dir = graft.Scratch.fresh("incdedup")
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     dir

@@ -7,11 +7,15 @@ import org.apache.spark.sql.functions.col
 
 /** The index manifest's commit protocol (graft.operators.IndexStore):
   *
-  *  1. STALE-READ REGRESSIONS — two reads the per-artifact side files
-  *     allowed: a rotation-free PQ re-encode over a rotated build (a
-  *     fresh session applied the leftover `pq_rot`), and a semantic
-  *     rebuild over a dir carrying PQ and graph artifacts (their probes
-  *     kept returning ids the rebuilt vector store no longer holds).
+  *  1. STALE-READ REGRESSIONS — reads the per-artifact side files and
+  *     their per-session caches allowed: a rotation-free PQ re-encode
+  *     over a rotated build (a fresh session applied the leftover
+  *     rotation), a semantic rebuild over a dir carrying PQ and graph
+  *     artifacts (their probes kept returning ids the rebuilt vector
+  *     store no longer holds), a rebuild or re-encode from ANOTHER
+  *     session (this session kept ranking against its cached centroids or
+  *     books), and a dir deleted and rebuilt at the same path (the
+  *     JVM-wide parsed-manifest memo must see the new version file).
   *  2. CRASH STATES — for each index build, the states an abort leaves (the
   *     "uncommitted" version a rebuild writes first, tables written with
   *     no new version, a dot-temp manifest never renamed) read as the
@@ -40,6 +44,13 @@ class IndexManifestSpec extends SparkSpec {
     vecs(Seq(500L -> Seq(1.0, 0.02, 0.01, 0.0), 501L -> axis(6).map(_ * 2.0),
       502L -> Seq(0.3, 0.3, 0.9, 0.1)))
 
+  /** A second corpus over the same directions, ids 100-119: the near-
+    * copies come first, so its centroids, cells and τ all differ from
+    * [[baseRows]]'s. */
+  private val otherRows: Seq[(Long, Seq[Double])] =
+    (0 until 4).map(i => (100L + i, Seq(0.0, 0.0, 1.0, 0.02 * (i + 1)))) ++
+      (4 until 20).map(i => (100L + i, axis(i + 1)))
+
   private def docs(rows: (Long, String)*): DataFrame = {
     import spark.implicits._
     rows.toSeq.toDF("doc_id", "text")
@@ -54,8 +65,7 @@ class IndexManifestSpec extends SparkSpec {
     502L -> "pack my box with five dozen liquor jugs")
 
   private def freshIdx(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_manifest_$tag")
-      .toString + "/index"
+    graft.Scratch.fresh(s"manifest_$tag") + "/index"
 
   private def rows(df: DataFrame): Set[Seq[Any]] =
     df.collect().map(_.toSeq).toSet
@@ -119,6 +129,42 @@ class IndexManifestSpec extends SparkSpec {
     assert(adc.nonEmpty && graph.nonEmpty)
     assert(adc.map(_.getLong(1)).forall(live), adc.toSeq)
     assert(graph.map(_.getLong(1)).forall(live), graph.toSeq)
+  }
+
+  test("a semantic rebuild from another session reads the same in every session") {
+    val dir = freshIdx("xsem")
+    VectorOps.buildSemIndex(spark, vecs(baseRows), dir)
+    val before = rows(VectorOps.probeSemIndex(spark, queries, dir))
+    VectorOps.buildSemIndex(spark.newSession(), vecs(otherRows), dir)
+    val after = rows(VectorOps.probeSemIndex(spark, queries, dir))
+    assert(after === rows(VectorOps.probeSemIndex(spark.newSession(), queries, dir)))
+    assert(after !== before)
+  }
+
+  test("a PQ re-encode from another session reads the same in every session") {
+    val dir = freshIdx("xpq")
+    VectorOps.buildSemIndex(spark, vecs(baseRows), dir)
+    VectorOps.addPqToSemIndex(spark, dir)
+    val before = rows(VectorOps.probeIvfAdcTop3(spark, queries, dir))
+    VectorOps.addPqToSemIndex(spark.newSession(), dir, lloydIters = 2,
+      learnedRotation = true)
+    val after = rows(VectorOps.probeIvfAdcTop3(spark, queries, dir))
+    assert(after === rows(VectorOps.probeIvfAdcTop3(spark.newSession(), queries, dir)))
+    assert(after !== before)
+  }
+
+  test("a dir deleted and rebuilt at the same path reads as the new build") {
+    val dir = freshIdx("redo")
+    val ref = freshIdx("redo_ref")
+    VectorOps.buildSemIndex(spark, vecs(otherRows), ref)
+    VectorOps.buildSemIndex(spark, vecs(baseRows), dir)
+    val old = rows(VectorOps.probeSemIndex(spark, queries, dir))
+    graft.Fs.delete(dir)
+    VectorOps.buildSemIndex(spark, vecs(otherRows), dir)
+    val want = rows(VectorOps.probeSemIndex(spark, queries, ref))
+    assert(want !== old)
+    assert(rows(VectorOps.probeSemIndex(spark, queries, dir)) === want)
+    assert(IndexStore.kind(spark, dir, "sem") === IndexStore.kind(spark, ref, "sem"))
   }
 
   // ------------------------------------------------------- crash states

@@ -44,8 +44,7 @@ class IvfAdcSpec extends SparkSpec {
       (16 until 20).map(i => (i.toLong, Seq(1.0, 0.01 * (i - 15), 0.0, 0.0)))
 
   private def freshIdx(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_ivfadc_$tag")
-      .toString + "/index"
+    graft.Scratch.fresh(s"ivfadc_$tag") + "/index"
 
   private def top1(probe: DataFrame, idx: String): Map[Long, (Long, Double)] =
     VectorOps.probeIvfAdcTop3(spark, probe, idx)

@@ -11,7 +11,7 @@ class LineOpsSpec extends SparkSpec {
   import spark.implicits._
 
   private def writeDocs(rows: Seq[(Long, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("lineops").toString
+    val dir = graft.Scratch.fresh("lineops")
     rows.map { case (id, tx) => (id, tx, "en", "src", tx.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -42,7 +42,7 @@ class LmOpsSpec extends SparkSpec {
   }
 
   test("q106 scores are identical under different shuffle partition counts") {
-    val dir = java.nio.file.Files.createTempDirectory("lmops").toString
+    val dir = graft.Scratch.fresh("lmops")
     val docs = Seq(
       (1L, "the cat sat on the mat", "s"),
       (2L, "the cat sat on the hat", "s"),
@@ -88,7 +88,7 @@ class LmOpsSpec extends SparkSpec {
   }
 
   test("q123 Kneser-Ney matches a brute-force double reference and flags the tail") {
-    val dir = java.nio.file.Files.createTempDirectory("lmkn").toString
+    val dir = graft.Scratch.fresh("lmkn")
     val texts = Seq(
       (1L, "the cat sat on the mat"),
       (2L, "the cat sat on the hat"),
@@ -166,7 +166,7 @@ class LmOpsSpec extends SparkSpec {
   }
 
   test("q135 DSIR matches a brute-force double reference; target-style docs rank higher") {
-    val dir = java.nio.file.Files.createTempDirectory("lmdsir").toString
+    val dir = graft.Scratch.fresh("lmdsir")
     val docs = Seq(
       (1L, "alpha beta gamma alpha beta", "en"),
       (2L, "alpha beta delta gamma beta", "en"),
@@ -195,7 +195,7 @@ class LmOpsSpec extends SparkSpec {
   }
 
   test("q135 is identical under different shuffle partition counts") {
-    val dir = java.nio.file.Files.createTempDirectory("lmdsir2").toString
+    val dir = graft.Scratch.fresh("lmdsir2")
     (1 to 40).map(i => (i.toLong, s"w${i % 7} w${i % 3} w${i % 5} w${i % 11}",
         if (i % 3 == 0) "en" else "fr", "s", 20L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")

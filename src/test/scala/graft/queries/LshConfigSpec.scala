@@ -103,7 +103,7 @@ class LshConfigSpec extends SparkSpec {
   test("an index BUILT under the SLA conf persists the derived scheme end-to-end") {
     import org.apache.spark.sql.functions.split
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_lshsla").toString
+    val root = graft.Scratch.fresh("lshsla")
     val base = Seq(
       (10L, "alpha bravo charlie delta echo foxtrot golf hotel india juliet"),
       (11L, "one two three four five six seven eight nine ten eleven twelve"))
@@ -149,7 +149,7 @@ class LshConfigSpec extends SparkSpec {
 
   test("non-default index round-trip: persisted scheme metadata wins over session conf") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_lshknob").toString
+    val root = graft.Scratch.fresh("lshknob")
     val baseText = "alpha bravo charlie delta echo foxtrot golf hotel india " +
       "juliet kilo lima mike november oscar papa quebec romeo sierra tango"
     val base = Seq(

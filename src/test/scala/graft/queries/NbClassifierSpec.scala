@@ -26,7 +26,7 @@ class NbClassifierSpec extends SparkSpec {
       (10L, "spark shuffle join plan", "b"),
       (15L, "zz qq ww", "a"))
       .map { case (id, tx, src) => (id, tx, "en", src, tx.length.toLong) }
-    val dir = java.nio.file.Files.createTempDirectory("nbspec").toString
+    val dir = graft.Scratch.fresh("nbspec")
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     dir

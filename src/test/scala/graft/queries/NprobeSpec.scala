@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.SparkSpec
+import graft.operators.IndexStore
 import org.apache.spark.sql.functions._
 
 /** The IVF nprobe recall lever (q213's subject), pinned on an engineered
@@ -18,7 +19,7 @@ class NprobeSpec extends SparkSpec {
 
   test("nprobe=2 recovers a cross-boundary duplicate that nprobe=1 misses") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_nprobe").toString
+    val root = graft.Scratch.fresh("nprobe")
     // Base: the 16 orthonormal seeds (all become centroids — clean
     // Voronoi geometry), four moderately spread members of cell 0 (they
     // set τ ≈ 0.993, a REAL within-cell percentile well below the
@@ -29,7 +30,7 @@ class NprobeSpec extends SparkSpec {
       (20L -> basis(0, 0.70, 1, 0.72)))
       .toDF("vec_id", "embedding")
     VectorOps.buildSemIndex(spark, base, s"$root/index")
-    val tau = spark.read.parquet(s"$root/index/tau").head().getDouble(0)
+    val tau = IndexStore.kind(spark, s"$root/index", "sem").tau.get
     assert(tau > 0.9 && tau < 0.999, s"fixture must calibrate a usable tau: $tau")
 
     // Probe: 0.72 e0 + 0.70 e1 — argmax centroid 0, second centroid 1;
@@ -56,7 +57,7 @@ class NprobeSpec extends SparkSpec {
 
   test("Lloyd-refined index build: trained centroids persist and probes just work") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_lloydidx").toString
+    val root = graft.Scratch.fresh("lloydidx")
     // Two tight clusters + 14 spread seeds. With the seed codebook the
     // cluster members ARE centroids; after refinement centroid 0 moves
     // to its cluster's mean direction — the probe reads whatever the
@@ -67,8 +68,7 @@ class NprobeSpec extends SparkSpec {
     VectorOps.buildSemIndex(spark, base, s"$root/index", lloydIters = 2)
 
     val seedHead = basis(0) // centroid 0's seed value (e0 exactly)
-    val trained = spark.read.parquet(s"$root/index/centroids")
-      .filter(col("cid") === 0).head().getSeq[Double](1)
+    val trained = IndexStore.kind(spark, s"$root/index", "sem").centroids(0)
     assert(trained !== seedHead,
       "two Lloyd rounds over a loaded cell must move its centroid off the seed")
     assert(math.abs(trained.map(x => x * x).sum - 1.0) < 1e-12, "unit norm")

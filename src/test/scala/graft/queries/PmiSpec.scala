@@ -9,7 +9,7 @@ class PmiSpec extends SparkSpec {
   import spark.implicits._
 
   test("q142 PMI matches a brute-force reference and ranks the planted collocation first") {
-    val dir = java.nio.file.Files.createTempDirectory("pmi").toString
+    val dir = graft.Scratch.fresh("pmi")
     // "qq zz" always co-occur (high PMI); "the x*" pairs are frequent but
     // independent (low PMI); everything crosses the min-count 5 floor
     val texts = (1 to 20).map(i =>

@@ -72,7 +72,7 @@ class QuantileSketchEmptySpec extends SparkSpec {
 
   test("q233 on an empty corpus: zero-row card, schema identical to the populated card") {
     import org.apache.spark.sql.types._
-    val root = java.nio.file.Files.createTempDirectory("graft_q233_empty").toString
+    val root = graft.Scratch.fresh("q233_empty")
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType), StructField("source", StringType),

@@ -10,7 +10,7 @@ class QuantilesSpec extends SparkSpec {
   import spark.implicits._
 
   private def check(texts: Seq[(Long, String)]): Unit = {
-    val dir = java.nio.file.Files.createTempDirectory("quant").toString
+    val dir = graft.Scratch.fresh("quant")
     texts.map { case (id, tx) => (id, tx, "en", "s", 1L) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")

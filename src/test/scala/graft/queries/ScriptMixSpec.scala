@@ -10,7 +10,7 @@ class ScriptMixSpec extends SparkSpec {
 
   private lazy val dir: String = {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft_script").toString
+    val d = graft.Scratch.fresh("script")
     Seq(
       (1L, "paypal account verification required"), // pure latin
       (2L, "pаypаl account verification required"), // Cyrillic а

@@ -9,7 +9,7 @@ class SemanticDecontamSpec extends SparkSpec {
   import spark.implicits._
 
   test("q138 flags near-parallel vectors and clears orthogonal ones") {
-    val dir = java.nio.file.Files.createTempDirectory("semdec").toString
+    val dir = graft.Scratch.fresh("semdec")
     val rows = Seq(
       (0L, Seq(1f, 0f, 0f, 0f), 0),    // benchmark (0 % 50 = 0)
       (50L, Seq(0f, 1f, 0f, 0f), 1),   // benchmark

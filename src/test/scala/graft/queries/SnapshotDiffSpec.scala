@@ -15,7 +15,7 @@ class SnapshotDiffSpec extends SparkSpec {
       .map("%02x".format(_)).mkString
 
   test("q130 statuses match an independent MessageDigest derivation") {
-    val dir = java.nio.file.Files.createTempDirectory("snapdiff").toString
+    val dir = graft.Scratch.fresh("snapdiff")
     // enough ids that the 16 nibble classes are all hit
     val docs = (1L to 200L).map(i => (i, s"text body $i", "en", "s", 10L))
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")

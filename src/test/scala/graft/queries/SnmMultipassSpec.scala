@@ -36,7 +36,7 @@ class SnmMultipassSpec extends SparkSpec {
 
   test("planted prefix-divergent near-dups: found by a rotated pass, missed by pass 0") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_snm").toString
+    val root = graft.Scratch.fresh("snm")
     // Shared 30-char tail, first two chars diverge ("aa" vs "zz"), so the
     // pass-0 keys land in different 2-char blocks. Filler docs populate
     // both blocks so window adjacency cannot rescue the pair by luck.

@@ -10,7 +10,7 @@ class SourceOpsSpec extends SparkSpec {
 
   test("CSV round-trip preserves doubles bit-exactly (shortest-repr write/parse)") {
     import spark.implicits._
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_spec_csv_doubles"
+    val dir = graft.Scratch.fresh("spec_csv_doubles")
     val vals = Seq(0.1, 1.0 / 3.0, 1.23456789012345e-7, 9.007199254740993e15,
       -2.2250738585072014e-308, math.Pi)
     vals.toDF("v").write.mode("overwrite").option("header", "true").csv(dir)
@@ -22,7 +22,7 @@ class SourceOpsSpec extends SparkSpec {
 
   test("default CSV timestamp pattern truncates micros — why q67 projects to DATE") {
     import spark.implicits._
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_spec_csv_ts"
+    val dir = graft.Scratch.fresh("spec_csv_ts")
     val micros = 1700000000123456L // .123456 s fractional part
     Seq(micros).toDF("us").select(timestamp_micros(col("us")).as("t"))
       .write.mode("overwrite").option("header", "true").csv(dir)
@@ -35,7 +35,7 @@ class SourceOpsSpec extends SparkSpec {
 
   test("JSON round-trip is lossless for the full customer row set") {
     val src = Tables(spark, d, "customer")
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_spec_json_cust"
+    val dir = graft.Scratch.fresh("spec_json_cust")
     src.write.mode("overwrite").json(dir)
     val back = spark.read.schema(src.schema).json(dir)
     assert(back.count() == src.count())

@@ -14,7 +14,7 @@ class UnigramSpec extends SparkSpec {
     val docs = texts.zipWithIndex.map { case (tx, i) =>
       (i.toLong, tx, "en", "s", tx.length.toLong)
     }
-    val dir = java.nio.file.Files.createTempDirectory("unigram").toString
+    val dir = graft.Scratch.fresh("unigram")
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     dir

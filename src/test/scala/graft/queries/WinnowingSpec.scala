@@ -16,7 +16,7 @@ class WinnowingSpec extends SparkSpec {
       (2L, s"zulu yankee xray whiskey $shared", "b"),
       (3L, "one two three four five six seven eight nine ten", "c"))
       .map { case (id, tx, src) => (id, tx, "en", src, tx.length.toLong) }
-    val dir = java.nio.file.Files.createTempDirectory("winnow").toString
+    val dir = graft.Scratch.fresh("winnow")
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     dir
@@ -79,7 +79,7 @@ class WinnowingSpec extends SparkSpec {
       val n = 1 + rnd.nextInt(30)
       id -> Seq.fill(n)(vocab(rnd.nextInt(vocab.size))).mkString(" ")
     }.toMap
-    val dir = java.nio.file.Files.createTempDirectory("winbrute").toString
+    val dir = graft.Scratch.fresh("winbrute")
     texts.toSeq.map { case (id, tx) => (id, tx, "en", "s", tx.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")

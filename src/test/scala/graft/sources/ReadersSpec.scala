@@ -13,7 +13,7 @@ class ReadersSpec extends SparkSpec {
     StructField("score", DoubleType)))
 
   test("csv reader applies the declared schema (no inference drift)") {
-    val dir = Files.createTempDirectory("graft_csv").toString
+    val dir = graft.Scratch.fresh("csv")
     Files.write(java.nio.file.Paths.get(dir, "a.csv"),
       "id,name,score\n1,alpha,0.5\n2,beta,0.75\n".getBytes)
     val df = Readers.csv(spark, dir, schema)
@@ -23,7 +23,7 @@ class ReadersSpec extends SparkSpec {
   }
 
   test("json reader applies the declared schema") {
-    val dir = Files.createTempDirectory("graft_json").toString
+    val dir = graft.Scratch.fresh("json")
     Files.write(java.nio.file.Paths.get(dir, "a.json"),
       """{"id": 1, "name": "alpha", "score": 0.5}
         |{"id": 2, "name": "beta"}
@@ -34,7 +34,7 @@ class ReadersSpec extends SparkSpec {
   }
 
   test("latestPartition reads only the newest batch directory") {
-    val base = Files.createTempDirectory("graft_parts").toString
+    val base = graft.Scratch.fresh("parts")
     Seq((1L, "old")).toDF("id", "tag").write.parquet(s"$base/ds=2024-06-01")
     Seq((2L, "new"), (3L, "new")).toDF("id", "tag").write.parquet(s"$base/ds=2024-06-02")
     val df = Readers.latestPartition(spark, base, "ds")
@@ -43,7 +43,7 @@ class ReadersSpec extends SparkSpec {
   }
 
   test("orc round-trips with schema and values intact (second columnar format)") {
-    val dir = Files.createTempDirectory("graft_orc").toString
+    val dir = graft.Scratch.fresh("orc")
     val src = Seq((1L, "alpha", 0.5), (2L, "beta", 0.75)).toDF("id", "name", "score")
     src.write.mode("overwrite").orc(dir)
     val back = spark.read.schema(schema).orc(dir)
@@ -60,7 +60,7 @@ class ReadersSpec extends SparkSpec {
     // (phase2_transformation_pipeline.py:261-339); the engine-side analog is
     // PERMISSIVE parsing + a validity filter, which keeps ingestion
     // vectorized and the bad-row policy declarative.
-    val dir = Files.createTempDirectory("graft_badcsv").toString
+    val dir = graft.Scratch.fresh("badcsv")
     Files.write(java.nio.file.Paths.get(dir, "a.csv"),
       "id,name,score\n1,alpha,0.5\nnot_a_long,beta,oops\n3,gamma,0.25\n".getBytes)
     val df = Readers.csv(spark, dir, schema)
@@ -70,7 +70,7 @@ class ReadersSpec extends SparkSpec {
   }
 
   test("backupCsv round-trips through the dated layout") {
-    val base = Files.createTempDirectory("graft_backup").toString
+    val base = graft.Scratch.fresh("backup")
     Readers.backupCsv(Seq((1L, "x", 0.1)).toDF("id", "name", "score"), base, "2024-06-03")
     val back = Readers.csv(spark, s"$base/2024-06-03", schema)
     assert(back.count() === 1)
@@ -79,7 +79,7 @@ class ReadersSpec extends SparkSpec {
   test("S6/S7 executed: real JDBC write + partitioned read round-trip (embedded Derby)") {
     // Derby ships in /opt/spark/jars — a genuine spark.read.jdbc /
     // write.jdbc against a real SQL database, no external service needed.
-    val dbDir = Files.createTempDirectory("graft_derby").toString
+    val dbDir = graft.Scratch.fresh("derby")
     val url = s"jdbc:derby:$dbDir/graftdb;create=true"
     val src = graft.Tables(spark, "/root/testdata/sf0.001", "nation")
       .select(col("n_nationkey").cast("long").as("n_nationkey"),

@@ -24,7 +24,7 @@ class AnnStreamSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   test("multi-batch ANN stream results equal batch q243 results") {
-    val root = java.nio.file.Files.createTempDirectory("graft_astream").toString
+    val root = graft.Scratch.fresh("astream")
     val e = Tables(spark, sf, "embeddings").select(col("vec_id"), col("embedding"))
     VectorOps.buildSemIndex(spark, e.filter(col("vec_id") % 5 =!= 0), s"$root/index")
     // lloydIters = 1 mirrors the registered q243 build (builtIvfAdc).
@@ -91,7 +91,7 @@ class AnnStreamSpec extends SparkSpec {
   }
 
   test("refresh: a later batch retrieves an earlier batch's vector") {
-    val root = java.nio.file.Files.createTempDirectory("graft_aref").toString
+    val root = graft.Scratch.fresh("aref")
     fixtureIndex(root)
     val res = runWaves(root, compactAboveFiles = None)
     val q200 = res.filter(_.head == 200L)
@@ -107,8 +107,8 @@ class AnnStreamSpec extends SparkSpec {
   }
 
   test("mid-stream compaction leaves results bit-identical") {
-    val plainRoot = java.nio.file.Files.createTempDirectory("graft_ac0").toString
-    val compactRoot = java.nio.file.Files.createTempDirectory("graft_ac1").toString
+    val plainRoot = graft.Scratch.fresh("ac0")
+    val compactRoot = graft.Scratch.fresh("ac1")
     fixtureIndex(plainRoot)
     fixtureIndex(compactRoot)
     val plain = runWaves(plainRoot, compactAboveFiles = None)

@@ -23,7 +23,7 @@ class BudgetStreamSpec extends SparkSpec {
 
   test("multi-wave stream admissions equal the batch twin; state crosses waves") {
     implicit val s: org.apache.spark.sql.SparkSession = spark
-    val root = java.nio.file.Files.createTempDirectory("graft_budget").toString
+    val root = graft.Scratch.fresh("budget")
     val docs = timedDocs
     val budgets = budgets40
 
@@ -84,7 +84,7 @@ class BudgetStreamSpec extends SparkSpec {
   test("unknown source falls back to the default budget") {
     implicit val s: org.apache.spark.sql.SparkSession = spark
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_budget_d").toString
+    val root = graft.Scratch.fresh("budget_d")
     Seq((1L, "a b c", "en", "mystery", 5L), (2L, "d e f g", "en", "mystery", 7L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .withColumn("ts", timestamp_seconds(lit(1700000000L) + col("doc_id")))

@@ -33,7 +33,7 @@ class DedupCompactionSpec extends SparkSpec {
     2L -> "pack my box with five dozen liquor jugs")
 
   test("probe verdicts are bit-identical before and after compaction; files shrink") {
-    val root = java.nio.file.Files.createTempDirectory("graft_dcomp").toString
+    val root = graft.Scratch.fresh("dcomp")
     val idx = s"$root/index"
     DedupOps.buildDedupIndex(docsDf(baseRows: _*), idx)
 
@@ -87,7 +87,7 @@ class DedupCompactionSpec extends SparkSpec {
   }
 
   test("crash between appends + replay: same verdicts, append completed") {
-    val root = java.nio.file.Files.createTempDirectory("graft_dretry").toString
+    val root = graft.Scratch.fresh("dretry")
     val idx = s"$root/index"
     DedupOps.buildDedupIndex(docsDf(baseRows: _*), idx)
 
@@ -125,7 +125,7 @@ class DedupCompactionSpec extends SparkSpec {
   }
 
   test("refresh loop auto-compacts past the file threshold, verdicts unchanged") {
-    val root = java.nio.file.Files.createTempDirectory("graft_dauto").toString
+    val root = graft.Scratch.fresh("dauto")
     def run(tag: String, compactAbove: Option[Long]): (Set[Seq[Any]], Long) = {
       val idx = s"$root/$tag/index"
       DedupOps.buildDedupIndex(docsDf(baseRows: _*), idx)

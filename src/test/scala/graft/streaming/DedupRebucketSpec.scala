@@ -37,7 +37,7 @@ class DedupRebucketSpec extends SparkSpec {
     2L -> "pack my box with five dozen liquor jugs")
 
   test("refresh auto-rebuckets past the growth threshold; verdicts and probes invariant") {
-    val root = java.nio.file.Files.createTempDirectory("graft_drbk").toString
+    val root = graft.Scratch.fresh("drbk")
     def run(tag: String, target: Option[Long]): (Set[Seq[Any]], String) = {
       val idx = s"$root/$tag/index"
       DedupOps.buildDedupIndex(docsDf(baseRows: _*), idx)
@@ -108,7 +108,7 @@ class DedupRebucketSpec extends SparkSpec {
     val base = ((0 until 16).map(i => (i.toLong, axis(i))) ++
       (16 until 20).map(i => (i.toLong, Seq(1.0, 0.01 * (i - 15), 0.0, 0.0))))
       .toDF("vec_id", "embedding")
-    val root = java.nio.file.Files.createTempDirectory("graft_srbk").toString
+    val root = graft.Scratch.fresh("srbk")
     def wave(tag: String, rows: (Long, Seq[Double])*) =
       rows.toSeq.toDF("vec_id", "embedding")
         .withColumn("ts", timestamp_seconds(lit(1700000000L) + col("vec_id")))

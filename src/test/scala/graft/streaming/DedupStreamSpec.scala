@@ -17,7 +17,7 @@ class DedupStreamSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   test("multi-batch stream probe verdicts equal batch q112 verdicts") {
-    val root = java.nio.file.Files.createTempDirectory("graft_dstream").toString
+    val root = graft.Scratch.fresh("dstream")
     val docs = Tables(spark, sf, "documents").select(col("doc_id"), col("text"))
     val base = docs.filter(col("doc_id") % 5 =!= 0)
     val batch = docs.filter(col("doc_id") % 5 === 0)
@@ -56,7 +56,7 @@ class DedupStreamSpec extends SparkSpec {
 
   test("refresh loop: a batch's novel docs are findable by later batches") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_dref").toString
+    val root = graft.Scratch.fresh("dref")
     def docsDf(rows: (Long, String)*) = rows.toSeq.toDF("doc_id", "text")
       .withColumn("ts", timestamp_seconds(lit(1700000000L) + col("doc_id")))
 

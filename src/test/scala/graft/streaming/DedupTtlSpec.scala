@@ -37,7 +37,7 @@ class DedupTtlSpec extends SparkSpec {
   private val near100 = (1 to 29).map(i => s"tok$i").mkString(" ") + " zzz"
 
   test("tombstones suppress exact and near matches immediately, apply physically at compaction, and never resurrect") {
-    val idx = java.nio.file.Files.createTempDirectory("graft_ttl").toString + "/index"
+    val idx = graft.Scratch.fresh("ttl") + "/index"
     DedupOps.buildDedupIndex(docsDf(
       1L -> t1,
       2L -> "pack my box with five dozen liquor jugs",
@@ -83,7 +83,7 @@ class DedupTtlSpec extends SparkSpec {
   }
 
   test("a tombstone-free index pays nothing and behaves as before") {
-    val idx = java.nio.file.Files.createTempDirectory("graft_ttl0").toString + "/index"
+    val idx = graft.Scratch.fresh("ttl0") + "/index"
     DedupOps.buildDedupIndex(docsDf(1L -> t1), idx)
     assert(DedupOps.loadTombstones(spark, idx).isEmpty)
     assert(verdicts(docsDf(500L -> t1), idx)(500L) === (("exact", 1L)))

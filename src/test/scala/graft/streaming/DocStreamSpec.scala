@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 class DocStreamSpec extends SparkSpec {
 
   private lazy val docsDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_docs").toString
+    val dir = graft.Scratch.fresh("docs")
     DocStream.withEventTime(Tables(spark, "/root/testdata/sf0.001", "documents"))
       .write.mode("overwrite").parquet(dir)
     dir
@@ -92,7 +92,7 @@ class DocStreamSpec extends SparkSpec {
       (100L until 130L).map(i => doc(i, clean, "srcB")) ++
       (3600L until 3630L).map(i => doc(i, clean, "srcA")))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft_alerts").toString
+    val dir = graft.Scratch.fresh("alerts")
     DocStream.withEventTime(rows).write.mode("overwrite").parquet(dir)
     val streamed = EventStream.runAvailableNow(spark,
       DocStream.monitor(DocStream.read(spark, dir)), "doc_alerts")

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 class DriftStreamSpec extends SparkSpec {
 
   private lazy val docsDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_drift").toString
+    val dir = graft.Scratch.fresh("drift")
     DocStream.withEventTime(Tables(spark, "/root/testdata/sf0.001", "documents"))
       .write.mode("overwrite").parquet(dir)
     dir

@@ -8,7 +8,7 @@ class EventStreamSpec extends SparkSpec {
 
   private lazy val eventsDir: String = {
     // Stream source needs a directory; materialize the sf0.001 events there.
-    val dir = java.nio.file.Files.createTempDirectory("graft_events").toString
+    val dir = graft.Scratch.fresh("events")
     Tables(spark, "/root/testdata/sf0.001", "events")
       .write.mode("overwrite").parquet(dir)
     dir
@@ -54,7 +54,7 @@ class EventStreamSpec extends SparkSpec {
   }
 
   test("foreachBatch gold rebuild produces the batch aggregate") {
-    val gold = java.nio.file.Files.createTempDirectory("graft_gold").toString
+    val gold = graft.Scratch.fresh("gold")
     EventStream.goldRebuild(spark, eventsDir, gold)
     val rebuilt = spark.read.parquet(s"$gold/events_by_type")
     val batch = Tables(spark, "/root/testdata/sf0.001", "events")
@@ -67,13 +67,13 @@ class EventStreamSpec extends SparkSpec {
     // Split events into several files so maxFilesPerTrigger=1 forces a
     // multi-batch run: each batch sees only one new file, and gold must
     // still hold ALL events' contributions after the last batch.
-    val bronze = java.nio.file.Files.createTempDirectory("graft_bronze").toString
+    val bronze = graft.Scratch.fresh("bronze")
     Tables(spark, "/root/testdata/sf0.001", "events")
       .repartition(4).write.mode("overwrite").parquet(bronze)
     val nFiles = new java.io.File(bronze).listFiles()
       .count(f => f.getName.endsWith(".parquet"))
     assert(nFiles >= 2)
-    val gold = java.nio.file.Files.createTempDirectory("graft_gold_mb").toString
+    val gold = graft.Scratch.fresh("gold_mb")
     EventStream.goldRebuild(spark, bronze, gold, maxFilesPerTrigger = Some(1))
     val rebuilt = spark.read.parquet(s"$gold/events_by_type")
     assert(rebuilt.agg(sum("n_events")).head().getLong(0) === 1000L)
@@ -95,9 +95,9 @@ class EventStreamSpec extends SparkSpec {
   }
 
   test("incremental merge gold equals the batch aggregate across batches and restarts") {
-    val bronze = java.nio.file.Files.createTempDirectory("graft_bronze_inc").toString
-    val gold = java.nio.file.Files.createTempDirectory("graft_gold_inc").toString
-    val cp = java.nio.file.Files.createTempDirectory("graft_cp_inc").toString
+    val bronze = graft.Scratch.fresh("bronze_inc")
+    val gold = graft.Scratch.fresh("gold_inc")
+    val cp = graft.Scratch.fresh("cp_inc")
     val events = Tables(spark, "/root/testdata/sf0.001", "events")
     val firstWave = events.filter(col("event_id") % 5 =!= 0)
     val secondWave = events.filter(col("event_id") % 5 === 0)
@@ -132,7 +132,7 @@ class EventStreamSpec extends SparkSpec {
   }
 
   test("incremental merge closes both crash windows (staged-uncommitted and replayed-committed)") {
-    val gold = java.nio.file.Files.createTempDirectory("graft_gold_crash").toString
+    val gold = graft.Scratch.fresh("gold_crash")
     val events = Tables(spark, "/root/testdata/sf0.001", "events")
     val wave1 = events.filter(col("event_id") % 2 === 0)
     val wave2 = events.filter(col("event_id") % 2 =!= 0)
@@ -164,9 +164,9 @@ class EventStreamSpec extends SparkSpec {
   }
 
   test("a reset checkpoint cannot collide with stale markers (epoch binding)") {
-    val bronze = java.nio.file.Files.createTempDirectory("graft_bronze_ep").toString
-    val gold = java.nio.file.Files.createTempDirectory("graft_gold_ep").toString
-    val cp1 = java.nio.file.Files.createTempDirectory("graft_cp_ep1").toString
+    val bronze = graft.Scratch.fresh("bronze_ep")
+    val gold = graft.Scratch.fresh("gold_ep")
+    val cp1 = graft.Scratch.fresh("cp_ep1")
     val events = Tables(spark, "/root/testdata/sf0.001", "events")
     val wave1 = events.filter(col("event_id") % 2 === 0)
     val wave2 = events.filter(col("event_id") % 2 =!= 0)
@@ -178,7 +178,7 @@ class EventStreamSpec extends SparkSpec {
     // kept. A fresh checkpoint replays ALL files with batch ids restarting
     // at 0; the stale batch_0 marker must not make the replay skip them.
     wave2.coalesce(1).write.mode("append").parquet(bronze)
-    val cp2 = java.nio.file.Files.createTempDirectory("graft_cp_ep2").toString
+    val cp2 = graft.Scratch.fresh("cp_ep2")
     EventStream.goldIncrementalMerge(spark, bronze, gold, cp2)
     assert(EventStream.readIncrementalGold(spark, gold)
       .agg(sum("n_events")).head().getLong(0) === 1000L,
@@ -186,9 +186,9 @@ class EventStreamSpec extends SparkSpec {
   }
 
   test("pre-epoch (unbound) markers are purged on first epoch binding") {
-    val bronze = java.nio.file.Files.createTempDirectory("graft_bronze_ub").toString
-    val gold = java.nio.file.Files.createTempDirectory("graft_gold_ub").toString
-    val cp = java.nio.file.Files.createTempDirectory("graft_cp_ub").toString
+    val bronze = graft.Scratch.fresh("bronze_ub")
+    val gold = graft.Scratch.fresh("gold_ub")
+    val cp = graft.Scratch.fresh("cp_ub")
     val events = Tables(spark, "/root/testdata/sf0.001", "events")
     val wave1 = events.filter(col("event_id") % 2 === 0)
     val wave2 = events.filter(col("event_id") % 2 =!= 0)
@@ -206,9 +206,9 @@ class EventStreamSpec extends SparkSpec {
   }
 
   test("epoch publish is atomic: torn _epoch and stale publish temps self-heal") {
-    val bronze = java.nio.file.Files.createTempDirectory("graft_bronze_at").toString
-    val gold = java.nio.file.Files.createTempDirectory("graft_gold_at").toString
-    val cp1 = java.nio.file.Files.createTempDirectory("graft_cp_at1").toString
+    val bronze = graft.Scratch.fresh("bronze_at")
+    val gold = graft.Scratch.fresh("gold_at")
+    val cp1 = graft.Scratch.fresh("cp_at1")
     val events = Tables(spark, "/root/testdata/sf0.001", "events")
     events.coalesce(1).write.mode("overwrite").parquet(bronze)
     EventStream.goldIncrementalMerge(spark, bronze, gold, cp1)
@@ -227,7 +227,7 @@ class EventStreamSpec extends SparkSpec {
       java.nio.file.Paths.get(commitDir.toString, "_epoch"), epoch.take(17))
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(commitDir.toString, "._epoch.tmp"), "garbage")
-    val cp2 = java.nio.file.Files.createTempDirectory("graft_cp_at2").toString
+    val cp2 = graft.Scratch.fresh("cp_at2")
     EventStream.goldIncrementalMerge(spark, bronze, gold, cp2)
     assert(EventStream.readIncrementalGold(spark, gold)
       .agg(sum("n_events")).head().getLong(0) === events.count(),
@@ -240,7 +240,7 @@ class EventStreamSpec extends SparkSpec {
   }
 
   test("version GC keeps the two largest committed ids even with id gaps") {
-    val gold = java.nio.file.Files.createTempDirectory("graft_gold_gc").toString
+    val gold = graft.Scratch.fresh("gold_gc")
     val events = Tables(spark, "/root/testdata/sf0.001", "events")
     val third = events.filter(col("event_id") % 3 === 0)
     // Non-contiguous ids, as a stream with empty/skipped batches produces.
@@ -258,9 +258,9 @@ class EventStreamSpec extends SparkSpec {
 
   test("streaming CMS merge is bit-identical to the batch sketch") {
     implicit val s = spark
-    val docsDir = java.nio.file.Files.createTempDirectory("graft_cms_stream").toString
-    val sketchDir = java.nio.file.Files.createTempDirectory("graft_cms_state").toString
-    val cp = java.nio.file.Files.createTempDirectory("graft_cms_cp").toString
+    val docsDir = graft.Scratch.fresh("cms_stream")
+    val sketchDir = graft.Scratch.fresh("cms_state")
+    val cp = graft.Scratch.fresh("cms_cp")
     val docs = Tables(spark, "/root/testdata/sf0.001", "documents")
       .select("doc_id", "text")
     docs.repartition(4).write.mode("overwrite").parquet(docsDir)
@@ -300,7 +300,7 @@ class EventStreamSpec extends SparkSpec {
   test("streaming content dedup keeps exactly one doc per normalized text") {
     implicit val s = spark
     import org.apache.spark.sql.types._
-    val docsDir = java.nio.file.Files.createTempDirectory("graft_docs_stream").toString
+    val docsDir = graft.Scratch.fresh("docs_stream")
     Tables(spark, "/root/testdata/sf0.001", "documents")
       .withColumn("ts", lit("2024-01-01 00:00:00").cast("timestamp"))
       .select("doc_id", "text", "ts")

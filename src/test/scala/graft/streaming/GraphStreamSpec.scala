@@ -23,7 +23,7 @@ class GraphStreamSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   test("multi-batch graph stream results equal batch q250 results") {
-    val root = java.nio.file.Files.createTempDirectory("graft_gstream").toString
+    val root = graft.Scratch.fresh("gstream")
     val e = Tables(spark, sf, "embeddings").select(col("vec_id"), col("embedding"))
     VectorOps.buildSemIndex(spark, e.filter(col("vec_id") % 5 =!= 0), s"$root/index")
     VectorOps.addGraphToSemIndex(spark, s"$root/index")
@@ -81,7 +81,7 @@ class GraphStreamSpec extends SparkSpec {
   }
 
   test("refresh: wave-2 query retrieves the vector wave 1 ingested") {
-    val root = java.nio.file.Files.createTempDirectory("graft_gwave").toString
+    val root = graft.Scratch.fresh("gwave")
     fixtureIndex(root)
     val results = runWaves(root, compactAboveFiles = None)
     val w2 = results.collect {
@@ -92,8 +92,8 @@ class GraphStreamSpec extends SparkSpec {
   }
 
   test("mid-stream compaction leaves results invariant and degree bounded") {
-    val a = java.nio.file.Files.createTempDirectory("graft_gc_a").toString
-    val b = java.nio.file.Files.createTempDirectory("graft_gc_b").toString
+    val a = graft.Scratch.fresh("gc_a")
+    val b = graft.Scratch.fresh("gc_b")
     fixtureIndex(a); fixtureIndex(b)
     val plain = runWaves(a, compactAboveFiles = None)
     val compacted = runWaves(b, compactAboveFiles = Some(1L))

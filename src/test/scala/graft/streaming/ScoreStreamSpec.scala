@@ -12,7 +12,7 @@ class ScoreStreamSpec extends SparkSpec {
 
   test("windowed score counters equal the batch twin; flags equal q220's") {
     val w = graft.queries.LmOps.trainLogitCached(spark, sf).last._2
-    val dir = java.nio.file.Files.createTempDirectory("graft_score").toString
+    val dir = graft.Scratch.fresh("score")
     DocStream.withEventTime(Tables(spark, sf, "documents"))
       .repartition(4) // 4 files -> multiple micro-batches
       .write.mode("overwrite").parquet(dir)
@@ -37,7 +37,7 @@ class ScoreStreamSpec extends SparkSpec {
   }
 
   test("mean_p1 is the dyadic mean: in (0,1), responsive to weights") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_score0").toString
+    val dir = graft.Scratch.fresh("score0")
     DocStream.withEventTime(Tables(spark, sf, "documents"))
       .write.mode("overwrite").parquet(dir)
     val zero = EventStream.runAvailableNow(spark,

@@ -33,7 +33,7 @@ class SemCompactionSpec extends SparkSpec {
       (16 until 20).map(i => (i.toLong, Seq(1.0, 0.01 * (i - 15), 0.0, 0.0)))
 
   test("probe verdicts bit-identical before and after compaction; files shrink") {
-    val root = java.nio.file.Files.createTempDirectory("graft_scomp").toString
+    val root = graft.Scratch.fresh("scomp")
     val idx = s"$root/index"
     VectorOps.buildSemIndex(spark, vecsDf(baseRows: _*), idx)
 
@@ -70,7 +70,7 @@ class SemCompactionSpec extends SparkSpec {
   }
 
   test("refresh loop auto-compacts past the file threshold, verdicts unchanged") {
-    val root = java.nio.file.Files.createTempDirectory("graft_sauto").toString
+    val root = graft.Scratch.fresh("sauto")
     def run(tag: String, compactAbove: Option[Long]): (Set[Seq[Any]], Long) = {
       val idx = s"$root/$tag/index"
       VectorOps.buildSemIndex(spark, vecsDf(baseRows: _*), idx)

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.{SparkSpec, Tables}
+import graft.operators.IndexStore
 import graft.queries.VectorOps
 import org.apache.spark.sql.functions._
 
@@ -14,7 +15,7 @@ class SemStreamSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   test("multi-batch stream probe verdicts equal batch q211 verdicts") {
-    val root = java.nio.file.Files.createTempDirectory("graft_sstream").toString
+    val root = graft.Scratch.fresh("sstream")
     val e = Tables(spark, sf, "embeddings").select(col("vec_id"), col("embedding"))
     VectorOps.buildSemIndex(spark, e.filter(col("vec_id") % 5 =!= 0), s"$root/index")
 
@@ -48,7 +49,7 @@ class SemStreamSpec extends SparkSpec {
 
   test("refresh loop: a batch's novel vectors are findable by later batches") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_sref").toString
+    val root = graft.Scratch.fresh("sref")
     val dim = 4
     def axis(i: Int, v: Double = 1.0): Seq[Double] =
       Seq.tabulate(dim)(j => if (j == i % dim) v else 0.05 * ((i / dim) + 1))
@@ -59,7 +60,7 @@ class SemStreamSpec extends SparkSpec {
       (16 until 20).map(i => (i.toLong, Seq(1.0, 0.01 * (i - 15), 0.0, 0.0))))
       .toDF("vec_id", "embedding")
     VectorOps.buildSemIndex(spark, base, s"$root/index")
-    val tau = spark.read.parquet(s"$root/index/tau").head().getDouble(0)
+    val tau = IndexStore.kind(spark, s"$root/index", "sem").tau.get
     assert(tau > 0.9 && tau < 1.0, s"fixture must calibrate a usable tau: $tau")
 
     def wave(rows: (Long, Seq[Double])*) = rows.toSeq.toDF("vec_id", "embedding")

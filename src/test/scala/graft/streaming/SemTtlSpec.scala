@@ -47,7 +47,7 @@ class SemTtlSpec extends SparkSpec {
   private val novelVec = Seq(-0.5, -0.5, 0.5, 0.5)
 
   test("tombstones suppress matches immediately, apply physically at compaction, and never resurrect") {
-    val idx = java.nio.file.Files.createTempDirectory("graft_sttl").toString + "/index"
+    val idx = graft.Scratch.fresh("sttl") + "/index"
     VectorOps.buildSemIndex(spark, vecsDf(baseRows: _*), idx)
     VectorOps.appendToSemIndex(spark, vecsDf(100L -> novelVec), idx)
 
@@ -90,7 +90,7 @@ class SemTtlSpec extends SparkSpec {
     // vector is already gone. Simulate that residue and pin that it is
     // harmless: verdicts unchanged, a re-run compaction doesn't throw,
     // and the stale entry keeps waiting as retire-before-arrival.
-    val idx = java.nio.file.Files.createTempDirectory("graft_sttlc").toString + "/index"
+    val idx = graft.Scratch.fresh("sttlc") + "/index"
     VectorOps.buildSemIndex(spark, vecsDf(baseRows: _*), idx)
     VectorOps.appendToSemIndex(spark, vecsDf(100L -> novelVec), idx)
     VectorOps.tombstoneVecs(ids(100L), idx)
@@ -111,7 +111,7 @@ class SemTtlSpec extends SparkSpec {
   }
 
   test("a tombstone-free index pays nothing and behaves as before") {
-    val idx = java.nio.file.Files.createTempDirectory("graft_sttl0").toString + "/index"
+    val idx = graft.Scratch.fresh("sttl0") + "/index"
     VectorOps.buildSemIndex(spark, vecsDf(baseRows: _*), idx)
     VectorOps.appendToSemIndex(spark, vecsDf(100L -> novelVec), idx)
     assert(VectorOps.loadSemTombstones(spark, idx).isEmpty)
