@@ -3,16 +3,16 @@ package graft
 /** Driver-side concurrency for INDEPENDENT Spark jobs (optimization
   * guide §2.6): Spark's scheduler happily runs several jobs at once
   * inside one application — actions are only sequential because driver
-  * code calls them sequentially. The sweep/strategy cards build N
-  * independent arms whose eager actions (localCheckpoints, 1-row cost
-  * collects) otherwise serialize N× the per-job scheduling latency and
-  * leave the tail of every small stage idle; submitting the arms from a
-  * bounded pool lets the next arm's tasks back-fill executors freed by
-  * the current arm's stragglers. FIFO scheduling (the default) gives
-  * exactly the back-fill behaviour wanted. Besides the cards, the
-  * warehouse build (`graft.domain.Pipeline.run`) runs its shared dims,
-  * then its gold sinks — each write with its validation re-read — as
-  * arms, one per sink.
+  * code calls them sequentially. Items that are distinct artifacts —
+  * index builds into distinct dirs, probes of distinct dirs — would
+  * otherwise serialize N× the per-job scheduling latency; submitting
+  * them from a bounded pool lets the next item's tasks back-fill
+  * executors freed by the current one's stragglers (FIFO scheduling,
+  * the default). Arms that differ only in knobs over ONE index are not
+  * items: the ANN sweep/strategy cards carry the arm as a column and
+  * walk all arms in one job chain. The warehouse build
+  * (`graft.domain.Pipeline.run`) runs its shared dims, then its gold
+  * sinks — each write with its validation re-read — as items.
   *
   * Correctness contract: `f` must be deterministic and the items
   * independent (no item reads another's output). Results return in
@@ -29,10 +29,10 @@ package graft
   * deterministic-rebuild contract of the builders makes that safe).
   * Futures are drained in input order, so a HUNG earlier arm delays
   * surfacing a later arm's failure — acceptable for the bounded
-  * sweep/probe arms this fans out. Each call owns a private pool (no
-  * shared executor: nested Par.map — a card arm that itself builds an
-  * index whose scheme derivation Par.maps its sweep — must never
-  * deadlock on a shared bounded pool). */
+  * build/probe items this fans out. Each call owns a private pool (no
+  * shared executor: nested Par.map — an item that itself builds an
+  * index whose kinds build concurrently — must never deadlock on a
+  * shared bounded pool). */
 object Par {
   def map[A, B](xs: Seq[A], parallelism: Int = 5)(f: A => B): Seq[B] = {
     if (xs.size <= 1) return xs.map(f)

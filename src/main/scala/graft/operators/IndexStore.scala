@@ -76,7 +76,8 @@ object IndexStore {
     *  - pq: `pqDims` (each subspace's dimensions), `pqBooks` (one
     *    sub-codebook per subspace) and `pqRotation`, present only for a
     *    learned-rotation build;
-    *  - graph: `sweep`, the measured scheme curve.
+    *  - graph: `sweep`, the measured scheme curve; its one `chosen` row
+    *    is the scheme probes search at.
     * Doubles round-trip the JSON exactly. */
   final case class Kind(tables: Map[String, Table],
       params: Map[String, String] = Map.empty,
@@ -173,13 +174,16 @@ object IndexStore {
     * committed kinds (none in a fresh dir). Runs under the writer lock,
     * so concurrent committers — the pq and graph arms of one build —
     * never lose each other's kinds. A change that changes nothing
-    * writes no version. */
+    * writes no version; a kind it adds or changes is [[validate]]d
+    * first, so a refused commit leaves the latest version as it was. */
   private[graft] def commit(s: SparkSession, dir: String)(
       f: Map[String, Kind] => Map[String, Kind]): Unit =
     withLock(s, dir) {
       val cur = latest(dir)
       val kinds = cur.fold(Map.empty[String, Kind])(_.kinds)
       val next = f(kinds)
+      next.foreach { case (n, k) =>
+        if (!kinds.get(n).contains(k)) validate(dir, n, k) }
       if (next != kinds) {
         val v = cur.fold(1L)(_.version + 1)
         Fs.writeNew(s"${manifestDir(dir)}/v$v",
@@ -189,6 +193,22 @@ object IndexStore {
         }.foreach(n => Fs.delete(s"${manifestDir(dir)}/$n"))
       }
     }
+
+  /** Refuse a kind the manifest cannot carry or a probe cannot use: a
+    * non-finite double (JSON has none; json4s would write `null` and read
+    * it back silently), or a graph sweep without exactly one chosen row. */
+  private def validate(dir: String, name: String, k: Kind): Unit = {
+    def refuse(why: String) =
+      throw new IllegalArgumentException(s"index $dir: kind '$name' $why")
+    Seq("centroids" -> k.centroids.flatten, "tau" -> k.tau.toSeq,
+        "pqBooks" -> k.pqBooks.flatten.flatten,
+        "pqRotation" -> k.pqRotation.toSeq.flatten.flatten,
+        "sweep" -> k.sweep.map(_.recallAt1))
+      .collectFirst { case (f, xs) if xs.exists(x => x.isNaN || x.isInfinite) => f }
+      .foreach(f => refuse(s"has a non-finite value in '$f'"))
+    if (name == "graph" && k.sweep.count(_.chosen) != 1)
+      refuse(s"needs exactly one chosen sweep row, has ${k.sweep.count(_.chosen)}")
+  }
 
   /** (Re)build kind `name` of `dir`: commit a version without it and
     * without `drops` (kinds derived from it), run `write` — which writes

@@ -6,9 +6,10 @@ package graft.queries
   * an analytic S-curve; a navigable graph has no closed-form recall
   * curve, so the honest equivalent is an EMPIRICAL one: the q252 sweep
   * card measures held-out recall@1 and executed candidate scorings per
-  * (entries, width, hops) arm on the committed corpus, and
-  * [[schemeFor]] picks the cheapest arm meeting the recall target from
-  * exactly those rows. GraphConfigSpec pins [[MeasuredCurve]] ≡ the
+  * (entries, width, hops) arm on the committed corpus (all arms in one
+  * probe, the arm a column of the beam frontier), and [[schemeFor]]
+  * picks the cheapest arm meeting the recall target from exactly those
+  * rows. GraphConfigSpec pins [[MeasuredCurve]] ≡ the
   * q252 card row-by-row, so the shipped default can never drift from
   * the published measurement.
   *
@@ -60,8 +61,9 @@ object GraphConfig {
     * curve is therefore only for ad-hoc (index-less) searches — a built
     * graph index derives and COMMITS its own scheme from a sweep on its
     * own corpus at build time ([[graft.queries.VectorOps]]'s
-    * `addGraphToSemIndex`), and probes read that back, the same way the
-    * LSH index commits its (bands, rows). */
+    * `addGraphToSemIndex`, which commits the measured curve with the
+    * chosen arm flagged), and probes read that row back, the same way
+    * the LSH index commits its (bands, rows). */
   val MeasuredCurve: Seq[(Scheme, Double)] = Seq(
     Scheme(1, 1, 3) -> 0.25,
     Scheme(1, 3, 3) -> 0.375,

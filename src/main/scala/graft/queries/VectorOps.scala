@@ -2664,6 +2664,19 @@ object VectorOps extends QueryModule {
         col("adc_cos")) ++ baked: _*)
   }
 
+  /** [[ivfAdcScoredCands]] at every nprobe of `nprobes` from ONE scoring
+    * at the largest: (nprobe, query_id, neighbor_id, adc_cos). Arm np is
+    * its cell_rank ≤ np prefix — the same top-np probed cells, so exactly
+    * an nprobe-np scoring's rows, every adc_cos bit-identical. */
+  private[queries] def ivfAdcNprobeArms(s: SparkSession, batch: DataFrame,
+      dir: String, nprobes: Seq[Int]): DataFrame =
+    ivfAdcScoredRanked(s, batch, dir, nprobes.max)
+      .localCheckpoint(true) // consumers: every arm's prefix
+      .select(explode(typedlit(nprobes.toList)).as("nprobe"),
+        col("query_id"), col("cell_rank"), col("neighbor_id"), col("adc_cos"))
+      .filter(col("cell_rank") <= col("nprobe"))
+      .drop("cell_rank")
+
   /** ADC top-3 of a query batch against a persisted IVFADC index:
     * (query_id, neighbor_id, adc_cos, rnk), unordered. Tombstoned base
     * vectors are invisible (the probeSemIndex discipline). */
@@ -2922,34 +2935,38 @@ object VectorOps extends QueryModule {
     * the production probe ranks, so the priced work is the executed
     * work, not a model of it.
     *
-    * Scale shape: three probe passes over the bucketed codes table (each
-    * |Q|·occupancy-proportional, zero index-side Exchange) + the one
-    * exact-top-3 reference the recall needs anyway; per-arm results are
-    * 1-row scalars folded via [[graft.Scalars.withScalar]]. */
+    * Scale shape: ONE probe pass over the bucketed codes table at the
+    * largest nprobe (|Q|·occupancy-proportional, zero index-side
+    * Exchange) whose cell_rank prefixes are the three arms
+    * ([[ivfAdcNprobeArms]]), + the one exact-top-3 reference the recall
+    * needs anyway; per-arm counts come from grouped aggregates over that
+    * one frame. */
   private def q247(s: SparkSession, d: String): DataFrame = {
     val dir = builtIvfAdc(s, d)
     val exact3 = ivfAdcExactTop3(s, d)
-      .localCheckpoint(true) // consumers: one overlap join per nprobe arm
+      .localCheckpoint(true) // consumers: the overlap join; keeps the exact
+      // baseline's audited theta-join out of the card's plan
     val nq = ivfAdcQueries(s, d).agg(count(lit(1)).as("n_queries"))
-    // Independent nprobe arms, each materializing its own ADC scoring —
-    // concurrent submission (guide §2.6), arm order preserved.
-    val arms = graft.Par.map(1 to 3) { np =>
-      val scored = ivfAdcScoredCands(s, ivfAdcQueries(s, d), dir, np)
-        .localCheckpoint(true) // consumers: pair count + top-3 cut
-      val pairs = scored.agg(count(lit(1)).as("scored_pairs"))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("adc_cos").desc, col("neighbor_id"))
-      val overlap = scored.withColumn("rnk", rank().over(w))
-        .filter(col("rnk") <= 3)
-        .select(col("query_id"), col("neighbor_id"))
-        .join(exact3, Seq("query_id", "neighbor_id"))
-        .agg(count(lit(1)).as("overlap"))
-      Seq(overlap, nq).foldLeft(pairs)(graft.Scalars.withScalar)
-        .select(lit(np).as("nprobe"), col("n_queries"), col("scored_pairs"),
-          (col("overlap").cast("double") /
-            (lit(3.0) * col("n_queries").cast("double"))).as("recall_at3"))
-    }
-    arms.reduce(_ unionAll _).orderBy("nprobe")
+    val nprobes = 1 to 3
+    val armed = ivfAdcNprobeArms(s, ivfAdcQueries(s, d), dir, nprobes)
+    val pairs = armed.groupBy(col("nprobe"))
+      .agg(count(lit(1)).as("scored_pairs"))
+    val w = Window.partitionBy(col("nprobe"), col("query_id"))
+      .orderBy(col("adc_cos").desc, col("neighbor_id"))
+    val overlap = armed.withColumn("rnk", rank().over(w))
+      .filter(col("rnk") <= 3)
+      .select(col("nprobe"), col("query_id"), col("neighbor_id"))
+      .join(exact3, Seq("query_id", "neighbor_id"))
+      .groupBy(col("nprobe")).agg(count(lit(1)).as("overlap"))
+    import s.implicits._
+    graft.Scalars.withScalar(nprobes.toList.toDF("nprobe")
+        .join(pairs, Seq("nprobe"), "left")
+        .join(overlap, Seq("nprobe"), "left"), nq)
+      .select(col("nprobe"), col("n_queries"),
+        coalesce(col("scored_pairs"), lit(0L)).as("scored_pairs"),
+        (coalesce(col("overlap"), lit(0L)).cast("double") /
+          (lit(3.0) * col("n_queries").cast("double"))).as("recall_at3"))
+      .orderBy("nprobe")
   }
 
   /** Per-nprobe restatement of the probe chain: the shared CTEs (qcc
@@ -3115,60 +3132,69 @@ object VectorOps extends QueryModule {
     * (gcos, node). The dedup is exact even on the double gcos column:
     * duplicates are the SAME (query, node) pair scored by the same
     * codegen'd expression, so the rows are bit-identical within an
-    * engine. */
+    * engine. A one-arm call of [[beamSearch]]. */
   private[queries] def graphBeamFrontier(s: SparkSession, asg: DataFrame,
       edges: DataFrame, width: Int,
       needCost: Boolean = true): (DataFrame, DataFrame) = {
+    val (frontier, cost) = beamSearch(s, asg, edges,
+      Seq(GraphConfig.Scheme(1, width, GraphHops)), needCost)
+    (frontier.drop("arm"), cost.drop("arm"))
+  }
+
+  /** The single-entry ad-hoc beam over the vec_id < 8 split of the graph
+    * itself, for every arm of `arms` at once — the q245/q248 search
+    * shape: entry = the query's own cell's smallest-id member (the cell
+    * rule over a one-cell ranking), LIMIT-2 corpus fallback for
+    * singleton cells, then [[beamCore]]. A node equal to a query's own id
+    * is never entered or returned (the q243 held-out discipline). */
+  private def beamSearch(s: SparkSession, asg: DataFrame, edges: DataFrame,
+      arms: Seq[GraphConfig.Scheme],
+      needCost: Boolean = true): (DataFrame, DataFrame) = {
     val qv = asg.filter(col("vec_id") < 8)
       .select(col("vec_id").as("query_id"), col("ue").as("qu"),
-        col("cell").as("qcell"))
-    beamSearch(s, qv, asg, edges, width, needCost = needCost)
+        array(col("cell")).as("qcells"))
+    graphArms(s, GraphProbePrep(qv, asg, edges, lowestTwo(asg)), arms,
+      needCost)
   }
 
-  /** The single-entry beam over an ARBITRARY (query_id, qu, qcell)
-    * batch — the ad-hoc q245/q248 search shape (qv = the vec_id < 8
-    * split of the graph itself): entry = the query's own cell's
-    * smallest-id member, LIMIT-2 corpus fallback for singleton cells,
-    * then [[beamCore]]. A node equal to a query's own id is never
-    * entered or returned (the q243 held-out discipline). */
-  private def beamSearch(s: SparkSession, qv: DataFrame, asg: DataFrame,
-      edges: DataFrame, width: Int,
-      hops: Int = GraphHops,
-      needCost: Boolean = true): (DataFrame, DataFrame) = {
-    // collect-bound: two smallest corpus ids — 2 rows (entry fallback)
-    val low2 = asg.select(col("vec_id")).orderBy(col("vec_id")).limit(2)
-      .collect().map(_.getLong(0))
-    val cellMin = broadcast(qv)
-      .join(asg.select(col("cell").as("qcell"), col("vec_id").as("m")), "qcell")
-      .filter(col("m") =!= col("query_id"))
-      .groupBy(col("query_id")).agg(min(col("m")).as("cell_entry"))
-    val entry = qv.join(cellMin, Seq("query_id"), "left")
-      .select(col("query_id"), col("qu"), lit(0).as("beam"),
-        coalesce(col("cell_entry"),
-          when(col("query_id") === lit(low2(0)), lit(low2(1)))
-            .otherwise(lit(low2(0)))).as("node"))
-    beamCore(s, entry, asg, edges, width, hops, needCost)
-  }
+  /** The two smallest node ids: the LIMIT-2 entry fallback. */
+  private def lowestTwo(nodes: DataFrame): Seq[Long] =
+    // collect-bound: two smallest ids — 2 rows (entry fallback)
+    nodes.select(col("vec_id")).orderBy(col("vec_id")).limit(2)
+      .collect().map(_.getLong(0)).toSeq
 
-  /** The beam engine proper, over an ARBITRARY entry frame (query_id,
-    * qu, beam, node) — one INDEPENDENT beam per (query, beam) pair:
-    * retention partitions by both keys, so a multi-entry probe's walks
-    * never compete for each other's slots (an entry whose cell scores
-    * poorly at hop 1 must still get to walk — it may hold the only path
-    * to the true neighbor; that independence is what makes `entries`
-    * the graph twin of IVF's nprobe rather than a wider shared beam).
-    * Returns the final frontiers (≤ width rows per beam) plus the
-    * summed executed expansion count across all beams — the cost axis
-    * q248/q252 price. */
+  /** The beam engine proper, over an ARBITRARY entry frame (arm,
+    * query_id, qu, beam, node) — one INDEPENDENT beam per (arm, query,
+    * beam): retention partitions by all three keys, so a multi-entry
+    * probe's walks never compete for each other's slots (an entry whose
+    * cell scores poorly at hop 1 must still get to walk — it may hold the
+    * only path to the true neighbor; that independence is what makes
+    * `entries` the graph twin of IVF's nprobe rather than a wider shared
+    * beam), and neither do the arms. Arm i searches at `arms(i)`'s width
+    * and hops; at hop t only arms with hops ≥ t expand, and a finished
+    * arm's frontier (already distinct, within its width) passes the cut
+    * unchanged. Every hop is one job for all arms.
+    *
+    * Returns the final frontiers (≤ width rows per beam) plus the cost
+    * frame (arm, scored_cands): each arm's summed executed expansion
+    * count — the cost axis q248/q252 price, one grouped collect per hop. */
   private def beamCore(s: SparkSession, entry: DataFrame, asg: DataFrame,
-      edges: DataFrame, width: Int, hops: Int,
+      edges: DataFrame, arms: Seq[GraphConfig.Scheme],
       needCost: Boolean = true): (DataFrame, DataFrame) = {
     val nu = asg.select(col("vec_id").as("node"), col("ue").as("nu"))
+    val width = element_at(typedlit(arms.map(_.width).toList), col("arm") + 1)
     var frontier = entry.join(nu, "node")
-      .select(col("query_id"), col("qu"), col("beam"), col("node"),
-        expr("graft_dot(qu, nu)").as("gcos"))
-    var scoredTotal = 0L
-    for (_ <- 1 to hops) {
+      .select(col("arm"), col("query_id"), col("qu"), col("beam"),
+        col("node"), expr("graft_dot(qu, nu)").as("gcos"))
+    val scored = Array.fill(arms.size)(0L)
+    for (t <- 1 to arms.map(_.hops).max) {
+      // Only arms with hops left expand. No filter while all are: pushed
+      // into the un-checkpointed hop-1 frontier, it would stop its two
+      // reads from reusing the entry plan's exchanges.
+      val live = arms.indices.filter(arms(_).hops >= t)
+      val expanding =
+        if (live.size == arms.size) frontier
+        else frontier.filter(col("arm").isin(live: _*))
       // The expansion join is the expensive half of a hop (frontier ⨝
       // edges ⨝ ue-lookup + one graft_dot per candidate). When the
       // caller prices the walk, materialize it ONCE via an eager
@@ -3183,26 +3209,26 @@ object VectorOps extends QueryModule {
       // only consumer — skip both the checkpoint and the count: one
       // evaluation, one job per hop, nothing for a cost frame to pin
       // (the r18 ADVICE "gate the eager count behind needCost" note).
-      val nb0 = frontier.join(edges, col("node") === col("src"))
+      val nb0 = expanding.join(edges, col("node") === col("src"))
         .filter(col("dst") =!= col("query_id"))
         .join(nu.withColumnRenamed("node", "dst"), "dst")
-        .select(col("query_id"), col("qu"), col("beam"),
+        .select(col("arm"), col("query_id"), col("qu"), col("beam"),
           col("dst").as("node"),
           expr("graft_dot(qu, nu)").as("gcos"))
       val nb =
         if (needCost) nb0.localCheckpoint(true) // consumers: count + next
         else nb0
-      // collect-bound: groupless aggregate, exactly 1 row per hop, over
-      // already-materialized blocks. The expansion count stays EAGER so
-      // the returned cost frame holds no reference to intermediate
+      // collect-bound: grouped by arm — at most arms.size rows per hop,
+      // over already-materialized blocks. The expansion count stays EAGER
+      // so the returned cost frame holds no reference to intermediate
       // frontiers — which is what lets each hop's checkpoint blocks be
       // freed right here instead of waiting on GC + ContextCleaner (the
       // r17 q258 bench-variance fix: eager frees make the standing block
       // count independent of collector timing).
       if (needCost)
-        scoredTotal += nb.agg(count(lit(1)).as("scored_cands"))
-          .head().getLong(0)
-      val w = Window.partitionBy(col("query_id"), col("beam"))
+        nb.groupBy(col("arm")).agg(count(lit(1))).collect()
+          .foreach(r => scored(r.getInt(0)) += r.getLong(1))
+      val w = Window.partitionBy(col("arm"), col("query_id"), col("beam"))
         .orderBy(col("gcos").desc, col("node"))
       val next = frontier.unionByName(nb).distinct()
         .withColumn("rn", row_number().over(w))
@@ -3216,7 +3242,33 @@ object VectorOps extends QueryModule {
       freeLocalCheckpoint(frontier)
       frontier = next
     }
-    (frontier, s.range(1).select(lit(scoredTotal).as("scored_cands")))
+    import s.implicits._
+    (frontier, arms.indices.map(a => (a, scored(a))).toDF("arm", "scored_cands"))
+  }
+
+  /** Top-1 (arm, query_id, found_id, found_cos) of every (arm, query) in
+    * a frontier by (gcos DESC, node); duplicate beam rows are identical. */
+  private def armTop1(frontier: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("arm"), col("query_id"))
+      .orderBy(col("gcos").desc, col("node"))
+    frontier.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+      .select(col("arm"), col("query_id"), col("node").as("found_id"),
+        col("gcos").as("found_cos"))
+  }
+
+  /** One recall row per arm of `spine` (arm, …): the hits of its top-1
+    * rows in `found` (arm, query_id, found_id) against `exact`, read
+    * through `hits`; its `cost` (arm, scored_cands); the n_queries scalar
+    * `nq`; and recall_at1. */
+  private def armRows(spine: DataFrame, found: DataFrame, exact: DataFrame,
+      cost: DataFrame, nq: DataFrame, hits: Column = col("hits")): DataFrame = {
+    val armHits = found.join(exact, "query_id").groupBy(col("arm"))
+      .agg(sum((col("found_id") === col("exact_id")).cast("long")).as("hits"))
+    graft.Scalars.withScalar(spine.join(armHits, Seq("arm"), "left")
+        .join(cost, Seq("arm")), nq)
+      .withColumn("hits", hits)
+      .withColumn("recall_at1",
+        col("hits").cast("double") / col("n_queries").cast("double"))
   }
 
   /** Eagerly drop the block-manager blocks behind an eager
@@ -3291,20 +3343,25 @@ object VectorOps extends QueryModule {
       ctx.updateLoggers()
     }.getOrElse(())
 
-  /** Exact cosine top-1 of the graph-ANN query split against the full
-    * corpus under the q32 tie rule — the recall reference shared by the
-    * q245 trace and the q248 card. */
-  private[queries] def graphExactTop1(s: SparkSession, asg: DataFrame): DataFrame = {
-    val qv = asg.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("query_id"), col("ue").as("qu"))
-    val c = asg.select(col("vec_id").as("neighbor_id"), col("ue").as("cu"))
+  /** Exact cosine top-1 (query_id, exact_id) of a (query_id, qu) batch
+    * against a (vec_id, ue) node frame under the q32 tie rule, a query
+    * never its own neighbor — the recall reference of every graph-ANN
+    * card and of the build-time sweep. Brute force by design; the
+    * broadcast side is the query batch. */
+  private def exactTop1(queries: DataFrame, nodes: DataFrame): DataFrame = {
+    val c = nodes.select(col("vec_id").as("neighbor_id"), col("ue").as("cu"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(expr("graft_dot(qu, cu)").desc, col("neighbor_id"))
-    broadcast(qv)
-      .join(c, col("query_id") =!= col("neighbor_id"))
+    broadcast(queries).join(c, col("query_id") =!= col("neighbor_id"))
       .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
       .select(col("query_id"), col("neighbor_id").as("exact_id"))
   }
+
+  /** [[exactTop1]] of the graph-ANN query split against the full corpus —
+    * the reference shared by the q245 trace and the q248 card. */
+  private[queries] def graphExactTop1(s: SparkSession, asg: DataFrame): DataFrame =
+    exactTop1(asg.filter(col("vec_id") < 8)
+      .select(col("vec_id").as("query_id"), col("ue").as("qu")), asg)
 
   /** Per-query greedy trace: (query_id, found_id, found_cos, exact_id,
     * hit), unordered — the width-1 beam against the exact top-1. */
@@ -3519,12 +3576,8 @@ object VectorOps extends QueryModule {
         .localCheckpoint(true) // consumers: both pair sides
       val (name, edges) =
         IndexStore.write(graphEdges(asg, asg), dir, "gedges", Seq("src"))
-      val (chosen, sweep) = deriveGraphScheme(s, dir,
-        IndexStore.read(s, dir, name, edges), target)
-      IndexStore.Kind(Map(name -> edges), Map(
-        "entries" -> chosen.entries.toString,
-        "width" -> chosen.width.toString, "hops" -> chosen.hops.toString),
-        sweep = sweep)
+      IndexStore.Kind(Map(name -> edges), sweep = deriveGraphScheme(s, dir,
+        IndexStore.read(s, dir, name, edges), target))
     }
 
   /** Number of in-index calibration queries the build-time scheme sweep
@@ -3547,39 +3600,26 @@ object VectorOps extends QueryModule {
       .orderBy(col("hk"), col("vec_id")).limit(GraphCalibQueries)
       .select(col("vec_id").as("query_id"), col("ue").as("qu"))
 
-  /** Exact cosine top-1 of a (query_id, qu) calibration batch against
-    * the index's live nodes, self excluded — the LEAVE-ONE-OUT ground
-    * truth of the build-time sweep (the q245/q246 protocol: calibration
-    * queries are in-graph nodes, never entered or returned as their own
-    * neighbor). Brute force by design; the broadcast side is the ≤
-    * [[GraphCalibQueries]]-row batch. */
-  private def calibExactTop1(calib: DataFrame, nodes: DataFrame): DataFrame = {
-    val c = nodes.select(col("vec_id").as("neighbor_id"), col("ue").as("cu"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(expr("graft_dot(qu, cu)").desc, col("neighbor_id"))
-    broadcast(calib).join(c, col("query_id") =!= col("neighbor_id"))
-      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .select(col("query_id"), col("neighbor_id").as("exact_id"))
-  }
-
   /** Run the [[GraphConfig.SweepArms]] grid on the index's OWN corpus
     * and derive its (entries, width, hops) — the graph twin of the LSH index
     * persisting its (bands, rows) and the semantic index its τ (the
     * round-16 verdict's top gap: `GraphConfig.MeasuredCurve` is a
     * compile-time constant pinned at sf0.01, so an index built on any
     * other corpus silently inherited a curve measured on someone
-    * else's). Protocol: [[graphCalibBatch]] leave-one-out queries, one
-    * [[probeGraphPrepared]] per arm over ONE shared prep, recall@1 vs
-    * [[calibExactTop1]], scheme = [[GraphConfig.schemeFor]] over exactly
-    * those rows, probing `edges` — the build's own, not yet committed.
-    * Returns the chosen scheme, which the build commits as the graph
-    * kind's parameters, and the full measured curve, which it commits as
-    * the kind's `sweep`; probes read the scheme back ([[indexScheme]]). The
+    * else's). Protocol: [[graphCalibBatch]] leave-one-out queries, ONE
+    * multi-arm probe ([[graphArms]]) over every sweep arm, recall@1 per
+    * arm vs the LEAVE-ONE-OUT [[exactTop1]] over the index's live nodes
+    * (calibration queries are in-graph nodes, never entered or returned
+    * as their own neighbor) from one grouped aggregate, scheme =
+    * [[GraphConfig.schemeFor]] over exactly those rows, probing `edges` —
+    * the build's own, not yet committed. Returns the full measured curve
+    * with the chosen arm flagged, which the build commits as the kind's
+    * `sweep`; probes read the chosen row back ([[indexScheme]]). The
     * scheme is index METADATA: appends/takedowns do not re-derive it
     * (aged like the centroids and τ, recalibrated offline by rebuilding
     * the graph kind). */
   private def deriveGraphScheme(s: SparkSession, dir: String, edges: DataFrame,
-      target: Double): (GraphConfig.Scheme, Seq[IndexStore.SweepArm]) = {
+      target: Double): Seq[IndexStore.SweepArm] = {
     // Tombstones dropped BEFORE the calibration split and ground truth:
     // this is also the offline recalibration path (run after takedowns,
     // before compaction), where a tombstoned node picked as calibration
@@ -3592,40 +3632,34 @@ object VectorOps extends QueryModule {
       "vec_id", loadSemTombstones(s, dir))
     val calib = graphCalibBatch(nodes).localCheckpoint(true)
     val nCal = calib.count()
+    val arms = GraphConfig.SweepArms
     val curve: Seq[(GraphConfig.Scheme, Double)] =
-      if (nCal == 0) GraphConfig.SweepArms.map(_ -> 0.0)
+      if (nCal == 0) arms.map(_ -> 0.0)
       else {
-        val exact = calibExactTop1(calib, nodes)
-          .localCheckpoint(true) // consumers: one hit-join per arm
         val prep = graphProbePrepUnit(s,
           calib.select(col("query_id").as("vec_id"), col("qu").as("ue")), dir,
           edges)
-        // Arms are independent probes over ONE shared prep — run them
-        // concurrently (guide §2.6) so the per-hop job latencies of the
-        // five sweeps overlap instead of serializing; results return in
-        // arm order, so the persisted curve is byte-identical.
-        graft.Par.map(GraphConfig.SweepArms) { arm =>
-          val (res, _) = probeGraphPrepared(s, prep, arm.entries, arm.width,
-            arm.hops, needCost = false)
-          // collect-bound: groupless aggregate — 1 row (per-arm hit count)
-          val hits = res.join(exact, "query_id")
-            .agg(coalesce(sum((col("found_id") === col("exact_id"))
-              .cast("long")), lit(0L)).as("hits"))
-            .head().getLong(0)
-          arm -> hits.toDouble / nCal
-        }
+        val (frontier, _) = graphArms(s, prep, arms, needCost = false)
+        // collect-bound: grouped by arm — one row per sweep arm
+        val hits = armTop1(frontier).join(exactTop1(calib, nodes), "query_id")
+          .groupBy(col("arm"))
+          .agg(sum((col("found_id") === col("exact_id")).cast("long")))
+          .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+        arms.indices.map(a => arms(a) -> hits.getOrElse(a, 0L).toDouble / nCal)
       }
     // An EMPTY index measures nothing: it takes the library default.
     val chosen =
       if (nCal == 0) GraphConfig.Default
       else GraphConfig.schemeFor(target, curve)
-    chosen -> curve.map { case (a, r) =>
+    curve.map { case (a, r) =>
       IndexStore.SweepArm(a.entries, a.width, a.hops, r, nCal, a == chosen) }
   }
 
+  /** A graph kind's search scheme: its sweep's chosen row (the commit
+    * refuses a graph kind without exactly one). */
   private def graphScheme(k: IndexStore.Kind): GraphConfig.Scheme =
-    GraphConfig.Scheme(k.params("entries").toInt, k.params("width").toInt,
-      k.params("hops").toInt)
+    k.sweep.collectFirst { case a if a.chosen =>
+      GraphConfig.Scheme(a.entries, a.width, a.hops) }.get
 
   /** The committed search scheme of a graph index; None when the index
     * has no graph kind. */
@@ -3670,7 +3704,7 @@ object VectorOps extends QueryModule {
     * was measured, across sessions and regardless of session conf (the
     * LshConfig persisted-scheme discipline applied to the graph index).
     * Explicit positive knobs override individually (the sweep/spec
-    * path).
+    * path). A one-arm call of [[graphArms]].
     *
     * `entries` seeds one INDEPENDENT beam per top-`entries` query cell
     * (each entered at that cell's smallest-id live member) — the graph
@@ -3685,18 +3719,28 @@ object VectorOps extends QueryModule {
       dir: String, entries: Int, width: Int,
       hops: Int, needCost: Boolean = true): (DataFrame, DataFrame) = {
     lazy val own = indexScheme(s, dir)
-    val e = if (entries > 0) entries else own.entries
-    val w = if (width > 0) width else own.width
-    val h = if (hops > 0) hops else own.hops
-    probeGraphPrepared(s, graphProbePrep(s, batch, dir), e, w, h, needCost)
+    val arm = GraphConfig.Scheme(if (entries > 0) entries else own.entries,
+      if (width > 0) width else own.width, if (hops > 0) hops else own.hops)
+    val (found, cost) = probeGraphArms(s, batch, dir, Seq(arm), needCost)
+    (found.drop("arm"), cost.drop("arm"))
   }
 
-  /** Probe inputs shared across schemes: live node/edge frames, the
-    * centroid-ranked query batch (FULL cell ranking — arms slice their
-    * own top-`entries`), and the 2-row entry fallback. Hoisted out of
-    * [[probeGraphPrepared]] so q252's five sweep arms pay the tombstone
-    * load, centroid collect, fallback collect, and batch checkpoint
-    * ONCE instead of per arm. */
+  /** The persisted probe at every scheme of `arms` at once — the arm is
+    * a column, not a loop: [[armTop1]] rows plus the (arm, scored_cands)
+    * cost frame, each arm's equal to a one-arm probe at its knobs. */
+  private[queries] def probeGraphArms(s: SparkSession, batch: DataFrame,
+      dir: String, arms: Seq[GraphConfig.Scheme],
+      needCost: Boolean = true): (DataFrame, DataFrame) = {
+    val (frontier, cost) = graphArms(s, graphProbePrep(s, batch, dir), arms,
+      needCost)
+    (armTop1(frontier), cost)
+  }
+
+  /** Probe inputs shared by every arm and entry rule, loaded once per
+    * probe: node/edge frames (a persisted index's live ones), the query
+    * batch with its ranked `qcells` (a persisted probe's FULL centroid
+    * ranking — arms slice their own top-`entries`; the ad-hoc search's
+    * own cell), and the 2-row entry fallback. */
   private case class GraphProbePrep(qv: DataFrame, nodes: DataFrame,
       edges: DataFrame, low2: Seq[Long])
 
@@ -3725,70 +3769,90 @@ object VectorOps extends QueryModule {
       .select(col("query_id"), col("qu"),
         expr("transform(cells, c -> cast(c.cid as bigint))").as("qcells"))
       .localCheckpoint(true) // consumers: probed-cell spine + qu re-join
-    // collect-bound: two smallest live ids — 2 rows (entry fallback)
-    val low2 = nodes.select(col("vec_id")).orderBy(col("vec_id")).limit(2)
-      .collect().map(_.getLong(0))
-    GraphProbePrep(qv, nodes, edges, low2)
+    GraphProbePrep(qv, nodes, edges, lowestTwo(nodes))
   }
 
-  private def probeGraphPrepared(s: SparkSession, p: GraphProbePrep,
-      entries: Int, width: Int, hops: Int,
-      needCost: Boolean = true): (DataFrame, DataFrame) = {
-    val (frontier, scored) = graphFrontierPrepared(s, p, entries, width,
-      hops, needCost)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("gcos").desc, col("node"))
-    (frontier.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .select(col("query_id"), col("node").as("found_id"),
-        col("gcos").as("found_cos")),
-      scored)
-  }
-
-  /** The final beam pool (before any top-k cut) of a prepared probe —
-    * shared by the top-1 probe and the q254 top-3 search. */
-  private def graphFrontierPrepared(s: SparkSession, p: GraphProbePrep,
-      entries: Int, width: Int, hops: Int,
-      needCost: Boolean = true): (DataFrame, DataFrame) = {
-    val probed = p.qv.select(col("query_id"),
-        posexplode(expr(s"slice(qcells, 1, $entries)"))
+  /** Cell-rule entries (arm, query_id, beam, node), arm i at
+    * `arms(i).entries`: one beam per top-`entries` query cell, entered at
+    * that cell's smallest-id live non-self member. */
+  private def cellEntries(p: GraphProbePrep,
+      arms: Seq[GraphConfig.Scheme]): DataFrame = {
+    val probed = p.qv
+      .select(col("query_id"), col("qcells"),
+        posexplode(typedlit(arms.map(_.entries).toList)).as(Seq("arm", "e")))
+      .select(col("arm"), col("query_id"),
+        posexplode(slice(col("qcells"), lit(1), col("e")))
           .as(Seq("pos", "qcell")))
-      .select(col("query_id"), (col("pos") + 1).as("beam"), col("qcell"))
-    val em = broadcast(probed)
+      .select(col("arm"), col("query_id"), (col("pos") + 1).as("beam"),
+        col("qcell"))
+    broadcast(probed)
       .join(p.nodes.select(col("cell").as("qcell"), col("vec_id").as("m")),
         "qcell")
       .filter(col("m") =!= col("query_id"))
-      .groupBy(col("query_id"), col("beam")).agg(min(col("m")).as("node"))
-    val fb = p.qv.join(em.select(col("query_id")).distinct(),
-        Seq("query_id"), "left_anti")
-      .select(col("query_id"), lit(0).as("beam"),
-        when(col("query_id") === lit(p.low2(0)), lit(p.low2(1)))
-          .otherwise(lit(p.low2(0))).as("node"))
-    val entry = em.unionByName(fb)
-      .join(p.qv.select(col("query_id"), col("qu")), "query_id")
-      .select(col("query_id"), col("qu"), col("beam"), col("node"))
-    beamCore(s, entry, p.nodes, p.edges, width, hops, needCost)
+      .groupBy(col("arm"), col("query_id"), col("beam"))
+      .agg(min(col("m")).as("node"))
   }
 
-  /** Top-3 search through the persisted graph index — the q243 result
-    * shape (query_id, found_id, found_cos, rnk) for the graph member:
-    * the final beam pool (≤ entries·width exact-scored candidates at
-    * the derived default) deduped across beams — two walks reaching the
-    * same node must yield ONE result row, and the dedup is exact even
-    * on the double gcos (same (query, node) scored by the same codegen'd
-    * expression) — then cut by the q243 tie rule (rank, ties included,
-    * (gcos DESC, node)). */
-  private[graft] def probeGraphIndexTop3(s: SparkSession, batch: DataFrame,
-      dir: String): DataFrame = {
-    val p = graphProbePrep(s, batch, dir)
-    val own = indexScheme(s, dir)
-    val (frontier, _) = graphFrontierPrepared(s, p,
-      own.entries, own.width, own.hops, needCost = false)
+  /** Hybrid entries (arm, query_id, beam, node): each probed cell
+    * (`cell_rank` ≤ `entries` of an [[ivfAdcScoredRanked]] frame) seeds
+    * one beam at its ADC-argmax candidate, beam = cell_rank. */
+  private def hybridSeeds(scored: DataFrame, arm: Int,
+      entries: Int): DataFrame = {
+    val wc = Window.partitionBy(col("query_id"), col("cell_rank"))
+      .orderBy(col("adc_cos").desc, col("neighbor_id"))
+    scored.filter(col("cell_rank") <= entries)
+      .withColumn("rn", row_number().over(wc))
+      .filter(col("rn") === 1)
+      .select(lit(arm).as("arm"), col("query_id"), col("cell_rank").as("beam"),
+        col("neighbor_id").as("node"))
+  }
+
+  /** The beam entry frame (arm, query_id, qu, beam, node): every (arm in
+    * `arms`, query) takes its rows of `entries`, or — when it has none —
+    * one beam at the LIMIT-2 fallback, the smallest id not its own. One
+    * left join reads `entries` once. */
+  private def withFallback(p: GraphProbePrep, entries: DataFrame,
+      arms: Seq[Int]): DataFrame =
+    p.qv.select(explode(typedlit(arms.toList)).as("arm"), col("query_id"),
+        col("qu"))
+      .join(entries, Seq("arm", "query_id"), "left")
+      .select(col("arm"), col("query_id"), col("qu"),
+        coalesce(col("beam"), lit(0)).as("beam"),
+        coalesce(col("node"), when(col("query_id") === lit(p.low2(0)),
+          lit(p.low2(1))).otherwise(lit(p.low2(0)))).as("node"))
+
+  /** The graph probe for every arm at once: [[cellEntries]] with the
+    * fallback, then one [[beamCore]] chain walks all arms. */
+  private def graphArms(s: SparkSession, p: GraphProbePrep,
+      arms: Seq[GraphConfig.Scheme],
+      needCost: Boolean): (DataFrame, DataFrame) =
+    beamCore(s, withFallback(p, cellEntries(p, arms), arms.indices), p.nodes,
+      p.edges, arms, needCost)
+
+  /** Top-3 of a (query_id, node, gcos) beam pool, deduped across beams —
+    * two walks reaching the same node must yield ONE result row, and the
+    * dedup is exact even on the double gcos (same (query, node) scored
+    * by the same codegen'd expression) — then cut by the q243 tie rule
+    * (rank, ties included, (gcos DESC, node)). */
+  private def poolTop3(frontier: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("gcos").desc, col("node"))
     frontier.select(col("query_id"), col("node"), col("gcos")).distinct()
       .withColumn("rnk", rank().over(w)).filter(col("rnk") <= 3)
       .select(col("query_id"), col("node").as("found_id"),
         col("gcos").as("found_cos"), col("rnk").cast("int").as("rnk"))
+  }
+
+  /** Top-3 search through the persisted graph index — the q243 result
+    * shape (query_id, found_id, found_cos, rnk) for the graph member:
+    * the final beam pool (≤ entries·width exact-scored candidates at
+    * the derived default) cut by [[poolTop3]]. */
+  private[graft] def probeGraphIndexTop3(s: SparkSession, batch: DataFrame,
+      dir: String): DataFrame = {
+    val own = indexScheme(s, dir)
+    val (frontier, _) = graphArms(s, graphProbePrep(s, batch, dir), Seq(own),
+      needCost = false)
+    poolTop3(frontier)
   }
 
   /** Top-3 HYBRID search — the DiskANN serving shape as a PRODUCT query
@@ -3803,77 +3867,30 @@ object VectorOps extends QueryModule {
     *     constant: a cell the ADC probe would never open is exactly the
     *     entry a boundary-missed neighbor needs);
     *  2. each probed cell seeds ONE independent beam at that cell's
-    *     ADC-argmax candidate — a smarter entry than the graph probe's
-    *     smallest-id member (the quantizer already ranked the cell's
-    *     occupants; entering at its best guess shortens the walk);
-    *     queries whose probed cells are all empty fall back to the
-    *     graph probe's LIMIT-2 corpus entry;
+    *     ADC-argmax candidate ([[hybridSeeds]]) — a smarter entry than
+    *     the graph probe's smallest-id member (the quantizer already
+    *     ranked the cell's occupants; entering at its best guess shortens
+    *     the walk); queries whose probed cells are all empty fall back to
+    *     the graph probe's LIMIT-2 corpus entry;
     *  3. `width`-beam, `hops`-hop exact-scored refinement through the
     *     bucketed gedges ([[beamCore]] — the SAME engine as the graph
-    *     probe), final pool deduped across beams and cut by the q243
-    *     rank rule.
+    *     probe), final pool cut by [[poolTop3]].
     *
     * Scale shape: stage 1 is the IVFADC probe's plan at nprobe=entries
     * (batch-sized, cell-bucketed codes join); stages 2-3 are the graph
     * probe's (frontier always the broadcast side) — composing them adds
-    * no new plan class. */
+    * no new plan class. The strategy card prices this exact shape as its
+    * hybrid arm. */
   private[graft] def probeHybridTop3(s: SparkSession, batch: DataFrame,
       dir: String): DataFrame = {
-    // Cost discarded — the beam runs count-free (one job per hop).
-    val (frontier, _) = hybridFrontierCost(s, batch, dir, needCost = false)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("gcos").desc, col("node"))
-    frontier.select(col("query_id"), col("node"), col("gcos")).distinct()
-      .withColumn("rnk", rank().over(w)).filter(col("rnk") <= 3)
-      .select(col("query_id"), col("node").as("found_id"),
-        col("gcos").as("found_cos"), col("rnk").cast("int").as("rnk"))
-  }
-
-  /** The hybrid search's final beam pool plus its EXECUTED bill — the
-    * 1-row Σ of the ADC candidate scorings (stage 1, the full frame at
-    * nprobe = entries) and the beam expansion scorings (stage 3) —
-    * shared by [[probeHybridTop3]] and the clustered strategy card's
-    * hybrid arm (nothing amortized away: the card prices exactly what
-    * the product query pays). */
-  private def hybridFrontierCost(s: SparkSession, batch: DataFrame,
-      dir: String, needCost: Boolean = true): (DataFrame, DataFrame) = {
     val own = indexScheme(s, dir)
-    val scored = ivfAdcScoredRanked(s, batch, dir, nprobe = own.entries)
-      .select(col("query_id"), col("cell_rank"), col("neighbor_id"),
-        col("adc_cos"))
-      .localCheckpoint(true) // consumers: seed argmax + pair count
-    val adcPairs = scored.agg(count(lit(1)).as("adc_pairs"))
-    val wc = Window.partitionBy(col("query_id"), col("cell_rank"))
-      .orderBy(col("adc_cos").desc, col("neighbor_id"))
-    val seeds = scored.withColumn("rn", row_number().over(wc))
-      .filter(col("rn") === 1)
-      .select(col("query_id"), col("cell_rank").cast("bigint").as("beam"),
-        col("neighbor_id").as("node"))
-      .localCheckpoint(true) // consumers: entry union + fallback anti-join
-    val qu = unitize(batch)
-      .select(col("vec_id").as("query_id"), col("ue").as("qu"))
-      .localCheckpoint(true) // consumers: entry join + fallback spine
-    val tombs = loadSemTombstones(s, dir)
-    val nodes = dropSemTombstoned(
-        IndexStore.read(s, dir, "vectors"), "vec_id", tombs)
-      .select(col("vec_id"), col("ue"), col("cell"))
-    val edges = IndexStore.read(s, dir, "gedges")
-      .select(col("src"), col("dst"))
-    // collect-bound: two smallest live ids — 2 rows (entry fallback)
-    val low2 = nodes.select(col("vec_id")).orderBy(col("vec_id")).limit(2)
-      .collect().map(_.getLong(0))
-    val fb = qu.join(seeds.select(col("query_id")).distinct(),
-        Seq("query_id"), "left_anti")
-      .select(col("query_id"), lit(0L).as("beam"),
-        when(col("query_id") === lit(low2(0)), lit(low2(1)))
-          .otherwise(lit(low2(0))).as("node"))
-    val entry = seeds.unionByName(fb).join(qu, "query_id")
-      .select(col("query_id"), col("qu"), col("beam"), col("node"))
-    val (frontier, exp) = beamCore(s, entry, nodes, edges, own.width,
-      own.hops, needCost)
-    val cost = graft.Scalars.withScalar(exp, adcPairs)
-      .select((col("scored_cands") + col("adc_pairs")).as("scored_cands"))
-    (frontier, cost)
+    val p = graphProbePrep(s, batch, dir)
+    val seeds = hybridSeeds(
+      ivfAdcScoredRanked(s, batch, dir, nprobe = own.entries), 0, own.entries)
+    // Cost discarded — the beam runs count-free (one job per hop).
+    val (frontier, _) = beamCore(s, withFallback(p, seeds, Seq(0)), p.nodes,
+      p.edges, Seq(own), needCost = false)
+    poolTop3(frontier)
   }
 
   /** The shared q250 graph index: the q211 semantic index extended with
@@ -4751,53 +4768,66 @@ object VectorOps extends QueryModule {
     * batch, exact reference) triple — shared by q259 (permutation-PQ
     * clustered index) and q261 (the same corpus under the OPQ
     * learned-rotation quantizer, the round-17 verdict's
-    * promote-or-retire re-measurement). */
+    * promote-or-retire re-measurement). The graph and hybrid arms share
+    * the index's scheme and one [[beamCore]] chain; the ivfadc arm and
+    * the hybrid's stage 1 read one ADC scoring. */
   private def strategyCard(s: SparkSession, dir: String,
       queries0: DataFrame, exact0: DataFrame): DataFrame = {
     val queries = queries0
-      .localCheckpoint(true) // consumers: three probe arms + count
+      .localCheckpoint(true) // consumers: ADC scoring, probe prep + count
+    val own = indexScheme(s, dir)
+    val p = graphProbePrep(s, queries, dir)
+    // One ADC scoring at the larger nprobe serves both ADC consumers: the
+    // ivfadc arm reads its cell_rank ≤ IvfAdcNprobe prefix, the hybrid's
+    // stage 1 its cell_rank ≤ entries prefix — exactly the rows (and the
+    // bit-identical adc_cos) a scoring at that nprobe holds.
+    val scored = ivfAdcScoredRanked(s, queries, dir,
+        math.max(IvfAdcNprobe, own.entries))
+      .localCheckpoint(true) // consumers: ivfadc top-1 + seeds + pair counts
+    val pairs = scored.agg(
+      count(when(col("cell_rank") <= IvfAdcNprobe, 1)).as("adc_pairs"),
+      count(when(col("cell_rank") <= own.entries, 1)).as("hybrid_pairs"))
+    val entry = withFallback(p, cellEntries(p, Seq(own))
+      .unionByName(hybridSeeds(scored, 1, own.entries)), Seq(0, 1))
+    strategyRows(s, p, queries, exact0, entry, Seq(own, own),
+      scored.filter(col("cell_rank") <= IvfAdcNprobe), pairs,
+      coalesce(col("hits"), lit(0L)))
+  }
+
+  /** The graph/hybrid/ivfadc card body of q253 and [[strategyCard]]:
+    * `entry` seeds the graph (arm 0) and hybrid (arm 1) beams of ONE
+    * [[beamCore]] chain; `adcCands` is the ivfadc arm's candidate frame;
+    * `pairs` the 1-row ADC bill (adc_pairs, hybrid_pairs) beside the
+    * expansions. */
+  private def strategyRows(s: SparkSession, p: GraphProbePrep,
+      queries: DataFrame, exact0: DataFrame, entry: DataFrame,
+      arms: Seq[GraphConfig.Scheme], adcCands: DataFrame, pairs: DataFrame,
+      hits: Column): DataFrame = {
     val exact = exact0
-      .localCheckpoint(true) // consumers: one hit-join per arm
-    val nq = queries.agg(count(lit(1)).as("n_queries"))
-    def hitsOf(found: DataFrame): DataFrame = found.join(exact, "query_id")
-      .agg(coalesce(sum((col("found_id") === col("exact_id")).cast("long")),
-        lit(0L)).as("hits"))
-    def row(strategy: String, hits: DataFrame, cost: DataFrame): DataFrame =
-      Seq(cost, nq).foldLeft(hits)(graft.Scalars.withScalar)
-        .select(lit(strategy).as("strategy"), col("n_queries"), col("hits"),
-          (col("hits").cast("double") / col("n_queries").cast("double"))
-            .as("recall_at1"),
-          col("scored_cands"))
-    // The three arms are independent probes of the same index — their
-    // eager work (the ADC checkpoint, the two beams' per-hop jobs) runs
-    // concurrently (guide §2.6); Par.map returns in input order, so the
-    // unioned card is unchanged.
-    val armFrames: Seq[(DataFrame, DataFrame)] =
-      graft.Par.map(Seq("adc", "graph", "hybrid")) {
-        case "adc" =>
-          val adcScored = ivfAdcScoredCands(s, queries, dir, IvfAdcNprobe)
-            .localCheckpoint(true) // consumers: top-1 + pair count
-          val wAdc = Window.partitionBy(col("query_id"))
-            .orderBy(col("adc_cos").desc, col("neighbor_id"))
-          (adcScored.withColumn("rn", row_number().over(wAdc))
-            .filter(col("rn") === 1)
-            .select(col("query_id"), col("neighbor_id").as("found_id")),
-            adcScored.agg(count(lit(1)).as("scored_cands")))
-        case "graph" => probeGraphIndexCost(s, queries, dir, -1, -1, -1)
-        case _ =>
-          val (hPool, hCost) = hybridFrontierCost(s, queries, dir)
-          val wG = Window.partitionBy(col("query_id"))
-            .orderBy(col("gcos").desc, col("node"))
-          (hPool.select(col("query_id"), col("node"), col("gcos"))
-            .distinct()
-            .withColumn("rn", row_number().over(wG)).filter(col("rn") === 1)
-            .select(col("query_id"), col("node").as("found_id")),
-            hCost)
-      }
-    val Seq((adc1, adcCost), (g1, gCost), (h1, hCost)) = armFrames
-    row("graph", hitsOf(g1), gCost)
-      .unionAll(row("hybrid", hitsOf(h1), hCost))
-      .unionAll(row("ivfadc", hitsOf(adc1), adcCost))
+      .localCheckpoint(true) // consumers: the hit join; keeps the exact
+      // baseline's audited theta-join out of the card's plan
+    val (frontier, expanded) = beamCore(s, entry, p.nodes, p.edges, arms)
+    val wAdc = Window.partitionBy(col("query_id"))
+      .orderBy(col("adc_cos").desc, col("neighbor_id"))
+    val found = armTop1(frontier).select(col("arm"), col("query_id"),
+        col("found_id"))
+      .unionByName(adcCands.withColumn("rn", row_number().over(wAdc))
+        .filter(col("rn") === 1)
+        .select(lit(2).as("arm"), col("query_id"),
+          col("neighbor_id").as("found_id")))
+    val cost = graft.Scalars.withScalar(expanded, pairs)
+      .select(col("arm"), (col("scored_cands") +
+        when(col("arm") === 1, col("hybrid_pairs")).otherwise(lit(0L)))
+        .as("scored_cands"))
+      .unionByName(pairs.select(lit(2).as("arm"),
+        col("adc_pairs").as("scored_cands")))
+    import s.implicits._
+    val spine = Seq(0 -> "graph", 1 -> "hybrid", 2 -> "ivfadc")
+      .toDF("arm", "strategy")
+    armRows(spine, found, exact, cost,
+        queries.agg(count(lit(1)).as("n_queries")), hits)
+      .select(col("strategy"), col("n_queries"), col("hits"),
+        col("recall_at1"), col("scored_cands"))
       .orderBy("strategy")
   }
 
@@ -5316,20 +5346,14 @@ object VectorOps extends QueryModule {
   private def heldOutExactTop1(s: SparkSession, d: String): DataFrame =
     heldOutExactTop1Of(unitVectors(s, d))
 
-  /** The same reference over an arbitrary (vec_id, …, ue) unit frame —
-    * the clustered-corpus cards share the measurement machinery. */
-  private def heldOutExactTop1Of(u: DataFrame): DataFrame = {
-    val qv = u.filter(col("vec_id") % 5 === 0 &&
+  /** [[exactTop1]] of the held-out split of an arbitrary (vec_id, …, ue)
+    * unit frame against its base split — the clustered-corpus cards share
+    * the measurement machinery. */
+  private def heldOutExactTop1Of(u: DataFrame): DataFrame =
+    exactTop1(u.filter(col("vec_id") % 5 === 0 &&
         col("vec_id") < IvfAdcQueryBound)
-      .select(col("vec_id").as("query_id"), col("ue").as("qu"))
-    val base = u.filter(col("vec_id") % 5 =!= 0)
-      .select(col("vec_id").as("neighbor_id"), col("ue").as("cu"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(expr("graft_dot(qu, cu)").desc, col("neighbor_id"))
-    broadcast(qv).join(base, col("query_id") =!= col("neighbor_id"))
-      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .select(col("query_id"), col("neighbor_id").as("exact_id"))
-  }
+      .select(col("vec_id").as("query_id"), col("ue").as("qu")),
+      u.filter(col("vec_id") % 5 =!= 0))
 
   /** q251 — persisted-graph health card (the q208/q212/q244 observability
     * idiom for the graph index): node/edge counts, realized out-degree
@@ -5425,9 +5449,11 @@ object VectorOps extends QueryModule {
     * scheme is the cheapest row here meeting [[GraphConfig
     * .DefaultTarget]], pinned row-by-row by GraphConfigSpec.
     *
-    * Scale shape: every arm shares the one session-cached index build;
-    * per arm the frontier is |Q|·width rows with |Q| broadcast, hop
-    * joins equi-keyed on the bucketed gedges — the q248 shape over the
+    * Scale shape: every arm shares the one session-cached index build
+    * and ONE probe ([[probeGraphArms]]) — the arm is a column of the
+    * frontier, so each hop is one job for all five arms; the frontier is
+    * Σ_arms |Q|·entries·width rows with |Q| broadcast, hop joins
+    * equi-keyed on the bucketed gedges — the q248 shape over the
     * persisted artifact. */
   private def q252(s: SparkSession, d: String): DataFrame =
     graphSweepCard(s, builtGraphIndex(s, d), ivfAdcQueries(s, d),
@@ -5439,39 +5465,27 @@ object VectorOps extends QueryModule {
   private def graphSweepCard(s: SparkSession, dir: String,
       queries: DataFrame, exact0: DataFrame): DataFrame = {
     val exact = exact0
-      .localCheckpoint(true) // consumers: one hit-join per arm
+      .localCheckpoint(true) // consumers: the hit join; keeps the exact
+      // baseline's audited theta-join out of the card's plan
     val nq = queries.agg(count(lit(1)).as("n_queries"))
-    // One shared prep: the arms differ only in (entries, width, hops),
-    // so the tombstone load, centroid collect, fallback collect, and
-    // batch checkpoint are paid once, not five times.
-    val prep = graphProbePrep(s, queries, dir)
+    // Every arm in one probe: one prep, one hop chain, one hit aggregate.
+    val arms = GraphConfig.SweepArms
+    val (found, scored) = probeGraphArms(s, queries, dir, arms)
     // Build-vs-probe disclosure (round 18): the one-time edge-build bill
     // rides every arm row as its own column, so a reader can't mistake
     // the amortized build for per-probe cost (scored_cands is the
     // probe-only bill). NOT checkpointed: withScalar admits a groupless
     // aggregate as provably scalar, while a checkpointed LogicalRDD side
-    // would trip the loop-join hygiene gate; the occupancy re-agg per arm
-    // is occupancy-sized and cheap.
+    // would trip the loop-join hygiene gate.
     val bs = graphBuildScorings(s, dir)
-    def arm(sch: GraphConfig.Scheme): DataFrame = {
-      val (res, scored) = probeGraphPrepared(s, prep,
-        sch.entries, sch.width, sch.hops)
-      val hits = res.join(exact, "query_id")
-        .agg(sum((col("found_id") === col("exact_id")).cast("long"))
-          .as("hits"))
-      Seq(scored, nq, bs).foldLeft(hits)(graft.Scalars.withScalar)
-        .select(lit(sch.entries).as("entries"), lit(sch.width).as("width"),
-          lit(sch.hops).as("hops"),
-          col("n_queries"), col("hits"),
-          (col("hits").cast("double") / col("n_queries").cast("double"))
-            .as("recall_at1"),
-          col("scored_cands"),
-          col("build_scorings"))
-    }
-    // Independent arms over one shared prep: concurrent submission
-    // (guide §2.6) overlaps the five beams' per-hop jobs; Par.map
-    // preserves arm order, so the unioned card is unchanged.
-    graft.Par.map(GraphConfig.SweepArms)(arm).reduce(_ unionAll _)
+    import s.implicits._
+    val spine = arms.indices.map(a =>
+        (a, arms(a).entries, arms(a).width, arms(a).hops))
+      .toDF("arm", "entries", "width", "hops")
+    graft.Scalars.withScalar(armRows(spine, found, exact, scored, nq), bs)
+      .select(col("entries"), col("width"), col("hops"),
+        col("n_queries"), col("hits"), col("recall_at1"), col("scored_cands"),
+        col("build_scorings"))
       .orderBy("entries", "width", "hops")
   }
 
@@ -5557,7 +5571,10 @@ object VectorOps extends QueryModule {
     * SAME executed frames against the same exact top-1: `ivfadc` (ADC
     * top-1 at nprobe [[IvfAdcNprobe]]), `graph` (the q250 default
     * scheme), `hybrid` (ADC pairs + its own expansion count — the full
-    * bill, nothing amortized away).
+    * bill, nothing amortized away). The graph and hybrid beams are two
+    * arms of ONE [[beamCore]] chain ([[strategyRows]]): the graph arm
+    * walks 3 hops, the hybrid arm finishes after [[HybridHops]] and
+    * passes through the last hop unchanged.
     *
     * Scale shape: the seed frame is |Q|·seeds rows (always broadcast),
     * refinement hops are the bucketed-gedges equi-joins of q250, and
@@ -5570,65 +5587,28 @@ object VectorOps extends QueryModule {
   private def q253(s: SparkSession, d: String): DataFrame = {
     builtIvfAdc(s, d) // ensures the PQ artifacts on the shared dir
     val dir = builtGraphIndex(s, d) // same dir; ensures gedges
-    val exact = heldOutExactTop1(s, d)
-      .localCheckpoint(true) // consumers: one hit-join per arm
     val queries = ivfAdcQueries(s, d)
-    val nq = queries.agg(count(lit(1)).as("n_queries"))
-    val adcScored = ivfAdcScoredCands(s, queries, dir, IvfAdcNprobe)
+    val p = graphProbePrep(s, queries, dir)
+    val scored = ivfAdcScoredCands(s, queries, dir, IvfAdcNprobe)
       .select(col("query_id"), col("neighbor_id"), col("adc_cos"))
-      .localCheckpoint(true) // consumers: adc arm + seeds + cost
-    val adcCost = adcScored.agg(count(lit(1)).as("scored_cands"))
-    def hitsOf(found: DataFrame): DataFrame = found.join(exact, "query_id")
-      .agg(sum((col("found_id") === col("exact_id")).cast("long")).as("hits"))
-    def row(strategy: String, hits: DataFrame, cost: DataFrame): DataFrame =
-      Seq(cost, nq).foldLeft(hits)(graft.Scalars.withScalar)
-        .select(lit(strategy).as("strategy"), col("n_queries"), col("hits"),
-          (col("hits").cast("double") / col("n_queries").cast("double"))
-            .as("recall_at1"),
-          col("scored_cands"))
+      .localCheckpoint(true) // consumers: ivfadc top-1 + seeds + pair count
     val wAdc = Window.partitionBy(col("query_id"))
       .orderBy(col("adc_cos").desc, col("neighbor_id"))
-    val adc1 = adcScored.withColumn("rn", row_number().over(wAdc))
-      .filter(col("rn") === 1)
-      .select(col("query_id"), col("neighbor_id").as("found_id"))
-    // The graph arm and the hybrid beam are independent once adcScored
-    // is materialized (the hybrid's seeds read it) — overlap the two
-    // beams' per-hop jobs (guide §2.6); Par.map keeps input order.
-    val Seq((g1, gCost), (frontier, hExp)) =
-      graft.Par.map(Seq("graph", "hybrid")) {
-        case "graph" => probeGraphIndexCost(s, queries, dir,
-          GraphConfig.Default.entries, GraphConfig.Default.width,
-          GraphConfig.Default.hops)
-        case _ =>
-          val tombs = loadSemTombstones(s, dir)
-          val nodes = dropSemTombstoned(
-              IndexStore.read(s, dir, "vectors"), "vec_id",
-              tombs)
-            .select(col("vec_id"), col("ue"), col("cell"))
-          val edges = IndexStore.read(s, dir, "gedges")
-            .select(col("src"), col("dst"))
-          val seeds = adcScored.withColumn("rn", row_number().over(wAdc))
-            .filter(col("rn") <= HybridSeeds)
-            .select(col("query_id"), col("rn").as("beam"),
-              col("neighbor_id").as("node"))
-          val qu = unitize(queries)
-            .select(col("vec_id").as("query_id"), col("ue").as("qu"))
-          val entry = seeds.join(qu, "query_id")
-            .select(col("query_id"), col("qu"), col("beam"), col("node"))
-          beamCore(s, entry, nodes, edges, HybridWidth, HybridHops)
-      }
-    val wG = Window.partitionBy(col("query_id"))
-      .orderBy(col("gcos").desc, col("node"))
-    val h1 = frontier.withColumn("rn", row_number().over(wG))
-      .filter(col("rn") === 1)
-      .select(col("query_id"), col("node").as("found_id"))
-    val hCost = graft.Scalars.withScalar(hExp,
-        adcCost.withColumnRenamed("scored_cands", "adc_pairs"))
-      .select((col("scored_cands") + col("adc_pairs")).as("scored_cands"))
-    row("graph", hitsOf(g1), gCost)
-      .unionAll(row("hybrid", hitsOf(h1), hCost))
-      .unionAll(row("ivfadc", hitsOf(adc1), adcCost))
-      .orderBy("strategy")
+    // The graph arm enters by the cell rule (with the LIMIT-2 fallback);
+    // the hybrid arm at the top-HybridSeeds ADC candidates, no fallback.
+    val seeds = scored.withColumn("rn", row_number().over(wAdc))
+      .filter(col("rn") <= HybridSeeds)
+      .join(p.qv.select(col("query_id"), col("qu")), "query_id")
+      .select(lit(1).as("arm"), col("query_id"), col("qu"),
+        col("rn").as("beam"), col("neighbor_id").as("node"))
+    val entry = withFallback(p, cellEntries(p, Seq(GraphConfig.Default)),
+      Seq(0)).unionByName(seeds)
+    strategyRows(s, p, queries, heldOutExactTop1(s, d), entry,
+      Seq(GraphConfig.Default,
+        GraphConfig.Scheme(HybridSeeds, HybridWidth, HybridHops)),
+      scored, scored.agg(count(lit(1)).as("adc_pairs"),
+        count(lit(1)).as("hybrid_pairs")),
+      col("hits"))
   }
 
   private def q253Sql: String = {
@@ -5693,8 +5673,8 @@ object VectorOps extends QueryModule {
   /** q248 — beam-vs-greedy graph-ANN card (the production upgrade over
     * q245's greedy: NSW/HNSW deployments search with a width-ef frontier
     * precisely because greedy strands in local maxima of the neighbor
-    * graph). Both arms run the SAME [[graphBeamFrontier]] machinery over
-    * the SAME graph and query split — greedy IS the width-1 beam — so
+    * graph). Both arms run in ONE [[beamSearch]] over the SAME graph and
+    * query split — greedy IS the width-1 arm — so
     * the card's two rows differ only in the knob it prices: recall@1 vs
     * the exact top-1, against the candidate scorings each search paid
     * (Σ per-hop frontier-expansion rows, the dots a deployment multiplies
@@ -5702,38 +5682,33 @@ object VectorOps extends QueryModule {
     * ~width× scoring multiplier is the graph twin of q247's nprobe sweep:
     * the operator picks the smallest width that clears their SLA.
     *
-    * Scale shape: identical to q245 per arm — hop joins touch edge/
-    * vector tables on equi-keys, the frontier is |Q|·width·(1+degree)
-    * rows per hop with |Q| broadcast, and width/hops are constants, so
-    * plan size is fixed; the cost axis is measured from the executed
-    * expansion frames, not modeled. */
+    * Scale shape: q245's, with the arm as a frontier column — hop joins
+    * touch edge/vector tables on equi-keys, the frontier is
+    * Σ_arms |Q|·width·(1+degree) rows per hop with |Q| broadcast, and
+    * width/hops are constants, so plan size is fixed; the cost axis is
+    * measured per arm from the executed expansion frames, not modeled. */
   private val BeamWidth = 3
 
   private def q248(s: SparkSession, d: String): DataFrame = {
     val (asg, edges) = graphAnnParts(s, d)
     val exact = graphExactTop1(s, asg)
-      .localCheckpoint(true) // consumers: one hit-join per arm
+      .localCheckpoint(true) // consumers: the hit join; keeps the exact
+      // baseline's audited theta-join out of the card's plan
     val nq = asg.filter(col("vec_id") < 8)
       .agg(count(lit(1)).as("n_queries"))
-    def arm(strategy: String, width: Int): DataFrame = {
-      val (frontier, scored) = graphBeamFrontier(s, asg, edges, width)
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("gcos").desc, col("node"))
-      val hits = frontier.withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .join(exact, "query_id")
-        .agg(sum((col("node") === col("exact_id")).cast("long")).as("hits"))
-      Seq(scored, nq).foldLeft(hits)(graft.Scalars.withScalar)
-        .select(lit(strategy).as("strategy"), col("n_queries"), col("hits"),
-          (col("hits").cast("double") / col("n_queries").cast("double"))
-            .as("recall_at1"),
-          col("scored_cands"), lit(width).as("width"),
-          lit(GraphHops).as("hops"))
-    }
-    // Two independent beams — concurrent (guide §2.6), order preserved.
-    graft.Par.map(Seq("beam" -> BeamWidth, "greedy" -> 1)) {
-      case (st, w) => arm(st, w)
-    }.reduce(_ unionAll _).orderBy("strategy")
+    // Both strategies in one ad-hoc beam: greedy IS the width-1 arm.
+    val strategies = Seq("beam" -> BeamWidth, "greedy" -> 1)
+    val (frontier, scored) = beamSearch(s, asg, edges,
+      strategies.map { case (_, w) => GraphConfig.Scheme(1, w, GraphHops) })
+    import s.implicits._
+    val spine = strategies.indices.map(a =>
+        (a, strategies(a)._1, strategies(a)._2))
+      .toDF("arm", "strategy", "width")
+    armRows(spine, armTop1(frontier), exact, scored, nq)
+      .select(col("strategy"), col("n_queries"), col("hits"),
+        col("recall_at1"), col("scored_cands"), col("width"),
+        lit(GraphHops).as("hops"))
+      .orderBy("strategy")
   }
 
   /** Beam CTE chain on top of [[graphAnnCtes]]: the greedy arm reuses the

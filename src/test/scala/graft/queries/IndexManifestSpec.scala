@@ -167,6 +167,42 @@ class IndexManifestSpec extends SparkSpec {
     assert(IndexStore.kind(spark, dir, "sem") === IndexStore.kind(spark, ref, "sem"))
   }
 
+  // ---------------------------------------------------- refused commits
+
+  test("a commit refuses a non-finite centroid; the previous version stays the latest") {
+    val dir = freshIdx("nan")
+    VectorOps.buildSemIndex(spark, vecs(baseRows), dir)
+    val before = versions(dir).max
+    val sem = rows(VectorOps.probeSemIndex(spark, queries, dir))
+    val e = intercept[IllegalArgumentException] {
+      IndexStore.commit(spark, dir) { ks =>
+        ks + ("sem" -> ks("sem").copy(centroids =
+          ks("sem").centroids.updated(0, Seq(Double.NaN, 0.0, 0.0, 1.0))))
+      }
+    }
+    Seq(dir, "sem", "centroids").foreach(w =>
+      assert(e.getMessage.contains(w), e.getMessage))
+    assert(versions(dir).max === before)
+    assert(rows(VectorOps.probeSemIndex(spark.newSession(), queries, dir)) === sem)
+  }
+
+  test("a commit refuses a graph kind without exactly one chosen sweep row") {
+    val dir = freshIdx("unchosen")
+    VectorOps.buildSemIndex(spark, vecs(baseRows), dir)
+    VectorOps.addGraphToSemIndex(spark, dir)
+    val scheme = VectorOps.loadGraphScheme(spark, dir)
+    val before = versions(dir).max
+    val e = intercept[IllegalArgumentException] {
+      IndexStore.commit(spark, dir) { ks =>
+        ks + ("graph" -> ks("graph").copy(
+          sweep = ks("graph").sweep.map(_.copy(chosen = false))))
+      }
+    }
+    assert(e.getMessage.contains(dir), e.getMessage)
+    assert(versions(dir).max === before)
+    assert(VectorOps.loadGraphScheme(spark.newSession(), dir) === scheme)
+  }
+
   // ------------------------------------------------------- crash states
 
   test("buildDedupIndex: an aborted rebuild refuses, an aborted first build has no manifest") {
