@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.metric.SQLMetrics
 
 /** Native backward as-of join — the one whole-operator semantic in this
   * engine that Spark's built-in operators genuinely cannot express as a
@@ -55,6 +56,11 @@ case class AsOfJoinExec(
   override def output: Seq[Attribute] =
     left.output ++ right.output.map(_.withNullability(true))
 
+  // Every left row is output once; matched ones found an earlier right row.
+  override lazy val metrics = Map(
+    "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"),
+    "numMatchedRows" -> SQLMetrics.createMetric(sparkContext, "number of matched rows"))
+
   // Co-partitioned like a sort-merge join: EnsureRequirements aligns the two
   // hash exchanges (same keys positions, same partition count), so equal
   // keys land in the same zipped partition.
@@ -77,6 +83,8 @@ case class AsOfJoinExec(
     val rOut = right.output
     val out = output
     val (lk, rk, lo, ro) = (leftKeys, rightKeys, leftOrder, rightOrder)
+    val numOutputRows = longMetric("numOutputRows")
+    val numMatchedRows = longMetric("numMatchedRows")
     left.execute().zipPartitions(right.execute()) { (lIter, rIter) =>
       val lKeyProj = UnsafeProjection.create(lk, lOut)
       val rKeyProj = UnsafeProjection.create(rk, rOut)
@@ -113,8 +121,11 @@ case class AsOfJoinExec(
           } else scanning = false
         }
         val m =
-          if (lastMatch != null && keyOrd.compare(lastMatchKey, lKey) == 0) lastMatch
-          else nullRight
+          if (lastMatch != null && keyOrd.compare(lastMatchKey, lKey) == 0) {
+            numMatchedRows += 1
+            lastMatch
+          } else nullRight
+        numOutputRows += 1
         resultProj(joined(lRow, m))
       }
     }

@@ -632,71 +632,10 @@ object DedupOps extends QueryModule {
     IndexStore.append(shingleSetOf(nb), dir, "shingles")
   }
 
-  private[graft] val IndexTables = Seq("exact", "bands", "shingles")
-
-  /** Parquet data files currently backing the three index tables — the
-    * operational signal the compaction threshold reads. Append-only
-    * refresh adds one file-set per micro-batch per table, and probe scan
-    * cost grows with file count (open/footer overhead per file — the
-    * classic streaming small-files problem), so this number is what a
-    * deployment alarms on. */
-  private[graft] def indexFileCount(s: SparkSession, dir: String): Long =
-    IndexTables.map(t =>
-      graft.Fs.list(s"$dir/$t").count(_.endsWith(".parquet")).toLong).sum
-
-  /** Retire docs from the index: append their ids to the tombstone
-    * table (one column, `doc_id`). Tombstones take effect at the NEXT
-    * PROBE — matches whose base doc is tombstoned are ignored, so a
-    * takedown stops being a dedup target immediately — and are
-    * PHYSICALLY applied (rows removed from all three tables, applied
-    * tombstones cleared) by [[compactDedupIndex]]'s next maintenance
-    * pass. Semantics, deliberately: retiring a doc FORGETS its content
-    * for dedup purposes — a later identical doc probes novel and
-    * becomes the new canonical (content re-canonicalization, pinned in
-    * DedupTtlSpec). Keeping retired CONTENT blocked is a policy
-    * screen's job (q121's blocklist), not the index's: dedup's contract
-    * here is "never match against what was taken down". A tombstone for
-    * a doc not (yet) present survives compaction, so retire-before-
-    * arrival cannot be resurrected by a late append replay. TTL is this
-    * API composed with a timestamp source: tombstone everything whose
-    * ingest date aged out, then compact.
-    *
-    * Serialized against [[compactDedupIndex]]'s tombstone rewrite via
-    * the index writer lock (round-15): a takedown can no longer land
-    * inside compaction's re-read→overwrite window and be clobbered — it
-    * either precedes the re-read (and survives via it) or waits for the
-    * overwrite (and survives trivially). IndexRaceSpec's dedup arm
-    * hammers the interleaving. */
-  private[graft] def tombstoneDocs(docs: DataFrame, dir: String): Unit =
-    IndexStore.withLock(docs.sparkSession, dir) {
-      docs.select(col("doc_id")).write.mode("append")
-        .parquet(s"$dir/tombstones")
-    }
-
-  /** The distinct tombstoned ids, or None when the index has none — the
-    * probe skips its anti-joins entirely on tombstone-free indexes
-    * (zero overhead for the common case). */
-  private[graft] def loadTombstones(s: SparkSession,
-      dir: String): Option[DataFrame] = {
-    val p = s"$dir/tombstones"
-    if (!graft.Fs.exists(p)) None
-    else Some(s.read.parquet(p).select(col("doc_id")).distinct())
-  }
-
-  /** Anti-join `df` against the tombstone set on `key` (no-op without
-    * tombstones). The tombstone side is takedown-sized — AQE broadcasts
-    * it; work ∝ df, never ∝ index × tombstones. */
-  private def dropTombstoned(df: DataFrame, key: String,
-      tombs: Option[DataFrame]): DataFrame =
-    tombs.fold(df)(tb => df.join(tb.withColumnRenamed("doc_id", "__tomb"),
-      col(key) === col("__tomb"), "left_anti"))
-
-  /** Compact the persisted dedup index IN PLACE: each table is rewritten
-    * to a sibling `<table>__compact` directory sized by bytes (128 MB
-    * target files), then swapped in. Compaction is SEMANTIC, not just a
-    * file merge — multi-generation rows accumulated by append-only
-    * refresh collapse to the canonical form the probe's min/DISTINCT
-    * would have computed anyway:
+  /** Compact the persisted dedup index: one [[IndexStore.compact]] pass
+    * rewrites each table to the canonical form the probe's min/DISTINCT
+    * would compute anyway — multi-generation rows accumulated by
+    * append-only refresh collapse — minus the tombstoned docs:
     *  - exact:    one row per norm_key, min doc_id (the probe's own min);
     *  - bands:    DISTINCT (doc_id, band, sig) — retries append verbatim
     *              duplicates;
@@ -705,75 +644,14 @@ object DedupOps extends QueryModule {
     * Probe verdicts are therefore invariant under compaction by
     * construction, and DedupCompactionSpec pins that bit-for-bit across a
     * multi-batch [[graft.streaming.DedupStream.runProbeWithRefresh]] run.
-    *
-    * The delete-then-rename swap has a crash window on a raw filesystem;
-    * a production deployment swaps a metastore/table-format pointer
-    * (Hive partition relocation, Iceberg/Delta commit) instead — the
-    * rewrite job itself is identical. Scale shape: one shuffle per table,
-    * each keyed by the table's own probe key, work ∝ index size — run it
-    * from the maintenance arm (file-count threshold), never inline with a
-    * probe. */
-  private[graft] def compactDedupIndex(s: SparkSession, dir: String): Unit = {
-    // Snapshot tombstones BEFORE any rewrite: the swap closures and the
-    // applied-set computation below both consume them, and the lazy
-    // parquet read would otherwise race its own overwrite.
-    val tombs = loadTombstones(s, dir).map(_.localCheckpoint(true))
-    // Applied set = tombstones whose doc WAS in some pre-swap table (the
-    // swaps below remove exactly these). COMPUTED here against the
-    // pre-swap tables (after the swaps the applied docs are gone, so
-    // every tombstone would look unapplied); the surviving tombstone set
-    // is then derived at WRITE time, after all three swaps, by re-reading
-    // the CURRENT on-disk tombstone table and anti-joining the applied
-    // set — not by writing this snapshot back. The re-read is what keeps
-    // a takedown appended concurrently by [[tombstoneDocs]] (append mode)
-    // DURING the compaction pass alive: a snapshot-derived write would
-    // silently clobber it, leaving the doc matchable. Crash ordering is
-    // unchanged from the snapshot design: a crash anywhere before the
-    // final write leaves extra tombstones on disk, which re-apply
-    // idempotently at the next probe/compaction — never the reverse
-    // hazard of a tombstoned doc live in the tables with its tombstone
-    // record already erased. (A takedown landing BETWEEN the final
-    // re-read and the overwrite — a sub-second window, vs the whole pass
-    // before — is the residual race; serializing takedowns against the
-    // maintenance arm closes it, and the streaming driver does exactly
-    // that by running both from one foreachBatch thread.)
-    val applied = tombs.map { tb =>
-      val present = Seq(
-        IndexStore.read(s, dir, "exact")
-          .select(col("exact_doc").as("doc_id")),
-        IndexStore.read(s, dir, "bands").select(col("doc_id")),
-        IndexStore.read(s, dir, "shingles")
-          .select(col("doc_id")))
-        .reduce(_.union(_)).distinct()
-      tb.join(present, Seq("doc_id"), "left_semi")
-        .localCheckpoint(true) // detach from the files the swaps rewrite
-    }
-    // Swap preserves the committed bucketing (IndexStore.compactSwap
-    // re-registers from the manifest after the rename).
-    def swap(table: String)(compact: DataFrame => DataFrame): Unit =
-      IndexStore.compactSwap(s, dir, table)(compact)
-    swap("exact")(df => dropTombstoned(df, "exact_doc", tombs)
-      .groupBy(col("norm_key")).agg(min(col("exact_doc")).as("exact_doc")))
-    swap("bands")(df => dropTombstoned(df, "doc_id", tombs).distinct())
-    swap("shingles")(df =>
-      dropTombstoned(df, "doc_id", tombs).dropDuplicates("doc_id"))
-    // Tombstone overwrite LAST (see `applied` above for the ordering
-    // argument), against a FRESH read of the table so concurrent
-    // takedowns survive: only once every swap has consumed the snapshot
-    // is it safe to forget the applied tombstones. The re-read AND the
-    // overwrite run under the index writer lock, so a concurrent
-    // [[tombstoneDocs]] cannot land between them (the round-14 residual
-    // race, now closed rather than documented).
-    applied.foreach { ap =>
-      IndexStore.withLock(s, dir) {
-        loadTombstones(s, dir).foreach { cur =>
-          cur.join(ap, Seq("doc_id"), "left_anti")
-            .localCheckpoint(true) // detach from the files being overwritten
-            .write.mode("overwrite").parquet(s"$dir/tombstones")
-        }
-      }
-    }
-  }
+    * Takedowns (`IndexStore.tombstone(docs, dir, "doc_id")`) retire docs:
+    * DedupTtlSpec pins their semantics. */
+  private[graft] def compactDedupIndex(s: SparkSession, dir: String): Unit =
+    IndexStore.compact(s, dir, Map(
+      "exact" -> IndexStore.Compaction(Seq("exact_doc"), _.groupBy(col("norm_key"))
+        .agg(min(col("exact_doc")).as("exact_doc"))),
+      "bands" -> IndexStore.Compaction(Seq("doc_id"), _.distinct()),
+      "shingles" -> IndexStore.Compaction(Seq("doc_id"), _.dropDuplicates("doc_id"))))
 
   /** Probe a batch of (doc_id, text) against a persisted index: verdict
     * per batch doc (exact > near > novel), unordered. Work ∝ batch and
@@ -800,10 +678,10 @@ object DedupOps extends QueryModule {
     val nb = normDocs(batch).localCheckpoint(true)
     // Tombstoned base docs are invisible to the probe (matches against
     // taken-down content must not fire); None on tombstone-free indexes.
-    val tombs = loadTombstones(s, dir)
+    val tombs = IndexStore.tombstones(s, dir)
     // Candidates: batch bands × persisted band index — the only
     // index-sized join, keyed on (band, sig).
-    val bandIdx = dropTombstoned(
+    val bandIdx = IndexStore.dropTombstoned(
       IndexStore.read(s, dir, "bands")
         .select(col("doc_id").as("base_doc"), col("band"), col("sig")),
       "base_doc", tombs)
@@ -842,7 +720,7 @@ object DedupOps extends QueryModule {
     // probing its own partial append) are nulled before the min, which
     // ignores them.
     nb.select(col("doc_id"), col("norm_key"))
-      .join(dropTombstoned(IndexStore.read(s, dir, "exact"),
+      .join(IndexStore.dropTombstoned(IndexStore.read(s, dir, "exact"),
           "exact_doc", tombs),
         Seq("norm_key"), "left")
       .groupBy(col("doc_id"))

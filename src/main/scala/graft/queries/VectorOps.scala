@@ -1072,10 +1072,10 @@ object VectorOps extends QueryModule {
     // Tombstoned base vectors are invisible to the probe (matches
     // against taken-down content must not fire); None when the index
     // has no tombstones — the common case pays nothing.
-    val idx = dropSemTombstoned(
+    val idx = IndexStore.dropTombstoned(
       IndexStore.read(s, dir, "vectors")
         .select(col("cell"), col("vec_id").as("base_vec"), col("ue").as("bu")),
-      "base_vec", loadSemTombstones(s, dir))
+      "base_vec", IndexStore.tombstones(s, dir))
     val best = assigned
       .select(col("vec_id"), col("pu"), explode(col("probe_cells")).as("cell"))
       .join(idx, Seq("cell"))
@@ -1155,13 +1155,13 @@ object VectorOps extends QueryModule {
       // (retire-before-arrival) is likewise not wired: its rows die at
       // compaction anyway and its reverse edges would squat on live
       // neighbors' degree slots until then.
-      val tombs = loadSemTombstones(s, dir)
-      val all = dropSemTombstoned(
+      val tombs = IndexStore.tombstones(s, dir)
+      val all = IndexStore.dropTombstoned(
           IndexStore.read(s, dir, "vectors"),
           "vec_id", tombs)
         .dropDuplicates("vec_id")
         .select(col("vec_id"), col("ue"), col("cell"))
-      val live = dropSemTombstoned(assigned, "vec_id", tombs)
+      val live = IndexStore.dropTombstoned(assigned, "vec_id", tombs)
         .withColumn("cell2", element_at(sc, 2)("cid").cast("bigint"))
       val out = graphEdges(live, all)
         .localCheckpoint(true) // consumers: forward append + reverse append
@@ -1175,114 +1175,34 @@ object VectorOps extends QueryModule {
     }
   }
 
-  /** Parquet data files backing the semantic index's vector store — the
-    * signal the compaction threshold reads. Centroids and τ live in the
-    * manifest; only `vectors` accretes a file-set per micro-batch under
-    * the streaming refresh. */
-  private[graft] def semIndexFileCount(s: SparkSession, dir: String): Long =
-    graft.Fs.list(s"$dir/vectors").count(_.endsWith(".parquet")).toLong
-
-  /** Retire vectors from the semantic index — [[DedupOps.tombstoneDocs]]
-    * one modality over, closing the round-13 gap where a GDPR takedown
-    * silenced the lexical index only. Tombstones take effect at the
-    * NEXT PROBE (the retired vector stops being a dup target at once)
-    * and are PHYSICALLY applied by [[compactSemIndex]]. Same semantics,
-    * deliberately: retiring a vector FORGETS it for dedup — identical
-    * content arriving later probes novel and re-canonicalizes (pinned in
-    * SemTtlSpec); a tombstone for a vector not (yet) indexed survives
-    * compaction, so retire-before-arrival cannot be resurrected by a
-    * late append replay. Locked against [[compactSemIndex]]'s tombstone
-    * rewrite (the [[DedupOps.tombstoneDocs]] round-15 discipline) — a
-    * takedown can no longer be clobbered by a concurrent compaction's
-    * re-read→overwrite window; IndexRaceSpec hammers the interleaving. */
-  private[graft] def tombstoneVecs(vecs: DataFrame, dir: String): Unit =
-    IndexStore.withLock(vecs.sparkSession, dir) {
-      vecs.select(col("vec_id")).write.mode("append")
-        .parquet(s"$dir/tombstones")
-    }
-
-  /** Distinct tombstoned vec_ids, or None — tombstone-free indexes skip
-    * the anti-join entirely (zero overhead for the common case). */
-  private[graft] def loadSemTombstones(s: SparkSession,
-      dir: String): Option[DataFrame] = {
-    val p = s"$dir/tombstones"
-    if (!graft.Fs.exists(p)) None
-    else Some(s.read.parquet(p).select(col("vec_id")).distinct())
-  }
-
-  /** Anti-join against the takedown-sized tombstone set (AQE broadcasts
-    * it; work ∝ df, never ∝ index × tombstones). */
-  private def dropSemTombstoned(df: DataFrame, key: String,
-      tombs: Option[DataFrame]): DataFrame =
-    tombs.fold(df)(tb => df.join(tb.withColumnRenamed("vec_id", "__tomb"),
-      col(key) === col("__tomb"), "left_anti"))
-
-  /** Compact the vector store IN PLACE: rewrite to one-row-per-vec_id
-    * (rows for a vec_id are identical by construction — ue is a pure
-    * function of the embedding and cell a pure function of ue + the
-    * frozen centroid table, so at-least-once replays append verbatim
-    * duplicates) minus the tombstoned vectors, then swapped in with the
-    * build-time bucketing preserved (IndexStore.compactSwap). Probe
-    * verdicts are invariant: the probe's per-probe argmax already
+  /** Compact the semantic index: one [[IndexStore.compact]] pass
+    * rewrites each committed table minus the tombstoned vectors.
+    *  - vectors, codes: one row per vec_id (rows for a vec_id are
+    *    identical by construction — ue is a pure function of the
+    *    embedding, cell of ue + the frozen centroids, the code of both —
+    *    so at-least-once replays append verbatim duplicates); a taken-down
+    *    vector leaves the float and code stores together (IvfAdcSpec);
+    *  - gedges: edges with a tombstoned endpoint (either direction) go,
+    *    re-appended pairs dedup, and each (src, kind) re-trims to its
+    *    kind's bound by (ecos, dst) — the append arm's temporary
+    *    overflow ends here. The trim partitions by kind so a node's
+    *    within-cell neighbors can never crowd out its cross-cell escape
+    *    edge (almost always the lowest-cosine row, which a single-bound
+    *    trim would lose).
+    * Probe verdicts are invariant: the probe's per-probe argmax already
     * collapses duplicate index rows and already skips tombstoned base
-    * vectors, compaction just materializes both (SemCompactionSpec /
-    * SemTtlSpec pin it bit-for-bit).
-    *
-    * Tombstone ordering is the [[DedupOps.compactDedupIndex]] discipline
-    * verbatim: the APPLIED set (tombstones whose vector was in the
-    * pre-swap store) is computed eagerly before the swap, and the
-    * surviving tombstone table is written LAST from a FRESH read of the
-    * on-disk tombstones anti-joined against it — a crash anywhere before
-    * that write leaves extra tombstones that re-apply idempotently
-    * (never a resurrected takedown), and a takedown appended
-    * concurrently by [[tombstoneVecs]] during the pass survives. Same
-    * crash-window caveat on the swap itself — production swaps a
-    * metastore/table-format pointer instead of a rename. */
+    * vectors (SemCompactionSpec / SemTtlSpec pin it bit-for-bit). */
   private[graft] def compactSemIndex(s: SparkSession, dir: String): Unit = {
-    val tombs = loadSemTombstones(s, dir).map(_.localCheckpoint(true))
-    val applied = tombs.map { tb =>
-      val present = IndexStore.read(s, dir, "vectors")
-        .select(col("vec_id")).distinct()
-      tb.join(present, Seq("vec_id"), "left_semi")
-        .localCheckpoint(true) // detach from the files the swap rewrites
-    }
-    IndexStore.compactSwap(s, dir, "vectors")(df =>
-      dropSemTombstoned(df, "vec_id", tombs).dropDuplicates("vec_id"))
-    // IVFADC parity: the codes table compacts in the same pass with the
-    // same tombstone snapshot — a taken-down vector leaves both the
-    // float store and the code store together (IvfAdcSpec pins it).
-    if (hasPq(s, dir))
-      IndexStore.compactSwap(s, dir, "codes")(df =>
-        dropSemTombstoned(df, "vec_id", tombs).dropDuplicates("vec_id"))
-    // Graph parity: drop edges with a tombstoned endpoint (either
-    // direction), dedup re-appended pairs, and re-trim per (src, kind) to
-    // each kind's bound by (ecos, dst) — the append arm's temporary
-    // overflow ends here, in the same locked pass as the float store.
-    // The trim partitions by kind so a node's within-cell neighbors can
-    // never crowd out its cross-cell escape edge (which is almost always
-    // the lowest-cosine row and would lose a single-bound trim).
-    if (hasGraph(s, dir))
-      IndexStore.compactSwap(s, dir, "gedges") { df =>
-        val w = Window.partitionBy(col("src"), col("kind"))
-          .orderBy(col("ecos").desc, col("dst"))
-        dropSemTombstoned(dropSemTombstoned(df, "src", tombs), "dst", tombs)
-          .dropDuplicates("src", "dst")
+    val oneRow = IndexStore.Compaction(Seq("vec_id"), _.dropDuplicates("vec_id"))
+    val w = Window.partitionBy(col("src"), col("kind"))
+      .orderBy(col("ecos").desc, col("dst"))
+    IndexStore.compact(s, dir, Map("vectors" -> oneRow, "codes" -> oneRow,
+      "gedges" -> IndexStore.Compaction(Seq("src", "dst"),
+        _.dropDuplicates("src", "dst")
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") <= when(col("kind") === 0, lit(WithinDegree))
             .otherwise(lit(CrossDegree)))
-          .drop("rn")
-      }
-    // Re-read + overwrite under the writer lock: a concurrent
-    // tombstoneVecs serializes against this window instead of racing it.
-    applied.foreach { ap =>
-      IndexStore.withLock(s, dir) {
-        loadSemTombstones(s, dir).foreach { cur =>
-          cur.join(ap, Seq("vec_id"), "left_anti")
-            .localCheckpoint(true) // detach from the files being overwritten
-            .write.mode("overwrite").parquet(s"$dir/tombstones")
-        }
-      }
-    }
+          .drop("rn"))))
   }
 
   /** The q211 base-corpus semantic index (vec_id % 5 ≠ 0 split), built
@@ -2460,7 +2380,7 @@ object VectorOps extends QueryModule {
     *  - LIFECYCLE: [[appendToSemIndex]] encodes novel vectors with the
     *    FROZEN permutation + codebooks (index metadata ages like the
     *    centroids and τ — recalibrated offline, never drifted online);
-    *    [[tombstoneVecs]] takedowns suppress code rows at the next probe
+    *    [[IndexStore.tombstone]] takedowns suppress code rows at the next probe
     *    and [[compactSemIndex]] physically removes them in the same
     *    locked pass that compacts `vectors` (IvfAdcSpec pins all three).
     *
@@ -2643,9 +2563,9 @@ object VectorOps extends QueryModule {
       .select(col("query_id"), (col("pos") + 1).as("cell_rank"),
         col("pc")("cid").cast("bigint").as("cell"),
         col("pc")("cc").as("coarse"), col("lut"))
-    val codesDf = dropSemTombstoned(
+    val codesDf = IndexStore.dropTombstoned(
       IndexStore.read(s, dir, "codes"),
-      "vec_id", loadSemTombstones(s, dir))
+      "vec_id", IndexStore.tombstones(s, dir))
     // A baked filter attribute (see addPqToSemIndex) rides the codes
     // scan into the candidate frame — downstream filtered probes read
     // it for free instead of paying a candidates-sized attribute join.
@@ -3626,10 +3546,10 @@ object VectorOps extends QueryModule {
     // query or exact_id would systematically under-measure recall
     // against neighbors the probe (which does drop tombstones) can never
     // return — mis-choosing the persisted scheme.
-    val nodes = dropSemTombstoned(
+    val nodes = IndexStore.dropTombstoned(
       IndexStore.read(s, dir, "vectors")
         .select(col("vec_id"), col("ue"), col("cell")),
-      "vec_id", loadSemTombstones(s, dir))
+      "vec_id", IndexStore.tombstones(s, dir))
     val calib = graphCalibBatch(nodes).localCheckpoint(true)
     val nCal = calib.count()
     val arms = GraphConfig.SweepArms
@@ -3757,8 +3677,8 @@ object VectorOps extends QueryModule {
     * the same store. */
   private def graphProbePrepUnit(s: SparkSession, unit: DataFrame,
       dir: String, gedges: DataFrame): GraphProbePrep = {
-    val tombs = loadSemTombstones(s, dir)
-    val nodes = dropSemTombstoned(
+    val tombs = IndexStore.tombstones(s, dir)
+    val nodes = IndexStore.dropTombstoned(
         IndexStore.read(s, dir, "vectors"), "vec_id", tombs)
       .select(col("vec_id"), col("ue"), col("cell"))
     val edges = gedges.select(col("src"), col("dst"))
@@ -5024,8 +4944,8 @@ object VectorOps extends QueryModule {
           buildSemIndex(s, initial, churned)
           addGraphToSemIndex(s, churned)
           appendToSemIndex(s, base.filter(col("vec_id") % 7 === 3), churned)
-          tombstoneVecs(initial.filter(col("vec_id") % 11 === 5)
-            .select(col("vec_id")), churned)
+          IndexStore.tombstone(initial.filter(col("vec_id") % 11 === 5),
+            churned, "vec_id")
           compactSemIndex(s, churned)
           churned
         case _ =>

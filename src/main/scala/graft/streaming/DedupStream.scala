@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.operators.IndexStore
 import graft.queries.DedupOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -113,9 +114,10 @@ object DedupStream {
     * to their canonical collapsed form (`DedupOps.compactDedupIndex`) —
     * verdicts are invariant by construction since compaction applies the
     * probe's own min/DISTINCT semantics, pinned by DedupCompactionSpec.
+    * The rewrite commits new table generations through the index
+    * manifest, so a probe reads the index before or after it, whole.
     * Compaction runs BETWEEN batches inside foreachBatch here; a real
-    * deployment runs it as an async maintenance job with a table-format
-    * pointer swap — same rewrite, different commit. Same
+    * deployment runs it as an async maintenance job. Same
     * `watermarkDelay` late-data contract as [[runProbe]].
     *
     * Rebucket arm (round 16): bucket counts are frozen at build so
@@ -152,14 +154,13 @@ object DedupStream {
             .select("doc_id"), "doc_id"),
           indexDir)
         compactAboveFiles.foreach { thr =>
-          if (DedupOps.indexFileCount(spark, indexDir) > thr)
+          if (IndexStore.fileCount(spark, indexDir,
+              IndexStore.tables(spark, indexDir)) > thr)
             DedupOps.compactDedupIndex(spark, indexDir)
         }
         rebucketAboveRowsPerBucket.foreach { target =>
-          DedupOps.IndexTables.foreach { t =>
-            graft.operators.IndexStore.rebucketIfGrown(spark, indexDir, t,
-              target)
-          }
+          IndexStore.tables(spark, indexDir).foreach(
+            IndexStore.rebucketIfGrown(spark, indexDir, _, target))
         }
         (): Unit
       }

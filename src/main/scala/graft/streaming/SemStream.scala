@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.operators.IndexStore
 import graft.queries.VectorOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -75,6 +76,15 @@ object SemStream {
     q.awaitTermination()
   }
 
+  /** The compaction arm of every refresh loop: compact once the vector
+    * store's data files exceed `threshold`. */
+  private def compactAbove(spark: SparkSession, indexDir: String,
+      threshold: Option[Long]): Unit =
+    threshold.foreach { thr =>
+      if (IndexStore.fileCount(spark, indexDir, Seq("vectors")) > thr)
+        VectorOps.compactSemIndex(spark, indexDir)
+    }
+
   /** The probe WITH the refresh loop closed: each batch's novel vectors
     * join the vector store, so batch N+1 detects semantic duplicates of
     * anything batch N admitted — zero corpus re-passes.
@@ -104,10 +114,7 @@ object SemStream {
           vecs.join(verdicts.filter(col("verdict") === "novel")
             .select("vec_id"), "vec_id"),
           indexDir)
-        compactAboveFiles.foreach { thr =>
-          if (VectorOps.semIndexFileCount(spark, indexDir) > thr)
-            VectorOps.compactSemIndex(spark, indexDir)
-        }
+        compactAbove(spark, indexDir, compactAboveFiles)
         // Auto-rebucket arm (round 16, the DedupStream discipline): the
         // semantic index's committed tables — `vectors` always, `codes`
         // and `gedges` when the manifest lists the pq/graph kinds —
@@ -116,10 +123,8 @@ object SemStream {
         // grow-only for bucketed ones. Layout only: DedupRebucketSpec's
         // semantic arm pins verdict invariance.
         rebucketAboveRowsPerBucket.foreach { target =>
-          graft.operators.IndexStore.tables(spark, indexDir).foreach { t =>
-            graft.operators.IndexStore.rebucketIfGrown(spark, indexDir, t,
-              target)
-          }
+          IndexStore.tables(spark, indexDir).foreach(
+            IndexStore.rebucketIfGrown(spark, indexDir, _, target))
         }
         (): Unit
       }
@@ -177,10 +182,7 @@ object SemStream {
           .write.mode("overwrite").parquet(s"$outDir/batch=$id")
         if (refresh) {
           VectorOps.appendToSemIndex(spark, pinned, indexDir)
-          compactAboveFiles.foreach { thr =>
-            if (VectorOps.semIndexFileCount(spark, indexDir) > thr)
-              VectorOps.compactSemIndex(spark, indexDir)
-          }
+          compactAbove(spark, indexDir, compactAboveFiles)
         }
         (): Unit
       }
@@ -232,10 +234,7 @@ object SemStream {
           .write.mode("overwrite").parquet(s"$outDir/batch=$id")
         if (refresh) {
           VectorOps.appendToSemIndex(spark, pinned, indexDir)
-          compactAboveFiles.foreach { thr =>
-            if (VectorOps.semIndexFileCount(spark, indexDir) > thr)
-              VectorOps.compactSemIndex(spark, indexDir)
-          }
+          compactAbove(spark, indexDir, compactAboveFiles)
         }
         (): Unit
       }

@@ -94,7 +94,8 @@ class IndexColocationSpec extends SparkSpec {
       acc: List[SparkPlan]): Seq[List[SparkPlan]] = p match {
     case f: FileSourceScanExec
         if f.relation.location.rootPaths
-          .exists(rp => tables.exists(t => rp.toString.endsWith(t))) =>
+          .exists(rp => tables.exists(t =>
+            rp.toString.matches(s".*\\Q$t\\E\\.g\\d+"))) =>
       Seq(f :: acc)
     case a: AdaptiveSparkPlanExec =>
       scanAncestry(a.executedPlan, tables, a :: acc)
@@ -102,9 +103,10 @@ class IndexColocationSpec extends SparkSpec {
     case _ => p.children.flatMap(scanAncestry(_, tables, p :: acc))
   }
 
-  /** `tables` are the bucketed table dirs under the index root — the
-    * only index data a probe scans: the metadata (τ, scheme, centroids)
-    * lives in the manifest and reaches a plan as literals. */
+  /** `tables` are the bucketed tables under the index root, each scanned
+    * from one generation dir `<table>.g<N>` — the only index data a probe
+    * scans: the metadata (τ, scheme, centroids) lives in the manifest and
+    * reaches a plan as literals. */
   private def assertColocated(plans: Seq[SparkPlan], idx: String,
       tables: Seq[String]): Unit = {
     val paths = plans.flatMap(scanAncestry(_, tables.map(t => s"$idx/$t"), Nil))

@@ -36,7 +36,7 @@ class IndexRaceSpec extends SparkSpec {
 
     val taker = new Thread(() =>
       try takedownIds.foreach { id =>
-        VectorOps.tombstoneVecs(Seq(id).toDF("vec_id"), dir)
+        IndexStore.tombstone(Seq(id).toDF("vec_id"), dir, "vec_id")
       } catch { case t: Throwable => failures.add(t); () }
       finally takedownsDone = true)
     val compactor = new Thread(() =>
@@ -75,7 +75,7 @@ class IndexRaceSpec extends SparkSpec {
 
     val taker = new Thread(() =>
       try takedownIds.foreach { id =>
-        DedupOps.tombstoneDocs(Seq(id).toDF("doc_id"), dir)
+        IndexStore.tombstone(Seq(id).toDF("doc_id"), dir, "doc_id")
       } catch { case t: Throwable => failures.add(t); () }
       finally takedownsDone = true)
     val compactor = new Thread(() =>

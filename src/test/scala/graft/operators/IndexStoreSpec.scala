@@ -27,8 +27,13 @@ class IndexStoreSpec extends SparkSpec {
     IndexStore.build(spark, dir, table)(
       IndexStore.Kind(Map(IndexStore.write(df, dir, table, keys))))
 
+  /** Catalog name of the committed generation of `table`. */
+  private def committedName(dir: String, table: String): String =
+    IndexStore.tableName(dir, table,
+      IndexStore.manifest(spark, dir).table(table).get.gen)
+
   private def dropCatalog(dir: String, table: String): Unit =
-    spark.sql(s"DROP TABLE IF EXISTS `${IndexStore.tableName(dir, table)}`")
+    spark.sql(s"DROP TABLE IF EXISTS `${committedName(dir, table)}`")
 
   test("bucketing-disabled rebuild over a bucketed dir clears spec + catalog") {
     val dir = freshDir("dis")
@@ -38,10 +43,10 @@ class IndexStoreSpec extends SparkSpec {
       spark.conf.set(IndexStore.EnabledConf, "false")
       create(rows(7), dir, "t", Seq("k"))
     } finally spark.conf.unset(IndexStore.EnabledConf)
-    // Stale spec/catalog from the bucketed generation must be gone —
-    // a read claiming CLUSTERED BY over plain files fails at scan time.
+    // No spec or catalog entry may claim CLUSTERED BY over the plain
+    // generation's files — a read doing so fails at scan time.
     assert(IndexStore.spec(spark, dir, "t").isEmpty)
-    assert(!spark.catalog.tableExists(IndexStore.tableName(dir, "t")))
+    assert(!spark.catalog.tableExists(committedName(dir, "t")))
     assert(IndexStore.read(spark, dir, "t").count() === 7)
   }
 
@@ -129,9 +134,15 @@ class IndexStoreSpec extends SparkSpec {
     assert(IndexStore.spec(spark, dir, "t") === Some((3, Seq("k"))))
     val after = IndexStore.read(spark, dir, "t")
     assert(after.collect().map(_.toSeq).toSet === before)
-    // and the swap re-registered the catalog entry at the new count
-    assert(spark.catalog.tableExists(IndexStore.tableName(dir, "t")))
-    assert(!new java.io.File(s"$dir/t__rebucket").exists())
+    // and the new generation is registered at the new count
+    assert(spark.catalog.tableExists(committedName(dir, "t")))
+    IndexStore.rebucket(spark, dir, "t", 5)
+    assert(IndexStore.spec(spark, dir, "t") === Some((5, Seq("k"))))
+    assert(IndexStore.read(spark, dir, "t").collect().map(_.toSeq).toSet === before)
+    // Three generations written (build, two rebuckets); only the two the
+    // kept manifest versions list survive.
+    assert(new java.io.File(dir).list().filter(_.matches("t\\.g\\d+")).toSet ===
+      Set("t.g2", "t.g3"))
   }
 
   test("rebucket refuses plain-parquet tables and bad counts") {

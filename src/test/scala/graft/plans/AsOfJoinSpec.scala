@@ -3,7 +3,8 @@ package graft.plans
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-class AsOfJoinSpec extends SparkSpec {
+class AsOfJoinSpec extends SparkSpec
+    with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   test("edge cases: no earlier match -> nulls; strict order; same-key streams merge") {
@@ -172,5 +173,21 @@ class AsOfJoinSpec extends SparkSpec {
     assert(exchanges <= 2,
       s"aggregate after as-of join added an exchange:\n${agg.queryExecution.executedPlan}")
     assert(agg.collect().map(r => (r.getString(0), r.getLong(1))).toSet === Set(("A", 2L)))
+  }
+
+  test("AsOfJoinExec reports its output and matched rows as SQL metrics") {
+    val quotes = Seq(("A", 10L, 1.0), ("A", 20L, 2.0), ("B", 15L, 9.0))
+      .toDF("q_sym", "q_t", "px")
+    val trades = Seq(("A", 5L), ("A", 25L), ("B", 16L), ("C", 50L))
+      .toDF("sym", "t")
+    val df = AsOf.join(trades, quotes,
+      keys = Seq("sym" -> "q_sym"), order = Seq("t" -> "q_t"))
+    assert(df.collect().length === 4)
+    val exec = collect(df.queryExecution.executedPlan) {
+      case j: AsOfJoinExec => j
+    }
+    assert(exec.size === 1, df.queryExecution.executedPlan)
+    assert(exec.head.metrics("numOutputRows").value === 4L)
+    assert(exec.head.metrics("numMatchedRows").value === 2L)
   }
 }

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.SparkSpec
+import graft.operators.IndexStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -86,7 +87,7 @@ class ChurnRecallSpec extends SparkSpec {
     VectorOps.addGraphToSemIndex(spark, churned)
     val schemeAtBuild = VectorOps.loadGraphScheme(spark, churned)
     VectorOps.appendToSemIndex(spark, df(appendIds), churned)
-    VectorOps.tombstoneVecs(df(takedownIds).select("vec_id"), churned)
+    IndexStore.tombstone(df(takedownIds), churned, "vec_id")
     VectorOps.compactSemIndex(spark, churned)
     assert(VectorOps.loadGraphScheme(spark, churned) === schemeAtBuild,
       "churn must not silently re-derive the persisted scheme — it is " +
@@ -121,7 +122,7 @@ class ChurnRecallSpec extends SparkSpec {
     VectorOps.buildSemIndex(spark, df(initialIds), dir)
     VectorOps.addGraphToSemIndex(spark, dir)
     VectorOps.appendToSemIndex(spark, df(appendIds), dir)
-    VectorOps.tombstoneVecs(df(takedownIds).select("vec_id"), dir)
+    IndexStore.tombstone(df(takedownIds), dir, "vec_id")
     VectorOps.compactSemIndex(spark, dir)
     val found = VectorOps.probeGraphIndex(spark, df(queryIds), dir)
       .select("found_id").as[Long].collect().toSet

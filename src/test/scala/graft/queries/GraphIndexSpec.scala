@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.SparkSpec
+import graft.operators.IndexStore
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
@@ -119,7 +120,7 @@ class GraphIndexSpec extends SparkSpec {
     // Tombstone two of cell 0's members, do NOT compact — the append
     // must not spend the novel node's degree budget (or its reverse
     // edges) on nodes that compaction will remove without replacement.
-    VectorOps.tombstoneVecs(ids(16L, 17L), idx)
+    IndexStore.tombstone(ids(16L, 17L), idx, "vec_id")
     VectorOps.appendToSemIndex(spark,
       vecsDf(100L -> Seq(1.0, 0.015, 0.0, 0.0)), idx)
     val e = graft.operators.IndexStore.read(spark, idx, "gedges")
@@ -174,7 +175,7 @@ class GraphIndexSpec extends SparkSpec {
     val q = 500L -> Seq(1.0, 0.01, 0.0, 0.0)
     assert(found(idx, q)._1 === 16L)
 
-    VectorOps.tombstoneVecs(ids(16L), idx)
+    IndexStore.tombstone(ids(16L), idx, "vec_id")
     val after = found(idx, q)
     assert(after._1 !== 16L, s"tombstoned node must never be returned: $after")
 

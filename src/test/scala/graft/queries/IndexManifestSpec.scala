@@ -16,14 +16,15 @@ import org.apache.spark.sql.functions.col
   *     session (this session kept ranking against its cached centroids or
   *     books), and a dir deleted and rebuilt at the same path (the
   *     JVM-wide parsed-manifest memo must see the new version file).
-  *  2. CRASH STATES — for each index build, the states an abort leaves (the
-  *     "uncommitted" version a rebuild writes first, tables written with
-  *     no new version, a dot-temp manifest never renamed) read as the
-  *     previous committed build whole, or throw naming the dir; never a
-  *     mix. Simulated the DedupCompactionSpec way, with no hook in main
-  *     code: the uncommitted version is committed by hand, and a
-  *     finished rebuild is rolled back by renaming its last version to
-  *     the dot-temp a crash before the rename leaves, then deleting it.
+  *  2. CRASH STATES — for each index build and each rewrite (compaction of
+  *     either family, rebucket, a takedown's tombstone table), the states
+  *     an abort leaves (new generations written with no new version, a
+  *     dot-temp manifest never renamed) read as the previous committed
+  *     build whole — rows, bucket counts and probe verdicts — or, before
+  *     a first build, throw naming the dir; never a mix. Simulated with
+  *     no hook in main code: a finished build or rewrite is rolled back
+  *     by renaming its last version to the dot-temp a crash before the
+  *     rename leaves, then deleting it.
   */
 class IndexManifestSpec extends SparkSpec {
 
@@ -205,19 +206,22 @@ class IndexManifestSpec extends SparkSpec {
 
   // ------------------------------------------------------- crash states
 
-  test("buildDedupIndex: an aborted rebuild refuses, an aborted first build has no manifest") {
+  test("buildDedupIndex: an aborted rebuild reads the previous build whole, an aborted first build has no manifest") {
     val dir = freshIdx("dedup")
     DedupOps.buildDedupIndex(corpusA, dir)
+    val built = rows(DedupOps.probeDedupIndex(spark, probeDocs, dir))
+    val scheme = DedupOps.indexScheme(spark, dir)
+    val tables = IndexStore.tables(spark, dir)
+      .map(t => t -> rows(IndexStore.read(spark, dir, t))).toMap
     def readers(): Unit = {
-      refuses(dir)(DedupOps.probeDedupIndex(spark, probeDocs, dir).collect())
-      refuses(dir)(DedupOps.indexScheme(spark, dir))
-      DedupOps.IndexTables.foreach(t =>
-        refuses(dir)(IndexStore.read(spark, dir, t).collect()))
+      assert(rows(DedupOps.probeDedupIndex(spark, probeDocs, dir)) === built)
+      assert(DedupOps.indexScheme(spark, dir) === scheme)
+      tables.foreach { case (t, r) =>
+        assert(rows(IndexStore.read(spark, dir, t)) === r, t) }
     }
-    IndexStore.commit(spark, dir)(_ - "dedup") // the rebuild's first version
-    readers()
     DedupOps.buildDedupIndex(corpusB, dir)
     val rebuilt = rows(DedupOps.probeDedupIndex(spark, probeDocs, dir))
+    assert(rebuilt !== built)
     rolledBack(dir)(readers())
 
     val first = freshIdx("dedup1")
@@ -228,37 +232,40 @@ class IndexManifestSpec extends SparkSpec {
     }
   }
 
-  test("buildSemIndex: an aborted rebuild refuses sem, pq and graph alike") {
+  test("buildSemIndex: an aborted rebuild reads the previous sem, pq and graph kinds whole") {
     val dir = freshIdx("sem")
     VectorOps.buildSemIndex(spark, vecs(baseRows), dir)
     VectorOps.addPqToSemIndex(spark, dir)
     VectorOps.addGraphToSemIndex(spark, dir)
+    val sem = rows(VectorOps.probeSemIndex(spark, queries, dir))
+    val adc = rows(VectorOps.probeIvfAdcTop3(spark, queries, dir))
+    val graph = rows(VectorOps.probeGraphIndex(spark, queries, dir))
     def readers(): Unit = {
-      refuses(dir)(VectorOps.probeSemIndex(spark, queries, dir).collect())
-      refuses(dir)(VectorOps.probeIvfAdcTop3(spark, queries, dir).collect())
-      refuses(dir)(VectorOps.probeGraphIndex(spark, queries, dir).collect())
-      assert(!VectorOps.hasPq(spark, dir) && !VectorOps.hasGraph(spark, dir))
+      assert(VectorOps.hasPq(spark, dir) && VectorOps.hasGraph(spark, dir))
+      assert(rows(VectorOps.probeSemIndex(spark, queries, dir)) === sem)
+      assert(rows(VectorOps.probeIvfAdcTop3(spark, queries, dir)) === adc)
+      assert(rows(VectorOps.probeGraphIndex(spark, queries, dir)) === graph)
     }
-    IndexStore.commit(spark, dir)(_ -- Seq("sem", "pq", "graph"))
-    readers()
     VectorOps.buildSemIndex(spark, vecs(baseRows.take(12)), dir)
+    assert(!VectorOps.hasPq(spark, dir) && !VectorOps.hasGraph(spark, dir))
     rolledBack(dir)(readers())
   }
 
-  test("addPqToSemIndex: an aborted re-encode refuses ADC, the float index stays whole") {
+  test("addPqToSemIndex: an aborted re-encode reads the previous ADC build, the float index stays whole") {
     val dir = freshIdx("pq")
     VectorOps.buildSemIndex(spark, vecs(baseRows), dir)
     VectorOps.addPqToSemIndex(spark, dir, learnedRotation = true)
     val sem = rows(VectorOps.probeSemIndex(spark, queries, dir))
+    val adc = rows(VectorOps.probeIvfAdcTop3(spark, queries, dir))
+    val distortion = VectorOps.ivfAdcDistortion(spark, dir)
     def readers(): Unit = {
-      refuses(dir)(VectorOps.probeIvfAdcTop3(spark, queries, dir).collect())
-      refuses(dir)(VectorOps.ivfAdcDistortion(spark.newSession(), dir))
-      assert(!VectorOps.hasPq(spark, dir))
+      assert(IndexStore.kind(spark, dir, "pq").pqRotation.isDefined)
+      assert(rows(VectorOps.probeIvfAdcTop3(spark, queries, dir)) === adc)
+      assert(VectorOps.ivfAdcDistortion(spark.newSession(), dir) === distortion)
       assert(rows(VectorOps.probeSemIndex(spark, queries, dir)) === sem)
     }
-    IndexStore.commit(spark, dir)(_ - "pq")
-    readers()
     VectorOps.addPqToSemIndex(spark, dir)
+    assert(IndexStore.kind(spark, dir, "pq").pqRotation.isEmpty)
     rolledBack(dir)(readers())
   }
 
@@ -276,13 +283,13 @@ class IndexManifestSpec extends SparkSpec {
       assert(rows(VectorOps.probeSemIndex(spark, queries, dir)) === sem)
       assert(rows(VectorOps.probeIvfAdcTop3(spark, queries, dir)) === adc)
     }
-    // No graph kind yet: the build's first commit changes nothing.
-    IndexStore.commit(spark, dir)(_ - "graph")
     readers()
     VectorOps.addGraphToSemIndex(spark, dir)
     assert(VectorOps.loadGraphScheme(spark, dir).isDefined)
     rolledBack(dir)(readers())
   }
+
+  // ------------------------------------------------------ rewrite crash states
 
   test("rebucket: every aborted step reads the same rows, never at a count the files lack") {
     val dir = freshIdx("rebucket")
@@ -290,26 +297,105 @@ class IndexManifestSpec extends SparkSpec {
     val verdicts = rows(DedupOps.probeDedupIndex(spark, probeDocs, dir))
     val exact = rows(IndexStore.read(spark, dir, "exact"))
     def readers(): Unit = {
-      assert(IndexStore.spec(spark, dir, "exact").isEmpty)
+      assert(IndexStore.spec(spark, dir, "exact") ===
+        Some((IndexStore.DefaultBuckets, Seq("norm_key"))))
       assert(rows(IndexStore.read(spark, dir, "exact")) === exact)
       assert(rows(DedupOps.probeDedupIndex(spark, probeDocs, dir)) === verdicts)
     }
-    // The plain commit rebucket writes before its swap, over the old
-    // files.
-    IndexStore.commit(spark, dir)(_.map { case (n, k) =>
-      n -> k.copy(tables = k.tables.map { case (t, e) =>
-        t -> (if (t == "exact") e.copy(buckets = 0) else e) })
-    })
-    readers()
-    // Back to the committed count, then a whole rebucket rolled back to
-    // its plain version over the swapped-in files.
-    IndexStore.commit(spark, dir)(_.map { case (n, k) =>
-      n -> k.copy(tables = k.tables.map { case (t, e) =>
-        t -> (if (t == "exact") e.copy(buckets = IndexStore.DefaultBuckets)
-          else e) })
-    })
     IndexStore.rebucket(spark, dir, "exact", 4)
     assert(IndexStore.spec(spark, dir, "exact") === Some((4, Seq("norm_key"))))
     rolledBack(dir)(readers())
+  }
+
+  /** Every committed table's rows, by table. */
+  private def snapshot(dir: String): Map[String, Set[Seq[Any]]] =
+    IndexStore.tables(spark, dir)
+      .map(t => t -> rows(IndexStore.read(spark, dir, t))).toMap
+
+  test("compactDedupIndex: an aborted compaction reads the previous tables, tombstones and verdicts") {
+    val dir = freshIdx("dcompact")
+    DedupOps.buildDedupIndex(corpusA, dir)
+    DedupOps.appendToDedupIndex(corpusB, dir)
+    DedupOps.appendToDedupIndex(corpusB, dir) // a retry's duplicate rows
+    IndexStore.tombstone(docs(1L -> "", 999L -> ""), dir, "doc_id")
+    val tables = snapshot(dir)
+    val specs = tables.keys.map(t => t -> IndexStore.spec(spark, dir, t)).toMap
+    val verdicts = rows(DedupOps.probeDedupIndex(spark, probeDocs, dir))
+    def readers(): Unit = {
+      assert(snapshot(dir) === tables)
+      tables.keys.foreach(t => assert(IndexStore.spec(spark, dir, t) === specs(t), t))
+      assert(rows(DedupOps.probeDedupIndex(spark, probeDocs, dir)) === verdicts)
+    }
+    DedupOps.compactDedupIndex(spark, dir)
+    val compacted = snapshot(dir)
+    assert(compacted("tombstones") === Set(Seq(999L)))
+    assert(compacted("shingles").size < tables("shingles").size)
+    assert(rows(DedupOps.probeDedupIndex(spark, probeDocs, dir)) === verdicts)
+    rolledBack(dir)(readers())
+  }
+
+  test("compactSemIndex: an aborted compaction reads the previous vectors, codes, edges and verdicts") {
+    val dir = freshIdx("scompact")
+    VectorOps.buildSemIndex(spark, vecs(baseRows), dir)
+    VectorOps.addPqToSemIndex(spark, dir)
+    VectorOps.addGraphToSemIndex(spark, dir)
+    val extra = vecs(Seq(200L -> Seq(-0.5, -0.5, 0.5, 0.5)))
+    VectorOps.appendToSemIndex(spark, extra, dir)
+    VectorOps.appendToSemIndex(spark, extra, dir) // a retry's duplicate rows
+    IndexStore.tombstone(vecs(Seq(16L -> axis(0), 999L -> axis(0))), dir, "vec_id")
+    val tables = snapshot(dir)
+    val probes = (rows(VectorOps.probeSemIndex(spark, queries, dir)),
+      rows(VectorOps.probeIvfAdcTop3(spark, queries, dir)),
+      rows(VectorOps.probeGraphIndex(spark, queries, dir)))
+    def readers(): Unit = {
+      assert(snapshot(dir) === tables)
+      assert((rows(VectorOps.probeSemIndex(spark, queries, dir)),
+        rows(VectorOps.probeIvfAdcTop3(spark, queries, dir)),
+        rows(VectorOps.probeGraphIndex(spark, queries, dir))) === probes)
+    }
+    VectorOps.compactSemIndex(spark, dir)
+    val compacted = snapshot(dir)
+    assert(compacted("tombstones") === Set(Seq(999L)))
+    Seq("vectors", "codes").foreach(t =>
+      assert(compacted(t).size < tables(t).size, t))
+    rolledBack(dir)(readers())
+  }
+
+  test("tombstone: an aborted first takedown reads as none; one issued during a compaction survives it") {
+    val dir = freshIdx("takedown")
+    DedupOps.buildDedupIndex(corpusA, dir)
+    val verdicts = rows(DedupOps.probeDedupIndex(spark, probeDocs, dir))
+    IndexStore.tombstone(docs(2L -> ""), dir, "doc_id")
+    assert(rows(DedupOps.probeDedupIndex(spark, probeDocs, dir)) !== verdicts)
+    rolledBack(dir) {
+      assert(IndexStore.tombstones(spark, dir).isEmpty)
+      assert(rows(DedupOps.probeDedupIndex(spark, probeDocs, dir)) === verdicts)
+    }
+
+    // Doc 1 is retired before the pass, doc 2 while the pass holds the
+    // writer lock (its lock file is present from the pass's first step to
+    // its commit): the late takedown waits for the commit, so the pass
+    // neither applies nor drops it — it lands in the new tombstone
+    // generation, and the next pass applies it.
+    IndexStore.tombstone(docs(1L -> ""), dir, "doc_id")
+    @volatile var compacted = false
+    val compactor = new Thread(() => {
+      DedupOps.compactDedupIndex(spark, dir)
+      compacted = true
+    })
+    compactor.start()
+    val lock = new java.io.File(s"$dir/__lock")
+    while (!lock.exists() && !compacted) Thread.sleep(1)
+    IndexStore.tombstone(docs(2L -> ""), dir, "doc_id")
+    compactor.join()
+    def holds(doc: Long) =
+      !IndexStore.read(spark, dir, "shingles").filter(col("doc_id") === doc).isEmpty
+    assert(!holds(1L) && holds(2L))
+    assert(rows(IndexStore.tombstones(spark, dir).get) === Set(Seq(2L)))
+    assert(DedupOps.probeDedupIndex(spark, probeDocs, dir)
+      .filter(col("match_doc") === 2L).isEmpty)
+    DedupOps.compactDedupIndex(spark, dir)
+    assert(!holds(2L))
+    assert(IndexStore.read(spark, dir, "exact").filter(col("exact_doc") === 2L).isEmpty)
   }
 }

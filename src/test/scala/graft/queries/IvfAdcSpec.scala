@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.SparkSpec
+import graft.operators.IndexStore
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
@@ -91,7 +92,7 @@ class IvfAdcSpec extends SparkSpec {
     val q = vecsDf(500L -> axis(3).map(_ * 7.0))
     assert(top1(q, idx)(500L)._1 === 3L)
 
-    VectorOps.tombstoneVecs(ids(3L), idx)
+    IndexStore.tombstone(ids(3L), idx, "vec_id")
     val after = top1(q, idx)
     assert(after(500L)._1 !== 3L, s"takedown must leave ADC results: $after")
 

@@ -166,7 +166,7 @@ class LshConfigSpec extends SparkSpec {
     }
     // The index banded 8x2 and says so in its metadata.
     assert(DedupOps.indexScheme(spark, s"$root/index") === Scheme(8, 2))
-    val bandsPerDoc = spark.read.parquet(s"$root/index/bands")
+    val bandsPerDoc = graft.operators.IndexStore.read(spark, s"$root/index", "bands")
       .groupBy("doc_id").count().collect().map(_.getLong(1)).toSet
     assert(bandsPerDoc === Set(8L))
 

@@ -42,7 +42,7 @@ class NprobeSpec extends SparkSpec {
       s"single-cell probe must miss the cross-boundary copy: $v1")
     // The stored copy must live in a DIFFERENT cell than the probe's
     // primary — that's what makes this a boundary pair.
-    val copyCell = spark.read.parquet(s"$root/index/vectors")
+    val copyCell = IndexStore.read(spark, s"$root/index", "vectors")
       .filter(col("vec_id") === 20L).head().getLong(2)
     assert(copyCell !== v1.getLong(1),
       s"fixture must place the copy across the boundary: copy=$copyCell probe=$v1")

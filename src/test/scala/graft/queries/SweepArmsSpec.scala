@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.SparkSpec
+import graft.operators.IndexStore
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
 
@@ -43,7 +44,7 @@ class SweepArmsSpec extends SparkSpec {
     VectorOps.buildSemIndex(spark, vecsDf(baseRows: _*), dir)
     VectorOps.addPqToSemIndex(spark, dir)
     VectorOps.addGraphToSemIndex(spark, dir)
-    VectorOps.tombstoneVecs(vecsDf(5L -> axis(5)), dir)
+    IndexStore.tombstone(vecsDf(5L -> axis(5)), dir, "vec_id")
     dir
   }
 

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.{SparkSpec, Tables}
+import graft.operators.IndexStore
 import graft.queries.VectorOps
 import org.apache.spark.sql.functions._
 
@@ -113,8 +114,8 @@ class AnnStreamSpec extends SparkSpec {
     fixtureIndex(compactRoot)
     val plain = runWaves(plainRoot, compactAboveFiles = None)
     val compacted = runWaves(compactRoot, compactAboveFiles = Some(1L))
-    assert(VectorOps.semIndexFileCount(spark, s"$compactRoot/index") <
-      VectorOps.semIndexFileCount(spark, s"$plainRoot/index"),
+    assert(IndexStore.fileCount(spark, s"$compactRoot/index", Seq("vectors")) <
+      IndexStore.fileCount(spark, s"$plainRoot/index", Seq("vectors")),
       "the aggressive threshold must actually have compacted")
     assert(compacted === plain,
       "compaction mid-stream must not change any emitted result")

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.operators.IndexStore
 import graft.queries.DedupOps
 import org.apache.spark.sql.functions._
 
@@ -59,15 +60,15 @@ class DedupCompactionSpec extends SparkSpec {
       502L -> "entirely novel content that matches nothing in the index at all")
     val before = DedupOps.probeDedupIndex(spark, probe, idx)
       .collect().map(_.toSeq).toSet
-    val filesBefore = DedupOps.indexFileCount(spark, idx)
-    val exactRowsBefore = spark.read.parquet(s"$idx/exact").count()
+    val filesBefore = IndexStore.fileCount(spark, idx, IndexStore.tables(spark, idx))
+    val exactRowsBefore = IndexStore.read(spark, idx, "exact").count()
 
     DedupOps.compactDedupIndex(spark, idx)
 
     val after = DedupOps.probeDedupIndex(spark, probe, idx)
       .collect().map(_.toSeq).toSet
-    val filesAfter = DedupOps.indexFileCount(spark, idx)
-    val exactRowsAfter = spark.read.parquet(s"$idx/exact").count()
+    val filesAfter = IndexStore.fileCount(spark, idx, IndexStore.tables(spark, idx))
+    val exactRowsAfter = IndexStore.read(spark, idx, "exact").count()
 
     assert(after === before, "compaction must not change any verdict bit")
     assert(before.exists(_.apply(1) == "exact") &&
@@ -80,9 +81,9 @@ class DedupCompactionSpec extends SparkSpec {
       "retry generations must physically collapse " +
         s"($exactRowsBefore -> $exactRowsAfter)")
     // Semantic collapse: one exact row per norm_key, one shingle row per doc.
-    val ex = spark.read.parquet(s"$idx/exact")
+    val ex = IndexStore.read(spark, idx, "exact")
     assert(ex.count() === ex.select("norm_key").distinct().count())
-    val sh = spark.read.parquet(s"$idx/shingles")
+    val sh = IndexStore.read(spark, idx, "shingles")
     assert(sh.count() === sh.select("doc_id").distinct().count())
   }
 
@@ -104,7 +105,7 @@ class DedupCompactionSpec extends SparkSpec {
     // append goes through IndexStore.append — the same path the real
     // appender uses — so the simulated crash leaves a valid BUCKETED
     // file set, exactly like a real crash after the first table commit.
-    graft.operators.IndexStore.append(
+    IndexStore.append(
       DedupOps.normDocs(batch)
         .groupBy(col("norm_key")).agg(min(col("doc_id")).as("exact_doc")),
       idx, "exact")
@@ -139,7 +140,7 @@ class DedupCompactionSpec extends SparkSpec {
         compactAboveFiles = compactAbove)
       (DedupStream.readVerdicts(spark, s"$root/$tag/out")
          .collect().map(_.toSeq).toSet,
-       DedupOps.indexFileCount(spark, idx))
+       IndexStore.fileCount(spark, idx, IndexStore.tables(spark, idx)))
     }
     val (plain, filesPlain) = run("plain", None)
     val (auto, filesAuto) = run("auto", Some(3L))

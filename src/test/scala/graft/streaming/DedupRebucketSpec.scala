@@ -64,7 +64,7 @@ class DedupRebucketSpec extends SparkSpec {
     assert(plain.exists(_.apply(1) == "exact"),
       "fixture must include a cross-batch dup probed after a rebucket")
 
-    val grown = DedupOps.IndexTables.map(t =>
+    val grown = IndexStore.tables(spark, autoIdx).map(t =>
       t -> IndexStore.spec(spark, autoIdx, t).map(_._1))
     assert(grown.forall(_._2.isDefined), s"tables must stay bucketed: $grown")
     assert(grown.exists(_._2.exists(_ > IndexStore.DefaultBuckets)),
@@ -87,10 +87,10 @@ class DedupRebucketSpec extends SparkSpec {
 
     // Stability: re-running the trigger at unchanged rows is a no-op.
     val before = grown.toMap
-    DedupOps.IndexTables.foreach { t =>
+    IndexStore.tables(spark, autoIdx).foreach { t =>
       IndexStore.rebucketIfGrown(spark, autoIdx, t, 1L)
     }
-    DedupOps.IndexTables.foreach { t =>
+    IndexStore.tables(spark, autoIdx).foreach { t =>
       assert(IndexStore.spec(spark, autoIdx, t).map(_._1) === before(t),
         s"unchanged rows must not re-trigger a rewrite: $t")
     }

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.operators.IndexStore
 import graft.queries.DedupOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
@@ -52,7 +53,7 @@ class DedupTtlSpec extends SparkSpec {
 
     // Retire the exact base, the near base, and a doc that was never
     // indexed (retire-before-arrival).
-    DedupOps.tombstoneDocs(ids(1L, 100L, 999L), idx)
+    IndexStore.tombstone(ids(1L, 100L, 999L), idx, "doc_id")
     val after = verdicts(probe, idx)
     assert(after(500L)._1 === "novel", "takedown must stop exact matches at once")
     assert(after(501L)._1 === "novel", "takedown must stop near matches at once")
@@ -62,14 +63,14 @@ class DedupTtlSpec extends SparkSpec {
     assert(verdicts(probe, idx) === after,
       "compaction must not change tombstone-aware verdicts")
     // Rows physically gone from every table.
-    assert(spark.read.parquet(s"$idx/exact")
+    assert(IndexStore.read(spark, idx, "exact")
       .filter(col("exact_doc").isin(1L, 100L)).count() === 0L)
-    assert(spark.read.parquet(s"$idx/bands")
+    assert(IndexStore.read(spark, idx, "bands")
       .filter(col("doc_id").isin(1L, 100L)).count() === 0L)
-    assert(spark.read.parquet(s"$idx/shingles")
+    assert(IndexStore.read(spark, idx, "shingles")
       .filter(col("doc_id").isin(1L, 100L)).count() === 0L)
     // Applied tombstones cleared; the never-indexed one retained.
-    val remaining = spark.read.parquet(s"$idx/tombstones")
+    val remaining = IndexStore.read(spark, idx, "tombstones")
       .collect().map(_.getLong(0)).toSet
     assert(remaining === Set(999L),
       s"applied tombstones must clear, unapplied must survive: $remaining")
@@ -85,7 +86,7 @@ class DedupTtlSpec extends SparkSpec {
   test("a tombstone-free index pays nothing and behaves as before") {
     val idx = graft.Scratch.fresh("ttl0") + "/index"
     DedupOps.buildDedupIndex(docsDf(1L -> t1), idx)
-    assert(DedupOps.loadTombstones(spark, idx).isEmpty)
+    assert(IndexStore.tombstones(spark, idx).isEmpty)
     assert(verdicts(docsDf(500L -> t1), idx)(500L) === (("exact", 1L)))
   }
 }

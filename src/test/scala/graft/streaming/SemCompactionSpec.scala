@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.operators.IndexStore
 import graft.queries.VectorOps
 import org.apache.spark.sql.functions._
 
@@ -52,8 +53,8 @@ class SemCompactionSpec extends SparkSpec {
       501L -> Seq(-0.1, 0.7, -0.1, -0.7))
     val before = VectorOps.probeSemIndex(spark, probe, idx)
       .collect().map(_.toSeq).toSet
-    val filesBefore = VectorOps.semIndexFileCount(spark, idx)
-    val rowsBefore = spark.read.parquet(s"$idx/vectors").count()
+    val filesBefore = IndexStore.fileCount(spark, idx, Seq("vectors"))
+    val rowsBefore = IndexStore.read(spark, idx, "vectors").count()
 
     VectorOps.compactSemIndex(spark, idx)
 
@@ -62,9 +63,9 @@ class SemCompactionSpec extends SparkSpec {
     assert(after === before, "compaction must not change any verdict bit")
     assert(before.exists(_.apply(2) == "dup") && before.exists(_.apply(2) == "novel"),
       s"fixture must exercise both verdicts: $before")
-    assert(VectorOps.semIndexFileCount(spark, idx) < filesBefore,
+    assert(IndexStore.fileCount(spark, idx, Seq("vectors")) < filesBefore,
       s"compaction must reduce data files (was $filesBefore)")
-    val vs = spark.read.parquet(s"$idx/vectors")
+    val vs = IndexStore.read(spark, idx, "vectors")
     assert(vs.count() < rowsBefore, "replay generations must physically collapse")
     assert(vs.count() === vs.select("vec_id").distinct().count())
   }
@@ -88,7 +89,7 @@ class SemCompactionSpec extends SparkSpec {
         compactAboveFiles = compactAbove)
       (SemStream.readVerdicts(spark, s"$root/$tag/out")
          .collect().map(_.toSeq).toSet,
-       VectorOps.semIndexFileCount(spark, idx))
+       IndexStore.fileCount(spark, idx, Seq("vectors")))
     }
     val (plain, filesPlain) = run("plain", None)
     val (auto, filesAuto) = run("auto", Some(2L))

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.operators.IndexStore
 import graft.queries.VectorOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
@@ -59,7 +60,7 @@ class SemTtlSpec extends SparkSpec {
     assert(before(501L)._1 === "novel")
 
     // Retire the matched base vector and a never-indexed one.
-    VectorOps.tombstoneVecs(ids(100L, 999L), idx)
+    IndexStore.tombstone(ids(100L, 999L), idx, "vec_id")
     val after = verdicts(probe, idx)
     assert(after(500L)._1 === "novel", "takedown must stop matches at once")
     assert(after(501L)._1 === "novel")
@@ -68,9 +69,9 @@ class SemTtlSpec extends SparkSpec {
     assert(verdicts(probe, idx) === after,
       "compaction must not change tombstone-aware verdicts")
     // Rows physically gone; applied tombstone cleared, unapplied kept.
-    assert(spark.read.parquet(s"$idx/vectors")
+    assert(IndexStore.read(spark, idx, "vectors")
       .filter(col("vec_id") === 100L).count() === 0L)
-    val remaining = spark.read.parquet(s"$idx/tombstones")
+    val remaining = IndexStore.read(spark, idx, "tombstones")
       .collect().map(_.getLong(0)).toSet
     assert(remaining === Set(999L),
       s"applied tombstones must clear, unapplied must survive: $remaining")
@@ -85,28 +86,28 @@ class SemTtlSpec extends SparkSpec {
   }
 
   test("crash ordering: a stale already-applied tombstone re-applies idempotently") {
-    // compactSemIndex writes the surviving tombstone set LAST, after the
-    // store swap — so the only crash residue is EXTRA tombstones whose
-    // vector is already gone. Simulate that residue and pin that it is
+    // compactSemIndex commits the store and the surviving tombstone set
+    // in one version, so a crash leaves no residue; a takedown re-issued
+    // for a vector already gone is the same state. Pin that it is
     // harmless: verdicts unchanged, a re-run compaction doesn't throw,
     // and the stale entry keeps waiting as retire-before-arrival.
     val idx = graft.Scratch.fresh("sttlc") + "/index"
     VectorOps.buildSemIndex(spark, vecsDf(baseRows: _*), idx)
     VectorOps.appendToSemIndex(spark, vecsDf(100L -> novelVec), idx)
-    VectorOps.tombstoneVecs(ids(100L), idx)
+    IndexStore.tombstone(ids(100L), idx, "vec_id")
     VectorOps.compactSemIndex(spark, idx) // applies + clears
     val probe = vecsDf(500L -> novelVec)
     val clean = verdicts(probe, idx)
     assert(clean(500L)._1 === "novel")
 
-    VectorOps.tombstoneVecs(ids(100L), idx) // the crash residue
+    IndexStore.tombstone(ids(100L), idx, "vec_id") // the crash residue
     assert(verdicts(probe, idx) === clean,
       "a stale tombstone for an absent vector must change nothing")
     VectorOps.compactSemIndex(spark, idx)
     assert(verdicts(probe, idx) === clean)
     // Still present (retire-before-arrival semantics guard a late replay
     // of vector 100's append).
-    assert(spark.read.parquet(s"$idx/tombstones")
+    assert(IndexStore.read(spark, idx, "tombstones")
       .collect().map(_.getLong(0)).toSet === Set(100L))
   }
 
@@ -114,7 +115,7 @@ class SemTtlSpec extends SparkSpec {
     val idx = graft.Scratch.fresh("sttl0") + "/index"
     VectorOps.buildSemIndex(spark, vecsDf(baseRows: _*), idx)
     VectorOps.appendToSemIndex(spark, vecsDf(100L -> novelVec), idx)
-    assert(VectorOps.loadSemTombstones(spark, idx).isEmpty)
+    assert(IndexStore.tombstones(spark, idx).isEmpty)
     assert(verdicts(vecsDf(500L -> novelVec), idx)(500L) === (("dup", 100L)))
   }
 }
