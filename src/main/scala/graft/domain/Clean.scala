@@ -38,11 +38,18 @@ object Clean {
 
   /** P1 cleansing projection: TRIM names, normalized whitespace text,
     * epoch→timestamp review_time (complete_data_pipeline_fixed.py:115-135,
-    * run_phase2_transformation.py:101-117,158). */
+    * run_phase2_transformation.py:101-117,158).
+    *
+    * The text is `regexp_replace(trim(text), '\s+', ' ')`, computed as
+    * `graft_collapse_ws(trim(text))` (graft.functions.CollapseWhitespace):
+    * one pass over the UTF-8 bytes that leaves a string with no run to
+    * collapse as it is. Java's `\s` is `[ \t\n\x0B\f\r]`, all single
+    * bytes that no multi-byte character contains, so the two are equal
+    * (WordStatsSpec compares them). */
   def cleanse(df: DataFrame): DataFrame =
     df.withColumn("bank_name", trim(col("bank_name")))
       .withColumn("branch_name", trim(col("branch_name")))
-      .withColumn("text", regexp_replace(trim(col("text")), "\\s+", " "))
+      .withColumn("text", call_function("graft_collapse_ws", trim(col("text"))))
       .withColumn("review_time", timestamp_seconds(col("time")))
 
   /** P4 length-band quality flag (stg_raw_reviews.sql:28-33 with

@@ -1,11 +1,24 @@
 package graft.domain
 
+import graft.functions.WordStats
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** NLP surface (SURVEY §2.8) as pure column expressions — the reference's
   * row-wise pandas functions become codegen'd Catalyst expressions; no UDFs
   * needed anywhere on the hot path.
+  *
+  * Every word statistic comes from one `graft_word_stats` column
+  * ([[graft.functions.WordStats]]): the marker and lexicon hit counts, the
+  * `\s`-run word count and the mention flags of a row are one scan of its
+  * text and one `lower(text)`, where they were nine regex passes (three
+  * `\b(…)\b` counts, three `rlike`s, two `split`s and Clean's
+  * `regexp_replace`) and six `lower`s. Each field equals the regex formula
+  * it replaced on every input: the kernel finds candidate words with a
+  * char loop and asks the compiled `\b` itself, with the formula's flags,
+  * at each candidate's ends, so the JDK's own boundary rule decides (it
+  * differs between JDK 17 and 19+; see WordStats). WordStatsSpec compares
+  * the two on a seeded adversarial corpus.
   *
   * N1 language detection (nlp_processor_simple.py:42-75): marker-word hit
   * counting, French list beats Arabic, conf = min(hits/words, 1.0),
@@ -49,31 +62,52 @@ object Nlp {
     "qui", "que", "quoi", "dont", "est", "sont", "etait", "etre", "avoir",
     "a", "au", "aux")
 
-  private def markerHits(c: Column, markers: Seq[String]): Column =
-    regexp_count(lower(c), lit("\\b(" + markers.mkString("|") + ")\\b"))
+  /** The `rlike` pattern of each N9 mention flag, as literal alternatives. */
+  val mentionLiterals: Seq[(String, Seq[String])] = Seq(
+    "mentions_service" -> Seq("service", "accueil", "personnel"),
+    "mentions_waiting" -> Seq("attente", "attendre", "queue", "file"),
+    "mentions_fees" -> Seq("frais", "commission", "tarif", "prix"))
 
-  private def wordCount(c: Column): Column =
-    when(length(trim(c)) === 0, 0).otherwise(size(split(trim(c), "\\s+")))
+  private val languageFields: Seq[WordStats.Field] =
+    WordStats.Count("fr", frenchMarkers, unicode = false) +:
+      arabicMarkers.zipWithIndex.map { case (m, i) => WordStats.Contains(s"ar$i", m) }
+  private def sentimentFields(scorer: SentimentScorer): Seq[WordStats.Field] = Seq(
+    WordStats.Count("pos", scorer.positive, scorer.unicode),
+    WordStats.Count("neg", scorer.negative, scorer.unicode))
+  private val featureFields: Seq[WordStats.Field] =
+    mentionLiterals.map { case (name, ls) => WordStats.Rlike(name, ls) }
+
+  /** The one kernel column the enrich columns read; see [[Nlp]]. */
+  private val Stats = "__ws"
+  private def stat(field: String): Column = col(Stats).getField(field)
+
+  /** Adds the kernel over `fields` as one column, adds `body`'s columns
+    * from it and drops it. */
+  private def withStats(df: DataFrame, textCol: String, fields: Seq[WordStats.Field])(
+      body: DataFrame => DataFrame): DataFrame = {
+    val t = col(textCol)
+    body(df.withColumn(Stats, WordStats.column(t, lower(t), fields))).drop(Stats)
+  }
 
   /** N1: adds detected_language + language_confidence columns. */
-  def withLanguage(df: DataFrame, textCol: String = "text"): DataFrame = {
-    val t = col(textCol)
-    val fr = markerHits(t, frenchMarkers)
-    val ar = arabicMarkers.map(m => when(t.contains(m), 1).otherwise(0)).reduce(_ + _)
-    val words = wordCount(t)
-    df.withColumn("__fr", fr).withColumn("__ar", ar).withColumn("__w", words)
-      .withColumn("detected_language",
-        when(length(coalesce(t, lit(""))) < 3, "unknown")
-          .when(col("__fr") >= col("__ar") && col("__fr") > 0, "fr")
-          .when(col("__ar") > 0, "ar")
+  def withLanguage(df: DataFrame, textCol: String = "text"): DataFrame =
+    withStats(df, textCol, languageFields)(language(_, col(textCol)))
+
+  private def language(df: DataFrame, t: Column): DataFrame = {
+    val fr = stat("fr")
+    val ar = arabicMarkers.indices.map(i => when(stat(s"ar$i"), 1).otherwise(0)).reduce(_ + _)
+    val tooShort = length(coalesce(t, lit(""))) < 3
+    df.withColumn("detected_language",
+        when(tooShort, "unknown")
+          .when(fr >= ar && fr > 0, "fr")
+          .when(ar > 0, "ar")
           .otherwise("unknown"))
       .withColumn("language_confidence",
-        when(length(coalesce(t, lit(""))) < 3, 0.0)
+        when(tooShort, 0.0)
           .when(col("detected_language") === "unknown", Thresholds.languageUnknownConfidence)
           .otherwise(least(
-            greatest(col("__fr"), col("__ar")).cast("double") / col("__w").cast("double"),
+            greatest(fr, ar).cast("double") / stat(WordStats.Words).cast("double"),
             lit(1.0))))
-      .drop("__fr", "__ar", "__w")
   }
 
   /** N2: adds sentiment_score / sentiment_label / sentiment_confidence —
@@ -88,11 +122,12 @@ object Nlp {
     * nlp_processor_simple.py:96-102) are shared — they're the
     * reference's, independent of lexicon. */
   def withSentiment(df: DataFrame, textCol: String = "text",
-      scorer: SentimentScorer = PortableScorer): DataFrame = {
-    val t = col(textCol)
-    val pos = scorer.hits(t, scorer.positive)
-    val neg = scorer.hits(t, scorer.negative)
-    val subjOpt = scorer.subjectivity(col("__pos"), col("__neg"), col("__w"))
+      scorer: SentimentScorer = PortableScorer): DataFrame =
+    withStats(df, textCol, sentimentFields(scorer))(sentiment(_, col(textCol), scorer))
+
+  private def sentiment(df: DataFrame, t: Column, scorer: SentimentScorer): DataFrame = {
+    val (pos, neg) = (stat("pos"), stat("neg"))
+    val subjOpt = scorer.subjectivity(pos, neg, stat(WordStats.Words))
     // The reference's analyze_sentiment early-returns all-zero fields for
     // blank/<3-char text (nlp_processor_simple.py:82-88). Applied only on
     // the 4-field contract path: the portable 3-column spec predates it
@@ -100,19 +135,15 @@ object Nlp {
     val short = length(trim(coalesce(t, lit("")))) < 3
     def guarded(c: Column): Column =
       if (subjOpt.isDefined) when(short, lit(0.0)).otherwise(c) else c
-    val base = df.withColumn("__pos", pos).withColumn("__neg", neg)
-      .withColumn("__w", wordCount(t))
-      .withColumn("sentiment_score",
-        guarded(scorer.score(col("__pos"), col("__neg"))))
+    val base = df
+      .withColumn("sentiment_score", guarded(scorer.score(pos, neg)))
       .withColumn("sentiment_label",
         when(col("sentiment_score") > Thresholds.sentimentPositive, "Positive")
           .when(col("sentiment_score") < Thresholds.sentimentNegative, "Negative")
           .otherwise("Neutral"))
       .withColumn("sentiment_confidence",
-        guarded(scorer.confidence(col("__pos"), col("__neg"),
-          col("sentiment_score"), subjOpt)))
+        guarded(scorer.confidence(pos, neg, col("sentiment_score"), subjOpt)))
     subjOpt.fold(base)(s => base.withColumn("subjectivity", guarded(s)))
-      .drop("__pos", "__neg", "__w")
   }
 
   /** N3 preprocessing as a column: lower, accent-preserving letter filter,
@@ -125,9 +156,12 @@ object Nlp {
   }
 
   /** N9 feature engineering (run_phase2_transformation.py:142-180). */
-  def withFeatures(df: DataFrame, textCol: String = "text"): DataFrame = {
-    val t = col(textCol)
-    df.withColumn("word_count", wordCount(t))
+  def withFeatures(df: DataFrame, textCol: String = "text"): DataFrame =
+    withStats(df, textCol, featureFields)(features(_, col(textCol)))
+
+  private def features(df: DataFrame, t: Column): DataFrame =
+    mentionLiterals.foldLeft(df
+      .withColumn("word_count", stat(WordStats.Words))
       .withColumn("char_count", length(coalesce(t, lit(""))))
       .withColumn("rating_category",
         when(col("rating") >= Thresholds.ratingHigh, "Positive")
@@ -139,17 +173,19 @@ object Nlp {
           .otherwise("brief"))
       .withColumn("review_year", year(col("review_time")))
       .withColumn("review_month", date_format(col("review_time"), "yyyy-MM"))
-      .withColumn("day_of_week", date_format(col("review_time"), "EEEE"))
-      .withColumn("mentions_service",
-        coalesce(lower(t).rlike("service|accueil|personnel"), lit(false)))
-      .withColumn("mentions_waiting",
-        coalesce(lower(t).rlike("attente|attendre|queue|file"), lit(false)))
-      .withColumn("mentions_fees",
-        coalesce(lower(t).rlike("frais|commission|tarif|prix"), lit(false)))
-  }
+      .withColumn("day_of_week", date_format(col("review_time"), "EEEE"))) {
+      case (d, (name, _)) => d.withColumn(name, coalesce(stat(name), lit(false)))
+    }
 
   /** Full silver enrichment: language + sentiment + features (N8 driver,
-    * nlp_processor_simple.py:244-286 — one lineage, no iterrows analog). */
-  def enrich(staged: DataFrame): DataFrame =
-    withFeatures(withSentiment(withLanguage(staged)))
+    * nlp_processor_simple.py:244-286 — one lineage, no iterrows analog),
+    * all read from one kernel column, so the text is lowered and scanned
+    * once per row. */
+  def enrich(staged: DataFrame): DataFrame = {
+    val t = col("text")
+    withStats(staged, "text",
+      languageFields ++ sentimentFields(PortableScorer) ++ featureFields) { d =>
+      features(sentiment(language(d, t), t, PortableScorer), t)
+    }
+  }
 }

@@ -31,19 +31,20 @@ object Pipeline {
     *     columns, the one data-proportional input every sink shares — is
     *     persisted and materialized by the count that also validates it. It
     *     is released in a `finally`, so a failed sink cannot leak it.
-    *  2. Small shared inputs, as two concurrent arms: dim_bank then
-    *     dim_branch (branch needs bank_key), and the per-bank performance
-    *     aggregate. Each is materialized once with `localCheckpoint` (≤ a few
-    *     thousand rows) and every consumer — the dim writes, fact_reviews,
-    *     mart_geographic, mart_bank_ranking — reads that frame.
+    *  2. Small shared inputs and the key check, as three concurrent arms:
+    *     dim_bank then dim_branch (branch needs bank_key), and the per-bank
+    *     performance aggregate, each materialized once with
+    *     `localCheckpoint` (≤ a few thousand rows) so every consumer — the
+    *     dim writes, fact_reviews, mart_geographic, mart_bank_ranking —
+    *     reads that frame; and [[Star.requireDistinctReviewKeys]] over
+    *     silver, which fails the build on a duplicate review_key: the one
+    *     key whose hash collision odds grow with the data (see [[Star]]).
+    *     The fact is a subset of silver, so its keys are distinct too.
     *  3. Sinks. Every gold write, the dim/fact validation re-reads (the
     *     reference's per-table COUNT(*), complete_data_pipeline_fixed.py:
     *     305-327) and the bronze count are concurrent [[graft.Par]] arms,
     *     one per sink. The fact write is listed first, so the FIFO scheduler
-    *     gives it cores first and the one-task sinks back-fill. The fact's
-    *     re-read also counts its distinct review_keys in the same aggregate
-    *     and fails the build on a duplicate: the one key whose hash
-    *     collision odds grow with the data (see [[Star]]).
+    *     gives it cores first and the one-task sinks back-fill.
     *
     * The fact ≤ staged check and the run-stats JSON follow only once every
     * arm has succeeded. At scale: fact partitioned by review_year (partition
@@ -53,12 +54,13 @@ object Pipeline {
     val silver = enrichOnly(bronze).persist()
     val r = try {
       val stagedCount = silver.count()
-      val Seq(Seq(bank, branch), Seq(perf)) = Par.map(Seq[() => Seq[DataFrame]](
+      val Seq(Seq(bank, branch), Seq(perf), _) = Par.map(Seq[() => Seq[DataFrame]](
         () => {
           val bank = Star.dimBank(silver).localCheckpoint()
           Seq(bank, Star.dimBranch(silver, bank).localCheckpoint())
         },
-        () => Seq(Marts.bankPerformance(silver).localCheckpoint())))(_())
+        () => Seq(Marts.bankPerformance(silver).localCheckpoint()),
+        () => { Star.requireDistinctReviewKeys(silver); Nil }))(_())
       val fact = Star.factReviews(silver, bank, branch)
 
       def save(df: DataFrame, name: String): Unit =
@@ -76,11 +78,7 @@ object Pipeline {
             .write.mode(SaveMode.Overwrite)
             .partitionBy("review_year")
             .parquet(s"$goldDir/fact_reviews")
-          val r = spark.read.parquet(s"$goldDir/fact_reviews")
-            .agg(count(lit(1)), countDistinct(col("review_key"))).head()
-          val (rows, keys) = (r.getLong(0), r.getLong(1))
-          require(keys == rows, s"fact_reviews has $rows rows but $keys distinct review_keys")
-          Some(rows)
+          Some(reread("fact_reviews"))
         },
         () => { save(bank, "dim_bank"); Some(reread("dim_bank")) },
         () => { save(branch, "dim_branch"); Some(reread("dim_branch")) },

@@ -22,15 +22,20 @@ import org.apache.spark.sql.functions._
   *    the reference's smoke corpus (nlp_processor_simple.py:319-328),
   *    asserted in NlpSpec.
   *
-  * Both are pure column expressions — hit counting is one codegen'd
-  * regexp_count per polarity, no UDFs.
+  * Both are pure column expressions, no UDFs. A scorer names its lists and
+  * their boundary mode; the hits are two fields of Nlp's one
+  * `graft_word_stats` scan (graft.functions.WordStats), each equal to
+  * `regexp_count(lower(text), '\b(w₁|…|wₙ)\b')` (with `(?U)` in front for
+  * the full lexicon) by construction.
   */
 trait SentimentScorer {
   def positive: Seq[String]
   def negative: Seq[String]
 
-  /** Word-boundary hit count for this scorer's word lists. */
-  def hits(text: Column, words: Seq[String]): Column
+  /** The boundary mode of this scorer's `\b(…)\b` hit counts over
+    * `lower(text)`: false for Java's default `\b`, true for `(?U)\b`.
+    * The counts themselves are fields of Nlp's one word-stats kernel. */
+  def unicode: Boolean
 
   /** sentiment_score from the two hit-count columns. */
   def score(pos: Column, neg: Column): Column
@@ -54,8 +59,7 @@ object PortableScorer extends SentimentScorer {
   def positive: Seq[String] = Nlp.positiveLexicon
   def negative: Seq[String] = Nlp.negativeLexicon
 
-  def hits(text: Column, words: Seq[String]): Column =
-    regexp_count(lower(text), lit("\\b(" + words.mkString("|") + ")\\b"))
+  def unicode: Boolean = false
 
   def score(pos: Column, neg: Column): Column =
     least(
@@ -65,10 +69,12 @@ object PortableScorer extends SentimentScorer {
 }
 
 /** TextBlob-grade French(+English loanword) polarity lexicon. Accented
-  * entries require Unicode word boundaries: Java's default \b treats
-  * accented letters as non-word, so `\bélevé\b` can never match — the
-  * (?U) flag makes \w (hence \b) Unicode-aware for this scorer only; the
-  * portable scorer keeps ASCII semantics so its oracle stays byte-stable.
+  * entries require Unicode word boundaries: from JDK 19 on, the default \b
+  * follows the ASCII-only \w and treats accented letters as non-word, so
+  * `\bélevé\b` never matches there (JDK 17's default \b is letter-aware).
+  * The (?U) flag makes \w (hence \b) Unicode-aware on every JDK, for this
+  * scorer only; the portable scorer keeps the default semantics so its
+  * oracle stays byte-stable.
   */
 object FullLexiconScorer extends SentimentScorer {
 
@@ -117,8 +123,7 @@ object FullLexiconScorer extends SentimentScorer {
     // common English loan/review words
     "bad", "worst", "slow", "rude", "terrible", "awful")
 
-  def hits(text: Column, words: Seq[String]): Column =
-    regexp_count(lower(text), lit("(?U)\\b(" + words.mkString("|") + ")\\b"))
+  def unicode: Boolean = true
 
   /** TextBlob-shaped polarity: mean word polarity in [−1, 1] — the hits
     * average, not a clamped sum, so one strong word in a long neutral

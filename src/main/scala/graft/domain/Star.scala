@@ -1,6 +1,6 @@
 package graft.domain
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Star-schema build (SURVEY §2.4-2.6, §3.1): dim_sentiment, dim_date,
@@ -20,8 +20,8 @@ import org.apache.spark.sql.functions._
   * Collision bound: n distinct values collide with probability ≈ n²/2⁶⁵,
   * about 7·10⁻¹¹ at 50k reviews and 3·10⁻⁴ at 10⁸. The dims are bounded
   * (~10 banks, a few thousand branches), so their odds do not grow with
-  * the data; the fact's keys are checked for duplicates by
-  * [[Pipeline.run]]'s validation read.
+  * the data; [[requireDistinctReviewKeys]] checks the fact's keys, and
+  * [[Pipeline.run]] runs it over silver on every build.
   */
 object Star {
 
@@ -283,5 +283,18 @@ object Star {
         abs(hash(concat(coalesce(col("author_name"), lit("")),
           coalesce(col("author_url"), lit(""))))))
       .withColumn("loaded_at", current_timestamp())
-      .withColumn("review_key", xxhash64(col("review_id")))
+      .withColumn("review_key", reviewKey(col("review_id")))
+
+  /** review_key, the fact's surrogate key of review_id. */
+  def reviewKey(reviewId: Column): Column =
+    xxhash64(reviewId)
+
+  /** Fails unless every row of `reviews` has its own review_key: a repeated
+    * review_id, or two review_ids whose hashes collide, fails. One job, an
+    * aggregate of the row count and the distinct keys. */
+  def requireDistinctReviewKeys(reviews: DataFrame): Unit = {
+    val r = reviews.agg(count(lit(1)), countDistinct(reviewKey(col("review_id")))).head()
+    val (rows, keys) = (r.getLong(0), r.getLong(1))
+    require(keys == rows, s"$rows reviews but $keys distinct review_keys")
+  }
 }

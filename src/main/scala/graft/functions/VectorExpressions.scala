@@ -268,6 +268,14 @@ object GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[NfcNormalize].getName, "graft_nfc"),
       (exprs: Seq[Expression]) => NfcNormalize(exprs.head)))
     ext.injectFunction((
+      FunctionIdentifier("graft_word_stats"),
+      new ExpressionInfo(classOf[WordStatsExpr].getName, "graft_word_stats"),
+      (exprs: Seq[Expression]) => WordStats.build(exprs)))
+    ext.injectFunction((
+      FunctionIdentifier("graft_collapse_ws"),
+      new ExpressionInfo(classOf[CollapseWhitespace].getName, "graft_collapse_ws"),
+      (exprs: Seq[Expression]) => CollapseWhitespace(exprs.head)))
+    ext.injectFunction((
       FunctionIdentifier("graft_zorder"),
       new ExpressionInfo(classOf[ZOrderExpr].getName, "graft_zorder"),
       (exprs: Seq[Expression]) => ZOrderExpr(exprs(0), exprs(1))))

@@ -1,7 +1,8 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.functions.WordStats
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators over the `documents` table — the language-ID /
@@ -20,6 +21,13 @@ object TextOps extends QueryModule {
   private def t(s: SparkSession, d: String, n: String) = Tables(s, d, n)
 
   private val wsTokens = "size(split(text, ' '))"
+
+  /** `regexp_count(text, '\b(w₁|…|wₙ)\b')` for each named list, case-
+    * sensitive, as the fields of one `graft_word_stats` scan of the text
+    * (equal by construction, see WordStats). */
+  private def wordHits(lists: (String, Seq[String])*): Column =
+    WordStats.column(col("text"), col("text"),
+      lists.map { case (name, words) => WordStats.Count(name, words, unicode = false) })
 
   /** Quality scoring: length stats, stopword ratio, quality flag ladder
     * (stg_raw_reviews.sql:28-33 length bands; quality flags P4/P5). */
@@ -60,13 +68,15 @@ object TextOps extends QueryModule {
     * marker hit counts, priority resolution, conf = min(hits/words, 1), with
     * the reference's 'unknown' → 0.3 confidence floor. */
   private def q22(s: SparkSession, d: String): DataFrame = {
-    val en = regexp_count(col("text"), lit("\\b(the|a|is|and|of)\\b"))
-    val fr = regexp_count(col("text"), lit("\\b(le|la|les|et|est|une)\\b"))
-    val de = regexp_count(col("text"), lit("\\b(der|die|das|und|ist)\\b"))
+    val hits = wordHits(
+      "en_hits" -> Seq("the", "a", "is", "and", "of"),
+      "fr_hits" -> Seq("le", "la", "les", "et", "est", "une"),
+      "de_hits" -> Seq("der", "die", "das", "und", "ist"))
     val nTokens = size(split(col("text"), " "))
     t(s, d, "documents")
-      .select(col("doc_id"), en.as("en_hits"), fr.as("fr_hits"), de.as("de_hits"),
-        nTokens.as("n_tokens"))
+      .select(col("doc_id"), hits.as("h"), nTokens.as("n_tokens"))
+      .select(col("doc_id"), col("h.en_hits"), col("h.fr_hits"), col("h.de_hits"),
+        col("n_tokens"))
       .withColumn("lang_pred",
         when(col("fr_hits") > col("en_hits") && col("fr_hits") > col("de_hits"), "fr")
           .when(col("de_hits") > col("en_hits"), "de")
@@ -127,10 +137,10 @@ object TextOps extends QueryModule {
   /** Keyword-lexicon sentiment (N2 portable spec, test_phase2_simple.py:83-104):
     * score = clamp(0.2·(pos−neg), ±0.8), label thresholds ±0.1. */
   private def q24(s: SparkSession, d: String): DataFrame = {
-    val pos = regexp_count(col("text"), lit("\\b(fast|small)\\b"))
-    val neg = regexp_count(col("text"), lit("\\b(slow|big)\\b"))
+    val hits = wordHits("pos_hits" -> Seq("fast", "small"), "neg_hits" -> Seq("slow", "big"))
     t(s, d, "documents")
-      .select(col("doc_id"), pos.as("pos_hits"), neg.as("neg_hits"))
+      .select(col("doc_id"), hits.as("h"))
+      .select(col("doc_id"), col("h.pos_hits"), col("h.neg_hits"))
       .withColumn("sentiment_score",
         least(greatest(lit(0.2) * (col("pos_hits") - col("neg_hits")), lit(-0.8)), lit(0.8)))
       .withColumn("sentiment_label",

@@ -1,7 +1,80 @@
 package graft.domain
 
 import graft.SparkSpec
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+
+/** The silver composition as it was before the word-stats kernel: Clean's
+  * `regexp_replace` whitespace collapse and Nlp's regex counts, `rlike`
+  * mention flags, `split` word counts and `lower` calls, written out as
+  * the reference [[Pipeline.enrichOnly]] must equal. */
+object RegexEnrich {
+  def stage(bronze: DataFrame): DataFrame = {
+    val cleansed = Clean.imputeNulls(Clean.dedupReviews(bronze))
+      .withColumn("bank_name", trim(col("bank_name")))
+      .withColumn("branch_name", trim(col("branch_name")))
+      .withColumn("text", regexp_replace(trim(col("text")), "\\s+", " "))
+      .withColumn("review_time", timestamp_seconds(col("time")))
+    Clean.requiredFieldsFilter(Clean.withQualityFlag(cleansed))
+      .filter(col("data_quality_flag") === "valid")
+  }
+
+  private def hits(c: Column, words: Seq[String]): Column =
+    regexp_count(lower(c), lit("\\b(" + words.mkString("|") + ")\\b"))
+  private def wordCount(c: Column): Column =
+    when(length(trim(c)) === 0, 0).otherwise(size(split(trim(c), "\\s+")))
+
+  def enrich(staged: DataFrame): DataFrame = {
+    val t = col("text")
+    val language = staged
+      .withColumn("__fr", hits(t, Nlp.frenchMarkers))
+      .withColumn("__ar", Nlp.arabicMarkers.map(m => when(t.contains(m), 1).otherwise(0)).reduce(_ + _))
+      .withColumn("__w", wordCount(t))
+      .withColumn("detected_language",
+        when(length(coalesce(t, lit(""))) < 3, "unknown")
+          .when(col("__fr") >= col("__ar") && col("__fr") > 0, "fr")
+          .when(col("__ar") > 0, "ar")
+          .otherwise("unknown"))
+      .withColumn("language_confidence",
+        when(length(coalesce(t, lit(""))) < 3, 0.0)
+          .when(col("detected_language") === "unknown", Thresholds.languageUnknownConfidence)
+          .otherwise(least(
+            greatest(col("__fr"), col("__ar")).cast("double") / col("__w").cast("double"),
+            lit(1.0))))
+      .drop("__fr", "__ar", "__w")
+    val sentiment = language
+      .withColumn("__pos", hits(t, Nlp.positiveLexicon))
+      .withColumn("__neg", hits(t, Nlp.negativeLexicon))
+      .withColumn("sentiment_score", PortableScorer.score(col("__pos"), col("__neg")))
+      .withColumn("sentiment_label",
+        when(col("sentiment_score") > Thresholds.sentimentPositive, "Positive")
+          .when(col("sentiment_score") < Thresholds.sentimentNegative, "Negative")
+          .otherwise("Neutral"))
+      .withColumn("sentiment_confidence", PortableScorer.confidence(col("__pos"), col("__neg"),
+        col("sentiment_score"), None))
+      .drop("__pos", "__neg")
+    sentiment
+      .withColumn("word_count", wordCount(t))
+      .withColumn("char_count", length(coalesce(t, lit(""))))
+      .withColumn("rating_category",
+        when(col("rating") >= Thresholds.ratingHigh, "Positive")
+          .when(col("rating") <= Thresholds.ratingLow, "Negative")
+          .otherwise("Neutral"))
+      .withColumn("review_detail_level",
+        when(col("word_count") >= 50, "detailed")
+          .when(col("word_count") >= 20, "moderate")
+          .otherwise("brief"))
+      .withColumn("review_year", year(col("review_time")))
+      .withColumn("review_month", date_format(col("review_time"), "yyyy-MM"))
+      .withColumn("day_of_week", date_format(col("review_time"), "EEEE"))
+      .withColumn("mentions_service",
+        coalesce(lower(t).rlike("service|accueil|personnel"), lit(false)))
+      .withColumn("mentions_waiting",
+        coalesce(lower(t).rlike("attente|attendre|queue|file"), lit(false)))
+      .withColumn("mentions_fees",
+        coalesce(lower(t).rlike("frais|commission|tarif|prix"), lit(false)))
+  }
+}
 
 class PipelineSpec extends SparkSpec {
 
@@ -102,6 +175,27 @@ class PipelineSpec extends SparkSpec {
       val many = build(partitions = 7, files = 4)
       goldTables.foreach(t => assert(many(t) === one(t), t))
     } finally saved.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
+  }
+
+  test("enrichOnly equals the regex composition row for row, schema included") {
+    import spark.implicits._
+    // The fixture, plus 3,000 reviews whose texts are the word-stats
+    // kernel's adversarial corpus.
+    val template = Fixtures.reviews(spark).filter(col("review_id") === "r1")
+    val texts = graft.functions.WordStatsCorpus.texts(3000, seed = 21).zipWithIndex
+      .map { case (t, i) => (s"z$i", t) }.toDF("zid", "ztext")
+    val bronze = Fixtures.reviews(spark).unionByName(template.crossJoin(texts)
+      .withColumn("review_id", col("zid")).withColumn("text", col("ztext"))
+      .drop("zid", "ztext"))
+    val base = graft.Scratch.fresh("pipe")
+    bronze.write.parquet(s"$base/bronze")
+    val read = spark.read.schema(Schemas.review).parquet(s"$base/bronze")
+    val got = Pipeline.enrichOnly(read)
+    val want = RegexEnrich.enrich(RegexEnrich.stage(read))
+    assert(got.schema === want.schema)
+    val (g, w) = (got.collect().map(_.toString).sorted, want.collect().map(_.toString).sorted)
+    assert(g.length > 1000)
+    assert(g.toSeq === w.toSeq)
   }
 
   test("run: a failed build releases the persisted silver") {

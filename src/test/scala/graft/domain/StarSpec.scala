@@ -152,4 +152,13 @@ class StarSpec extends SparkSpec {
     assert(r1.getAs[Int]("date_key") === 20240601)
     assertHashKeys(fact, "review_key", "review_id")
   }
+
+  test("requireDistinctReviewKeys fails on a duplicate review_key") {
+    import spark.implicits._
+    Star.requireDistinctReviewKeys(silver)
+    val dup = silver.select("review_id").union(silver.select("review_id").limit(1))
+    val e = intercept[IllegalArgumentException](Star.requireDistinctReviewKeys(dup))
+    assert(e.getMessage.contains("8 reviews but 7 distinct review_keys"), e.getMessage)
+    Star.requireDistinctReviewKeys(Seq("a", "b").toDF("review_id"))
+  }
 }

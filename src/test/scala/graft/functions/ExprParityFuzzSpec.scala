@@ -1,7 +1,10 @@
 package graft.functions
 
 import graft.SparkSpec
-import org.apache.spark.sql.catalyst.expressions.Literal
+import graft.domain.{FullLexiconScorer, Nlp}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.{Literal, Lower}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -163,5 +166,29 @@ class ExprParityFuzzSpec extends SparkSpec {
     }
     assert(composedSome,
       "fuzz self-check: some string must actually compose (else the alphabet is vacuous)")
+  }
+
+  test("graft_word_stats / graft_collapse_ws: eval == codegen on the adversarial corpus") {
+    val fields = Seq(
+      WordStats.Count("fr", Nlp.frenchMarkers, unicode = false),
+      WordStats.Count("neg", FullLexiconScorer.negative, unicode = true),
+      WordStats.Rlike("fees", Seq("tarif", "file")),
+      WordStats.Contains("ar", Nlp.arabicMarkers.head))
+    val texts = WordStatsCorpus.texts(400, seed = 5)
+    val rows = WordStatsCorpus.frame(spark, 400, seed = 5)
+      .select(col("id"), WordStats.column(col("t"), lower(col("t")), fields).as("k"),
+        call_function("graft_collapse_ws", col("t")).as("c"))
+      .collect().sortBy(_.getInt(0))
+    texts.zipWithIndex.foreach { case (v, i) =>
+      val text = Literal.create(if (v == null) null else UTF8String.fromString(v), StringType)
+      val stats = WordStatsExpr(text, Literal.create(Lower(text).eval(null), StringType), fields,
+        SQLConf.get.legacySizeOfNull)
+      assert(rows(i).getStruct(1) ===
+        CatalystTypeConverters.convertToScala(stats.eval(null), stats.dataType),
+        s"word stats drift on '$v'")
+      assert(rows(i).getString(2) ===
+        Option(CollapseWhitespace(text).eval(null)).map(_.toString).orNull,
+        s"collapse drift on '$v'")
+    }
   }
 }

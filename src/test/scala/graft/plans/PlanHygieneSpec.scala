@@ -262,4 +262,23 @@ class PlanHygieneSpec extends SparkSpec {
         s"$name no longer has a loop join — drop it from the allowlist")
     }
   }
+
+  test("enrichOnly scans the text once: no regex or split in its plan, one lower(text)") {
+    import org.apache.spark.sql.catalyst.expressions._
+    import graft.domain.{Fixtures, Pipeline, Schemas}
+    val base = graft.Scratch.fresh("plan")
+    Fixtures.reviews(spark).write.parquet(s"$base/bronze")
+    val plan = Pipeline.enrichOnly(spark.read.schema(Schemas.review).parquet(s"$base/bronze"))
+      .queryExecution.optimizedPlan
+    val exprs = plan.flatMap(_.expressions).flatMap(_.collect { case e => e })
+    val scans = exprs.collect {
+      case e @ (_: RegExpCount | _: RegExpExtractAll | _: RLike | _: RegExpReplace |
+          _: StringSplit) => e
+    }
+    assert(scans.isEmpty, plan.toString)
+    val lowers = exprs.collect { case l: Lower => l }
+    assert(lowers.size === 1 && lowers.head.child.references.map(_.name).toSet === Set("text"),
+      plan.toString)
+    assert(exprs.count(_.isInstanceOf[graft.functions.WordStatsExpr]) === 1, plan.toString)
+  }
 }
